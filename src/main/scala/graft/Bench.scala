@@ -1,39 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.SessionMemo
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit (defaults in Spark 4, pinned as part of the scale
-      // contract): runtime re-planning + skew-join splitting for hot
-      // tenants / hot keys
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // parallelismFirst deliberately stays at the Spark DEFAULT
-      // (true). Measured both ways (r14, same-subset A/B, both leg
-      // orders): advisory-size-first coalescing (=false) was 0.58-1.0×
-      // on every line — post-shuffle stages that EXPAND data (the
-      // basket/gram self-joins) coalesce to one task on tiny input
-      // BYTES and serialize their real CPU. Byte-based coalescing
-      // cannot see join fan-out, so "respect the advisory size" is
-      // wrong wherever shuffle-read size underestimates stage work —
-      // a data-shape floor, not a local-core tune (numbers in
-      // OPTIMIZATION_r14.md).
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bounded post-limit rank windows are unpartitioned by design and
-    // flood the log with "No Partition Defined" (see Verify.scala —
-    // PlanAudit's single_partition budget is the real gate)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      classOf[org.apache.spark.sql.execution.window.WindowExec].getName,
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.local(Sessions.cores(
+      math.min(32, Runtime.getRuntime.availableProcessors())))
     // CONTENTION GUARD (VERDICT r4 #5): a concurrent sbt/verify JVM on
     // the box inflated a full driver bench ~40% and individual lines
     // 2-20× (BENCH_r04 read 129.6 s for a 92.7 s build). Detect foreign
@@ -85,16 +57,6 @@ object Bench {
     // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local profiling)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // Index BUILD vs query SERVE: the graph-ANN edge lists are one-time
-    // index state (memoized, like the k-means centroids) amortized over
-    // every subsequent search. Timing them inside the query line made
-    // the serving path look ~10× its real cost (BENCH_r03:
-    // ann_graph_topk 4.35 s, ~90% build). Build is forced HERE, timed
-    // once, and reported as its own `*_build` pseudo-query; the query
-    // lines below then measure pure serving against the warm index.
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // label every line's jobs (guide §1.5) so the event-log profiler
     // attributes SQL executions to bench lines by name instead of by
     // call-site line number; zero-cost thread-local stamp, timing
@@ -103,194 +65,29 @@ object Bench {
       spark.sparkContext.setJobDescription(name)
       try f finally spark.sparkContext.setJobDescription(null)
     }
-    val builds = Seq(
-      "ann_graph_build" -> (selected.contains("ann_graph_topk"),
-        () => operators.Ann.buildGraph(spark, sfDir)),
-      "ann_knn_build" -> (selected.contains("ann_knn_graph"),
-        () => { operators.Ann.nnDescentGraph(spark, sfDir).count(); () }),
-      // the dedup family's shared memoized pair list (minhashPairs):
-      // SparkEntry.queries is a HashMap, so without this line the
-      // ~2.5 s cache fill landed on an ARBITRARY dedup-family query per
-      // run (driver r4 attributed it to dedup_minhash_lsh: 4.81 s for
-      // a 0.21 s query). Forced here, timed once, reported as its own
-      // pseudo-line — the family's query lines then measure pure serve.
-      "dedup_pairs_warm" -> (Seq("dedup_minhash_lsh", "dedup_clusters",
-        "dedup_keep_best", "dedup_cluster_stats", "dedup_recall_eval",
-        "dedup_attrition_funnel").exists(selected.contains),
-        () => { operators.Dedup.minhashPairs(spark, sfDir).count(); () }),
-      // the exact-shingle pair-count scaffold shared by jaccard +
-      // containment (gramMemo): filled once here so neither query line
-      // carries the fill
-      "dedup_grams_warm" -> (Seq("dedup_ngram_jaccard", "dedup_containment")
-        .exists(selected.contains),
-        () => { operators.Dedup.ngramJaccard(spark, sfDir).count(); () }),
-      // the (doc_id, simhash) signature relation shared by dedup_simhash
-      // and dedup_recall_eval's simhash arm (the r7 regression: the
-      // vote-aggregation reshape ran inside the eval line)
-      "dedup_simhash_warm" -> (Seq("dedup_simhash", "dedup_recall_eval")
-        .exists(selected.contains),
-        () => { operators.Dedup.simhashSigs(spark, sfDir).count(); () }),
-      // the market-basket family's shared memoized pair-support relation
-      // (basketPairSupport): same discipline — the one corpus-scale mine
-      // is timed HERE once; pairs/lift query lines then measure pure
-      // rank-and-limit serving over the warm artifact.
-      "basket_pairs_warm" -> (Seq("orders_basket_pairs", "orders_basket_lift")
-        .exists(selected.contains),
-        () => { operators.Relational.basketPairSupport(spark, sfDir, 2).count(); () }),
-      // the memoized Word2Vec corpus fit (MODEL state shared by the
-      // semantic-search and semantic-eval lines): timed once here so
-      // neither query line carries the training cost
-      "w2v_warm" -> (Seq("vs_text_search_semantic", "vs_semantic_recall_eval")
-        .exists(selected.contains),
-        () => { operators.VectorStore.w2vEmbedder(spark, sfDir); () }),
-      // the memoized trained tokenizer models (BPE / byte-BPE merge
-      // tables, unigram piece table — tokenizerMemo): each training
-      // loop is nMerges×(argmax + fold checkpoint) jobs, previously
-      // re-run by BOTH the train row and the encode row's retrain on
-      // every sample; filled once here so those rows measure pure
-      // model application
-      "bpe_model_warm" -> (Seq("text_bpe_train", "text_bpe_encode")
-        .exists(selected.contains),
-        () => { operators.TextAnalysis.bpeTrain(spark, sfDir).count(); () }),
-      "byte_bpe_model_warm" -> (Seq("text_byte_bpe_train", "text_byte_bpe_encode")
-        .exists(selected.contains),
-        () => { operators.TextAnalysis.byteBpeTrain(spark, sfDir).count(); () }),
-      "unigram_model_warm" -> (Seq("text_unigram_train", "text_unigram_encode")
-        .exists(selected.contains),
-        () => { operators.TextAnalysis.unigramTrain(spark, sfDir).count(); () }),
-      // the memoized PQ codebooks (m sub-quantizer trainings) shared by
-      // the PQ code/search lines — without this the fill lands on
-      // whichever of them runs first (detail ranges showed a 3.8 s max
-      // on a 0.4 s line)
-      "pq_codebook_warm" -> (Seq("emb_pq_codes", "emb_pq_search")
-        .exists(selected.contains),
-        () => { operators.Embeddings.pqCodebooks(spark, sfDir); () }),
-      // the IVF-PQ model is its OWN memo family (coarse quantizer +
-      // m RESIDUAL codebooks, keys pqres:nlist:m:j — NOT the raw pq:m:j books
-      // above): unpinned, the m+1 k-means fills landed on whichever of
-      // emb_ivfpq_search / ann_recall_eval ran first (detail ranges
-      // showed a 41× [0.35, 14.4] s spread on one line)
-      "ivfpq_codebook_warm" -> (Seq("emb_ivfpq_search", "ann_recall_eval")
-        .exists(selected.contains),
-        () => { operators.Embeddings.ivfPqModel(spark, sfDir); () }),
-      // the memoized PayloadIndex build (one partitioned rewrite + the
-      // text-field postings — the create_payload_index job): forced
-      // here so the indexed query lines measure pure pruned serving
-      "payload_index_warm" -> (Seq("vs_search_topk_filtered_indexed",
-        "vs_search_match_text_indexed", "vs_delete_by_word_indexed",
-        "vs_delete_by_regex_indexed", "vs_search_match_phrase_indexed",
-        "vs_search_filter_should", "vs_search_filter_must_not",
-        "vs_search_filter_min_should", "vs_search_match_any_indexed",
-        "vs_search_match_except_indexed", "vs_search_filter_phrase",
-        "vs_facet_counts_filtered", "vs_random_sample_filtered",
-        "vs_points_query", "vs_points_scroll", "vs_points_count",
-        "vs_points_facet", "vs_points_query_batch")
-        .exists(selected.contains),
-        () => { operators.VectorStore.payloadIndex(spark, sfDir); () }),
-      // the persisted AnnIndex with payload axes behind the
-      // filter-object ANN row (KMeans fit + one partitioned rewrite)
-      // the token-level IVF layout behind the indexed max_sim row
-      // (KMeans fit + one partitioned rewrite over the token corpus)
-      "multivec_index_warm" -> (selected.contains("vs_multivec_maxsim_indexed"),
-        () => { operators.VectorStore.multiVecIndex(spark, sfDir); () }),
-      "ann_pfilter_index_warm" -> (Seq("ann_pfilter_topk",
-        "ann_pfilter_adaptive", "ann_filtered_recall_eval",
-        "ann_delete_rotate")
-        .exists(selected.contains),
-        () => {
-          operators.Ann.annPayloadIndex(spark, sfDir)
-          // the deleteTo rotation its audit row serves from — an
-          // unpinned fill would hide in that line's untimed warm-up
-          if (selected.contains("ann_delete_rotate"))
-            operators.Ann.annDeletedIndex(spark, sfDir)
-          ()
-        }),
-      // the thin NULL-carrying collection behind the is_null/is_empty/
-      // values_count/has_id/nested condition rows, PLUS the memoized
-      // deleteTo rotation its delete row serves from (an unpinned
-      // rotation fill would hide in that line's untimed warm-up)
-      "nullable_index_warm" -> (Seq("vs_filter_is_null", "vs_filter_is_empty",
-        "vs_filter_values_count", "vs_filter_has_id", "vs_filter_nested",
-        "vs_filter_match_array", "vs_filter_has_uuid", "vs_filter_bool_indexed",
-        "vs_delete_by_filter_indexed").exists(selected.contains),
-        () => {
-          operators.VectorStore.nullableIndex(spark, sfDir)
-          if (selected.contains("vs_delete_by_filter_indexed"))
-            operators.VectorStore.deleteByFilterIndexed(spark, sfDir).count()
-          ()
-        }),
-      // the session-memoized CORPUS EMBEDDINGS shared by the semantic
-      // search line (raw text) and the eval's four arms (lowered) —
-      // VERDICT r9 #7: unpinned, the first semantic line of a run
-      // absorbed both corpus encodes, HashMap order deciding which
-      "semantic_corpus_warm" -> (Seq("vs_text_search_semantic",
-        "vs_semantic_recall_eval").exists(selected.contains),
-        () => {
-          // each encode gated on the line that actually reads it — an
-          // unconditional fill would charge a single-line run two
-          // corpus encodes it never serves
-          if (selected.contains("vs_text_search_semantic"))
-            operators.VectorStore.w2vCorpusEmbedding(spark, sfDir, lowered = false)
-          if (selected.contains("vs_semantic_recall_eval")) {
-            operators.VectorStore.w2vCorpusEmbedding(spark, sfDir, lowered = true)
-            operators.VectorStore.fhCorpusEmbedding(spark, sfDir, lowered = true)
-          }
-          ()
-        }),
-      // the LOWERCASED text index (folded postings are a separate
-      // artifact — one layout cannot be case-exact and folded at once)
-      "text_index_ci_warm" -> (selected.contains("vs_search_match_text_ci_indexed"),
-        () => { operators.VectorStore.ciTextIndex(spark, sfDir); () }),
-      // the PREFIX-tokenized text index (word prefixes as postings —
-      // the autocomplete route's separate artifact)
-      "text_index_prefix_warm" ->
-        (selected.contains("vs_search_match_prefix_indexed"),
-        () => { operators.VectorStore.prefixTextIndex(spark, sfDir); () }),
-      // the events payload index (float zones on value + datetime zones
-      // on ts + the event_type keyword axis)
-      "events_payload_index_warm" -> (Seq("events_value_range_indexed",
-        "events_ts_range_indexed", "events_open_range_indexed",
-        "events_scroll_order_by_indexed", "events_scroll_order_by_desc_indexed",
-        "events_ts_range_rfc3339_indexed", "events_scroll_start_from_indexed")
-        .exists(selected.contains),
-        () => { operators.VectorStore.eventsPayloadIndex(spark, sfDir); () }),
-      // the geo-grid payload index behind the bounding-box route
-      "geo_index_warm" -> (Seq("vs_geo_search_indexed",
-        "vs_geo_polygon_indexed", "vs_geo_radius_indexed")
-        .exists(selected.contains),
-        () => { operators.VectorStore.geoIndex(spark, sfDir); () }),
-      // the memoized winnow match pair list (winnowPairMemo), shared by
-      // the match report and the pagerank edge list: filled once here
-      // so neither query line carries the fingerprint+self-join
-      // scaffold (HashMap order previously decided which line paid it)
-      "winnow_matches_warm" -> (Seq("docs_winnow_matches", "docs_pagerank")
-        .exists(selected.contains),
-        () => { operators.TextAnalysis.winnowMatchPairs(spark, sfDir).count(); () }),
-      // the materialized per-doc LM score table, shared by the lm-score
-      // and ccnet-bucket lines: whichever ran first paid the
-      // bigram-count + score pipeline (both lines showed ~2.5× spreads)
-      "lm_score_warm" -> (Seq("text_lm_score", "text_ccnet_buckets")
-        .exists(selected.contains),
-        () => { operators.TextAnalysis.lmScoresCached(spark, sfDir); () }),
-      // the materialized PMI associate table, shared by the collocation
-      // report and all four semantic-eval arms
-      "pmi_assoc_warm" -> (Seq("text_pmi_colloc", "vs_semantic_recall_eval")
-        .exists(selected.contains),
-        () => { operators.TextAnalysis.pmiAssociatesCached(spark, sfDir); () }),
-      // the fitted PCA model (two treeAggregate passes + driver eigSym)
-      "pca_basis_warm" -> (selected.contains("emb_pca_project"),
-        () => { operators.Embeddings.pcaModel(spark, sfDir, 4); () }),
-      // the embedding-dedup tier's near-dup corpus cache + its two
-      // coarse quantizers (neardup-ivf, semdedup)
-      "dedup_quantizer_warm" -> (Seq("dedup_embedding_ivf", "dedup_semantic",
-        "dedup_embedding", "dedup_embedding_lsh").exists(selected.contains),
-        () => operators.Dedup.warmEmbeddingQuantizers(spark, sfDir)))
-      .collect { case (n, (true, f)) => n -> timed(labeled(n)(f())) }.toMap
-    val resultTimes = selected.map { case (name, fn) =>
+    // Index BUILD vs query SERVE: shared one-time state (index builds,
+    // codebooks, pair lists, trained models) lives in SessionMemos,
+    // and each memo times its own fills under its artifact name
+    // (SessionMemo.fillTotals) whichever line triggers them. The
+    // report carries those fills as the `*_warm` / `*_build` lines, so
+    // the serving lines below measure pure serving against the warm
+    // artifact (timing a build inside its first consumer made the
+    // graph-ANN serving path look ~10× its real cost, BENCH_r03).
+    def filledSince(mark: Map[String, SessionMemo.FillTotal]): Map[String, Double] =
+      SessionMemo.fillTotals.collect { case (a, t)
+          if t.fills > mark.get(a).fold(0L)(_.fills) =>
+        a -> (t.seconds - mark.get(a).fold(0.0)(_.seconds))
+      }
+    val fillMark = SessionMemo.fillTotals
+    // a line that throws is an error, not a fast sample; an artifact
+    // filling inside a line's TIMED samples escaped the warm-up (its
+    // build cost would sit in that line's range). Both fail the run.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val lateFills = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
+    val resultTimes = selected.flatMap { case (name, fn) =>
       def run(): Double = {
         val t0 = System.nanoTime()
-        try labeled(name) { fn(spark, sfDir).count(); () }
-        catch { case _: Throwable => () }
+        labeled(name) { fn(spark, sfDir).count(); () }
         (System.nanoTime() - t0) / 1e9
       }
       // ONE untimed warm-up execution per line (JMH discipline): the
@@ -300,15 +97,19 @@ object Bench {
       // 0.9 s steady) — which belongs to neither build nor serve, and
       // polluted every line's {min,max} range with a fixed cold-start
       // sample. Timed samples below measure steady-state serving.
-      // NOTE: this does NOT license unpinned memo fills — a shared
-      // artifact filling here hides from the ranges, so one-time state
-      // must still land on a NAMED build line above (the sweep spec +
-      // memo discipline, not the warm-up, are the guard).
-      run()
-      var times = Seq(run(), run())
-      // shared-box noise guard: if the two runs disagree badly, the
-      // slower one hit a contention spike — buy one more sample
-      if (times.max > times.min * 1.5 && times.max > 1.0) times :+= run()
+      // Memo fills that run here stay visible: each is reported on its
+      // artifact's line, not on this one.
+      val times = try {
+        run()
+        val mark = SessionMemo.fillTotals
+        var ts = Seq(run(), run())
+        // shared-box noise guard: if the two runs disagree badly, the
+        // slower one hit a contention spike — buy one more sample
+        if (ts.max > ts.min * 1.5 && ts.max > 1.0) ts :+= run()
+        val late = filledSince(mark).keys.toSeq.sorted
+        if (late.nonEmpty) lateFills(name) = late
+        Some(ts)
+      } catch { case NonFatal(e) => errors(name) = String.valueOf(e); None }
       // ContextCleaner removes dead broadcast/shuffle/cache blocks only
       // when a GC runs; with ParallelGC on a pinned 16g heap a
       // 100+-query session can go minutes without one, accumulating
@@ -333,8 +134,9 @@ object Bench {
       // leaked blocks are small (pair lists, shingle-hash caches — MBs at
       // sf0.1) against the bench heap; per-query isolation is available
       // by benching one name via SPARK_GRAFT_ONLY.
-      name -> times
+      times.map(name -> _)
     }
+    val builds = filledSince(fillMark)
     val results = resultTimes.map { case (n, ts) => n -> ts.min } ++ builds
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val ticks1 = cpuTicks()
@@ -359,7 +161,11 @@ object Bench {
     val ranges = resultTimes.toSeq.sortBy(_._1)
       .map { case (k, ts) => "\"" + k + "\":[" + r3(ts.min) + "," + r3(ts.max) + "]" }
       .mkString("{", ",", "}")
-    val detail = line(results).dropRight(1) + s""","ranges":$ranges}"""
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => Verify.json(k) + ":" + v }.mkString("{", ",", "}")
+    val detail = line(results).dropRight(1) + s""","ranges":$ranges""" +
+      s""","errors":${obj(errors.view.mapValues(Verify.json))}""" +
+      s""","late_fills":${obj(lateFills.view.mapValues(_.map(Verify.json).mkString("[", ",", "]")))}}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("/tmp/bench_full.json"), detail)
     try java.nio.file.Files.writeString( // cwd = repo root under sbt
@@ -388,5 +194,11 @@ object Bench {
         "round-over-round; re-run on a quiet box before grading")
     println(line(results.filter { case (k, _) => headline.contains(k) }))
     spark.stop()
+    if (errors.nonEmpty || lateFills.nonEmpty) {
+      errors.foreach { case (n, e) => System.err.println(s"[bench] $n failed: $e") }
+      lateFills.foreach { case (n, as) =>
+        System.err.println(s"[bench] $n filled ${as.mkString(", ")} during timed samples") }
+      sys.exit(1)
+    }
   }
 }

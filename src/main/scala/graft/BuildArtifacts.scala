@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot artifact builder: trains the Word2Vec encoder on a corpus
   * snapshot and persists it as the tracked serving artifact
   * ([[graft.operators.VectorStore.w2vEmbedder]] loads it when its
@@ -17,15 +15,7 @@ object BuildArtifacts {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outRoot = if (args.length > 1) args(1) else "artifacts/w2v"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores(4))
     // the fingerprint scan and the (pinned-seed, single-partition) fit
     // are independent corpus passes — only the artifact DIR name needs
     // the fingerprint — so they overlap (guide §2.6; profiled r14: the

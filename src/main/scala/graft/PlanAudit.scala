@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of selected SparkEntry queries —
   * the scale-review loop: check pushdown (PushedFilters/ReadSchema),
   * join strategies (broadcast vs SMJ), codegen spans, exchange count.
@@ -15,13 +13,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only = if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }

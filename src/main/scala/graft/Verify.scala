@@ -1,57 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in hand-written SQL would otherwise
+    * make a reader's json.load fail and silently empty the
+    * correctness report.
+    */
+  private[graft] def json(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name subset (local iteration)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, convert in Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit (defaults in Spark 4, pinned as part of the scale
-      // contract): runtime re-planning + skew-join splitting for hot
-      // tenants / hot keys
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the bounded post-limit rank windows (k-row finals) are
-    // unpartitioned BY DESIGN and each one logs "No Partition Defined"
-    // — hundreds of lines that bury real executor warnings in this
-    // dump's tail. The scale gate for single-partition funnels is
-    // PlanAudit's single_partition_exchange budget (executed-plan
-    // count), so the redundant per-execution warning goes quiet here.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      classOf[org.apache.spark.sql.execution.window.WindowExec].getName,
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.local(Sessions.cores(4))
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val oracle = SparkEntry.oracleSql
+      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
     // Write the oracle BEFORE running any query: if this JVM dies mid-run
     // (OOM / external timeout), the driver's compare still sees every
     // query dumped so far instead of an empty report (round-2's
     // CORRECTNESS was `{}` — consistent with a dead run, not failures).
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracle)
+    // failed queries are DATA: failures.json (name → error) lands in
+    // the output dir beside the dumps, rewritten after every failure so
+    // a run that dies later still leaves the manifest of what failed
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def writeFailures(): Unit = Files.writeString(Paths.get(s"$outDir/failures.json"),
+      failures.map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}"))
+    writeFailures()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -59,6 +45,8 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = String.valueOf(e)
+        writeFailures()
       }
       // ContextCleaner drains dead broadcast blocks only after a GC; a
       // 140-query session on a pinned ParallelGC heap can starve

@@ -142,7 +142,8 @@ object CuratePipeline {
         val rawEmb = Tables.embeddings(s, d)
           .select(col("vec_id"),
             graft.functions.Vectors.toDouble(col("embedding")).as("vec"))
-        val dropped = Dedup.semanticDedupOver(s, d, rawEmb, "semdedup-raw", t = tau)
+        val dropped = Dedup.semanticDedupOver(s, d, rawEmb,
+          Dedup.rawEmbeddingQuantizers, t = tau)
           .filter(!col("kept")).select(col("vec_id").as("doc_id"))
         val kept = afterWinnow.join(broadcast(dropped), Seq("doc_id"), "left_anti")
           .cache()

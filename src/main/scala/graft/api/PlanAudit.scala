@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExc
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 
 /** Runtime PLAN LINT — the operational form of the repo's
-  * PlanInvariantsSpec discipline, exposed as a library call so a
+  * plan-invariant specs, exposed as a library call so a
   * deployment can gate its OWN queries the way this repo gates its
   * inventory ("would this plan survive 100×?" asked of the plan, not
   * the wall clock). `audit(df)` inspects the query's physical plan
@@ -33,11 +33,12 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   *  - `parquet_scans` (info): scan count, how many carry pushed
   *    filters, how many read a pruned column subset.
   *
-  * Reads the FORMATTED explain text rather than walking exec-node
-  * classes: AQE wraps the tree in AdaptiveSparkPlanExec (children not
-  * traversable pre-execution) and the text form is stable across
-  * DSv1/DSv2 scan nodes — the same reason PlanInvariantsSpec asserts
-  * on explain text. Purely driver-side; never touches data.
+  * The budgeted counts (cartesian, shuffle and single-partition
+  * exchanges, broadcasts) walk the executed exec nodes, descending
+  * through AQE wrappers and query stages and into each cached subtree
+  * once. The info rows (codegen spans, scan metadata) read the
+  * FORMATTED explain text, where PushedFilters/ReadSchema are not
+  * length-truncated. Purely driver-side; never touches data.
   * (The human-eyeball twin that DUMPS the plans is the
   * [[graft.PlanAudit]] CLI.)
   */

@@ -72,6 +72,20 @@ object Ann {
       struct(l2Distance(v, array(cv.map(lit): _*)).as("d"), lit(cid).as("cid"))
     }: _*)
 
+  /** Driver-side memos of trained coarse quantizers, keyed (nlist,
+    * iters): centroids are MODEL STATE (trained once per corpus
+    * snapshot, applied by every consumer — probe, assignment, near-dup
+    * blocking), and retraining per query re-runs iters×(assign+update)
+    * jobs for an identical result. One memo per corpus view (the IVF
+    * serving corpus here, the full relation of the knn/graph family,
+    * [[Dedup]]'s near-dup corpora). Values are plain driver Seqs — no
+    * Spark storage to evict.
+    */
+  private[operators] val ivfQuantizers =
+    new SessionMemo[(Int, Int), Seq[(Long, Seq[Double])]]("ivfpq_codebook_warm")
+  private val knnQuantizers =
+    new SessionMemo[(Int, Int), Seq[(Long, Seq[Double])]]("ann_graph_build")
+
   /** Deterministic Lloyd's k-means over the vector column: init = the
     * `nlist` lowest vec_ids, `iters` refinement rounds. Centroids are
     * tiny (nlist × dim ≤ a few KB) — they live on the driver between
@@ -81,25 +95,6 @@ object Ann {
     * update is an explode + groupBy mean: one shuffle of partial
     * (cluster, dim, sum) triples per iteration.
     */
-  /** Driver-side memo of trained coarse quantizers: centroids are
-    * MODEL STATE (trained once per corpus snapshot, applied by every
-    * consumer — probe, assignment, near-dup blocking), and retraining
-    * per query re-runs iters×(assign+update) jobs for an identical
-    * result. Values are plain driver Seqs — no Spark storage to evict.
-    */
-  private val centMemo = new SessionMemo[(String, Int, Int), Seq[(Long, Seq[Double])]]
-
-  /** `d` is the dataset dir (the [[SessionMemo.invalidatePath]] axis);
-    * `family` disambiguates quantizers trained on different corpus
-    * views of the same snapshot (ivf vs knn vs pq-subspace…).
-    */
-  private[operators] def kmeansCentroidsCached(s: SparkSession, d: String,
-                                               family: String,
-                                               corpus: => DataFrame, nlist: Int,
-                                               iters: Int): Seq[(Long, Seq[Double])] =
-    centMemo.getOrElseUpdate(s, d, (family, nlist, iters))(
-      kmeansCentroids(corpus, nlist, iters))
-
   def kmeansCentroids(corpus: DataFrame, nlist: Int, iters: Int): Seq[(Long, Seq[Double])] = {
     var cents: Seq[(Long, Seq[Double])] = corpus.orderBy("vec_id").limit(nlist)
       .select(col("vec")).collect().toSeq.zipWithIndex
@@ -115,21 +110,6 @@ object Ann {
     }
     cents
   }
-
-  /** Driver-side memo of jointly-trained SUBSPACE quantizer families
-    * (PQ codebooks): one entry per (family, m, k, iters) — the whole
-    * m-codebook set is one model, trained in one batched Lloyd's loop.
-    */
-  private val subMemo = new SessionMemo[(String, Int, Int, Int),
-    Seq[(Int, Seq[(Long, Seq[Double])])]]
-
-  private[operators] def kmeansSubspacesCached(s: SparkSession, d: String,
-                                               family: String,
-                                               corpus: => DataFrame, m: Int,
-                                               sub: Int, k: Int, iters: Int)
-      : Seq[(Int, Seq[(Long, Seq[Double])])] =
-    subMemo.getOrElseUpdate(s, d, (family, m, k, iters))(
-      kmeansSubspaces(corpus, m, sub, k, iters))
 
   /** Train the `m` PQ subspace quantizers JOINTLY: ONE assignment +
     * update job per Lloyd's iteration covering every subspace, instead
@@ -186,7 +166,8 @@ object Ann {
     // cached: k-means runs iters+1 actions over the corpus, then the
     // probe scan reads it once more — cache instead of re-scanning
     val corpus = corpus0.cache()
-    val cents = kmeansCentroidsCached(s, d, "ivf", corpus, nlist, iters)
+    val cents = ivfQuantizers.getOrElseUpdate(s, d, (nlist, iters))(
+      kmeansCentroids(corpus, nlist, iters))
     val assigned = corpus.select(col("vec_id"), col("vec"),
       nearestCentroidId(col("vec"), cents).as("cid"))
     // nprobe closest lists per query: sort the centroid structs, slice,
@@ -209,8 +190,8 @@ object Ann {
     * query. The evict hook reclaims the temp artifact through the
     * session's filesystem settings (the payloadIdxMemo discipline).
     */
-  private val annIdxMemo =
-    new SessionMemo[Unit, (graft.api.AnnIndex, () => Unit)](_._2())
+  private val annIdxMemo = new SessionMemo[Unit, (graft.api.AnnIndex, () => Unit)](
+    "ann_pfilter_index_warm", _._2())
 
   private[graft] def annPayloadIndex(s: SparkSession, d: String): graft.api.AnnIndex =
     annIdxMemo.getOrElseUpdate(s, d, ()) {
@@ -305,8 +286,8 @@ object Ann {
     * an unmemoized rotation would write (and leak) a full index copy
     * into a fresh temp dir per call (the deletedIdxMemo discipline).
     */
-  private val annDeleteMemo =
-    new SessionMemo[Unit, (graft.api.AnnIndex, () => Unit)](_._2())
+  private val annDeleteMemo = new SessionMemo[Unit, (graft.api.AnnIndex, () => Unit)](
+    "ann_pfilter_index_warm", _._2())
 
   private[graft] def annDeletedIndex(s: SparkSession, d: String): graft.api.AnnIndex =
     annDeleteMemo.getOrElseUpdate(s, d, ()) {
@@ -470,7 +451,8 @@ object Ann {
     // by-name corpus, so the cache round-trip is a no-op there)
     val fitCorpus = corpus.cache()
     val cents =
-      try kmeansCentroidsCached(s, d, "ivf", fitCorpus, nlist, iters)
+      try ivfQuantizers.getOrElseUpdate(s, d, (nlist, iters))(
+        kmeansCentroids(fitCorpus, nlist, iters))
       finally fitCorpus.unpersist()
     val sizes = corpus
       .select(nearestCentroidId(col("vec"), cents).as("cid"))
@@ -503,7 +485,8 @@ object Ann {
     // cold-fit cache round-trip — see ivfBalance
     val fitCorpus = corpus.cache()
     val cents =
-      try kmeansCentroidsCached(s, d, "ivf", fitCorpus, nlist, iters)
+      try ivfQuantizers.getOrElseUpdate(s, d, (nlist, iters))(
+        kmeansCentroids(fitCorpus, nlist, iters))
       finally fitCorpus.unpersist()
     val withDist = corpus.select(
       nearestCentroidId(col("vec"), cents).as("cid"), col("vec"))
@@ -599,7 +582,7 @@ object Ann {
   // Dataset.unpersist only releases CacheManager-tracked plans — it
   // cannot reach checkpoint RDD blocks (the simhashSigMemo discipline);
   // the ContextCleaner frees them when the entry drops
-  private val knnMemo = new SessionMemo[String, DataFrame]()
+  private val knnMemo = new SessionMemo[String, DataFrame]("ann_knn_build")
 
   private def buildKnnGraph(s: SparkSession, d: String, k: Int, rounds: Int,
                             nlist: Int, iters: Int, sampleCap: Int): DataFrame = {
@@ -623,7 +606,8 @@ object Ann {
     // one coarse quantizer per (corpus, lists, iters) — shared with the
     // search-graph build (both bucket the full embeddings relation;
     // training twice for an identical result was ~3 s of the build line)
-    val cents = kmeansCentroidsCached(s, d, s"knn:$lists", emb, lists, iters)
+    val cents = knnQuantizers.getOrElseUpdate(s, d, (lists, iters))(
+      kmeansCentroids(emb, lists, iters))
     val knn = descendEdges(emb, cents, k, rounds, cap)
     val w = Window.partitionBy("src").orderBy(col("cs").desc, col("dst").asc)
     knn.withColumn("rk", row_number().over(w).cast("long"))
@@ -727,7 +711,7 @@ object Ann {
     * pin. Keyed by session identity so a fresh session rebuilds.
     */
   // no onEvict — localCheckpoint()ed value, see the knnMemo note
-  private val graphMemo = new SessionMemo[String, DataFrame]()
+  private val graphMemo = new SessionMemo[String, DataFrame]("ann_graph_build")
 
   /** GRAPH-ANN top-k search (the HNSW/DiskANN serving tier, batched):
     * best-first beam traversal over the NN-descent k-NN graph. Per
@@ -789,18 +773,7 @@ object Ann {
     * path pays zero entry-derivation jobs).
     */
   // no onEvict — localCheckpoint()ed value, see the knnMemo note
-  private val entryMemo = new SessionMemo[String, DataFrame]()
-
-  /** Build (or reuse) the memoized undirected search-graph edge list
-    * over the corpus side — the explicit BUILD step of the graph-ANN
-    * tier, exposed so benchmarks time index BUILD and query SERVE
-    * separately (the build is one-time state amortized over every
-    * search; conflating them makes the serving path look 10× its cost).
-    */
-  def buildGraph(s: SparkSession, d: String, graphK: Int = 10): Unit = {
-    val (corpus, _) = corpusAndQueries(s, d)
-    graphEdges(s, d, graphK, corpus.cache()).count()
-  }
+  private val entryMemo = new SessionMemo[String, DataFrame]("ann_graph_build")
 
   /** The ONE coarse quantizer of the knn/graph index family, trained on
     * the full embeddings relation (a superset of the search corpus — a
@@ -820,7 +793,7 @@ object Ann {
       .select(col("vec_id"), toDouble(col("embedding")).as("vec")).cache()
     try {
       val lists = math.max(16, math.ceil(math.sqrt(full.count().toDouble)).toInt)
-      kmeansCentroidsCached(s, d, s"knn:$lists", full, lists, 3)
+      knnQuantizers.getOrElseUpdate(s, d, (lists, 3))(kmeansCentroids(full, lists, 3))
     } finally full.unpersist()
   }
 
@@ -1053,7 +1026,8 @@ object Ann {
                      nprobes: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = {
     val (corpus0, queries) = corpusAndQueries(s, d)
     val corpus = corpus0.cache()
-    val cents = kmeansCentroidsCached(s, d, "ivf", corpus, nlist, 3)
+    val cents = ivfQuantizers.getOrElseUpdate(s, d, (nlist, 3))(
+      kmeansCentroids(corpus, nlist, 3))
     val assigned = corpus.select(col("vec_id"), col("vec"),
       nearestCentroidId(col("vec"), cents).as("cid"))
     val maxP = math.min(nprobes.max, nlist)

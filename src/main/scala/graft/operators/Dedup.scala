@@ -100,7 +100,8 @@ object Dedup {
     * TWICE per fill, feeding both the hot-correction join and the
     * final join). Same discipline as [[minhashPairs]]' pairMemo.
     */
-  private val gramMemo = new SessionMemo[(Int, Int), DataFrame](_.unpersist())
+  private val gramMemo =
+    new SessionMemo[(Int, Int), DataFrame]("dedup_grams_warm", _.unpersist())
 
   /** Session memo of the RAW (doc_id, xxhash64(shingle)) stream at
     * width `w` — the shared tokenize+explode+hash base that the minhash
@@ -109,16 +110,22 @@ object Dedup {
     * consumer; 4+ per session at the default w). CACHED, not
     * checkpointed: under storage pressure the blocks evict and lineage
     * recomputes — nothing pins corpus-scale state irrevocably; onEvict
-    * unpersists on snapshot invalidation.
+    * unpersists on snapshot invalidation. Materialized in its own fill,
+    * so the corpus pass is charged to this artifact whichever consumer
+    * asks first.
     */
-  private val shingleHashMemo = new SessionMemo[Int, DataFrame](_.unpersist())
+  private val shingleHashMemo =
+    new SessionMemo[Int, DataFrame]("dedup_pairs_warm", _.unpersist())
 
   private[operators] def hashedShingleRows(s: SparkSession, d: String,
                                            w: Int): DataFrame =
-    shingleHashMemo.getOrElseUpdate(s, d, w)(
-      shingleRows(Tables.documents(s, d), w, distinct = false)
+    shingleHashMemo.getOrElseUpdate(s, d, w) {
+      val r = shingleRows(Tables.documents(s, d), w, distinct = false)
         .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-        .cache())
+        .cache()
+      r.count() // eager: the memo hands out a materialized artifact
+      r
+    }
 
   private def candidatePairCounts(s: SparkSession, d: String, w: Int,
                                   dfCap: Int): DataFrame =
@@ -348,8 +355,8 @@ object Dedup {
     * between queries the next consumer transparently recomputes instead
     * of failing on a truncated-lineage checkpoint block.
     */
-  private val pairMemo =
-    new SessionMemo[(Double, Int, Int, Int), DataFrame](_.unpersist())
+  private val pairMemo = new SessionMemo[(Double, Int, Int, Int), DataFrame](
+    "dedup_pairs_warm", _.unpersist())
 
   /** Verified near-dup pairs (ia, ib, jaccard) — memoized, eagerly
     * materialized.
@@ -457,7 +464,7 @@ object Dedup {
     * by the ContextCleaner when the entry drops (DataFrame.unpersist
     * cannot reach them).
     */
-  private val simhashSigMemo = new SessionMemo[Unit, DataFrame]()
+  private val simhashSigMemo = new SessionMemo[Unit, DataFrame]("dedup_simhash_warm")
 
   private[graft] def simhashSigs(s: SparkSession, d: String): DataFrame =
     simhashSigMemo.getOrElseUpdate(s, d, ()) {
@@ -787,6 +794,17 @@ object Dedup {
     emb.unionByName(perturbed)
   }
 
+  /** Coarse quantizers of the embedding near-dup tier, keyed (nlist,
+    * iters) — one memo per corpus: [[nearDupCorpus]] (shared by
+    * [[embeddingNearDupIvf]] and [[semanticDedup]]: the same corpus,
+    * nlist and iters train the same centroids, so one fit serves both)
+    * and the raw embeddings a [[graft.api.CuratePipeline]] dedups.
+    */
+  private val nearDupQuantizers =
+    new SessionMemo[(Int, Int), Seq[(Long, Seq[Double])]]("dedup_quantizer_warm")
+  private[graft] val rawEmbeddingQuantizers =
+    new SessionMemo[(Int, Int), Seq[(Long, Seq[Double])]]("curate_quantizer_warm")
+
   /** Embedding-cosine near-duplicates ≥ 0.99, exact blocked all-pairs —
     * the oracle-checkable baseline, NOT the scale route: the compare is
     * O(n²) by construction. `maxRows` guards the foot-gun — beyond it
@@ -834,30 +852,11 @@ object Dedup {
     * for free. Emitted pairs ⊂ exact set; recall spec vs the planted
     * twins, not a DuckDB oracle.
     */
-  /** Bench/serving warm-up: force the near-dup corpus cache plus the
-    * two embedding-tier coarse quantizers ([[embeddingNearDupIvf]]'s
-    * "neardup-ivf" and [[semanticDedup]]'s "semdedup" — their DEFAULT
-    * (nlist, iters) configs, the ones the inventory query lines use) so
-    * the one-time k-means trainings land on a named build line instead
-    * of whichever dedup query ran first (detail ranges showed ~3× and
-    * ~10× spreads on the two lines).
-    */
-  private[graft] def warmEmbeddingQuantizers(s: SparkSession, d: String): Unit = {
-    val all = nearDupCorpus(s, d).cache()
-    all.count()
-    // the two family fits are independent (same input, separate memo
-    // entries) — run them concurrently (guide §2.6); each fit's own
-    // iteration chain stays sequential
-    Ann.concurrently(Seq(
-      () => { Ann.kmeansCentroidsCached(s, d, "neardup-ivf", all, 16, 3); () },
-      () => { Ann.kmeansCentroidsCached(s, d, "semdedup", all, 16, 3); () }))
-    ()
-  }
-
   def embeddingNearDupIvf(s: SparkSession, d: String, t: Double = 0.99,
                           nlist: Int = 16, iters: Int = 3): DataFrame = {
     val all = nearDupCorpus(s, d).cache()
-    val cents = Ann.kmeansCentroidsCached(s, d, "neardup-ivf", all, nlist, iters)
+    val cents = nearDupQuantizers.getOrElseUpdate(s, d, (nlist, iters))(
+      Ann.kmeansCentroids(all, nlist, iters))
     val posts = all.select(col("vec_id"),
       explode(slice(Ann.rankedCentroids(col("vec"), cents), 1, 2)
         .getField("cid")).as("cid"))
@@ -894,7 +893,7 @@ object Dedup {
   // grams.cache() was never released, which leaked corpus-scale blocks
   // for the session AND doubled as an accidental plan-matched memo —
   // this is the explicit, released form of the same reuse
-  private val dupSpanMemo = new SessionMemo[String, DataFrame]()
+  private val dupSpanMemo = new SessionMemo[String, DataFrame]("dup_spans_warm")
 
   def dupSpans(s: SparkSession, d: String, w: Int = 5, minRun: Int = 3): DataFrame =
     dupSpanMemo.getOrElseUpdate(s, d, s"$w:$minRun")(
@@ -1024,7 +1023,7 @@ object Dedup {
     */
   def semanticDedup(s: SparkSession, d: String, t: Double = 0.99,
                     nlist: Int = 16, iters: Int = 3): DataFrame =
-    semanticDedupOver(s, d, nearDupCorpus(s, d), "semdedup", t, nlist, iters)
+    semanticDedupOver(s, d, nearDupCorpus(s, d), nearDupQuantizers, t, nlist, iters)
 
   /** [[semanticDedup]]'s core over an EXPLICIT corpus. The inventory
     * row runs it over [[nearDupCorpus]] (the twin-planted eval corpus,
@@ -1036,10 +1035,13 @@ object Dedup {
     * lost, the one thing a dedup gate must never do).
     */
   private[graft] def semanticDedupOver(s: SparkSession, d: String,
-      corpus: DataFrame, quantizerKey: String, t: Double = 0.99,
+      corpus: DataFrame,
+      quantizers: SessionMemo[(Int, Int), Seq[(Long, Seq[Double])]],
+      t: Double = 0.99,
       nlist: Int = 16, iters: Int = 3): DataFrame = {
     val all = corpus.cache()
-    val cents = Ann.kmeansCentroidsCached(s, d, quantizerKey, all, nlist, iters)
+    val cents = quantizers.getOrElseUpdate(s, d, (nlist, iters))(
+      Ann.kmeansCentroids(all, nlist, iters))
     val assigned = all
       .select(col("vec_id"), col("vec"),
         Ann.rankedCentroids(col("vec"), cents)(0).as("nc"))

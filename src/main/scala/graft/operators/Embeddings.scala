@@ -173,8 +173,16 @@ object Embeddings {
     // all m subspace codebooks train JOINTLY — one assignment+update
     // job per Lloyd's iteration instead of m sequential fits (identical
     // per-subspace math; see Ann.kmeansSubspaces)
-    Ann.kmeansSubspacesCached(s, d, s"pq:$m", emb, m, sub, k, iters)
+    pqBookMemo.getOrElseUpdate(s, d, (m, k, iters))(
+      Ann.kmeansSubspaces(emb, m, sub, k, iters))
   }
+
+  /** Driver-side memo of the trained PQ codebook sets, keyed (m, k,
+    * iters): the whole m-codebook set is one model, trained in one
+    * batched Lloyd's loop.
+    */
+  private val pqBookMemo = new SessionMemo[(Int, Int, Int),
+    Seq[(Int, Seq[(Long, Seq[Double])])]]("pq_codebook_warm")
 
   /** (vec_id, subspace, code) PQ code rows for the whole corpus. */
   def pqCodes(s: SparkSession, d: String, m: Int = 8, k: Int = 16): DataFrame =
@@ -259,9 +267,9 @@ object Embeddings {
     * FIRST-CALL COST: the coarse quantizer + m residual codebooks are
     * MODEL state (m+1 k-means trainings, ~14 s at sf0.1 cold) trained
     * lazily through the per-snapshot memo and amortized over every
-    * later search — force [[ivfPqModel]] (what Bench's
-    * `ivfpq_codebook_warm` line does) to pay it once, off the serving
-    * path.
+    * later search — force [[ivfPqModel]] (an index build job) to pay
+    * it once, off the serving path; Bench reports the fill as
+    * `ivfpq_codebook_warm`.
     */
   def ivfPqSearch(s: SparkSession, d: String, queryId: Long = 0, k: Int = 10,
                   rerank: Int = 50, nlist: Int = 16, nprobe: Int = 4,
@@ -317,8 +325,8 @@ object Embeddings {
   /** The query-independent IVF-PQ model: the coarse quantizer plus the
     * m RESIDUAL sub-codebooks (trained on v − list centroid). All m+1
     * k-means fits flow through the per-corpus-snapshot memo, so calling
-    * this once (Bench's `ivfpq_codebook_warm`; an index build job in a
-    * deployment) pins the whole model and every subsequent
+    * this once (an index build job in a deployment) pins the whole
+    * model and every subsequent
     * [[ivfPqSearch]] is pure serving.
     */
   // the WHOLE (coarse quantizer, residual codebooks) model memoizes as
@@ -329,7 +337,8 @@ object Embeddings {
   // it never uses — the model is driver state, there are no cached
   // blocks to evict
   private val ivfPqMemo = new SessionMemo[(Int, Int, Int),
-    (Seq[(Long, Seq[Double])], Seq[(Int, Seq[(Long, Seq[Double])])])]()
+    (Seq[(Long, Seq[Double])], Seq[(Int, Seq[(Long, Seq[Double])])])](
+    "ivfpq_codebook_warm")
 
   private[graft] def ivfPqModel(s: SparkSession, d: String, nlist: Int = 16,
                                 m: Int = 8, nCodes: Int = 16)
@@ -347,7 +356,8 @@ object Embeddings {
     // cache for the build, released below
     val corpus = emb.filter(col("vec_id") >= 10).cache()
     try {
-    val cents = Ann.kmeansCentroidsCached(s, d, "ivf", corpus, nlist, iters = 3)
+    val cents = Ann.ivfQuantizers.getOrElseUpdate(s, d, (nlist, 3))(
+      Ann.kmeansCentroids(corpus, nlist, iters = 3))
     val dim = embDim(s, d)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
@@ -372,15 +382,10 @@ object Embeddings {
         else res.filter(
           pmod(xxhash64(col("vec_id")),
             lit((n + trainCap - 1) / trainCap)) === 0)
-      // the memo family carries nlist: the TRAINING INPUT (the
-      // residual frame) depends on the coarse centroids, so a
-      // "pqres:$m" name shared across nlist values would serve a
-      // codebook fit against the WRONG residual distribution to a
-      // later ivfPqModel(nlist != first) call — silent recall loss.
       // All m residual codebooks train jointly (one job per iteration;
-      // see Ann.kmeansSubspaces).
-      val books = Ann.kmeansSubspacesCached(s, d, s"pqres:$nlist:$m",
-        train, m, sub, nCodes, iters = 3)
+      // see Ann.kmeansSubspaces); ivfPqMemo holds them with the coarse
+      // centroids they were fitted against.
+      val books = Ann.kmeansSubspaces(train, m, sub, nCodes, iters = 3)
       (cents, books)
     } finally res.unpersist()
     // cache releases ride finally: a require/fit failure between
@@ -445,7 +450,7 @@ object Embeddings {
     * coarse pass; in a persisted deployment this is its own parquet
     * column/file, so stage 1's scan I/O drops 64× at 100 TB.
     */
-  private val bqCodeMemo = new SessionMemo[Unit, DataFrame](_.unpersist())
+  private val bqCodeMemo = new SessionMemo[Unit, DataFrame]("bq_codes_warm", _.unpersist())
 
   private[graft] def bqCodes(s: SparkSession, d: String): DataFrame =
     bqCodeMemo.getOrElseUpdate(s, d, ()) {
@@ -519,7 +524,8 @@ object Embeddings {
     * full-corpus posexplode aggregate — 4 redundant corpus scans per
     * 5-query `ann_recall_eval` batch.
     */
-  private val sqBoundsMemo = new SessionMemo[Unit, (Array[Double], Array[Double])]
+  private val sqBoundsMemo =
+    new SessionMemo[Unit, (Array[Double], Array[Double])]("sq_bounds_warm")
 
   /** Per-snapshot memos of the single-row DRIVER FETCHES every
     * single-query tier repeats per call — the query vector / packed
@@ -531,7 +537,7 @@ object Embeddings {
     * parquet once per session per snapshot — the [[sqBounds]] memo
     * discipline, nothing persists across invocations.
     */
-  private val qvecMemo = new SessionMemo[Long, Seq[Double]]
+  private val qvecMemo = new SessionMemo[Long, Seq[Double]]("query_fetch_warm")
 
   private[graft] def queryVec(s: SparkSession, d: String,
                               queryId: Long): Seq[Double] =
@@ -540,14 +546,14 @@ object Embeddings {
         .select(toDouble(col("embedding")).as("vec"))
         .head().getSeq[Double](0))
 
-  private val qcodeMemo = new SessionMemo[Long, Seq[Long]]
+  private val qcodeMemo = new SessionMemo[Long, Seq[Long]]("query_fetch_warm")
 
   private def queryCode(s: SparkSession, d: String, queryId: Long): Seq[Long] =
     qcodeMemo.getOrElseUpdate(s, d, queryId)(
       bqCodes(s, d).filter(col("vec_id") === queryId)
         .head().getSeq[Long](1))
 
-  private val dimMemo = new SessionMemo[Unit, Int]
+  private val dimMemo = new SessionMemo[Unit, Int]("query_fetch_warm")
 
   private[graft] def embDim(s: SparkSession, d: String): Int =
     dimMemo.getOrElseUpdate(s, d, ())(
@@ -743,7 +749,8 @@ object Embeddings {
     * projection-only cost). Driver-side arrays only — nothing to
     * unpersist on evict.
     */
-  private val pcaMemo = new SessionMemo[Int, (Array[Double], Seq[Array[Double]])]
+  private val pcaMemo =
+    new SessionMemo[Int, (Array[Double], Seq[Array[Double]])]("pca_basis_warm")
 
   private[graft] def pcaModel(s: SparkSession, d: String,
                               k: Int): (Array[Double], Seq[Array[Double]]) =

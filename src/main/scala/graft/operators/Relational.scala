@@ -36,7 +36,8 @@ object Relational {
     * pinned, eagerly-materialized copy per (session, snapshot, name),
     * released on eviction like every other memo in this file.
     */
-  private val relationMemo = new SessionMemo[String, DataFrame](_.unpersist())
+  private val relationMemo =
+    new SessionMemo[String, DataFrame]("events_rollups_warm", _.unpersist())
 
   private def memoized(s: SparkSession, d: String, name: String)(
       build: => DataFrame): DataFrame =
@@ -922,7 +923,8 @@ object Relational {
     * (frequent-pair vocabulary, not corpus rows); each consumer's
     * order+limit is a cheap TakeOrdered over it.
     */
-  private val basketMemo = new SessionMemo[Long, DataFrame](_.unpersist())
+  private val basketMemo =
+    new SessionMemo[Long, DataFrame]("basket_pairs_warm", _.unpersist())
 
   private[graft] def basketPairSupport(s: SparkSession, d: String,
                                        minSupport: Long): DataFrame =

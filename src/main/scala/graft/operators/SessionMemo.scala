@@ -19,8 +19,16 @@ import org.apache.spark.sql.SparkSession
   * `onEvict` releases executor-side storage (unpersist) when an entry
   * is dropped — without it, invalidation would leak the cached blocks
   * the memo pinned.
+  *
+  * `artifact` names what the memo holds (e.g. `dedup_pairs_warm`).
+  * Every build is timed into the fill ledger under that name
+  * ([[SessionMemo.fillTotals]]), which is how Bench reports its
+  * `*_warm` / `*_build` lines: the fill is charged to the artifact
+  * whichever consumer happens to trigger it. Memos sharing a name are
+  * one artifact.
   */
-private[graft] final class SessionMemo[K, V](onEvict: V => Unit = (_: V) => ()) {
+private[graft] final class SessionMemo[K, V](val artifact: String,
+                                             onEvict: V => Unit = (_: V) => ()) {
   // values sit behind once-only holders: when two threads race a cold
   // key, exactly ONE build thunk runs (the putIfAbsent winner's, under
   // the holder's lazy-val lock) — a naive getOrElseUpdate would run
@@ -30,7 +38,9 @@ private[graft] final class SessionMemo[K, V](onEvict: V => Unit = (_: V) => ()) 
     @volatile private[SessionMemo] var evaluated = false
     @volatile private[SessionMemo] var dropped = false
     @volatile private[SessionMemo] var evicted = false
-    lazy val value: V = { val v = f(); evaluated = true; v }
+    lazy val value: V = {
+      val v = SessionMemo.timedFill(artifact)(f()); evaluated = true; v
+    }
   }
 
   // eviction is CONSUMED under the holder lock, so a drop() landing
@@ -142,4 +152,44 @@ private[graft] object SessionMemo {
   }
 
   def clearAll(): Unit = all.forEach(_.clear())
+
+  /** Builds so far under one artifact name, and their summed seconds. */
+  final case class FillTotal(fills: Long, seconds: Double)
+
+  // one row per artifact NAME (bounded by the declared memos, however
+  // many keys fill), so a long-lived serving session never grows it
+  private val totals =
+    new java.util.concurrent.ConcurrentHashMap[String, FillTotal]()
+
+  // the builds running on this thread, innermost first; each frame
+  // accumulates the wall time of the builds nested inside it
+  private final class Frame { var nestedNanos = 0L }
+  private val open = ThreadLocal.withInitial[List[Frame]](() => Nil)
+
+  /** Run one build and charge its wall time to `artifact`, minus the
+    * time its nested builds (memo fills it triggers on this thread)
+    * charge to their own artifacts: every second is counted once.
+    * Nothing is recorded for a build that throws.
+    */
+  private def timedFill[V](artifact: String)(build: => V): V = {
+    val frame = new Frame
+    val outer = open.get()
+    open.set(frame :: outer)
+    val t0 = System.nanoTime()
+    val v = try build finally open.set(outer)
+    val wall = System.nanoTime() - t0
+    outer.headOption.foreach(_.nestedNanos += wall)
+    totals.merge(artifact, FillTotal(1, (wall - frame.nestedNanos) / 1e9),
+      (a, b) => FillTotal(a.fills + b.fills, a.seconds + b.seconds))
+    v
+  }
+
+  /** Fill ledger snapshot: artifact name → builds and seconds so far
+    * in this JVM. Diff two snapshots to see what a stretch of work
+    * filled.
+    */
+  def fillTotals: Map[String, FillTotal] = {
+    import scala.jdk.CollectionConverters._
+    totals.asScala.toMap
+  }
 }

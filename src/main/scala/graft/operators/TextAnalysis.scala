@@ -289,7 +289,7 @@ object TextAnalysis {
     * materialize-once-consume-many discipline of every shared artifact
     * here ([[graft.operators.Embeddings]]' bqCodeMemo pattern).
     */
-  private val pmiMemo = new SessionMemo[Unit, DataFrame](_.unpersist())
+  private val pmiMemo = new SessionMemo[Unit, DataFrame]("pmi_assoc_warm", _.unpersist())
 
   private[graft] def pmiAssociatesCached(s: SparkSession, d: String): DataFrame =
     pmiMemo.getOrElseUpdate(s, d, ()) {
@@ -387,7 +387,7 @@ object TextAnalysis {
     * table is materialized — holding both would double the pinned
     * footprint for no consumer.
     */
-  private val lmScoreMemo = new SessionMemo[Unit, DataFrame](_.unpersist())
+  private val lmScoreMemo = new SessionMemo[Unit, DataFrame]("lm_score_warm", _.unpersist())
 
   private[graft] def lmScoresCached(s: SparkSession, d: String): DataFrame =
     lmScoreMemo.getOrElseUpdate(s, d, ()) {
@@ -512,13 +512,18 @@ object TextAnalysis {
     * nMerges×(argmax job + fold checkpoint) re-run identically per
     * caller without this (the train row, the encode row's retrain, ×
     * every bench sample). Values are driver-local few-row DataFrames —
-    * nothing to evict.
+    * nothing to evict. One memo per model family, keyed by its
+    * training parameters.
     */
-  private val tokenizerMemo = new SessionMemo[(String, String), DataFrame]()
+  private val bpeModelMemo = new SessionMemo[String, DataFrame]("bpe_model_warm")
+  private val byteBpeModelMemo =
+    new SessionMemo[String, DataFrame]("byte_bpe_model_warm")
+  private val unigramModelMemo =
+    new SessionMemo[String, DataFrame]("unigram_model_warm")
 
   def bpeTrain(s: SparkSession, d: String, nMerges: Int = 10,
                minPairCount: Long = 2): DataFrame =
-    tokenizerMemo.getOrElseUpdate(s, d, ("bpe", s"$nMerges:$minPairCount"))(
+    bpeModelMemo.getOrElseUpdate(s, d, s"$nMerges:$minPairCount")(
       bpeTrainOf(Tables.documents(s, d), nMerges, minPairCount))
 
   /** [[bpeTrain]] over an arbitrary (doc_id, text) relation — the
@@ -607,7 +612,7 @@ object TextAnalysis {
     */
   def byteBpeTrain(s: SparkSession, d: String, nMerges: Int = 10,
                    minPairCount: Long = 2): DataFrame =
-    tokenizerMemo.getOrElseUpdate(s, d, ("bytebpe", s"$nMerges:$minPairCount"))(
+    byteBpeModelMemo.getOrElseUpdate(s, d, s"$nMerges:$minPairCount")(
       byteBpeTrainOf(Tables.documents(s, d), nMerges, minPairCount))
 
   /** [[byteBpeTrain]] over an arbitrary (doc_id, text) relation — the
@@ -821,8 +826,8 @@ object TextAnalysis {
   def unigramTrain(s: SparkSession, d: String, vocabSize: Int = 120,
                    maxPieceLen: Int = 4, nIter: Int = 3,
                    seedSize: Int = 400): DataFrame =
-    tokenizerMemo.getOrElseUpdate(s, d,
-      ("unigram", s"$vocabSize:$maxPieceLen:$nIter:$seedSize"))(
+    unigramModelMemo.getOrElseUpdate(s, d,
+      s"$vocabSize:$maxPieceLen:$nIter:$seedSize")(
       unigramTrainOf(Tables.documents(s, d), vocabSize, maxPieceLen, nIter,
         seedSize))
 
@@ -1101,10 +1106,10 @@ object TextAnalysis {
     * of that line). The [[graft.operators.Dedup.minhashPairs]]
     * pairMemo discipline on the winnowing axis: tiny verified pair
     * rows, eager localCheckpoint so the corpus-sized fingerprint
-    * lineage never re-enters a consumer plan. Fill lands on the named
-    * `winnow_matches_warm` bench line.
+    * lineage never re-enters a consumer plan.
     */
-  private val winnowPairMemo = new SessionMemo[(Int, Int), DataFrame]()
+  private val winnowPairMemo =
+    new SessionMemo[(Int, Int), DataFrame]("winnow_matches_warm")
 
   private[graft] def winnowMatchPairs(s: SparkSession, d: String,
                                       minShared: Int = 2,

@@ -72,7 +72,8 @@ class CuratePipelineSpec extends SparkSpecBase {
       .select(col("vec_id"),
         graft.functions.Vectors.toDouble(col("embedding")).as("vec"))
     val droppedStandalone = graft.operators.Dedup
-      .semanticDedupOver(spark, sf, rawEmb, "semdedup-raw", t = 0.99)
+      .semanticDedupOver(spark, sf, rawEmb,
+        graft.operators.Dedup.rawEmbeddingQuantizers, t = 0.99)
       .filter(!col("kept")).select("vec_id").collect().map(_.getLong(0)).toSet
     // and NO real document may be dropped on account of a planted
     // phantom: every drop must have a real higher-priority near-dup

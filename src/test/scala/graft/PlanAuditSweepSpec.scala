@@ -3,18 +3,22 @@ package graft
 import graft.api.PlanAudit
 
 /** PlanAudit as CI over the WHOLE inventory (VERDICT r5 #7): every
-  * `SparkEntry.queries` plan must pass the runtime lint — cartesian
-  * fail + a per-query shuffle budget — so a new operator cannot land
-  * with a scale-killer plan even before a human reads it. The budgets
+  * `SparkEntry.queries` plan must pass the runtime lint — no
+  * CartesianProduct anywhere in the executed plan (the classic silent
+  * scale-killer: a missing join key quietly works at test SF and
+  * explodes at 100 TB) and a per-query shuffle budget — so a new
+  * operator cannot land with a scale-killer plan even before a human
+  * reads it. The budgets
   * encode each family's audited shape (how many exchanges the plan is
   * SUPPOSED to have); a refactor that silently adds a shuffle fails
   * here first, at sf0.001, not at 100 TB.
   */
 class PlanAuditSweepSpec extends SparkSpecBase {
 
-  /** The intentionally-blocked all-pairs baseline (see
-    * PlanInvariantsSpec): broadcast-nested-loop at test scale, flagged
-    * cartesian by the audit's conservative counter.
+  /** The intentionally-blocked all-pairs baseline (`dedup_embedding`,
+    * whose sub-quadratic twin is `dedup_embedding_lsh`):
+    * broadcast-nested-loop at test scale, but a cartesian on two large
+    * sides by design.
     */
   private val exempt = Set("dedup_embedding")
 

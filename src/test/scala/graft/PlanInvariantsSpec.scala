@@ -1,26 +1,10 @@
 package graft
 
-/** Whole-inventory plan guard: no query may plan an unconstrained
-  * CartesianProduct — the classic silent scale-killer (a missing join
-  * key quietly works at test SF and explodes at 100 TB). The only
-  * exemption is the intentionally-blocked all-pairs baseline
-  * (`dedup_embedding`, whose sub-quadratic twin is
-  * `dedup_embedding_lsh`); its plan is broadcast-nested-loop at test
-  * scale but would degrade to cartesian on two large sides by design.
+/** Plan-SHAPE regressions for named queries. The whole-inventory
+  * guards (no CartesianProduct, per-family shuffle budgets) live in
+  * PlanAuditSweepSpec.
   */
 class PlanInvariantsSpec extends SparkSpecBase {
-
-  private val exempt = Set("dedup_embedding")
-
-  test("no query plans a CartesianProduct") {
-    val offenders = SparkEntry.queries.toSeq
-      .filterNot { case (n, _) => exempt(n) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct")) Some(name) else None
-      }
-    assert(offenders.isEmpty, s"cartesian plans: $offenders")
-  }
 
   // formatted mode: executedPlan.toString truncates scan metadata
   // (spark.sql.maxMetadataStringLength = 100), silently hiding long

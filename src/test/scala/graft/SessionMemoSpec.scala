@@ -4,8 +4,68 @@ import graft.operators.SessionMemo
 
 class SessionMemoSpec extends SparkSpecBase {
 
+  // ledger cases use a fresh artifact name each, so fills recorded by
+  // other memos in this JVM never show up in their totals
+  private def freshName(): String = s"spec_fill_${java.util.UUID.randomUUID()}"
+  private def fills(name: String): SessionMemo.FillTotal =
+    SessionMemo.fillTotals.getOrElse(name, SessionMemo.FillTotal(0, 0.0))
+
+  test("a cold key records one fill under the memo's name; a hit records nothing") {
+    val name = freshName()
+    val memo = new SessionMemo[Int, String](name)
+    memo.getOrElseUpdate(spark, "ledger", 1) { Thread.sleep(50); "v" }
+    val cold = fills(name)
+    assert(cold.fills === 1)
+    assert(cold.seconds >= 0.05)
+    memo.getOrElseUpdate(spark, "ledger", 1)(fail("a hit must not build"))
+    assert(fills(name) === cold)
+  }
+
+  test("a nested fill's seconds are counted once, under its own artifact") {
+    val (outerName, innerName) = (freshName(), freshName())
+    val outer = new SessionMemo[Int, String](outerName)
+    val inner = new SessionMemo[Int, String](innerName)
+    val t0 = System.nanoTime()
+    outer.getOrElseUpdate(spark, "nest", 1) {
+      Thread.sleep(100)
+      inner.getOrElseUpdate(spark, "nest", 1) { Thread.sleep(300); "in" } + "out"
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val (o, i) = (fills(outerName), fills(innerName))
+    assert(o.fills === 1 && i.fills === 1)
+    assert(i.seconds >= 0.3)
+    assert(o.seconds >= 0.1 && o.seconds < 0.3,
+      s"the outer fill must exclude the nested build (got ${o.seconds} s)")
+    assert(o.seconds + i.seconds <= wall)
+    // the same artifact nested in itself: still one wall's worth
+    val same = freshName()
+    val a = new SessionMemo[Int, String](same)
+    val b = new SessionMemo[Int, String](same)
+    val t1 = System.nanoTime()
+    a.getOrElseUpdate(spark, "nest", 1) {
+      Thread.sleep(100); b.getOrElseUpdate(spark, "nest", 1) { Thread.sleep(100); "b" }
+    }
+    val wall2 = (System.nanoTime() - t1) / 1e9
+    assert(fills(same).fills === 2)
+    assert(fills(same).seconds >= 0.2 && fills(same).seconds <= wall2)
+  }
+
+  test("two threads racing a cold key record one fill") {
+    val name = freshName()
+    val memo = new SessionMemo[Int, String](name)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 2).map(_ => new Thread(() => {
+      start.await()
+      memo.getOrElseUpdate(spark, "race-fill", 1) { Thread.sleep(200); "v" }
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    assert(fills(name).fills === 1)
+  }
+
   test("getOrElseUpdate builds once per (session, dir, key) and memoizes") {
-    val memo = new SessionMemo[Int, String]
+    val memo = new SessionMemo[Int, String]("spec_memo")
     var builds = 0
     def get(dir: String, k: Int): String =
       memo.getOrElseUpdate(spark, dir, k) { builds += 1; s"$dir/$k" }
@@ -20,7 +80,7 @@ class SessionMemoSpec extends SparkSpecBase {
 
   test("invalidatePath drops only that dir's entries and fires onEvict") {
     val evicted = scala.collection.mutable.ListBuffer.empty[String]
-    val memo = new SessionMemo[Int, String](evicted += _)
+    val memo = new SessionMemo[Int, String]("spec_memo", evicted += _)
     memo.getOrElseUpdate(spark, "a", 1)("a1")
     memo.getOrElseUpdate(spark, "a", 2)("a2")
     memo.getOrElseUpdate(spark, "b", 1)("b1")
@@ -34,7 +94,7 @@ class SessionMemoSpec extends SparkSpecBase {
   }
 
   test("invalidate(session) drops that session's entries; other sessions keep theirs") {
-    val memo = new SessionMemo[Int, String]
+    val memo = new SessionMemo[Int, String]("spec_memo")
     val other = spark.newSession()
     memo.getOrElseUpdate(spark, "d", 1)("mine")
     memo.getOrElseUpdate(other, "d", 1)("theirs")
@@ -57,7 +117,7 @@ class SessionMemoSpec extends SparkSpecBase {
     // build side self-evicts; a value whose entry is gone may never
     // keep its cached blocks pinned
     val evicted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val memo = new SessionMemo[Int, String](_ => evicted.incrementAndGet())
+    val memo = new SessionMemo[Int, String]("spec_memo", _ => evicted.incrementAndGet())
     val buildStarted = new java.util.concurrent.CountDownLatch(1)
     val builder = new Thread(() =>
       memo.getOrElseUpdate(spark, "race", 1) {
@@ -84,7 +144,7 @@ class SessionMemoSpec extends SparkSpecBase {
   }
 
   test("invalidatePath is path-aware: a write under a child drops the root's memos (and vice versa), never a name-prefix sibling") {
-    val memo = new SessionMemo[Int, String]
+    val memo = new SessionMemo[Int, String]("spec_memo")
     memo.getOrElseUpdate(spark, "/r", 1)("root")
     memo.getOrElseUpdate(spark, "/r/gen-0", 1)("gen0")
     memo.getOrElseUpdate(spark, "/r/gen-1", 1)("gen1")
@@ -104,7 +164,7 @@ class SessionMemoSpec extends SparkSpecBase {
   }
 
   test("getIfPresent peeks without building") {
-    val memo = new SessionMemo[Int, String]
+    val memo = new SessionMemo[Int, String]("spec_memo")
     assert(memo.getIfPresent(spark, "p", 1).isEmpty)
     assert(memo.size === 0) // the peek must not create a holder
     memo.getOrElseUpdate(spark, "p", 1)("v")
@@ -120,7 +180,7 @@ class SessionMemoSpec extends SparkSpecBase {
     // generation under it through the PRODUCTION write path, and prove
     // the next query re-reads instead of serving the pre-publish value.
     val root = java.nio.file.Files.createTempDirectory("memo-pub").toString
-    val memo = new SessionMemo[Int, String]
+    val memo = new SessionMemo[Int, String]("spec_memo")
     memo.getOrElseUpdate(spark, root, 1)("pre-publish")
     memo.getOrElseUpdate(spark, root + "-other", 1)("unrelated")
     import spark.implicits._
@@ -136,7 +196,8 @@ class SessionMemoSpec extends SparkSpecBase {
   }
 
   test("onEvict failures don't abort invalidation") {
-    val memo = new SessionMemo[Int, String](_ => sys.error("unpersist on a stopped session"))
+    val memo = new SessionMemo[Int, String]("spec_memo",
+      _ => sys.error("unpersist on a stopped session"))
     memo.getOrElseUpdate(spark, "x", 1)("v1")
     memo.getOrElseUpdate(spark, "x", 2)("v2")
     memo.invalidatePath("x") // must not throw

@@ -14,15 +14,5 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-${System.nanoTime()}")
-    // the production wiring: SQL functions + graft_query TVF + TopK strategy
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
+  lazy val session: SparkSession = Sessions.local(4)
 }
