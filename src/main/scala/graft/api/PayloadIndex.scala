@@ -2,7 +2,9 @@ package graft.api
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** PERSISTED PAYLOAD-FIELD INDEX — the batch analogue of Qdrant's
@@ -35,11 +37,15 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *    exact [min, max] — as exact DECIMAL strings, so one manifest
   *    format serves 64-bit integers (beyond double precision), IEEE
   *    doubles (shortest round-trip representation) and epoch-micros
-  *    timestamps on the same ordered-key machinery. A range (or
-  *    equality) predicate consults the manifest — driver-side, KBs —
-  *    and reads only overlapping zone directories; the raw field stays
-  *    a DATA column sorted within each file, so parquet row-group
-  *    min/max statistics prune a second time inside each zone.
+  *    timestamps on the same ordered-key machinery. A range predicate
+  *    (and, on integer fields, a `match` value or any-of list of
+  *    canonical integers — a tenant's `user_id`) consults the manifest
+  *    and reads only the zone directories that overlap or cover it; the
+  *    raw field stays a DATA column sorted within each file, so parquet
+  *    row-group min/max statistics prune a second time inside each
+  *    zone. The manifest is parsed once per committed generation and
+  *    cached per root, so a read pays one directory listing of
+  *    `zones/` and a Spark job only after a new generation committed.
   *    Datetime fields zone on `unix_micros` and must be session
   *    TIMESTAMP columns (the [[graft.Tables.events]] normalization);
   *    their range reads take UTC wall-clock strings and the residual
@@ -76,7 +82,9 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *
   * Scale shape: build = one percentile aggregate per zoned field + one
   * partitioned rewrite (the same single exchange any partitioned sink
-  * pays); query = directory listing + pruned scan. The artifact is
+  * pays); query = pruned scan over the handle's data listing, which is
+  * made once and re-made only when the set of committed batches
+  * changes (see [[read]]). The artifact is
   * self-describing (schema DDL + field kinds + zone map + layout
   * options persisted beside the data) and reopens with
   * [[PayloadIndex.load]].
@@ -131,6 +139,48 @@ final class PayloadIndex private[api] (
         geoFields.map(f => StructField(geoColOf(f), IntegerType)))
   }
 
+  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The ids of the committed batches (`batches/batch-N` markers). */
+  private def committedBatches(): Set[Long] = {
+    val dir = new Path(s"$root/batches")
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator.map(_.getPath.getName)
+      .collect { case n if n.startsWith("batch-") => n.stripPrefix("batch-").toLong }
+      .toSet
+  }
+
+  // (committed batch ids, the data relation listed under them)
+  @volatile private var listed: (Set[Long], BaseRelation) = _
+
+  /** The data tree as a DataFrame, over ONE file listing per committed
+    * batch set. Each `spark.read...parquet` builds a new file index
+    * that lists every partition directory, and Spark's shared
+    * file-status cache gives each index its own namespace, so a per-read
+    * `spark.read` re-listed the whole tree on every request. The handle
+    * keeps the relation and rebuilds it when the `batches/` markers
+    * change — [[CommitProtocol.publish]] writes a marker after its last
+    * file moved in, so a new committed batch is always seen, and files
+    * a replay sweeps belong to a batch whose marker the replay then
+    * writes. Every call returns fresh attribute ids (the
+    * `spark.read` code path minus the listing), so two reads of one
+    * handle join like two independent reads.
+    */
+  private def dataRelation(): DataFrame = {
+    val batches = committedBatches()
+    val cached = listed
+    val rel =
+      if (cached != null && cached._1 == batches) cached._2
+      else {
+        val r = spark.read.schema(readSchema).parquet(s"$root/data")
+          .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+          .get
+        listed = (batches, r)
+        r
+      }
+    spark.baseRelationToDataFrame(rel)
+  }
+
   /** Read the collection through the index with equality predicates on
     * keyword fields, [lo, hi] ranges on the zoned kinds (equality is
     * `(v, v)`; `range` = integer fields, `rangeFloat` = float fields,
@@ -154,10 +204,19 @@ final class PayloadIndex private[api] (
     * old [1, 32] bounds would exclude the zone and silently miss the
     * appended row — the exact pruning-miss class the insert path's
     * manifest-first discipline guards against, reintroduced on the read
-    * side. The manifest is driver-tiny (the same resolveSnapshot +
-    * collect every insert already pays), so freshness costs one KB-read
-    * per range read and zero when no range predicate is given. Geo
-    * pruning needs no such protocol — the grid is static.
+    * side. The parsed manifest is cached per root and keyed by its
+    * generation ([[PayloadIndex.liveZones]]), so freshness costs one
+    * directory listing of `zones/` per range read, a Spark job only
+    * after another generation committed, and nothing when no range
+    * predicate is given. Geo pruning needs no such protocol — the grid
+    * is static.
+    *
+    * The data tree is listed once per committed batch set, not per
+    * read ([[dataRelation]]): the handle keeps one file relation and
+    * rebuilds it when the `batches/` markers change. A publish writes
+    * its marker after its last file moved in, so one `batches/`
+    * listing per read is enough for a stale handle to see another
+    * handle's insert.
     */
   def read(eq: Map[String, Seq[String]] = Map.empty,
            range: Map[String, (Long, Long)] = Map.empty,
@@ -166,7 +225,7 @@ final class PayloadIndex private[api] (
            rangeTime: Map[String, (String, String)] = Map.empty,
            geoBox: Map[(String, String), (Double, Double, Double, Double)] =
              Map.empty): DataFrame = {
-    var df = spark.read.schema(readSchema).parquet(s"$root/data")
+    var df = dataRelation()
     eq.foreach { case (f, vs) =>
       require(isKeywordAxis(f),
         s"'$f' is not an indexed keyword/bool field (indexed: $fields)")
@@ -255,7 +314,7 @@ final class PayloadIndex private[api] (
     validateCond(f2)
     val live =
       if (hasRangeCond(f2)) PayloadIndex.liveZones(spark, root) else zones
-    var df = spark.read.schema(readSchema).parquet(s"$root/data")
+    var df = dataRelation()
     pruneOf(f2, live).foreach(p => df = df.filter(p))
     // the FILTER-context compile: pushable comparison leaves stay raw
     // so they translate to parquet source filters (row-group stats
@@ -413,9 +472,10 @@ final class PayloadIndex private[api] (
     }
   }
 
-  /** Does the tree hold a range condition in a position that can
-    * PRUNE? `mustNot` arms never consult zones (residual-only), so a
-    * range there must not force the liveZones manifest read.
+  /** Does the tree hold a zone-pruning condition (a range, or a match
+    * on an integer field) in a position that can PRUNE? `mustNot` arms
+    * never consult zones (residual-only), so a range there must not
+    * force the liveZones manifest read.
     */
   private def hasRangeCond(c: Filters.PCond): Boolean = {
     import Filters._
@@ -424,6 +484,8 @@ final class PayloadIndex private[api] (
         (m ++ s ++ ms.toSeq.flatMap(_._1)).exists(hasRangeCond)
       case _: RangeInt | _: RangeFloat | _: RangeTime |
            _: IntBounds | _: FloatBounds | _: TimeBounds => true
+      case MatchValue(f, _) => kindOf(f).contains("integer")
+      case MatchAny(f, _) => kindOf(f).contains("integer")
       case _ => false
     }
   }
@@ -451,12 +513,31 @@ final class PayloadIndex private[api] (
     }
     def zonesIn(f: String, lo: BigDecimal, hi: BigDecimal): Column =
       zonesInOpt(f, Some(lo), Some(hi))
+    // equality on an integer zone axis: the zones whose [zmin, zmax]
+    // covers some value. Only when every value is a canonical integer
+    // string — the residual casts the string to the column's type, and
+    // that cast also admits "07" (and, without ANSI, truncates "7.5"),
+    // so any other value leaves the arm residual-only
+    def zonesCovering(f: String, vs: Seq[String]): Option[Column] = {
+      val keys = vs.map(v => v.toLongOption.filter(_.toString == v))
+      if (!keys.forall(_.isDefined)) None
+      else {
+        val ks = keys.flatten.map(BigDecimal(_))
+        val zs = live(f).collect { case (z, zmin, zmax)
+          if ks.exists(k => zmin <= k && k <= zmax) => Integer.valueOf(z) }
+        Some(col(zoneCol(f)).isin(zs: _*))
+      }
+    }
     c match {
       case sub: PFilter => pruneOf(sub, live)
       case MatchValue(f, v) if isKeywordAxis(f) =>
         Some(col(f) === lit(v))
       case MatchAny(f, vs) if isKeywordAxis(f) =>
         Some(if (vs.isEmpty) lit(false) else col(f).isin(vs: _*))
+      case MatchValue(f, v) if kindOf(f).contains("integer") =>
+        zonesCovering(f, Seq(v))
+      case MatchAny(f, vs) if kindOf(f).contains("integer") =>
+        zonesCovering(f, vs)
       case MatchExcept(f, vs) if isKeywordAxis(f) =>
         // exact complement INCLUDING the null partition (a NULL value
         // matches except) — still a pure partition predicate
@@ -859,7 +940,7 @@ final class PayloadIndex private[api] (
       .filter { case (_, zmin, zmax) =>
         cursorBd.forall(b => if (descending) zmin <= b else zmax >= b) }
       .sortBy(z => if (descending) -z._3 else z._2)
-    val data = spark.read.schema(readSchema).parquet(s"$root/data")
+    val data = dataRelation()
     val ordered =
       if (descending) Seq(col(field).desc, col(tieBreak).asc)
       else Seq(col(field).asc, col(tieBreak).asc)
@@ -961,7 +1042,7 @@ final class PayloadIndex private[api] (
       s"geo_radius needs radius >= 0 and a valid center (got " +
         s"lat=$lat, lon=$lon, r=$radiusMeters)")
     val cells = radiusCells(lat, lon, radiusMeters)
-    spark.read.schema(readSchema).parquet(s"$root/data")
+    dataRelation()
       .filter(col(PayloadIndex.geoColOf(f)).isin(cells.map(Integer.valueOf): _*) &&
         PayloadIndex.haversineMeters(col(latCol), col(lonCol), lat, lon)
           <= radiusMeters)
@@ -995,7 +1076,7 @@ final class PayloadIndex private[api] (
       require(la >= -90 && la <= 90 && lo >= -180 && lo <= 180,
         s"geo_polygon vertex out of range: ($la, $lo)") }
     val cells = polygonCells(vertices)
-    spark.read.schema(readSchema).parquet(s"$root/data")
+    dataRelation()
       .filter(col(PayloadIndex.geoColOf(f)).isin(cells.map(Integer.valueOf): _*) &&
         PayloadIndex.evenOddContains(col(latCol), col(lonCol), vertices))
       .select(original.map(sf => col(sf.name)): _*)
@@ -1096,18 +1177,9 @@ final class PayloadIndex private[api] (
     * maintained layouts are single-maintainer throughout this
     * library).
     */
-  def insert(batch: DataFrame): PayloadIndex = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$root/batches")
-    val next =
-      if (!fs.exists(dir)) 1000000000L
-      else math.max(1000000000L,
-        fs.listStatus(dir).iterator.map(_.getPath.getName)
-          .collect { case n if n.startsWith("batch-") =>
-            n.stripPrefix("batch-").toLong }
-          .foldLeft(-1L)(math.max) + 1)
-    insertCommitted(batch, next)
-  }
+  def insert(batch: DataFrame): PayloadIndex =
+    insertCommitted(batch,
+      math.max(1000000000L, committedBatches().foldLeft(-1L)(math.max) + 1))
 
   private def partitionCols: Seq[String] =
     fields.collect { case (f, k) if k == "keyword" || k == "bool" => f } ++
@@ -1197,7 +1269,6 @@ final class PayloadIndex private[api] (
   def insertCommitted(batch: DataFrame, batchId: Long): PayloadIndex = {
     require(batch.columns.toSet == original.map(_.name).toSet,
       s"batch columns ${batch.columns.toSeq} != indexed schema ${original.map(_.name)}")
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (CommitProtocol.isCommitted(fs, root, batchId)) return this // replay skip
     CommitProtocol.sweepTorn(fs, root, root, batchId)
     val textFields = fields.collect { case (f, "text") => f }
@@ -1347,6 +1418,7 @@ final class PayloadIndex private[api] (
         CommitProtocol.writeSmallFile(fs, new Path(dstRoot, n), c))
     }
     graft.operators.SessionMemo.invalidatePath(dstRoot)
+    PayloadIndex.manifests.remove(dstRoot)
     PayloadIndex.load(spark, dstRoot)
   }
 
@@ -1358,6 +1430,7 @@ final class PayloadIndex private[api] (
     * artifact per session (ADVICE r8 on the VectorStore evictor).
     */
   private[graft] def reap(): Unit = {
+    PayloadIndex.manifests.remove(root)
     val p = new Path(root).getParent
     try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     catch { case _: java.io.IOException => () }
@@ -1913,25 +1986,43 @@ object PayloadIndex {
     withZones.unpersist()
     val ddl = points.schema.toDDL
     CommitProtocol.writeSmallFile(fs, new Path(root, "schema.ddl"), ddl)
-    new PayloadIndex(spark, root, fieldRows,
-      zoneRows.groupBy(_._1).view.mapValues(_.map(t =>
-        (t._2, BigDecimal(t._3), BigDecimal(t._4)))).toMap,
+    val manifest: Manifest = zoneRows.groupBy(_._1).view.mapValues(_.map(t =>
+      (t._2, BigDecimal(t._3), BigDecimal(t._4)))).toMap
+    manifests.put(root, (s"$root/zones/${VectorIndex.generationDir(0L)}", manifest))
+    new PayloadIndex(spark, root, fieldRows, manifest,
       ddl, if (text.nonEmpty) idCol else "",
       lowercaseText, positionalText, geoGrid,
       if (prefixText) Some((prefixMinLen, prefixMaxLen)) else None)
   }
 
+  private type Manifest = Map[String, Seq[(Int, BigDecimal, BigDecimal)]]
+
+  // root -> (its newest committed zones generation, that generation's
+  // parsed manifest): one entry per root, replaced when a newer
+  // generation commits. Generation names are never reused under a
+  // live root; `create` and `deleteTo`, which start a root's
+  // generations afresh, overwrite or drop its entry, and `reap` drops
+  // it with the root.
+  private val manifests =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Manifest)]()
+
   /** The newest COMMITTED zones manifest under `root` — the read-side
-    * freshness hook (see [[PayloadIndex!.read]]): KB-sized, one
-    * resolveSnapshot + collect.
+    * freshness hook (see [[PayloadIndex!.read]]): one directory
+    * listing of `zones/` per call; the KB-sized parquet read (a Spark
+    * job) runs only when that generation is not the cached one.
     */
-  private[graft] def liveZones(spark: SparkSession, root: String)
-      : Map[String, Seq[(Int, BigDecimal, BigDecimal)]] =
-    spark.read
-      .parquet(VectorIndex.resolveSnapshot(spark, s"$root/zones"))
-      .collect().map(r => (r.getString(0), r.getInt(1),
-        BigDecimal(r.getString(2)), BigDecimal(r.getString(3))))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
+  private[graft] def liveZones(spark: SparkSession, root: String): Manifest = {
+    val gen = VectorIndex.resolveSnapshot(spark, s"$root/zones")
+    Option(manifests.get(root)).collect { case (g, m) if g == gen => m }
+      .getOrElse {
+        val m = spark.read.parquet(gen)
+          .collect().map(r => (r.getString(0), r.getInt(1),
+            BigDecimal(r.getString(2)), BigDecimal(r.getString(3))))
+          .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
+        manifests.put(root, (gen, m))
+        m
+      }
+  }
 
   /** Reopen a persisted index (manifest is driver-tiny). */
   def load(spark: SparkSession, root: String): PayloadIndex = {

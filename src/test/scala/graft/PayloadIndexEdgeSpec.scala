@@ -1,14 +1,16 @@
 package graft
 
-import graft.api.{Aliases, PayloadIndex}
+import graft.api.{Aliases, Filters, PayloadIndex}
 import org.apache.spark.sql.functions._
 
 /** Edge shapes for the payload-field index that the sf-corpus spec
   * cannot hit: degenerate integer distributions (every percentile
   * boundary equal), keyword values a partition-value INFERENCE would
   * retype ("007" → 7), null keyword values (Hive default-partition
-  * round-trip), single-axis indexes, and the alias-rotation flow a
-  * reindex rides (artifacts are immutable — rebuild + re-point).
+  * round-trip), single-axis indexes, the alias-rotation flow a
+  * reindex rides (artifacts are immutable — rebuild + re-point), and
+  * tenant reads: integer `match` pruning, its executed file count, and
+  * a handle's cached data listing under other handles' commits.
   */
 class PayloadIndexEdgeSpec extends SparkSpecBase {
 
@@ -419,5 +421,142 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     Aliases.set(spark, reg, "points-idx", v2)
     assert(serve() === 2L)
     assert(Aliases.history(spark, reg, "points-idx").map(_._2) === Seq(v1, v2))
+  }
+
+  // ------------------------------------------- integer match pruning
+
+  // four uid clusters, two rows per uid (one per tag) plus a NULL-uid
+  // row: exact percentiles put the zone bounds in the gaps, so the
+  // manifest reads [-2, 7], [20, 29], [40, 49], [60, 69]
+  private def tenants(): org.apache.spark.sql.DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, uid BIGINT, tag STRING")
+    val uids = ((-2L to 7L) ++ (20L to 29L) ++ (40L to 49L) ++ (60L to 69L))
+      .map(java.lang.Long.valueOf) :+ null
+    val rows = uids.zipWithIndex.flatMap { case (u, i) =>
+      Seq(org.apache.spark.sql.Row(2L * i, u, "t0"),
+        org.apache.spark.sql.Row(2L * i + 1, u, "t1")) }
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  private def ids(d: org.apache.spark.sql.DataFrame): Seq[Long] =
+    d.select("id").collect().map(_.getLong(0)).toSeq.sorted
+
+  test("integer match pruning is exact: readFilter ≡ the scan route in must, should and must_not") {
+    import graft.api.Filters._
+    val root = tmp()
+    val base = tenants()
+    val idx = PayloadIndex.create(spark, base, root, keyword = Seq("tag"),
+      integer = Seq("uid"), nZones = 4, exactZones = true)
+    assert(idx.zones("uid").sortBy(_._1).map(z => (z._2.toLong, z._3.toLong)) ===
+      Seq((-2L, 7L), (20L, 29L), (40L, 49L), (60L, 69L)),
+      "precondition: the zones leave gaps between clusters")
+    // the scan route's answer, or its error (a cast ANSI mode refuses
+    // fails both routes alike)
+    def same(pf: PFilter): Unit = {
+      val want = scala.util.Try(ids(base.filter(Filters.toColumn(pf))))
+      val got = scala.util.Try(ids(idx.readFilter(pf)))
+      assert(got.isSuccess === want.isSuccess, s"$pf: index $got, scan $want")
+      if (want.isSuccess) assert(got.get === want.get, s"$pf")
+    }
+    // inside a zone, in a gap, beyond every zone (both ends), negative,
+    // non-canonical ("07" casts to 7) and non-integer strings
+    val values = Seq("25", "5", "15", "35", "100", "-50", "-2", "-1",
+      "07", "7.5", "abc")
+    for (v <- values) {
+      same(PFilter(must = Seq(MatchValue("uid", v))))
+      same(PFilter(must = Seq(MatchAny("uid", Seq(v, "60")))))
+      same(PFilter(must = Seq(MatchValue("uid", v), MatchValue("tag", "t1"))))
+      same(PFilter(should = Seq(MatchValue("uid", v), MatchAny("uid", Seq("45", "-2")))))
+      same(PFilter(should = Seq(MatchValue("uid", v), MatchValue("tag", "t0"))))
+      same(PFilter(mustNot = Seq(MatchValue("uid", v))))
+      same(PFilter(mustNot = Seq(MatchAny("uid", Seq(v, "25")))))
+    }
+    same(PFilter(must = Seq(MatchAny("uid", Nil))))
+    assert(ids(idx.readFilter(PFilter(must = Seq(MatchValue("uid", "25"))))).size === 2)
+    // another handle widens zones on disk: a gap value joins its nearest
+    // zone and -50 stretches zone 0 down; this handle's snapshot still
+    // reads [-2, 7] but its pruning must follow the committed manifest
+    val more = spark.createDataFrame(Seq(
+      org.apache.spark.sql.Row(1000L, 15L, "t0"),
+      org.apache.spark.sql.Row(1001L, -50L, "t1")).asJava, base.schema)
+    PayloadIndex.load(spark, root).insert(more)
+    assert(idx.zones("uid").sortBy(_._1).head._2 === BigDecimal(-2),
+      "precondition: the reader's snapshot predates the widening")
+    assert(ids(idx.readFilter(PFilter(must = Seq(MatchValue("uid", "15"))))) === Seq(1000L))
+    assert(ids(idx.readFilter(PFilter(must = Seq(MatchValue("uid", "-50"))))) === Seq(1001L))
+    assert(ids(idx.readFilter(PFilter(must = Seq(MatchAny("uid", Seq("-50", "15", "25")))))) ===
+      ids(base.unionByName(more).filter(col("uid").isin(-50L, 15L, 25L))))
+  }
+
+  test("a handle's cached data listing sees other handles' inserts and a replayed torn batch") {
+    import graft.api.Filters._
+    val root = tmp()
+    val base = tenants()
+    val idx = PayloadIndex.create(spark, base, root, keyword = Seq("tag"),
+      integer = Seq("uid"), nZones = 4)
+    val tenant25 = PFilter(must = Seq(MatchValue("uid", "25")))
+    def row(id: Long, uid: Long, tag: String) =
+      spark.createDataFrame(Seq(org.apache.spark.sql.Row(id, uid, tag)).asJava, base.schema)
+    val n = base.count()
+    // the handle has served reads, so its listing is made
+    assert(ids(idx.readFilter(tenant25)).size === 2 && idx.read().count() === n)
+    PayloadIndex.load(spark, root).insert(row(1000L, 25L, "t0"))
+    assert(ids(idx.readFilter(tenant25)).contains(1000L), "insert by another handle")
+    assert(idx.read().count() === n + 1)
+    PayloadIndex.load(spark, root).insertCommitted(row(1001L, 25L, "t1"), 5L)
+    assert(ids(idx.readFilter(tenant25)).contains(1001L), "insertCommitted by another handle")
+    assert(idx.read(range = Map("uid" -> (25L, 25L))).count() === 4L)
+    // TORN batch 9: a b9- copy of a committed file and its intent, no
+    // marker (the state a crash mid-publish leaves)
+    def parts(dir: java.io.File): Seq[java.io.File] = {
+      val es = Option(dir.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)
+      es.filter(f => f.isFile && f.getName.startsWith("part-")) ++
+        es.filter(_.isDirectory).flatMap(parts)
+    }
+    val victim = parts(new java.io.File(s"$root/data")).head
+    val torn = victim.toPath.resolveSibling("b9-" + victim.getName)
+    java.nio.file.Files.copy(victim.toPath, torn)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/batches/intent-9"),
+      new java.io.File(root).toPath.relativize(victim.getParentFile.toPath)
+        .toString.getBytes("UTF-8"))
+    val dup = spark.read.parquet(torn.toString).count()
+    assert(dup > 0, "precondition: the torn file holds rows")
+    // another commit makes the handle re-list — now over the torn file
+    PayloadIndex.load(spark, root).insert(row(1002L, 45L, "t0"))
+    assert(idx.read().count() === n + 3 + dup, "the listing holds the torn file")
+    // the replay sweeps the torn file and publishes batch 9 once
+    PayloadIndex.load(spark, root).insertCommitted(row(1003L, 25L, "t0"), 9L)
+    assert(!java.nio.file.Files.exists(torn), "precondition: the sweep removed the torn file")
+    assert(idx.read().count() === n + 4)
+    assert(ids(idx.readFilter(tenant25)).count(_ >= 1000L) === 3)
+  }
+
+  test("a tenant read scans only the files of the zones that cover its user_id") {
+    import graft.api.Filters._
+    val root = tmp()
+    val idx = PayloadIndex.create(spark, tenants(), root, keyword = Seq("tag"),
+      integer = Seq("uid"), nZones = 4, exactZones = true)
+    val covering = idx.zones("uid").collect {
+      case (z, lo, hi) if lo <= 25 && 25 <= hi => z }
+    assert(covering.size === 1)
+    def files(dir: java.io.File): Seq[java.io.File] = {
+      val es = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
+      es.filter(f => f.isFile && f.getName.contains("part-") && f.getName.endsWith(".parquet")) ++
+        es.filter(_.isDirectory).flatMap(files)
+    }
+    val all = files(new java.io.File(s"$root/data"))
+    val tenantFiles = all.filter(f => covering.exists(z =>
+      f.getParentFile.getName == s"__zone_uid=$z"))
+    assert(tenantFiles.nonEmpty && tenantFiles.size < all.size)
+    val q = idx.readFilter(PFilter(must = Seq(MatchValue("uid", "25"))))
+    assert(q.collect().length === 2) // runs q's own plan, filling its metrics
+    val scans = q.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size === 1)
+    assert(scans.head.metrics("numFiles").value === tenantFiles.size.toLong,
+      s"the tenant read must scan only its zone's files (${tenantFiles.size} " +
+        s"of ${all.size})")
   }
 }
