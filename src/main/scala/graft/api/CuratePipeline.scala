@@ -24,7 +24,16 @@ import org.apache.spark.sql.functions._
   * only wires them. Scale shape: stages communicate by doc_id sets
   * (broadcast semi-/anti-joins — the full text crosses no shuffle after
   * the ingest scan until the final write), and each gate is cheap
-  * relative to the signature work it reuses.
+  * relative to the signature work it reuses. The work that reads only
+  * the raw corpus — the near-dup clusters, the contaminated eval-doc
+  * set and, when that gate is on, the boilerplate drop set — fills
+  * concurrently with the quality → exact-dedup chain
+  * ([[graft.plans.Par.run]]), so its few-task corpus stages share the
+  * cores instead of queueing. Each gate is then evaluated once: an
+  * enabled gate caches its survivors and counts them in one job, the
+  * next gate and the final write read that cache, and a disabled gate
+  * passes its input's count through. Every cache a call pins is
+  * released when it returns or throws.
   */
 object CuratePipeline {
 
@@ -49,7 +58,7 @@ object CuratePipeline {
              tokenizer: Option[Tokenizer] = None,
              splitValRate: Double = 0.0,
              semanticTau: Option[Double] = None,
-             dsirResample: Boolean = false): Report = {
+             dsirResample: Boolean = false): Report = withPins { pin =>
     val raw = Tables.documents(s, d)
     // 0. PII scrub — a map-side TRANSFORM (rows pass through, text is
     // masked) applied before anything downstream of `docs` touches the
@@ -61,10 +70,13 @@ object CuratePipeline {
     // (masked spans shift gram hashes only inside the mask, so the
     // doc_id pair/cluster structure those gates consume is unchanged
     // except where a match lay INSIDE redacted text).
-    val docs = piiPattern
+    val docs = pin(piiPattern
       .map(p => raw.withColumn("text", regexp_replace(col("text"), p, piiMask)))
-      .getOrElse(raw)
-      .cache()
+      .getOrElse(raw))
+    // materialized BEFORE the fan-out below: unscrubbed, `docs` is the
+    // raw scan every raw-corpus gate set reads, so they all plan against
+    // the filled cache (a plan made over an unfilled one picks other
+    // joins, and a curation's job count would depend on thread timing)
     val nInput = docs.count()
 
     // 1. quality gate — columnar metrics, map-side only; the optional
@@ -76,7 +88,6 @@ object CuratePipeline {
     val quality =
       if (gopherGate) quality0.filter(TextAnalysis.gopherPassExpr(minWords = 1))
       else quality0
-    val nQuality = quality.count()
 
     // 2. exact dedup — keep the min-doc_id row of each normalized-text
     // group via a window rank: one hash shuffle on the text key, no join
@@ -84,10 +95,31 @@ object CuratePipeline {
     // nearly every doc is its own group — far past any driver/broadcast
     // limit at 100 TB)
     val byKey = Window.partitionBy(md5(lower(trim(col("text"))))).orderBy(col("doc_id"))
-    val afterExact = quality
+    val afterExact = pin(quality
       .withColumn("__rk", row_number().over(byKey))
-      .filter(col("__rk") === 1).drop("__rk").cache()
-    val nExact = afterExact.count()
+      .filter(col("__rk") === 1).drop("__rk"))
+
+    // The gate sets that depend only on the raw corpus — the near-dup
+    // clusters (3), the contaminated eval docs (5) and, when its gate
+    // is on, the boilerplate drop set (4) — fill CONCURRENTLY with the
+    // scrubbed-corpus chain (1-2): none reads another, and the
+    // corpus-to-shingles stages run few tasks each, so one job alone
+    // leaves most cores idle. Each set is materialized once here and
+    // read from cache by its gate below.
+    val contaminated = pin(Dedup.decontaminate(s, d)
+      .filter(col("hit_ratio") >= contamRatio).select("doc_id"))
+    val boilerDrops = Option.when(maxDupNgramRatio < 1.0)(
+      pin(Dedup.dupNgramFraction(s, d)
+        .filter(col("dup_ratio") > maxDupNgramRatio).select("doc_id")))
+    val fills = Seq[() => Any](
+      () => (quality.count(), afterExact.count()),
+      // the minhash-pair memo fill inside is eager
+      () => Dedup.dupClusters(s, d, nearDupThreshold),
+      () => contaminated.count()) ++
+      boilerDrops.map(b => () => b.count())
+    val Seq(countsAny, clustersAny, _*) = graft.plans.Par.run(fills)
+    val (nQuality, nExact) = countsAny.asInstanceOf[(Long, Long)]
+    val clusters = clustersAny.asInstanceOf[DataFrame]
 
     // 3. near-dup clustering — keep one SURVIVING doc per cluster.
     // Clusters come from the raw corpus, so the raw canonical (min-id)
@@ -95,22 +127,25 @@ object CuratePipeline {
     // representative among survivors guarantees every cluster with any
     // surviving member keeps exactly one. Cluster membership ≪ corpus
     // (only near-dup docs appear), so both joins broadcast.
-    val clusters = Dedup.dupClusters(s, d, nearDupThreshold)
     val survivingMembers = afterExact.select("doc_id").join(broadcast(clusters), "doc_id")
     val byCluster = Window.partitionBy("cluster_id").orderBy("doc_id")
     val dropNear = survivingMembers
       .withColumn("__rk", row_number().over(byCluster))
       .filter(col("__rk") > 1).select("doc_id")
-    val afterNear = afterExact.join(broadcast(dropNear), Seq("doc_id"), "left_anti").cache()
+    val afterNear = pin(afterExact.join(broadcast(dropNear), Seq("doc_id"), "left_anti"))
     val nNear = afterNear.count()
+
+    // Each enabled gate below caches its survivors and counts them
+    // once; the next stage reads that cache, and a disabled gate passes
+    // its input and count through without another job.
 
     // 3b. winnowing gate (optional, winnowMinShared > 0) — LOCAL-overlap
     // matches the whole-set Jaccard tier misses (a long doc embedding
     // another's ≥8-word run scores low Jaccard but is still a lift);
     // match pairs collapse through the shared component dispatch so a
     // copy CHAIN keeps exactly one surviving representative
-    val afterWinnow =
-      if (winnowMinShared <= 0) afterNear
+    val (afterWinnow, nWinnow) =
+      if (winnowMinShared <= 0) (afterNear, nNear)
       else {
         val wc = Dedup.clustersOfPairs(s,
           TextAnalysis.winnowMatchesOf(
@@ -120,9 +155,9 @@ object CuratePipeline {
         val byWc = Window.partitionBy("cluster_id").orderBy("doc_id")
         val drop = surviving.withColumn("__rk", row_number().over(byWc))
           .filter(col("__rk") > 1).select("doc_id")
-        afterNear.join(broadcast(drop), Seq("doc_id"), "left_anti")
+        val kept = pin(afterNear.join(broadcast(drop), Seq("doc_id"), "left_anti"))
+        (kept, kept.count())
       }
-    val nWinnow = afterWinnow.count()
 
     // 3c. SEMANTIC dedup tier (optional, semanticTau set) — SemDeDup
     // (Abbas et al. 2023) over the EMBEDDING space: drops docs whose
@@ -145,27 +180,22 @@ object CuratePipeline {
         val dropped = Dedup.semanticDedupOver(s, d, rawEmb,
           Dedup.rawEmbeddingQuantizers, t = tau)
           .filter(!col("kept")).select(col("vec_id").as("doc_id"))
-        val kept = afterWinnow.join(broadcast(dropped), Seq("doc_id"), "left_anti")
-          .cache()
+        val kept = pin(afterWinnow.join(broadcast(dropped), Seq("doc_id"), "left_anti"))
         (kept, Some(kept.count()))
     }
 
     // 4. boilerplate gate — drop docs dominated by corpus-wide repeated
     // n-grams (templates/navigation chrome that near-dup clustering
     // misses because no single pair is similar enough)
-    val afterBoiler =
-      if (maxDupNgramRatio >= 1.0) afterSemantic
-      else {
-        val boiler = Dedup.dupNgramFraction(s, d)
-          .filter(col("dup_ratio") > maxDupNgramRatio).select("doc_id")
-        afterSemantic.join(broadcast(boiler), Seq("doc_id"), "left_anti")
-      }
-    val nBoiler = afterBoiler.count()
+    val (afterBoiler, nBoiler) = boilerDrops match {
+      case None => (afterSemantic, nSemantic.getOrElse(nWinnow))
+      case Some(boiler) =>
+        val kept = pin(afterSemantic.join(broadcast(boiler), Seq("doc_id"), "left_anti"))
+        (kept, kept.count())
+    }
 
     // 5. decontamination gate — drop eval-split docs that leak from train
-    val contaminated = Dedup.decontaminate(s, d)
-      .filter(col("hit_ratio") >= contamRatio).select("doc_id")
-    val afterDecontam = afterBoiler.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+    val afterDecontam = pin(afterBoiler.join(broadcast(contaminated), Seq("doc_id"), "left_anti"))
     val nDecontam = afterDecontam.count()
 
     // 5b. DSIR importance resampling (optional) — re-weight the mix
@@ -178,19 +208,21 @@ object CuratePipeline {
     val (afterDsir, nDsir) =
       if (!dsirResample) (afterDecontam, None)
       else {
-        val kept = afterDecontam.join(
+        val kept = pin(afterDecontam.join(
           TextAnalysis.dsirKeepDocs(s, d).filter(col("keep")).select("doc_id"),
-          Seq("doc_id"), "left_semi").cache()
+          Seq("doc_id"), "left_semi"))
         (kept, Some(kept.count()))
       }
 
     // 6. deterministic hash sample + curated write, partitioned by lang
-    val sampled =
-      if (sampleRate >= 1.0) afterDsir
-      else afterDsir
-        .withColumn("bucket", conv(substring(md5(col("text")), 1, 4), 16, 10).cast("long"))
-        .filter(col("bucket") < lit((sampleRate * 65536).toLong)).drop("bucket")
-    val nSampled = sampled.count()
+    val (sampled, nSampled) =
+      if (sampleRate >= 1.0) (afterDsir, nDsir.getOrElse(nDecontam))
+      else {
+        val kept = pin(afterDsir
+          .withColumn("bucket", conv(substring(md5(col("text")), 1, 4), 16, 10).cast("long"))
+          .filter(col("bucket") < lit((sampleRate * 65536).toLong)).drop("bucket"))
+        (kept, kept.count())
+      }
 
     // 6b. train/val split (optional, splitValRate > 0) — the curated
     // output gains a deterministic content-hash `split` column (the
@@ -210,11 +242,10 @@ object CuratePipeline {
         // consumes md5 chars 1-4): reusing them would make the split
         // correlate with the sample cut — at sampleRate 0.1 /
         // splitValRate 0.2 every surviving doc would land in 'val'
-        val withSplit = sampled.withColumn("split",
+        val withSplit = pin(sampled.withColumn("split",
           when(conv(substring(md5(col("text")), 5, 4), 16, 10).cast("long") < cut,
-            "val").otherwise("train")).cache()
+            "val").otherwise("train")))
         val nVal = withSplit.filter(col("split") === "val").count()
-        val nTrain = withSplit.count() - nVal
         // UNHINTED joins: the split relation is corpus-sized (a
         // broadcast hint would be the 100-TB OOM the df-cap joins
         // removed); the pair side is near-dup-bounded and AQE picks
@@ -224,11 +255,10 @@ object CuratePipeline {
           .join(sp.select(col("doc_id").as("ia"), col("split").as("sa")), "ia")
           .join(sp.select(col("doc_id").as("ib"), col("split").as("sb")), "ib")
           .filter(col("sa") =!= col("sb")).count()
-        (withSplit, Some((nTrain, nVal)), Some(leaks))
+        (withSplit, Some((nSampled - nVal, nVal)), Some(leaks))
       }
     output.repartition(col("lang"))
       .write.partitionBy("lang").mode("overwrite").parquet(outPath)
-    if (splitValRate > 0) output.unpersist()
 
     // 7. token budget (optional) — the number the training run actually
     // plans around: total subword tokens of the CURATED output under a
@@ -240,11 +270,19 @@ object CuratePipeline {
       t.encode(sampled.select("doc_id", "text"))
         .agg(coalesce(sum("n_tokens"), lit(0L))).head().getLong(0)
     }
-    docs.unpersist(); afterExact.unpersist(); afterNear.unpersist()
-    if (nSemantic.isDefined) afterSemantic.unpersist()
-    if (nDsir.isDefined) afterDsir.unpersist()
     Report(nInput, nQuality, nExact, nNear, nWinnow, nBoiler, nDecontam,
       nSampled, tokenBudget, splitInfo, leakInfo, nSemantic, nDsir)
+  }
+
+  /** Runs `body` with a `pin` that caches a relation for this call only:
+    * every pinned relation is released when `body` returns or throws.
+    * The fan-out waits for all its jobs before it rethrows, so none is
+    * still filling a cache when the release runs.
+    */
+  private def withPins[T](body: (DataFrame => DataFrame) => T): T = {
+    val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    try body { df => pinned += df; df.cache() }
+    finally pinned.foreach(_.unpersist())
   }
 
   /** The full switch-over flow: curate a raw corpus, CHUNK the curated

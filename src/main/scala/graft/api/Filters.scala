@@ -511,7 +511,9 @@ object Filters {
       resolve(f).isNull || coalesce(size(resolve(f)) === 0, lit(false))
   } }
 
-  import org.apache.spark.sql.types.{ArrayType, StructType}
+  import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+  import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType,
+    ShortType, StructType}
 
   /** Schema-aware pre-compile rewrite, shared by every route
     * ([[PayloadIndex!.readFilter]], [[VectorIndex!.searchFilter]], the
@@ -524,7 +526,14 @@ object Filters {
     *    column rewrite to the element form ([[ArrayAnyOf]]) — Qdrant's
     *    array-payload semantics: a match condition on an array field is
     *    true iff AT LEAST ONE element matches (a `tags` keyword list),
-    *    `except` the negation (NULL/empty arrays match it vacuously).
+    *    `except` the negation (NULL/empty arrays match it vacuously);
+    *  - [[MatchValue]] / [[MatchAny]] / [[MatchExcept]] over an
+    *    INTEGRAL column drop every value Spark's ANSI cast to the
+    *    column's type refuses (`"7.5"`, `"abc"`, an out-of-range
+    *    number): such a value equals no row, so a `value` becomes an
+    *    empty any-of and `any` / `except` lose it, instead of the cast
+    *    failing the whole query. Values the cast takes (`"25"`, `"07"`)
+    *    stay as they are.
     *
     * Recurses through [[Nested]] bodies with the ELEMENT struct as the
     * schema, so both rewrites reach struct fields too.
@@ -536,6 +545,13 @@ object Filters {
       schema.find(_.name == f).exists(sf =>
         sf.dataType == org.apache.spark.sql.types.DoubleType ||
           sf.dataType == org.apache.spark.sql.types.FloatType)
+    // false only for a value the ANSI cast to an integral field refuses
+    def castableTo(f: String)(v: String): Boolean =
+      schema.find(_.name == f).map(_.dataType).forall {
+        case dt @ (ByteType | ShortType | IntegerType | LongType) =>
+          scala.util.Try(Cast(Literal(v), dt, None, EvalMode.ANSI).eval()).isSuccess
+        case _ => true
+      }
     c match {
       case PFilter(m, s, n, ms) =>
         PFilter(m.map(rewriteForSchema(_, schema)),
@@ -557,6 +573,9 @@ object Filters {
       case MatchValue(f, v) if isArray(f) => ArrayAnyOf(f, Seq(v), negated = false)
       case MatchAny(f, vs) if isArray(f) => ArrayAnyOf(f, vs, negated = false)
       case MatchExcept(f, vs) if isArray(f) => ArrayAnyOf(f, vs, negated = true)
+      case MatchValue(f, v) if !castableTo(f)(v) => MatchAny(f, Nil)
+      case MatchAny(f, vs) => MatchAny(f, vs.filter(castableTo(f)))
+      case MatchExcept(f, vs) => MatchExcept(f, vs.filter(castableTo(f)))
       // Qdrant accepts INTEGRAL range literals on float fields
       // (`{"range": {"gte": 120}}` against a float-schema payload);
       // the wire parser can only see the literal's JSON type, so the

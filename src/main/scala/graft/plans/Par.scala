@@ -8,8 +8,13 @@ package graft.plans
   * untouched, only the schedule changes, and later jobs back-fill
   * executor capacity freed by earlier jobs' stragglers.
   *
-  * Blocks until all complete; exceptions rethrow unwrapped; results
-  * keep input order.
+  * Blocks until EVERY thunk has finished, failed ones included, so a
+  * caller's cleanup never races a sibling job still filling what it
+  * releases. Then the first failure in input order rethrows unwrapped,
+  * with the later ones attached as suppressed. Results keep input
+  * order. Pool threads start inside the call, so they inherit the
+  * caller's Spark local properties (job group, description) and active
+  * session.
   */
 object Par {
   def run[T](thunks: Seq[() => T], parallelism: Int = 4): Seq[T] = {
@@ -20,10 +25,16 @@ object Par {
     try {
       val futs = thunks.map(f => pool.submit(
         new java.util.concurrent.Callable[T] { def call(): T = f() }))
-      futs.map(fu =>
-        try fu.get()
+      val done = futs.map(fu =>
+        try Right(fu.get())
         catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause })
+          Left(e.getCause) })
+      done.collect { case Left(e) => e } match {
+        case first +: rest =>
+          rest.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        case _ => done.collect { case Right(v) => v }
+      }
     } finally pool.shutdown()
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import graft.api.CuratePipeline
+import graft.api.CuratePipeline.Report
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class CuratePipelineSpec extends SparkSpecBase {
 
@@ -211,5 +214,90 @@ class CuratePipelineSpec extends SparkSpecBase {
     val a = spark.read.parquet(out1).select("doc_id").collect().map(_.getLong(0)).sorted
     val b = spark.read.parquet(out2).select("doc_id").collect().map(_.getLong(0)).sorted
     assert(a.toSeq === b.toSeq)
+  }
+
+  private def tmpOut(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString + "/c"
+
+  test("every option combination keeps its recorded report at sf0.01") {
+    // the reports of the sequential pipeline that evaluated some gates
+    // several times: the concurrent fills and the single evaluation
+    // per gate must not move one count
+    val d = "/root/testdata/sf0.01"
+    val c = CuratePipeline
+    val recorded: Seq[(String, String => Report, Report)] = Seq(
+      ("default", c.curate(spark, d, _),
+        Report(500, 500, 500, 476, 476, 476, 474, 474)),
+      ("split", c.curate(spark, d, _, splitValRate = 0.2),
+        Report(500, 500, 500, 476, 476, 476, 474, 474,
+          splitTrainVal = Some((365, 109)), splitLeakPairs = Some(0))),
+      ("sample_split", c.curate(spark, d, _, sampleRate = 0.5, splitValRate = 0.2),
+        Report(500, 500, 500, 476, 476, 476, 474, 234,
+          splitTrainVal = Some((181, 53)), splitLeakPairs = Some(0))),
+      ("semantic", c.curate(spark, d, _, semanticTau = Some(0.99)),
+        Report(500, 500, 500, 476, 476, 476, 474, 474, nAfterSemantic = Some(476))),
+      ("dsir", c.curate(spark, d, _, dsirResample = true),
+        Report(500, 500, 500, 476, 476, 476, 474, 282, nAfterDsir = Some(282))),
+      ("semantic_dsir", c.curate(spark, d, _, semanticTau = Some(0.99), dsirResample = true),
+        Report(500, 500, 500, 476, 476, 476, 474, 282,
+          nAfterSemantic = Some(476), nAfterDsir = Some(282))),
+      ("winnow", c.curate(spark, d, _, winnowMinShared = 2),
+        Report(500, 500, 500, 476, 476, 476, 474, 474)),
+      ("gopher", c.curate(spark, d, _, gopherGate = true),
+        Report(500, 317, 317, 304, 304, 304, 303, 303)),
+      ("pii", c.curate(spark, d, _, piiPattern = Some("\\b(key|hash)\\b")),
+        Report(500, 500, 500, 476, 476, 476, 474, 474)),
+      ("boilerplate", c.curate(spark, d, _, maxDupNgramRatio = 0.5),
+        Report(500, 500, 500, 476, 476, 453, 453, 453)),
+      ("sample", c.curate(spark, d, _, sampleRate = 0.5),
+        Report(500, 500, 500, 476, 476, 476, 474, 234)))
+    for ((name, run, want) <- recorded)
+      assert(run(tmpOut("currec")) === want, name)
+  }
+
+  test("a cold default curation evaluates each gate once: SQL executions within budget") {
+    // a new session starts with no memo entry, like a nightly run; 12
+    // executions = the docs cache, the quality count, the exact-dedup
+    // cache, the three minhash-pair memo fills, the cluster edge
+    // checkpoint and its count, the contaminated set, the near-dup and
+    // decontamination caches, and the write. Counting any gate a second
+    // time goes over.
+    val cold = spark.newSession()
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    cold.listenerManager.register(listener)
+    val r = try CuratePipeline.curate(cold, sf, tmpOut("curbudget"))
+    finally {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      cold.listenerManager.unregister(listener)
+    }
+    assert(r.nSampled === r.nAfterDecontam)
+    assert(executions.get() <= 12, s"${executions.get()} SQL executions")
+  }
+
+  test("a curation that fails inside its concurrent fills leaves no cache pinned") {
+    val ok = CuratePipeline.curate(spark, sf, tmpOut("curok"))
+    // doc_id stored as strings: the near-dup cluster fill fails in the
+    // fan-out (its union-find reads long ids) after its memo fills,
+    // while the other gate sets fill the caches the call pinned
+    val bad = java.nio.file.Files.createTempDirectory("curbad").toString
+    Tables.documents(spark, sf).withColumn("doc_id", col("doc_id").cast("string"))
+      .write.parquet(s"$bad/documents.parquet")
+    // the session keeps this corpus's minhash-pair memo entries: fill
+    // them first, so the count below sees only what the call pins (a
+    // leaked pin would also hide a second failing call's, which caches
+    // the same plans)
+    graft.operators.Dedup.minhashPairs(spark, bad)
+    val entries = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    intercept[org.apache.spark.sql.AnalysisException](
+      CuratePipeline.curate(spark, bad, tmpOut("curfail")))
+    assert(org.apache.spark.sql.graft.CacheEntries.count(spark) === entries,
+      "the failed curation left a cache it pinned")
+    assert(CuratePipeline.curate(spark, sf, tmpOut("curagain")) === ok)
   }
 }

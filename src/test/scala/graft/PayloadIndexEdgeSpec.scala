@@ -451,13 +451,11 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     assert(idx.zones("uid").sortBy(_._1).map(z => (z._2.toLong, z._3.toLong)) ===
       Seq((-2L, 7L), (20L, 29L), (40L, 49L), (60L, 69L)),
       "precondition: the zones leave gaps between clusters")
-    // the scan route's answer, or its error (a cast ANSI mode refuses
-    // fails both routes alike)
+    // the scan route's answer: the schema rewrite, then the compiled
+    // column over the raw rows
     def same(pf: PFilter): Unit = {
-      val want = scala.util.Try(ids(base.filter(Filters.toColumn(pf))))
-      val got = scala.util.Try(ids(idx.readFilter(pf)))
-      assert(got.isSuccess === want.isSuccess, s"$pf: index $got, scan $want")
-      if (want.isSuccess) assert(got.get === want.get, s"$pf")
+      val want = ids(base.filter(Filters.toColumn(Filters.rewriteForSchema(pf, base.schema))))
+      assert(ids(idx.readFilter(pf)) === want, s"$pf")
     }
     // inside a zone, in a gap, beyond every zone (both ends), negative,
     // non-canonical ("07" casts to 7) and non-integer strings
@@ -474,6 +472,20 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     }
     same(PFilter(must = Seq(MatchAny("uid", Nil))))
     assert(ids(idx.readFilter(PFilter(must = Seq(MatchValue("uid", "25"))))).size === 2)
+    // a value the ANSI cast to BIGINT refuses equals no row: `value`
+    // matches nothing, and `any` / `except` ignore it (the routes agree
+    // on these through `same` above)
+    val all = ids(base)
+    val not25 = ids(base.filter(col("uid").isNull || col("uid") =!= 25L))
+    for (v <- Seq("7.5", "abc")) {
+      assert(ids(idx.readFilter(PFilter(must = Seq(MatchValue("uid", v))))) === Nil)
+      assert(ids(idx.readFilter(PFilter(must = Seq(MatchAny("uid", Seq(v, "60")))))) ===
+        ids(base.filter(col("uid") === 60L)))
+      assert(ids(idx.readFilter(PFilter(mustNot = Seq(MatchValue("uid", v))))) === all)
+      assert(ids(idx.readFilter(PFilter(mustNot = Seq(MatchAny("uid", Seq(v, "25")))))) === not25)
+      assert(ids(idx.readFilter(PFilter(must = Seq(MatchExcept("uid", Seq(v, "25")))))) === not25)
+      same(PFilter(must = Seq(MatchExcept("uid", Seq(v, "25")))))
+    }
     // another handle widens zones on disk: a gap value joins its nearest
     // zone and -50 stretches zone 0 down; this handle's snapshot still
     // reads [-2, 7] but its pruning must follow the committed manifest
