@@ -84,10 +84,8 @@ object Filters {
   final case class MatchTextAny(field: String, terms: Seq[String]) extends PCond
 
   /** ADJACENT, ORDERED whole-word phrase match (Qdrant `match:
-    * {phrase: "..."}` — VERDICT r10 #1: the phrase ROUTE existed as
-    * [[PayloadIndex!.readMatchPhrase]], but a Qdrant user composes
-    * `phrase` with ranges and keywords in ONE filter tree, so it must
-    * be a first-class condition). Compiles to the padded-contains
+    * {phrase: "..."}` — a Qdrant user composes `phrase` with ranges and
+    * keywords in ONE filter tree). Compiles to the padded-contains
     * residual of the whole (whitespace-tokenized, index-folded) token
     * sequence; on the indexed route it gates through postings — the
     * POSITIONAL start-set when the index carries positions (the data
@@ -107,8 +105,10 @@ object Filters {
     */
   final case class RangeInt(field: String, lo: Long, hi: Long) extends PCond
 
-  /** Closed range on a float payload. Bounds must be FINITE — see the
-    * manifest note on [[PayloadIndex!.read]].
+  /** Closed range on a float payload. Bounds must be FINITE: the zone
+    * manifest records finite bounds only, so an infinite query bound
+    * could select a non-finite row no zone covers, and a finite
+    * [lo, hi] never matches a non-finite payload (IEEE comparisons).
     */
   final case class RangeFloat(field: String, lo: Double, hi: Double) extends PCond
 
@@ -179,10 +179,13 @@ object Filters {
                              lat: Double, lon: Double,
                              radiusMeters: Double) extends PCond
 
-  /** Geo polygon over a (lat, lon) column pair (Qdrant `geo_polygon`,
-    * exterior ring only — see [[PayloadIndex!.readGeoPolygon]] for the
-    * ring contract): even-odd containment compiled to pure
-    * multiply-divide-compare arithmetic, no trig.
+  /** Geo polygon over a (lat, lon) column pair (Qdrant `geo_polygon`):
+    * a simple ring of at least 3 in-range vertices (exterior ring only,
+    * either winding, not self-intersecting, no antimeridian crossing —
+    * split such a polygon into its two halves). Even-odd containment
+    * compiled to pure multiply-divide-compare arithmetic, no trig; NULL
+    * coordinates cross nothing and match nothing. On the indexed route
+    * the polygon's grid-cell cover prunes.
     */
   final case class GeoPolygon(latField: String, lonField: String,
                               vertices: Seq[(Double, Double)]) extends PCond
@@ -306,8 +309,7 @@ object Filters {
   /** The whole-word terms of a text condition, validated and folded:
     * non-empty, single tokens (a whitespace term can never equal a
     * split-token — it would silently match nothing where the intent
-    * was adjacency; phrases go through
-    * [[PayloadIndex!.readMatchPhrase]]).
+    * was adjacency; phrases go through [[MatchPhrase]]).
     */
   private def wordTerms(f: String, terms: Seq[String],
                         fold: String => String): Seq[String] = {
@@ -316,7 +318,7 @@ object Filters {
     val spaced = qts.filter(_.exists(_.isWhitespace))
     require(spaced.isEmpty,
       s"text-match terms must be single tokens (got $spaced) — use " +
-        "readMatchPhrase for adjacent-word phrases")
+        "a MatchPhrase condition for adjacent-word phrases")
     qts.map(fold).distinct
   }
 
@@ -423,9 +425,9 @@ object Filters {
       require(!prefixText.contains(f),
         s"phrase match on '$f' needs a word tokenizer — the prefix " +
           "tokenizer indexes word prefixes, not adjacency")
-      // byte-identical to readMatchPhrase's residual: the folded token
-      // sequence as one padded-contains probe (adjacency via the
-      // single-space token separator the postings tokenization defines)
+      // the folded token sequence as one padded-contains probe
+      // (adjacency via the single-space token separator the postings
+      // tokenization defines)
       coalesce(concat(lit(" "), foldCol(resolve(f)), lit(" "))
         .contains(" " + phraseTerms(f, p, fold).mkString(" ") + " "),
         lit(false))

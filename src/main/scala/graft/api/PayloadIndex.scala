@@ -66,9 +66,10 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *    `lowercaseText` folds tokens at write AND query terms + residual
   *    at read (Qdrant's text tokenizer defaults `lowercase: true`), so
   *    a case-INSENSITIVE MatchText serves from the index directly;
-  *    `positionalText` adds the token's position to each posting so
-  *    [[readMatchPhrase]] computes ADJACENCY from the postings alone
-  *    and the text column is read only for final candidates.
+  *    `positionalText` adds the token's position to each posting so a
+  *    [[Filters.MatchPhrase]] condition computes ADJACENCY from the
+  *    postings alone and the text column is read only for final
+  *    candidates.
   *  - **geo** fields (Qdrant `field_schema="geo"` — a (lat, lon) pair)
   *    become FIXED-GRID buckets: one partition column holds the
   *    row-major cell id of a `geoGrid`×`geoGrid` lat/lon grid over
@@ -84,7 +85,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * partitioned rewrite (the same single exchange any partitioned sink
   * pays); query = pruned scan over the handle's data listing, which is
   * made once and re-made only when the set of committed batches
-  * changes (see [[read]]). The artifact is
+  * changes (see [[readFilter]]). The artifact is
   * self-describing (schema DDL + field kinds + zone map + layout
   * options persisted beside the data) and reopens with
   * [[PayloadIndex.load]].
@@ -181,119 +182,24 @@ final class PayloadIndex private[api] (
     spark.baseRelationToDataFrame(rel)
   }
 
-  /** Read the collection through the index with equality predicates on
-    * keyword fields, [lo, hi] ranges on the zoned kinds (equality is
-    * `(v, v)`; `range` = integer fields, `rangeFloat` = float fields,
-    * `rangeTime` = datetime fields as UTC wall-clock
-    * "yyyy-MM-dd HH:mm:ss[.ffffff]" strings), conjunctive whole-word
-    * `matchText` on text fields (case-insensitive when the index was
-    * built `lowercaseText` — the folded postings ARE the
-    * case-insensitive index, Qdrant's text default) and
-    * `geoBox` = (latMin, latMax, lonMin, lonMax) bounding boxes on geo
-    * fields, keyed by their (latCol, lonCol) pair. Every predicate
-    * prunes: keyword values select their partition directories; ranges
-    * select the manifest's overlapping zones (plus the exact residual
-    * filter, which parquet row-group stats prune again inside each
-    * zone); boxes select their overlapping grid cells. Columns come
-    * back in the original schema order.
-    *
-    * Range reads consult the NEWEST COMMITTED zones manifest on disk,
-    * not this handle's load-time snapshot: the data directory is shared
-    * and append-in-place, so after another handle's [[insert]] widens a
-    * zone (say uid=-50 lands in zone 0), a stale handle pruning on its
-    * old [1, 32] bounds would exclude the zone and silently miss the
-    * appended row — the exact pruning-miss class the insert path's
-    * manifest-first discipline guards against, reintroduced on the read
-    * side. The parsed manifest is cached per root and keyed by its
-    * generation ([[PayloadIndex.liveZones]]), so freshness costs one
-    * directory listing of `zones/` per range read, a Spark job only
-    * after another generation committed, and nothing when no range
-    * predicate is given. Geo pruning needs no such protocol — the grid
-    * is static.
-    *
-    * The data tree is listed once per committed batch set, not per
-    * read ([[dataRelation]]): the handle keeps one file relation and
-    * rebuilds it when the `batches/` markers change. A publish writes
-    * its marker after its last file moved in, so one `batches/`
-    * listing per read is enough for a stale handle to see another
-    * handle's insert.
-    */
-  def read(eq: Map[String, Seq[String]] = Map.empty,
-           range: Map[String, (Long, Long)] = Map.empty,
-           matchText: Map[String, Seq[String]] = Map.empty,
-           rangeFloat: Map[String, (Double, Double)] = Map.empty,
-           rangeTime: Map[String, (String, String)] = Map.empty,
-           geoBox: Map[(String, String), (Double, Double, Double, Double)] =
-             Map.empty): DataFrame = {
-    var df = dataRelation()
-    eq.foreach { case (f, vs) =>
-      require(isKeywordAxis(f),
-        s"'$f' is not an indexed keyword/bool field (indexed: $fields)")
-      df = df.filter(col(f).isin(vs: _*))
-    }
-    // one typed bound + residual per zoned kind, one generic pruner
-    val wanted: Seq[(String, String, BigDecimal, BigDecimal, Column)] =
-      range.toSeq.map { case (f, (lo, hi)) =>
-        (f, "integer", BigDecimal(lo), BigDecimal(hi),
-          col(f) >= lo && col(f) <= hi)
-      } ++ rangeFloat.toSeq.map { case (f, (lo, hi)) =>
-        // finite bounds only: the zone manifest records FINITE decimal
-        // bounds (statEligible excludes NaN/±Inf), so an infinite query
-        // bound could select a non-finite row no zone covers — a
-        // pruning miss. A finite [lo, hi] never matches a non-finite
-        // payload (IEEE comparisons), so the manifest stays a superset.
-        require(!lo.isNaN && !hi.isNaN && !lo.isInfinite && !hi.isInfinite,
-          s"rangeFloat on '$f' needs finite bounds (got [$lo, $hi]) — " +
-            "non-finite payloads are range-invisible by IEEE comparison " +
-            "semantics, and the zone manifest records finite bounds only")
-        (f, "float", BigDecimal.valueOf(lo), BigDecimal.valueOf(hi),
-          col(f) >= lo && col(f) <= hi)
-      } ++ rangeTime.toSeq.map { case (f, (lo, hi)) =>
-        val (loU, hiU) = (PayloadIndex.utcMicros(lo), PayloadIndex.utcMicros(hi))
-        // TIMESTAMP-literal residual (constant-folded), so it still
-        // pushes to the parquet scan — a unix_micros(col) form would not
-        (f, "datetime", BigDecimal(loU), BigDecimal(hiU),
-          col(f) >= timestamp_micros(lit(loU)) && col(f) <= timestamp_micros(lit(hiU)))
-      }
-    val live =
-      if (wanted.isEmpty) zones else PayloadIndex.liveZones(spark, root)
-    wanted.foreach { case (f, kind, lo, hi, residual) =>
-      require(kindOf(f).contains(kind),
-        s"'$f' is not an indexed $kind field (indexed: $fields)")
-      val zs = live(f).collect { case (z, zmin, zmax)
-        if zmax >= lo && zmin <= hi => z }
-      df = df.filter(col(zoneCol(f)).isin(zs.map(Integer.valueOf): _*) && residual)
-    }
-    geoBox.foreach { case ((latC, lonC), (laMin, laMax, loMin, loMax)) =>
-      val f = s"$latC:$lonC"
-      require(kindOf(f).contains("geo"),
-        s"'($latC, $lonC)' is not an indexed geo field (indexed: $fields)")
-      val cells = geoCells(geoGrid, laMin, laMax, loMin, loMax)
-      df = df.filter(col(geoColOf(f)).isin(cells.map(Integer.valueOf): _*) &&
-        col(latC) >= laMin && col(latC) <= laMax &&
-        col(lonC) >= loMin && col(lonC) <= loMax)
-    }
-    var out = df.select(original.map(sf => col(sf.name)): _*)
-    matchText.foreach { case (f, terms) =>
-      out = gateByTokens(out, f,
-        candidateIds(f, terms), residual = Some(terms))
-    }
-    out
-  }
-
   /** Read the collection through the FULL Qdrant filter algebra
     * ([[Filters.PFilter]] — `must` / `should` / `must_not` /
-    * `min_should` over every condition kind, nested filters included;
-    * the boolean generalization of [[read]]'s conjunctive surface).
-    * Results are EXACTLY the scan route's
+    * `min_should` over every condition kind, nested filters included).
+    * This is the index's one filtered read; the empty default filter
+    * matches everything. Results are EXACTLY the scan route's
     * (`collection.filter(Filters.toColumn(f, …))` with this index's
     * text folding) — the tree compiles to one total-boolean residual
     * that stays in the plan, and the index contributes only PRUNING:
     *
-    *  - `must` arms prune conjunctively (keyword directories, zone
-    *    manifests, geo cells; text arms gate through their posting
-    *    lists — conjunctive [[MatchText]] via per-term intersection,
-    *    [[MatchTextAny]] via the postings UNION);
+    *  - `must` arms prune conjunctively: keyword values select their
+    *    partition directories; ranges (and canonical-integer matches on
+    *    an integer field) select the manifest's overlapping zones, and
+    *    parquet row-group stats prune the pushed residual again inside
+    *    each zone; geo boxes, circles and polygons select their grid-cell
+    *    covers; text arms gate through their posting lists — conjunctive
+    *    [[MatchText]] via per-term intersection, [[MatchTextAny]] via the
+    *    postings UNION, [[MatchPhrase]] via the phrase-start set on a
+    *    positional index;
     *  - `should` / `min_should` prune as the UNION of their arms'
     *    slices when every arm is prunable (one unprunable arm
     *    disables the group's pruning, never its semantics); an
@@ -303,12 +209,24 @@ final class PayloadIndex private[api] (
     *    except that negated keyword conditions are partition-column
     *    predicates Spark's catalog prunes directly.
     *
-    * Zone pruning consults the newest COMMITTED manifest (the [[read]]
-    * freshness discipline). NULL semantics are Qdrant's throughout
-    * (see [[Filters]]); `IsEmpty` over a scalar field rewrites to
-    * `IsNull` against this index's schema.
+    * Zone pruning consults the NEWEST COMMITTED zones manifest on disk,
+    * not this handle's load-time snapshot: the data directory is shared
+    * and append-in-place, so after another handle's [[insert]] widens a
+    * zone (say uid=-50 lands in zone 0), a stale handle pruning on its
+    * old [1, 32] bounds would exclude the zone and silently miss the
+    * appended row. The parsed manifest is cached per root and keyed by
+    * its generation ([[PayloadIndex.liveZones]]), so freshness costs one
+    * directory listing of `zones/` per zone-pruning read, a Spark job
+    * only after another generation committed, and nothing when no such
+    * condition is given. Geo pruning needs no such protocol — the grid
+    * is static. The data tree is listed once per committed batch set,
+    * not per read ([[dataRelation]]).
+    *
+    * NULL semantics are Qdrant's throughout (see [[Filters]]);
+    * `IsEmpty` over a scalar field rewrites to `IsNull` against this
+    * index's schema. Columns come back in the original schema order.
     */
-  def readFilter(filter: Filters.PFilter): DataFrame = {
+  def readFilter(filter: Filters.PFilter = Filters.PFilter()): DataFrame = {
     import Filters._
     val f2 = rewriteIsEmpty(filter).asInstanceOf[PFilter]
     validateCond(f2)
@@ -336,9 +254,9 @@ final class PayloadIndex private[api] (
   private def rewriteIsEmpty(c: Filters.PCond): Filters.PCond =
     Filters.rewriteForSchema(c, original)
 
-  /** Loud leaf validation (the [[read]] requires, tree-wide): typed
-    * conditions must name a field indexed under their kind; value
-    * conditions must name a schema column.
+  /** Loud leaf validation over the whole tree: typed conditions must
+    * name a field indexed under their kind; value conditions must name
+    * a schema column.
     */
   private def validateCond(c: Filters.PCond): Unit = {
     import Filters._
@@ -618,7 +536,7 @@ final class PayloadIndex private[api] (
         // scan reads only true matches — gate rows = final matches,
         // plan-spec'd); otherwise the conjunctive token intersection,
         // lossless because phrase containment implies containing every
-        // token (the readMatchPhrase candidate discipline)
+        // token
         require(prefixTokens.isEmpty,
           s"phrase match on '$f' needs a word tokenizer — this index's " +
             "prefix tokenizer holds word prefixes, not adjacency")
@@ -687,8 +605,6 @@ final class PayloadIndex private[api] (
         s"prefix-indexed '$f' needs query terms of at least $mn chars " +
           s"(got $short) — shorter prefixes are not in the posting layout")
     }
-  private def foldedText(f: String): Column =
-    if (lowercase) lower(col(f)) else col(f)
 
   /** MatchText candidate ids for field `f`: rows whose token postings
     * hold EVERY query term (Qdrant's full-text index condition —
@@ -708,11 +624,11 @@ final class PayloadIndex private[api] (
     // a term with whitespace can never equal a split-token — it would
     // silently match NOTHING where the scan predicate matches adjacent
     // words, the one contract violation ('the index only prunes') this
-    // route must never commit; phrases go through readMatchPhrase
+    // route must never commit; phrases go through a MatchPhrase condition
     val spaced = qts.filter(_.exists(_.isWhitespace))
     require(spaced.isEmpty,
       s"matchText terms must be single tokens (got $spaced) — use " +
-        "readMatchPhrase for adjacent-word phrases")
+        "a MatchPhrase condition for adjacent-word phrases")
     val folded = qts.map(foldTerm).distinct
     requirePrefixLen(f, folded)
     PayloadIndex.postingsOf(spark, root, f)
@@ -724,66 +640,6 @@ final class PayloadIndex private[api] (
       .groupBy("__pid").agg(countDistinct("token").as("__nt"))
       .filter(col("__nt") === folded.size)
       .select("__pid")
-  }
-
-  /** Semi-join the candidate id set, then re-verify with the residual
-    * whole-word predicate on the stored text (folded on a lowercased
-    * index — the residual must express the SAME case semantics the
-    * postings did, or the two would disagree on mixed-case rows). The
-    * residual is belt-and-braces exactness: token postings and
-    * padded-contains are equivalent on whitespace tokenization
-    * (spec'd), and keeping the scan-predicate form in the plan means
-    * the indexed route can NEVER return a row the unindexed route would
-    * not — the index only prunes. Residual = None is the
-    * token-substring prefilter form, where the CALLER owns the true
-    * predicate.
-    */
-  private def gateByTokens(df: DataFrame, f: String, cand: DataFrame,
-                           residual: Option[Seq[String]]): DataFrame = {
-    val gated = df.join(cand, df(idCol) === cand("__pid"), "left_semi")
-    residual.fold(gated) { terms =>
-      val padded = concat(lit(" "), foldedText(f), lit(" "))
-      // prefix index: the residual is STARTS-WITH per word (leading
-      // space only) — the same semantics the prefix postings gate on
-      val probe: String => Column =
-        if (prefixTokens.isDefined) t => padded.contains(s" ${foldTerm(t)}")
-        else t => padded.contains(s" ${foldTerm(t)} ")
-      gated.filter(terms.distinct.filter(_.nonEmpty)
-        .map(probe).reduce(_ && _))
-    }
-  }
-
-  /** MatchPhrase through the text index (Qdrant's phrase-match text
-    * condition — the ADJACENT, ORDERED form of MatchText). On a
-    * POSITIONAL index ([[PayloadIndex.create]]'s `positionalText`),
-    * adjacency itself is computed from the postings: each phrase
-    * position i contributes its token's (row, pos − i) pairs, and a row
-    * with some start where ALL phrase positions land is an exact
-    * whole-word phrase match — so the data scan reads ONLY final
-    * candidates, not every row that merely holds the phrase's words
-    * somewhere (for a phrase of common words, the difference at 100 TB
-    * is the query). On a non-positional index, candidates prefilter by
-    * the phrase's tokens conjunctively (lossless: implied by phrase
-    * containment) and the padded-contains residual does the adjacency
-    * work on that wider slice. Both routes keep the full-phrase
-    * residual in the plan — the index only prunes.
-    */
-  def readMatchPhrase(f: String, phrase: String,
-                      eq: Map[String, Seq[String]] = Map.empty,
-                      range: Map[String, (Long, Long)] = Map.empty)
-      : DataFrame = {
-    require(prefixTokens.isEmpty,
-      "phrase match needs a word tokenizer — this index's prefix " +
-        "tokenizer holds word prefixes, not adjacency")
-    val toks = phrase.trim.split("\\s+").toSeq.filter(_.nonEmpty).map(foldTerm)
-    require(toks.nonEmpty, "matchPhrase needs a non-empty phrase")
-    val residual = concat(lit(" "), foldedText(f), lit(" "))
-      .contains(" " + toks.mkString(" ") + " ")
-    if (positional)
-      gateByTokens(read(eq, range), f, phraseStartIds(f, toks), residual = None)
-        .filter(residual)
-    else
-      read(eq, range, matchText = Map(f -> toks)).filter(residual)
   }
 
   /** Rows holding the (folded) token sequence at consecutive positions:
@@ -931,7 +787,7 @@ final class PayloadIndex private[api] (
         if (descending) col(field) <= valLit(v) else col(field) >= valLit(v)
       case _ => lit(true)
     }
-    // fresh manifest (the read() discipline — a stale handle would
+    // fresh manifest (the readFilter discipline — a stale handle would
     // miss rows an insert widened into a zone), cursor-pruned, in
     // serve order: zmin-ascending, or zmax-DESCENDING for desc pages
     val cursorBd: Option[BigDecimal] =
@@ -1009,9 +865,11 @@ final class PayloadIndex private[api] (
       .distinct
   }
 
-  /** A polygon's grid-cell cover: bounding-box cells minus cells whose
-    * (epsilon-padded) rectangle provably misses the polygon — floating
-    * error only ever OVER-keeps.
+  /** A polygon's grid-cell cover (the geo_polygon pruning set):
+    * bounding-box cells minus cells whose (epsilon-padded) rectangle
+    * provably misses the polygon — driver-side exact segment and
+    * containment tests, so floating error only ever OVER-keeps and the
+    * even-odd residual ([[PayloadIndex.evenOddContains]]) only narrows.
     */
   private def polygonCells(vertices: Seq[(Double, Double)]): Seq[Int] = {
     val lats = vertices.map(_._1); val lons = vertices.map(_._2)
@@ -1020,75 +878,14 @@ final class PayloadIndex private[api] (
       .filter(cid => PayloadIndex.cellIntersectsPolygon(geoGrid, cid, vertices))
   }
 
-  /** GEO-RADIUS read (Qdrant's `geo_radius` condition, the circle
-    * sibling of `geoBox`): rows within `radiusMeters` of (`lat`,
-    * `lon`). Pruning = the circle's bounding-box cell cover
-    * ([[radiusCells]] — pole-degenerate, antimeridian-wrapping, a
-    * superset every way); the exact HAVERSINE predicate is the
-    * residual. The trig lives ONLY in the residual — cell pruning
-    * stays pure comparisons — and haversine distances are engine-local
-    * (IEEE trig is not bit-portable across engines; the
-    * `vs_geo_radius_indexed` oracle is safe only because the corpus
-    * keeps every point far off the boundary — see that row's note).
-    */
-  def readGeoRadius(latCol: String, lonCol: String,
-                    lat: Double, lon: Double,
-                    radiusMeters: Double): DataFrame = {
-    val f = s"$latCol:$lonCol"
-    require(kindOf(f).contains("geo"),
-      s"'($latCol, $lonCol)' is not an indexed geo field (indexed: $fields)")
-    require(radiusMeters >= 0 && lat >= -90 && lat <= 90 &&
-      lon >= -180 && lon <= 180,
-      s"geo_radius needs radius >= 0 and a valid center (got " +
-        s"lat=$lat, lon=$lon, r=$radiusMeters)")
-    val cells = radiusCells(lat, lon, radiusMeters)
-    dataRelation()
-      .filter(col(PayloadIndex.geoColOf(f)).isin(cells.map(Integer.valueOf): _*) &&
-        PayloadIndex.haversineMeters(col(latCol), col(lonCol), lat, lon)
-          <= radiusMeters)
-      .select(original.map(sf => col(sf.name)): _*)
-  }
-
-  /** GEO-POLYGON read (Qdrant's `geo_polygon` condition — the third
-    * geo condition beside the shipped box and radius): rows whose
-    * (lat, lon) lies inside the simple polygon `vertices` (exterior
-    * ring, either winding, not self-intersecting, no antimeridian
-    * crossing — split such a polygon into its two halves). Pruning is
-    * the polygon's bounding-box cell cover MINUS the cells whose
-    * rectangle does not intersect the polygon (driver-side exact
-    * segment/containment tests with an epsilon-padded rectangle, so
-    * floating error can only OVER-keep — the cells stay a superset);
-    * the residual is the EVEN-ODD ray-crossing test compiled to pure
-    * column arithmetic ([[PayloadIndex.evenOddContains]]) — one
-    * comparison + one fused multiply-divide per non-horizontal edge,
-    * no trig, NULL coordinates cross nothing and are excluded (the
-    * scan route's NULL semantics). The residual is kept in the plan,
-    * so the cells only ever prune.
-    */
-  def readGeoPolygon(latCol: String, lonCol: String,
-                     vertices: Seq[(Double, Double)]): DataFrame = {
-    val f = s"$latCol:$lonCol"
-    require(kindOf(f).contains("geo"),
-      s"'($latCol, $lonCol)' is not an indexed geo field (indexed: $fields)")
-    require(vertices.size >= 3,
-      s"geo_polygon needs at least 3 vertices (got ${vertices.size})")
-    vertices.foreach { case (la, lo) =>
-      require(la >= -90 && la <= 90 && lo >= -180 && lo <= 180,
-        s"geo_polygon vertex out of range: ($la, $lo)") }
-    val cells = polygonCells(vertices)
-    dataRelation()
-      .filter(col(PayloadIndex.geoColOf(f)).isin(cells.map(Integer.valueOf): _*) &&
-        PayloadIndex.evenOddContains(col(latCol), col(lonCol), vertices))
-      .select(original.map(sf => col(sf.name)): _*)
-  }
-
   /** TOKEN-SUBSTRING prefilter — the index route behind the
     * reference's substring word delete and regex delete
-    * (app.py:94-139): rows of the pruned slice whose `f` holds ANY
-    * token containing `substr`. This is a SUPERSET of any predicate
-    * that implies "text contains `substr`": the caller MUST re-apply
-    * the true predicate on the returned rows — adjacency and regex
-    * alternation live in the residual, the postings only prune. On a
+    * (app.py:94-139): rows of `slice` (read through [[readFilter]])
+    * whose `f` holds ANY token containing `substr`. This is a SUPERSET
+    * of any predicate that implies "text contains `substr`": the caller
+    * MUST re-apply the true predicate on the returned rows — adjacency
+    * and regex alternation live in the residual, the postings only
+    * prune. On a
     * case-EXACT index the containment the postings can see is
     * case-exact (a space-free required literal of a regex, a substring
     * word match); a case-INSENSITIVE predicate does not imply
@@ -1100,14 +897,21 @@ final class PayloadIndex private[api] (
     * case-exactness restriction disappears. The scan here reads the
     * (token, __pid) postings relation — the token dictionary, not the
     * corpus text — so at 100 TB a `%substr%` probe touches the posting
-    * layout's thin columns instead of every data row group.
+    * layout's thin columns instead of every data row group. A PREFIX
+    * index is refused: its postings hold each word's prefixes only up
+    * to max_token_len, so a substring ending past that length (`batch`
+    * in `preprocessbatch` on a (2, 10) index) has no posting, and the
+    * prefilter would drop rows the caller's predicate keeps.
     */
   def readWithTokenSubstring(f: String, substr: String,
-                             eq: Map[String, Seq[String]] = Map.empty,
-                             range: Map[String, (Long, Long)] = Map.empty)
+                             slice: Filters.PFilter = Filters.PFilter())
       : DataFrame = {
     require(kindOf(f).contains("text"),
       s"'$f' is not an indexed text field (indexed: $fields)")
+    require(prefixTokens.isEmpty,
+      s"token-substring prefilter on '$f' needs a word tokenizer — this " +
+        "index's prefix tokenizer holds word prefixes only up to " +
+        "max_token_len, so a longer word's inner substrings have no posting")
     require(substr.nonEmpty && !substr.contains(" "),
       s"token-substring prefilter needs a non-empty, space-free literal " +
         s"(got '$substr') — a spanning literal crosses token boundaries " +
@@ -1115,41 +919,8 @@ final class PayloadIndex private[api] (
     val cand = PayloadIndex.postingsOf(spark, root, f)
       .filter(col("token").contains(foldTerm(substr)))
       .select("__pid").distinct()
-    gateByTokens(read(eq, range), f, cand, residual = None)
-  }
-
-  /** TOKEN-PREFIX read — Qdrant's prefix tokenization mode served as a
-    * query form: rows whose `f` holds a token starting with `prefix`
-    * (folded on a lowercased index). Same verified-superset contract as
-    * [[readWithTokenSubstring]] for predicates that imply it
-    * (autocomplete, stemming-lite `batch*`), but with a strictly better
-    * scan: `startsWith` pushes to parquet as a StringStartsWith filter,
-    * and the postings are token-SORTED — so row-group min/max statistics
-    * prune the token dictionary to the prefix's contiguous slice, where
-    * a `%substr%` containment probe must read every token row group.
-    * The whole-token prefix predicate is exact for whitespace
-    * tokenization (a token starts with `prefix` ⟺ ` prefix` appears
-    * after a space boundary in the padded text), so unlike the
-    * substring route no caller residual is needed for the plain
-    * "any word starts with" question; regex-shaped callers still own
-    * theirs.
-    */
-  def readWithTokenPrefix(f: String, prefix: String,
-                          eq: Map[String, Seq[String]] = Map.empty,
-                          range: Map[String, (Long, Long)] = Map.empty)
-      : DataFrame = {
-    require(kindOf(f).contains("text"),
-      s"'$f' is not an indexed text field (indexed: $fields)")
-    require(prefix.nonEmpty && !prefix.contains(" "),
-      s"token-prefix read needs a non-empty, space-free prefix (got '$prefix')")
-    val cand = PayloadIndex.postingsOf(spark, root, f)
-      .filter(col("token").startsWith(foldTerm(prefix)))
-      .select("__pid").distinct()
-    gateByTokens(read(eq, range), f, cand, residual = None)
-      // the exact predicate, kept in-plan (the index only prunes):
-      // a word boundary followed by the (folded) prefix
-      .filter(concat(lit(" "), foldedText(f))
-        .contains(s" ${foldTerm(prefix)}"))
+    val rows = readFilter(slice)
+    rows.join(cand, rows(idCol) === cand("__pid"), "left_semi")
   }
 
   /** INCREMENTAL ingest — the [[AnnIndex.insert]] fixed-quantizer trade

@@ -178,15 +178,25 @@ object VectorStore {
     */
   def searchMatchText(s: SparkSession, d: String, k: Int = 10,
                       terms: Seq[String] = Seq("the", "data")): DataFrame = {
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
     // whole-word containment: pad with spaces so "data" never matches
     // "database" (the tokenizer-equivalent rewrite of MatchText)
     val padded = concat(lit(" "), col("text"), lit(" "))
     val wordMatch = terms.map(t => padded.contains(s" $t "))
       .reduce(_ && _)
+    val pts = Tables.points(s, d)
+    rankByPoint0(pts, pts.filter(wordMatch), k)
+  }
+
+  /** The shared rank tail of the text-match searches: cosine against
+    * point 0's vector (read from `pts`, the caller's points frame, so a
+    * scan route lists and reads the tables once) over the matching
+    * slice, point 0 itself excluded, rounded to 4 places, k-row
+    * TakeOrdered, ranked.
+    */
+  private def rankByPoint0(pts: DataFrame, cands: DataFrame, k: Int): DataFrame = {
+    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
     val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("id") =!= 0 && wordMatch)
+    cands.filter(col("id") =!= 0)
       .join(broadcast(q))
       .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
       .orderBy(col("score").desc, col("id").asc).limit(k)
@@ -1092,18 +1102,9 @@ object VectorStore {
     */
   def searchMatchPrefixIndexed(s: SparkSession, d: String, k: Int = 10,
                                terms: Seq[String] = Seq("dat", "TH")): DataFrame = {
-    val idx = prefixTextIndex(s, d)
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    idx.read(matchText = Map("text" -> terms))
-      .filter(col("id") =!= 0)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    import graft.api.Filters._
+    rankByPoint0(Tables.points(s, d), prefixTextIndex(s, d)
+      .readFilter(PFilter(must = Seq(MatchText("text", terms)))), k)
   }
 
   /** The EVENTS payload index — float zones on `value` and datetime
@@ -1158,11 +1159,10 @@ object VectorStore {
     * scan-filter form's exactly, oracle-gated against the same SQL.
     */
   def searchTopKFilteredIndexed(s: SparkSession, d: String): DataFrame = {
-    val idx = payloadIndex(s, d)
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 1).select(col("vector").as("qvec"))
-    val cands = idx.read(eq = Map("lang" -> Seq("en", "fr")),
-      range = Map("user_id" -> (3L, 3L)))
+    import graft.api.Filters._
+    val q = Tables.points(s, d).filter(col("id") === 1).select(col("vector").as("qvec"))
+    val cands = payloadIndex(s, d).readFilter(PFilter(must = Seq(
+      MatchAny("lang", Seq("en", "fr")), RangeInt("user_id", 3, 3))))
     singleTopK(cands, q, 5)
       .select(col("rank"), col("id"), col("user_id"), col("lang"),
         round(col("score"), 4).as("score"))
@@ -1181,18 +1181,9 @@ object VectorStore {
     */
   def searchMatchTextIndexed(s: SparkSession, d: String, k: Int = 10,
                              terms: Seq[String] = Seq("the", "data")): DataFrame = {
-    val idx = payloadIndex(s, d)
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    idx.read(matchText = Map("text" -> terms))
-      .filter(col("id") =!= 0)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    import graft.api.Filters._
+    rankByPoint0(Tables.points(s, d), payloadIndex(s, d)
+      .readFilter(PFilter(must = Seq(MatchText("text", terms)))), k)
   }
 
   /** [[deleteByWord]] (app.py:94-115 /remove_all_by_word) through the
@@ -1203,9 +1194,9 @@ object VectorStore {
     * equal the pure scan route (same oracle).
     */
   def deleteByWordIndexed(s: SparkSession, d: String): DataFrame = {
-    val idx = payloadIndex(s, d)
-    val doomed = idx
-      .readWithTokenSubstring("text", "batch", range = Map("user_id" -> (3L, 3L)))
+    import graft.api.Filters._
+    val doomed = payloadIndex(s, d).readWithTokenSubstring("text", "batch",
+      PFilter(must = Seq(RangeInt("user_id", 3, 3))))
       .filter(col("text").contains("batch")) // the true predicate (residual)
       .select("id")
     Tables.points(s, d).filter(col("user_id") === 3)
@@ -1228,9 +1219,9 @@ object VectorStore {
     * alternation).
     */
   def deleteByRegexIndexed(s: SparkSession, d: String): DataFrame = {
-    val idx = payloadIndex(s, d)
-    val doomed = idx
-      .readWithTokenSubstring("text", "key", range = Map("user_id" -> (3L, 3L)))
+    import graft.api.Filters._
+    val doomed = payloadIndex(s, d).readWithTokenSubstring("text", "key",
+      PFilter(must = Seq(RangeInt("user_id", 3, 3))))
       .filter(col("text").rlike("key (scan|sort)")) // the true predicate
       .select("id")
     Tables.points(s, d).filter(col("user_id") === 3)
@@ -1242,8 +1233,9 @@ object VectorStore {
   }
 
   /** [[searchMatchPhrase]] routed through the POSITIONAL text postings
-    * ([[graft.api.PayloadIndex!.readMatchPhrase]] on the positional
-    * main index): adjacency itself resolves from (row, pos) posting
+    * (a [[graft.api.Filters.MatchPhrase]] condition through
+    * [[graft.api.PayloadIndex!.readFilter]] on the positional main
+    * index): adjacency itself resolves from (row, pos) posting
     * windows, so the text column is read only for FINAL phrase matches
     * — for a phrase of common words ("the data") the non-positional
     * route's conjunctive prefilter admits every row holding both words
@@ -1252,18 +1244,9 @@ object VectorStore {
     */
   def searchMatchPhraseIndexed(s: SparkSession, d: String, k: Int = 10,
                                phrase: String = "the data"): DataFrame = {
-    val idx = payloadIndex(s, d)
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    idx.readMatchPhrase("text", phrase)
-      .filter(col("id") =!= 0)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    import graft.api.Filters._
+    rankByPoint0(Tables.points(s, d), payloadIndex(s, d)
+      .readFilter(PFilter(must = Seq(MatchPhrase("text", phrase)))), k)
   }
 
   /** Case-INSENSITIVE MatchText through the LOWERCASED text index
@@ -1277,18 +1260,9 @@ object VectorStore {
     */
   def searchMatchTextCiIndexed(s: SparkSession, d: String, k: Int = 10,
                                terms: Seq[String] = Seq("The", "DATA")): DataFrame = {
-    val idx = ciTextIndex(s, d)
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    idx.read(matchText = Map("text" -> terms))
-      .filter(col("id") =!= 0)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    import graft.api.Filters._
+    rankByPoint0(Tables.points(s, d), ciTextIndex(s, d)
+      .readFilter(PFilter(must = Seq(MatchText("text", terms)))), k)
   }
 
   /** FLOAT-range filtered read through the events payload index
@@ -1301,12 +1275,13 @@ object VectorStore {
     * physical routes.
     */
   def eventsValueRangeIndexed(s: SparkSession, d: String,
-                              lo: Double = 120.0, hi: Double = 150.0): DataFrame =
-    eventsPayloadIndex(s, d)
-      .read(eq = Map("event_type" -> Seq("click", "view")),
-        rangeFloat = Map("value" -> (lo, hi)))
+                              lo: Double = 120.0, hi: Double = 150.0): DataFrame = {
+    import graft.api.Filters._
+    eventsPayloadIndex(s, d).readFilter(PFilter(must = Seq(
+      MatchAny("event_type", Seq("click", "view")), RangeFloat("value", lo, hi))))
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy("event_id")
+  }
 
   /** Qdrant's FULL `range` object — `gt`/`gte`/`lt`/`lte`, each
     * optional — through the events index: a strictly-above float bound
@@ -1364,14 +1339,15 @@ object VectorStore {
     */
   def eventsTsRangeIndexed(s: SparkSession, d: String,
                            lo: String = "2024-01-10 00:00:00",
-                           hi: String = "2024-01-11 23:59:59"): DataFrame =
-    eventsPayloadIndex(s, d)
-      .read(rangeTime = Map("ts" -> (lo, hi)))
+                           hi: String = "2024-01-11 23:59:59"): DataFrame = {
+    import graft.api.Filters._
+    eventsPayloadIndex(s, d).readFilter(PFilter(must = Seq(RangeTime("ts", lo, hi))))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum("event_id").as("sum_id"),
         countDistinct("user_id").as("n_users"))
       .orderBy("event_type")
+  }
 
   /** RFC 3339 datetime bounds through the same index route (VERDICT
     * r10 #2 — `2024-01-05T12:00:00Z` is the first literal a porting
@@ -1421,10 +1397,11 @@ object VectorStore {
   def geoSearchIndexed(s: SparkSession, d: String, k: Int = 10,
                        latMin: Double = 10.0, latMax: Double = 60.0,
                        lonMin: Double = -30.0, lonMax: Double = 40.0): DataFrame = {
-    val idx = geoIndex(s, d)
+    import graft.api.Filters._
     val q = Tables.points(s, d).filter(col("id") === 2).select(col("vector").as("qvec"))
     val w = Window.partitionBy(lit(0)).orderBy(col("cs").desc, col("id").asc)
-    idx.read(geoBox = Map(("lat" -> "lon") -> ((latMin, latMax, lonMin, lonMax))))
+    geoIndex(s, d).readFilter(PFilter(must = Seq(
+      GeoBox("lat", "lon", latMin, latMax, lonMin, lonMax))))
       .filter(col("id") =!= 2)
       .join(broadcast(q))
       .withColumn("cs", cosineSim(col("vector"), col("qvec")))
@@ -1480,8 +1457,7 @@ object VectorStore {
   }
 
   /** Qdrant `match: {phrase:}` as a first-class filter-TREE condition
-    * (VERDICT r10 #1 — the phrase ROUTE existed via readMatchPhrase,
-    * but a Qdrant user composes phrase with ranges and keywords in ONE
+    * (a Qdrant user composes phrase with ranges and keywords in ONE
     * `must`/`must_not` tree): phrase + integer range + negated keyword
     * through [[graft.api.PayloadIndex!.readFilter]]. On this
     * POSITIONAL index the phrase arm gates the scan through the
@@ -1540,18 +1516,8 @@ object VectorStore {
   def searchMatchAnyIndexed(s: SparkSession, d: String, k: Int = 10,
                             terms: Seq[String] = Seq("batch", "sort")): DataFrame = {
     import graft.api.Filters._
-    val idx = payloadIndex(s, d)
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    idx.readFilter(PFilter(must = Seq(MatchTextAny("text", terms))))
-      .filter(col("id") =!= 0)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    rankByPoint0(Tables.points(s, d), payloadIndex(s, d)
+      .readFilter(PFilter(must = Seq(MatchTextAny("text", terms)))), k)
   }
 
   /** Qdrant `MatchExcept` on a keyword field: value NOT in the list —
@@ -1701,7 +1667,7 @@ object VectorStore {
       nullableIndex(s, d)
         .deleteTo(dst, PFilter(must = Seq(RangeInt("user_id", 5, 5))))
     }
-    rotated.read()
+    rotated.readFilter()
       .groupBy("user_id")
       .agg(count(lit(1)).as("n"), min("id").as("min_id"),
         max("id").as("max_id"),
@@ -1729,11 +1695,11 @@ object VectorStore {
     * constants).
     */
   def geoPolygonIndexed(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    val idx = geoIndex(s, d)
+    import graft.api.Filters._
     val q = Tables.points(s, d).filter(col("id") === 2)
       .select(col("vector").as("qvec"))
     val w = Window.partitionBy(lit(0)).orderBy(col("cs").desc, col("id").asc)
-    idx.readGeoPolygon("lat", "lon", geoPolygon)
+    geoIndex(s, d).readFilter(PFilter(must = Seq(GeoPolygon("lat", "lon", geoPolygon))))
       .filter(col("id") =!= 2)
       .join(broadcast(q))
       .withColumn("cs", cosineSim(col("vector"), col("qvec")))
@@ -2599,17 +2565,9 @@ object VectorStore {
     */
   def searchMatchPhrase(s: SparkSession, d: String, k: Int = 10,
                         phrase: Seq[String] = Seq("the", "data")): DataFrame = {
-    val pts = Tables.points(s, d)
-    val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
     val padded = concat(lit(" "), col("text"), lit(" "))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("id") =!= 0 && padded.contains(" " + phrase.mkString(" ") + " "))
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    val pts = Tables.points(s, d)
+    rankByPoint0(pts, pts.filter(padded.contains(" " + phrase.mkString(" ") + " ")), k)
   }
 
   /** Qdrant /points/payload/delete + /points/payload/clear as one

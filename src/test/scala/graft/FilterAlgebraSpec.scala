@@ -67,7 +67,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
       p.contains("/site=s1/") || p.contains("/lang=en/")),
       s"should-arm union violated: $files")
     // and strictly fewer than an unpruned read
-    assert(files.length < scannedFiles(idx.read()).length)
+    assert(files.length < scannedFiles(idx.readFilter()).length)
   }
 
   test("must_not: Qdrant semantics (NULL matches the exclusion), residual-only") {
@@ -103,7 +103,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
         when(coalesce(col("uid").between(0, 2), lit(false)), 1).otherwise(0)) >= 2)
     sameRows(viaIdx, brute)
     // all arms prunable → union pruning engages (site/lang dirs + zones)
-    assert(scannedFiles(viaIdx).length < scannedFiles(idx.read()).length)
+    assert(scannedFiles(viaIdx).length < scannedFiles(idx.readFilter()).length)
     // an unprunable arm (text) disables the GROUP's pruning, not its meaning
     val fTxt = PFilter(minShould = Some((Seq(
       MatchValue("site", "s1"), MatchText("text", Seq("w3"))), 1)))
@@ -187,16 +187,16 @@ class FilterAlgebraSpec extends SparkSpecBase {
     val fresh = PayloadIndex.create(spark, survivors, tmp(),
       keyword = Seq("site", "lang"), integer = Seq("uid"),
       text = Seq("text"), idCol = "id", nZones = 3)
-    sameRows(rotated.read(), fresh.read())
-    assert(rotated.read().count() === 50L)
-    sameRows(rotated.read(eq = Map("site" -> Seq("s1"))),
-      fresh.read(eq = Map("site" -> Seq("s1"))))
-    sameRows(rotated.read(matchText = Map("text" -> Seq("alpha"))),
-      fresh.read(matchText = Map("text" -> Seq("alpha"))))
-    sameRows(rotated.read(range = Map("uid" -> (0L, 2L))),
-      fresh.read(range = Map("uid" -> (0L, 2L))))
+    sameRows(rotated.readFilter(), fresh.readFilter())
+    assert(rotated.readFilter().count() === 50L)
+    sameRows(rotated.readFilter(PFilter(must = Seq(MatchAny("site", Seq("s1"))))),
+      fresh.readFilter(PFilter(must = Seq(MatchAny("site", Seq("s1"))))))
+    sameRows(rotated.readFilter(PFilter(must = Seq(MatchText("text", Seq("alpha"))))),
+      fresh.readFilter(PFilter(must = Seq(MatchText("text", Seq("alpha"))))))
+    sameRows(rotated.readFilter(PFilter(must = Seq(RangeInt("uid", 0L, 2L)))),
+      fresh.readFilter(PFilter(must = Seq(RangeInt("uid", 0L, 2L)))))
     // a fresh LOAD of the rotation serves identically
-    sameRows(PayloadIndex.load(spark, dst).read(), rotated.read())
+    sameRows(PayloadIndex.load(spark, dst).readFilter(), rotated.readFilter())
     // untouched zone directories traveled as BYTE COPIES: same file
     // names file-for-file outside the rewritten uid zones
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -219,7 +219,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
     // correctly — the honest full rewrite
     val fTxt = PFilter(must = Seq(MatchText("text", Seq("alpha"))))
     val rot2 = idx.deleteTo(tmp(), fTxt)
-    sameRows(rot2.read(), corpus().filter(!Filters.toColumn(fTxt)))
+    sameRows(rot2.readFilter(), corpus().filter(!Filters.toColumn(fTxt)))
     // destination collision is refused
     intercept[IllegalArgumentException](idx.deleteTo(dst, f))
   }
@@ -237,7 +237,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
     // a NON-CONVEX polygon (lat, lon)
     val poly = Seq((0.25, -60.25), (50.25, -20.25), (10.25, 0.25),
       (50.25, 30.25), (-20.25, 10.25))
-    val viaIdx = idx.readGeoPolygon("lat", "lon", poly)
+    val viaIdx = idx.readFilter(PFilter(must = Seq(GeoPolygon("lat", "lon", poly))))
     val viaScan = base.filter(
       PayloadIndex.evenOddContains(col("lat"), col("lon"), poly))
     sameRows(viaIdx, viaScan)
@@ -267,10 +267,10 @@ class FilterAlgebraSpec extends SparkSpecBase {
     assert(nullRow.filter(
       PayloadIndex.evenOddContains(col("lat"), col("lon"), poly)).isEmpty)
     // degenerate and invalid polygons are refused
-    intercept[IllegalArgumentException](
-      idx.readGeoPolygon("lat", "lon", Seq((0.0, 0.0), (1.0, 1.0))))
-    intercept[IllegalArgumentException](
-      idx.readGeoPolygon("lat", "lon", Seq((0.0, 0.0), (0.0, 1.0), (0.0, 2.0))))
+    intercept[IllegalArgumentException](idx.readFilter(PFilter(must = Seq(
+      GeoPolygon("lat", "lon", Seq((0.0, 0.0), (1.0, 1.0)))))))
+    intercept[IllegalArgumentException](idx.readFilter(PFilter(must = Seq(
+      GeoPolygon("lat", "lon", Seq((0.0, 0.0), (0.0, 1.0), (0.0, 2.0)))))))
   }
 
   test("geo_radius wraps at the antimeridian instead of clamping") {
@@ -292,7 +292,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
     // 50 km circle centered just east of the seam: the far-side point
     // (id 2) is ~11 km away and MUST be found (ADVICE r9 — the clamped
     // box never selected its cell)
-    val got = idx.readGeoRadius("lat", "lon", 0.0, 179.99, 50000.0)
+    val got = idx.readFilter(PFilter(must = Seq(GeoRadius("lat", "lon", 0.0, 179.99, 50000.0))))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got === Set(1L, 2L),
       s"antimeridian circle must find both sides of the seam, got $got")
@@ -302,7 +302,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
         <= 50000.0).select("id").collect().map(_.getLong(0)).toSet
     assert(got === viaScan)
     // west-of-seam center symmetric case
-    val west = idx.readGeoRadius("lat", "lon", 0.0, -179.99, 50000.0)
+    val west = idx.readFilter(PFilter(must = Seq(GeoRadius("lat", "lon", 0.0, -179.99, 50000.0))))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(west === Set(1L, 2L))
   }
@@ -322,7 +322,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
       // under tr-TR, String.toLowerCase("INCIDENT") → "ıncıdent"
       // (dotless ı) — a default-locale fold would miss the postings
       java.util.Locale.setDefault(new java.util.Locale("tr", "TR"))
-      val got = idx.read(matchText = Map("text" -> Seq("INCIDENT")))
+      val got = idx.readFilter(PFilter(must = Seq(MatchText("text", Seq("INCIDENT")))))
       assert(got.count() === 1L && got.head().getLong(0) === 1L,
         "query-term folding must be Locale.ROOT (ADVICE r9)")
     } finally java.util.Locale.setDefault(dflt)
@@ -333,7 +333,7 @@ class FilterAlgebraSpec extends SparkSpecBase {
     val idx = build(root)
     val idx2 = idx.insert(corpus().filter(col("id") <= 2)
       .withColumn("id", col("id") + 1000))
-    assert(idx2.read().count() === 62L)
+    assert(idx2.readFilter().count() === 62L)
     // the batch committed under the protocol, in the ≥ 10⁹ id range —
     // disjoint from streaming checkpoint ids (a raw insert claiming
     // id 0 would make a maintain stream's first batch SKIP silently)
@@ -346,12 +346,12 @@ class FilterAlgebraSpec extends SparkSpecBase {
     // a second insert allocates the next id — appends, never replays
     val idx3 = idx2.insert(corpus().filter(col("id") === 3)
       .withColumn("id", col("id") + 2000))
-    assert(idx3.read().count() === 63L)
+    assert(idx3.readFilter().count() === 63L)
     // text postings traveled with both batches: the shifted copies
     // carry the ORIGINAL texts, so each token now matches two rows
-    assert(idx3.read(matchText = Map("text" -> Seq("w1")))
+    assert(idx3.readFilter(PFilter(must = Seq(MatchText("text", Seq("w1")))))
       .select("id").collect().map(_.getLong(0)).toSet === Set(1L, 1001L))
-    assert(idx3.read(matchText = Map("text" -> Seq("w3")))
+    assert(idx3.readFilter(PFilter(must = Seq(MatchText("text", Seq("w3")))))
       .select("id").collect().map(_.getLong(0)).toSet === Set(3L, 2003L))
   }
 
@@ -1105,14 +1105,13 @@ class FilterAlgebraSpec extends SparkSpecBase {
     // phrase matching needs a word tokenizer
     intercept[IllegalArgumentException](
       idx.readFilter(PFilter(must = Seq(MatchPhrase("text", "alpha beta")))))
-    intercept[IllegalArgumentException](idx.readMatchPhrase("text", "alpha beta"))
     // the options round-trip through load (a guessed tokenizer would
     // silently serve whole-word semantics from prefix postings)
     val reloaded = PayloadIndex.load(spark, root)
     sameRows(reloaded.readFilter(PFilter(
       must = Seq(MatchText("text", Seq("alp"))))), scan)
     intercept[IllegalArgumentException](
-      reloaded.readMatchPhrase("text", "alpha beta"))
+      reloaded.readFilter(PFilter(must = Seq(MatchPhrase("text", "alpha beta")))))
     // exclusive with the positional layout; degenerate windows refuse
     intercept[IllegalArgumentException](PayloadIndex.create(spark, corpus(),
       tmp(), keyword = Seq.empty, integer = Seq.empty, text = Seq("text"),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.{Aliases, Filters, PayloadIndex}
+import graft.api.Filters._
 import org.apache.spark.sql.functions._
 
 /** Edge shapes for the payload-field index that the sf-corpus spec
@@ -33,9 +34,9 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       keyword = Seq("tag"), integer = Seq("uid"), nZones = 8)
     // every boundary percentile equals 7 → a single populated zone
     assert(idx.zones("uid") === Seq((0, 7L, 7L)))
-    assert(idx.read(range = Map("uid" -> (7L, 7L))).count() === 40L)
-    assert(idx.read(range = Map("uid" -> (8L, 99L))).count() === 0L)
-    assert(idx.read(range = Map("uid" -> (0L, 6L))).count() === 0L)
+    assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 7L, 7L)))).count() === 40L)
+    assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 8L, 99L)))).count() === 0L)
+    assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 0L, 6L)))).count() === 0L)
   }
 
   test("numeric-looking keyword values keep their string type through a load") {
@@ -43,12 +44,12 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val pts = df(Seq((1L, "007", "bond"), (2L, "7", "seven"), (3L, "x", "ex")))
     PayloadIndex.create(spark, pts, root, keyword = Seq("tag"), integer = Seq.empty)
     val idx = PayloadIndex.load(spark, root)
-    val got = idx.read(eq = Map("tag" -> Seq("007")))
+    val got = idx.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("007")))))
     // partition-value inference would have retyped "007" as int 7 and
     // merged it with "7"; the explicit read schema must not
     assert(got.schema("tag").dataType === org.apache.spark.sql.types.StringType)
     assert(got.select("id").collect().map(_.getLong(0)).toSeq === Seq(1L))
-    assert(idx.read(eq = Map("tag" -> Seq("7"))).count() === 1L)
+    assert(idx.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("7"))))).count() === 1L)
   }
 
   test("null keyword values round-trip through the default partition") {
@@ -56,13 +57,13 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val pts = df(Seq((1L, null, "no tag"), (2L, "a", "tagged"), (3L, null, "also none")))
     val idx = PayloadIndex.create(spark, pts, root,
       keyword = Seq("tag"), integer = Seq.empty)
-    val back = idx.read()
+    val back = idx.readFilter()
     assert(back.count() === 3L)
     assert(back.filter(col("tag").isNull).count() === 2L,
       "null keyword rows must survive the partitioned layout")
     // an equality read never matches null (SQL semantics), and the
     // non-null partition prunes as usual
-    assert(idx.read(eq = Map("tag" -> Seq("a"))).count() === 1L)
+    assert(idx.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("a"))))).count() === 1L)
   }
 
   test("integer-only index prunes without any keyword axis") {
@@ -72,7 +73,7 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val idx = PayloadIndex.create(spark, pts, root,
       keyword = Seq.empty, integer = Seq("uid"), nZones = 4)
     assert(idx.zones("uid").size === 4)
-    val got = idx.read(range = Map("uid" -> (90L, 100L)))
+    val got = idx.readFilter(PFilter(must = Seq(RangeInt("uid", 90L, 100L))))
     assert(got.count() === 11L)
     // only the last zone overlaps [90, 100]
     val zs = idx.zones("uid").collect { case (z, lo, hi) if hi >= 90L && lo <= 100L => z }
@@ -97,13 +98,14 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val after = idx2.zones("uid").sortBy(_._1)
     assert(after.head._2 === -5L, s"first zone must widen down: $after")
     assert(after.last._3 === 999L, s"last zone must widen up: $after")
-    assert(idx2.read().count() === 67L)
+    assert(idx2.readFilter().count() === 67L)
     // ranges that only the widened manifest can answer
-    assert(idx2.read(range = Map("uid" -> (-10L, 0L))).count() === 1L)
-    assert(idx2.read(range = Map("uid" -> (100L, 1000L))).count() === 1L)
-    assert(idx2.read(range = Map("uid" -> (30L, 30L))).count() === 2L) // base uid=30 + inserted
+    assert(idx2.readFilter(PFilter(must = Seq(RangeInt("uid", -10L, 0L)))).count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeInt("uid", 100L, 1000L)))).count() === 1L)
+    // base uid=30 + inserted
+    assert(idx2.readFilter(PFilter(must = Seq(RangeInt("uid", 30L, 30L)))).count() === 2L)
     // keyword axis still prunes after the append
-    assert(idx2.read(eq = Map("tag" -> Seq("t1")))
+    assert(idx2.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("t1")))))
       .count() === base.filter(col("tag") === "t1").count() + 1)
 
     // the manifest rotated: a FRESH load resolves the widened generation
@@ -114,8 +116,8 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val idx3 = idx2.insert(df(Seq((-100L, "t1", "way below")))
       .withColumnRenamed("id", "uid"))
     assert(idx3.zones("uid").sortBy(_._1).head._2 === -100L)
-    assert(PayloadIndex.load(spark, root).read(
-      range = Map("uid" -> (-100L, -99L))).count() === 1L)
+    assert(PayloadIndex.load(spark, root)
+      .readFilter(PFilter(must = Seq(RangeInt("uid", -100L, -99L)))).count() === 1L)
   }
 
   test("the range residual pushes to the parquet scan inside each zone") {
@@ -128,7 +130,7 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     // field's >=/<= residual reaches PushedFilters, so row-group
     // min/max stats (files are sorted by uid within each zone) prune
     // again INSIDE the selected zone directories
-    val scan = idx.read(range = Map("uid" -> (10L, 12L)))
+    val scan = idx.readFilter(PFilter(must = Seq(RangeInt("uid", 10L, 12L))))
       .queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }.head
@@ -154,8 +156,8 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val latest = PayloadIndex.load(spark, root)
     assert(latest.zones("uid").sortBy(_._1).head._2 === -50L,
       "the stale insert must merge the on-disk widening, not clobber it")
-    assert(latest.read(range = Map("uid" -> (-60L, -40L))).count() === 1L)
-    assert(latest.read().count() === 34L)
+    assert(latest.readFilter(PFilter(must = Seq(RangeInt("uid", -60L, -40L)))).count() === 1L)
+    assert(latest.readFilter().count() === 34L)
   }
 
   test("an all-null integer field is rejected at create with the real reason") {
@@ -182,9 +184,9 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       assert(zs.head._2 === 1L && zs.last._3 === 100L)
       // RESULTS are boundary-independent (pruning consults actual
       // per-zone min/max, not the percentile estimate)
-      assert(idx.read(range = Map("uid" -> (90L, 100L))).count() === 11L)
-      assert(idx.read(range = Map("uid" -> (1L, 1L))).count() === 1L)
-      assert(idx.read(range = Map("uid" -> (101L, 999L))).count() === 0L)
+      assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 90L, 100L)))).count() === 11L)
+      assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 1L, 1L)))).count() === 1L)
+      assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 101L, 999L)))).count() === 0L)
     }
   }
 
@@ -204,9 +206,9 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       .insert(df(Seq((-50L, "t", "low"))).withColumnRenamed("id", "uid"))
     assert(staleReader.zones("uid").sortBy(_._1).head._2 === 1L,
       "precondition: the reader's snapshot predates the widening")
-    assert(staleReader.read(range = Map("uid" -> (-60L, -40L))).count() === 1L,
+    assert(staleReader.readFilter(PFilter(must = Seq(RangeInt("uid", -60L, -40L)))).count() === 1L,
       "stale handle missed a row the on-disk manifest covers")
-    assert(staleReader.read(range = Map("uid" -> (-60L, 32L))).count() === 33L)
+    assert(staleReader.readFilter(PFilter(must = Seq(RangeInt("uid", -60L, 32L)))).count() === 33L)
   }
 
   test("insert appends text postings so matchText sees the new rows") {
@@ -215,17 +217,18 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val idx = PayloadIndex.create(spark, base, root,
       keyword = Seq("tag"), integer = Seq.empty,
       text = Seq("text"), idCol = "id")
-    assert(idx.read(matchText = Map("text" -> Seq("beta"))).count() === 2L)
-    assert(idx.read(matchText = Map("text" -> Seq("alpha", "beta"))).count() === 1L)
+    assert(idx.readFilter(PFilter(must = Seq(MatchText("text", Seq("beta"))))).count() === 2L)
+    assert(idx.readFilter(PFilter(must = Seq(MatchText("text", Seq("alpha", "beta")))))
+      .count() === 1L)
     val idx2 = idx.insert(df(Seq((3L, "a", "beta delta"))))
-    assert(idx2.read(matchText = Map("text" -> Seq("beta"))).count() === 3L)
-    assert(idx2.read(matchText = Map("text" -> Seq("delta"))).count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(MatchText("text", Seq("beta"))))).count() === 3L)
+    assert(idx2.readFilter(PFilter(must = Seq(MatchText("text", Seq("delta"))))).count() === 1L)
     // a fresh load serves the appended postings too
     assert(PayloadIndex.load(spark, root)
-      .read(matchText = Map("text" -> Seq("delta"))).count() === 1L)
+      .readFilter(PFilter(must = Seq(MatchText("text", Seq("delta"))))).count() === 1L)
     // keyword axis still composes after the text append
-    assert(idx2.read(eq = Map("tag" -> Seq("a")),
-      matchText = Map("text" -> Seq("beta"))).count() === 2L)
+    assert(idx2.readFilter(PFilter(must = Seq(
+      MatchAny("tag", Seq("a")), MatchText("text", Seq("beta"))))).count() === 2L)
   }
 
   test("insertCommitted is exactly-once: replay skips, torn attempts are swept") {
@@ -235,14 +238,14 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       keyword = Seq("tag"), integer = Seq.empty, text = Seq("text"), idCol = "id")
     val b1 = df(Seq((3L, "a", "delta beta")))
     val idx2 = idx.insertCommitted(b1, 1L)
-    assert(idx2.read().count() === 3L)
-    assert(idx2.read(matchText = Map("text" -> Seq("delta"))).count() === 1L)
+    assert(idx2.readFilter().count() === 3L)
+    assert(idx2.readFilter(PFilter(must = Seq(MatchText("text", Seq("delta"))))).count() === 1L)
     // replay of a COMMITTED batch is a no-op (marker skip) — the
     // at-least-once duplicate insert() would take here is exactly what
     // this path must not
-    assert(idx2.insertCommitted(b1, 1L).read().count() === 3L)
+    assert(idx2.insertCommitted(b1, 1L).readFilter().count() === 3L)
     assert(PayloadIndex.load(spark, root)
-      .read(matchText = Map("text" -> Seq("beta"))).count() === 3L)
+      .readFilter(PFilter(must = Seq(MatchText("text", Seq("beta"))))).count() === 3L)
 
     // a committed batch retires its intent — the marker owns the skip
     assert(!new java.io.File(s"$root/batches/intent-1").exists(),
@@ -267,13 +270,13 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$root/batches/intent-2"),
       s"text_text\n$tornDir\n".getBytes("UTF-8"))
-    assert(PayloadIndex.load(spark, root).read().count() === 4L,
+    assert(PayloadIndex.load(spark, root).readFilter().count() === 4L,
       "precondition: the torn file duplicates a row")
     val idx3 = PayloadIndex.load(spark, root)
       .insertCommitted(df(Seq((4L, "b", "beta epsilon"))), 2L)
-    assert(idx3.read().count() === 4L, "torn duplicate must be swept, batch published once")
-    assert(idx3.read(matchText = Map("text" -> Seq("epsilon"))).count() === 1L)
-    assert(idx3.read(eq = Map("tag" -> Seq("b"))).count() === 2L)
+    assert(idx3.readFilter().count() === 4L, "torn duplicate must be swept, batch published once")
+    assert(idx3.readFilter(PFilter(must = Seq(MatchText("text", Seq("epsilon"))))).count() === 1L)
+    assert(idx3.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("b"))))).count() === 2L)
     assert(!new java.io.File(s"$root/batches/intent-2").exists(),
       "replayed batch must retire its publish intent too")
   }
@@ -288,7 +291,7 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val idx = PayloadIndex.create(spark,
       df(Seq((1L, "a ", "alpha beta"), (2L, "b", "beta gamma"))), root,
       keyword = Seq("tag"), integer = Seq.empty, text = Seq("text"), idCol = "id")
-    assert(idx.read(eq = Map("tag" -> Seq("a "))).count() === 1L,
+    assert(idx.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("a "))))).count() === 1L,
       "precondition: the trailing-space keyword value is its own partition")
     idx.insertCommitted(df(Seq((3L, "a ", "delta beta"))), 7L)
     // rewind batch 7 to the torn state: marker gone, intent restored
@@ -311,9 +314,9 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       dirs.mkString("\n").getBytes("UTF-8"))
     val idx2 = PayloadIndex.load(spark, root)
       .insertCommitted(df(Seq((3L, "a ", "delta beta"))), 7L)
-    assert(idx2.read().count() === 3L,
+    assert(idx2.readFilter().count() === 3L,
       "torn files under the whitespace dir must be swept — exactly one copy")
-    assert(idx2.read(eq = Map("tag" -> Seq("a "))).count() === 2L)
+    assert(idx2.readFilter(PFilter(must = Seq(MatchAny("tag", Seq("a "))))).count() === 2L)
   }
 
   test("insertCommitted replay converges when EVERYTHING moved but the marker never committed") {
@@ -346,9 +349,9 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       dirs.mkString("\n").getBytes("UTF-8"))
     val idx3 = PayloadIndex.load(spark, root)
       .insertCommitted(df(Seq((3L, "a", "zeta eta"))), 3L)
-    assert(idx3.read().count() === 3L,
+    assert(idx3.readFilter().count() === 3L,
       "fully-moved-but-unmarked batch must republish exactly once")
-    assert(idx3.read(matchText = Map("text" -> Seq("zeta"))).count() === 1L,
+    assert(idx3.readFilter(PFilter(must = Seq(MatchText("text", Seq("zeta"))))).count() === 1L,
       "postings must hold exactly one copy after the republish")
     assert(new java.io.File(s"$root/batches/batch-3").exists())
   }
@@ -362,9 +365,9 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val idx2 = PayloadIndex.load(spark, root)
       .insertCommitted(df(Seq((500L, "t", "way above")))
         .withColumnRenamed("id", "uid"), 0L)
-    assert(idx2.read(range = Map("uid" -> (400L, 600L))).count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeInt("uid", 400L, 600L)))).count() === 1L)
     assert(idx2.zones("uid").sortBy(_._1).last._3 === 500L)
-    assert(idx2.read().count() === 33L)
+    assert(idx2.readFilter().count() === 33L)
   }
 
   test("text indexes refuse NULL ids at create and at ingest") {
@@ -391,7 +394,7 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     val root2 = tmp()
     val idx2 = PayloadIndex.create(spark, withNull, root2,
       keyword = Seq("tag"), integer = Seq.empty)
-    assert(idx2.read().count() === 2L)
+    assert(idx2.readFilter().count() === 2L)
   }
 
   test("insert refuses a batch whose columns do not match the indexed schema") {
@@ -412,7 +415,7 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     Aliases.set(spark, reg, "points-idx", v1)
     def serve(): Long = PayloadIndex
       .load(spark, Aliases.resolve(spark, reg, "points-idx").get)
-      .read().count()
+      .readFilter().count()
     assert(serve() === 1L)
     // corpus grows: the artifact is immutable, so a reindex lands in a
     // FRESH root and the alias re-points — readers mid-flight on v1
@@ -443,7 +446,6 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     d.select("id").collect().map(_.getLong(0)).toSeq.sorted
 
   test("integer match pruning is exact: readFilter ≡ the scan route in must, should and must_not") {
-    import graft.api.Filters._
     val root = tmp()
     val base = tenants()
     val idx = PayloadIndex.create(spark, base, root, keyword = Seq("tag"),
@@ -502,7 +504,6 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
   }
 
   test("a handle's cached data listing sees other handles' inserts and a replayed torn batch") {
-    import graft.api.Filters._
     val root = tmp()
     val base = tenants()
     val idx = PayloadIndex.create(spark, base, root, keyword = Seq("tag"),
@@ -512,13 +513,13 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
       spark.createDataFrame(Seq(org.apache.spark.sql.Row(id, uid, tag)).asJava, base.schema)
     val n = base.count()
     // the handle has served reads, so its listing is made
-    assert(ids(idx.readFilter(tenant25)).size === 2 && idx.read().count() === n)
+    assert(ids(idx.readFilter(tenant25)).size === 2 && idx.readFilter().count() === n)
     PayloadIndex.load(spark, root).insert(row(1000L, 25L, "t0"))
     assert(ids(idx.readFilter(tenant25)).contains(1000L), "insert by another handle")
-    assert(idx.read().count() === n + 1)
+    assert(idx.readFilter().count() === n + 1)
     PayloadIndex.load(spark, root).insertCommitted(row(1001L, 25L, "t1"), 5L)
     assert(ids(idx.readFilter(tenant25)).contains(1001L), "insertCommitted by another handle")
-    assert(idx.read(range = Map("uid" -> (25L, 25L))).count() === 4L)
+    assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 25L, 25L)))).count() === 4L)
     // TORN batch 9: a b9- copy of a committed file and its intent, no
     // marker (the state a crash mid-publish leaves)
     def parts(dir: java.io.File): Seq[java.io.File] = {
@@ -536,16 +537,15 @@ class PayloadIndexEdgeSpec extends SparkSpecBase {
     assert(dup > 0, "precondition: the torn file holds rows")
     // another commit makes the handle re-list — now over the torn file
     PayloadIndex.load(spark, root).insert(row(1002L, 45L, "t0"))
-    assert(idx.read().count() === n + 3 + dup, "the listing holds the torn file")
+    assert(idx.readFilter().count() === n + 3 + dup, "the listing holds the torn file")
     // the replay sweeps the torn file and publishes batch 9 once
     PayloadIndex.load(spark, root).insertCommitted(row(1003L, 25L, "t0"), 9L)
     assert(!java.nio.file.Files.exists(torn), "precondition: the sweep removed the torn file")
-    assert(idx.read().count() === n + 4)
+    assert(idx.readFilter().count() === n + 4)
     assert(ids(idx.readFilter(tenant25)).count(_ >= 1000L) === 3)
   }
 
   test("a tenant read scans only the files of the zones that cover its user_id") {
-    import graft.api.Filters._
     val root = tmp()
     val idx = PayloadIndex.create(spark, tenants(), root, keyword = Seq("tag"),
       integer = Seq("uid"), nZones = 4, exactZones = true)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.PayloadIndex
+import graft.api.Filters._
 import org.apache.spark.sql.functions._
 
 /** The round-9 PayloadIndex field kinds beyond keyword/integer/text:
@@ -46,19 +47,19 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     val zs = idx.zones("score").sortBy(_._1)
     assert(zs.head._2 === BigDecimal(0.25) && zs.last._3 === BigDecimal(20.0))
     // pruning: only overlapping zone directories scan
-    val all = scannedFiles(idx.read())
+    val all = scannedFiles(idx.readFilter())
     val okZones = idx.zones("score")
       .collect { case (z, lo, hi) if hi >= 18.0 && lo <= 20.0 => z }.toSet
-    val pruned = scannedFiles(idx.read(rangeFloat = Map("score" -> (18.0, 20.0))))
+    val pruned = scannedFiles(idx.readFilter(PFilter(must = Seq(RangeFloat("score", 18.0, 20.0)))))
     assert(pruned.nonEmpty && pruned.length < all.length)
     assert(pruned.forall(f => okZones.exists(z => f.contains(s"/__zone_score=$z/"))))
     // result-identical to the scan-filter form (fractional bounds)
-    val viaIdx = idx.read(rangeFloat = Map("score" -> (3.1, 7.9)))
+    val viaIdx = idx.readFilter(PFilter(must = Seq(RangeFloat("score", 3.1, 7.9))))
     val viaScan = base.filter(col("score") >= 3.1 && col("score") <= 7.9)
     assert(viaIdx.count() === viaScan.count() && viaIdx.count() > 0)
     assert(viaIdx.exceptAll(viaScan).isEmpty && viaScan.exceptAll(viaIdx).isEmpty)
     // the double residual pushes into the parquet scan
-    val scan = idx.read(rangeFloat = Map("score" -> (3.1, 7.9)))
+    val scan = idx.readFilter(PFilter(must = Seq(RangeFloat("score", 3.1, 7.9))))
       .queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }.head
@@ -69,15 +70,20 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     val idx2 = idx.insert(fdf(Seq((81L, "t0", -2.5), (82L, "t1", 99.75))))
     val after = idx2.zones("score").sortBy(_._1)
     assert(after.head._2 === BigDecimal(-2.5) && after.last._3 === BigDecimal(99.75))
-    assert(idx2.read(rangeFloat = Map("score" -> (-3.0, -2.0))).count() === 1L)
-    assert(idx2.read(rangeFloat = Map("score" -> (50.0, 100.0))).count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeFloat("score", -3.0, -2.0))))
+      .count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeFloat("score", 50.0, 100.0))))
+      .count() === 1L)
     // a fresh load serves the widened manifest
     assert(PayloadIndex.load(spark, root)
-      .read(rangeFloat = Map("score" -> (-3.0, 100.0))).count() === 82L)
+      .readFilter(PFilter(must = Seq(RangeFloat("score", -3.0, 100.0)))).count() === 82L)
     // kind mismatch is refused, not silently scanned
-    intercept[IllegalArgumentException](idx.read(range = Map("score" -> (1L, 2L))))
+    intercept[IllegalArgumentException](idx.readFilter(PFilter(must = Seq(
+      RangeTime("score", "2024-01-01 00:00:00", "2024-01-02 00:00:00")))))
     intercept[IllegalArgumentException](
-      idx.read(rangeFloat = Map("tag" -> (1.0, 2.0))))
+      idx.readFilter(PFilter(must = Seq(RangeInt("tag", 1L, 2L)))))
+    intercept[IllegalArgumentException](
+      idx.readFilter(PFilter(must = Seq(RangeFloat("tag", 1.0, 2.0)))))
   }
 
   test("order_by scroll over a float axis: non-finite rows excluded, cursor stays finite") {
@@ -119,16 +125,17 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     assert(idx.zones("score").sortBy(_._1).last._3 === BigDecimal(20.0),
       "NaN must not become a manifest bound")
     // a range never matches NaN — both routes agree
-    val viaIdx = idx.read(rangeFloat = Map("score" -> (1.0, 1000.0)))
+    val viaIdx = idx.readFilter(PFilter(must = Seq(RangeFloat("score", 1.0, 1000.0))))
     val viaScan = base.filter(col("score") >= 1.0 && col("score") <= 1000.0)
     assert(viaIdx.count() === 20L && viaIdx.count() === viaScan.count())
     // the NaN row is still IN the layout (full reads serve it)
-    assert(idx.read().count() === 21L)
+    assert(idx.readFilter().count() === 21L)
     // inserting more NaN rows stays safe too
     val idx2 = idx.insert(fdf(Seq((22L, "t", Double.NaN), (23L, "t", 50.0))))
     assert(idx2.zones("score").sortBy(_._1).last._3 === BigDecimal(50.0))
-    assert(idx2.read(rangeFloat = Map("score" -> (1.0, 1000.0))).count() === 21L)
-    assert(idx2.read().count() === 23L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeFloat("score", 1.0, 1000.0))))
+      .count() === 21L)
+    assert(idx2.readFilter().count() === 23L)
     // an ENTIRELY NaN float field is refused with the real reason
     val allNaN = fdf((1L to 5L).map(i => (i, "t", Double.NaN)))
     val e = intercept[IllegalArgumentException](
@@ -153,20 +160,21 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       bounds.head._2 === BigDecimal(1.0),
       "non-finite values must not become manifest bounds")
     // a FINITE range never matches ±Inf (IEEE comparisons) — both routes
-    val viaIdx = idx.read(rangeFloat = Map("score" -> (-1e300, 1e300)))
+    val viaIdx = idx.readFilter(PFilter(must = Seq(RangeFloat("score", -1e300, 1e300))))
     val viaScan = base.filter(col("score") >= -1e300 && col("score") <= 1e300)
     assert(viaIdx.count() === 20L && viaIdx.count() === viaScan.count())
     // the ±Inf rows are still IN the layout (full reads serve them)
-    assert(idx.read().count() === 22L)
+    assert(idx.readFilter().count() === 22L)
     // widening across an insert carrying Inf stays safe too
     val idx2 = idx.insert(fdf(Seq(
       (23L, "t", Double.PositiveInfinity), (24L, "t", 50.0))))
     assert(idx2.zones("score").sortBy(_._1).last._3 === BigDecimal(50.0))
-    assert(idx2.read(rangeFloat = Map("score" -> (1.0, 1000.0))).count() === 21L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeFloat("score", 1.0, 1000.0))))
+      .count() === 21L)
     // non-finite QUERY bounds are refused loudly — the manifest records
     // finite bounds only, so an infinite bound could silently miss
-    val e2 = intercept[IllegalArgumentException](
-      idx2.read(rangeFloat = Map("score" -> (0.0, Double.PositiveInfinity))))
+    val e2 = intercept[IllegalArgumentException](idx2.readFilter(PFilter(must = Seq(
+      RangeFloat("score", 0.0, Double.PositiveInfinity)))))
     assert(e2.getMessage.contains("finite"))
   }
 
@@ -189,17 +197,18 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       nZones = 4)
     assert(idx.fields.contains("ts" -> "datetime"))
     // zone pruning: a one-day window selects a strict subset of files
-    val all = scannedFiles(idx.read())
+    val all = scannedFiles(idx.readFilter())
     val win = ("2024-03-02 00:00:00", "2024-03-02 23:00:00")
+    val winF = PFilter(must = Seq(RangeTime("ts", win._1, win._2)))
     val loU = BigDecimal(PayloadIndex.utcMicros(win._1))
     val hiU = BigDecimal(PayloadIndex.utcMicros(win._2))
     val okZones = idx.zones("ts")
       .collect { case (z, lo, hi) if hi >= loU && lo <= hiU => z }.toSet
-    val pruned = scannedFiles(idx.read(rangeTime = Map("ts" -> win)))
+    val pruned = scannedFiles(idx.readFilter(winF))
     assert(pruned.nonEmpty && pruned.length < all.length)
     assert(pruned.forall(f => okZones.exists(z => f.contains(s"/__zone_ts=$z/"))))
     // result-identical to the scan-filter form
-    val viaIdx = idx.read(rangeTime = Map("ts" -> win))
+    val viaIdx = idx.readFilter(winF)
     val viaScan = base.filter(col("ts") >= to_timestamp(lit(win._1)) &&
       col("ts") <= to_timestamp(lit(win._2)))
     assert(viaIdx.count() === 24L && viaIdx.count() === viaScan.count())
@@ -218,12 +227,12 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     val idx2 = idx.insert(late)
     assert(idx2.zones("ts").sortBy(_._1).last._3 ===
       BigDecimal(PayloadIndex.utcMicros("2024-06-01 12:00:00")))
-    assert(idx2.read(rangeTime =
-      Map("ts" -> (("2024-05-01 00:00:00", "2024-07-01 00:00:00")))).count() === 1L)
+    val lateF = PFilter(must = Seq(
+      RangeTime("ts", "2024-05-01 00:00:00", "2024-07-01 00:00:00")))
+    assert(idx2.readFilter(lateF).count() === 1L)
     // a stale pre-widening reader still sees the appended row (the
     // newest-committed-manifest read discipline, inherited by the kind)
-    assert(PayloadIndex.load(spark, root).read(rangeTime =
-      Map("ts" -> (("2024-05-01 00:00:00", "2024-07-01 00:00:00")))).count() === 1L)
+    assert(PayloadIndex.load(spark, root).readFilter(lateF).count() === 1L)
   }
 
   // ------------------------------------------------------------- geo
@@ -244,10 +253,10 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       keyword = Seq.empty, integer = Seq.empty,
       geo = Seq(("lat", "lon")), geoGrid = 8)
     assert(idx.fields.contains("lat:lon" -> "geo"))
-    val box = ("lat" -> "lon") -> ((10.0, 60.0, -30.0, 40.0))
+    val box = PFilter(must = Seq(GeoBox("lat", "lon", 10.0, 60.0, -30.0, 40.0)))
     // pruning: scanned files ⊆ the box's overlapping cell directories
-    val all = scannedFiles(idx.read())
-    val pruned = scannedFiles(idx.read(geoBox = Map(box)))
+    val all = scannedFiles(idx.readFilter())
+    val pruned = scannedFiles(idx.readFilter(box))
     assert(pruned.nonEmpty && pruned.length < all.length)
     // cells from the same static map the read used: rows 10..60 lat →
     // cells 4..6, lon -30..40 → cells 3..4 (grid 8)
@@ -256,24 +265,25 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       s"unexpected cell dir in ${pruned.filterNot(f => okCells.exists(c => f.contains(s"/__geo_lat_lon=$c/")))}")
     // result-identical to the scan-filter form (NULL + clamped rows
     // excluded by both routes)
-    val viaIdx = idx.read(geoBox = Map(box))
+    val viaIdx = idx.readFilter(box)
     val viaScan = base.filter(col("lat") >= 10.0 && col("lat") <= 60.0 &&
       col("lon") >= -30.0 && col("lon") <= 40.0)
     assert(viaIdx.count() === viaScan.count() && viaIdx.count() > 0)
     assert(viaIdx.exceptAll(viaScan).isEmpty && viaScan.exceptAll(viaIdx).isEmpty)
     // clamped out-of-range rows stay findable through a clamped box
-    val wide = idx.read(geoBox = Map(("lat" -> "lon") -> ((100.0, 130.0, 40.0, 60.0))))
+    val wide = idx.readFilter(PFilter(must = Seq(
+      GeoBox("lat", "lon", 100.0, 130.0, 40.0, 60.0))))
     assert(wide.count() === 1L, "the clamped row must serve from the edge cell")
     // insert lands in the static grid with no manifest protocol
     val idx2 = idx.insert(spark.createDataFrame(
       Seq(org.apache.spark.sql.Row(300L, 30.0, 0.0)).asJava, schema))
-    assert(idx2.read(geoBox = Map(box)).count() === viaScan.count() + 1)
+    assert(idx2.readFilter(box).count() === viaScan.count() + 1)
     assert(PayloadIndex.load(spark, root).geoGrid === 8)
-    assert(PayloadIndex.load(spark, root).read(geoBox = Map(box))
+    assert(PayloadIndex.load(spark, root).readFilter(box)
       .count() === viaScan.count() + 1)
     // an unindexed pair is refused
-    intercept[IllegalArgumentException](
-      idx.read(geoBox = Map(("lon" -> "lat") -> ((0.0, 1.0, 0.0, 1.0)))))
+    intercept[IllegalArgumentException](idx.readFilter(PFilter(must = Seq(
+      GeoBox("lon", "lat", 0.0, 1.0, 0.0, 1.0)))))
   }
 
   test("geo_radius reads prune by the circle's bounding-box cells with an exact haversine residual") {
@@ -289,26 +299,26 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       keyword = Seq.empty, integer = Seq.empty,
       geo = Seq(("lat", "lon")), geoGrid = 8)
     val (cLat, cLon, r) = (45.0, 10.0, 2.0e6) // 2000 km around the Alps
-    val got = idx.readGeoRadius("lat", "lon", cLat, cLon, r)
+    def radius(la: String, lo: String, lat: Double, lon: Double, m: Double) =
+      idx.readFilter(PFilter(must = Seq(GeoRadius(la, lo, lat, lon, m))))
+    val got = radius("lat", "lon", cLat, cLon, r)
     val truth = base.filter(
       PayloadIndex.haversineMeters(col("lat"), col("lon"), cLat, cLon) <= r)
     assert(got.count() === truth.count() && got.count() > 0)
     assert(got.exceptAll(truth).isEmpty && truth.exceptAll(got).isEmpty)
     // the radius route scans fewer files than a full read (cell pruning)
-    val all = scannedFiles(idx.read())
-    val pruned = scannedFiles(idx.readGeoRadius("lat", "lon", cLat, cLon, r))
+    val all = scannedFiles(idx.readFilter())
+    val pruned = scannedFiles(radius("lat", "lon", cLat, cLon, r))
     assert(pruned.nonEmpty && pruned.length < all.length)
     // a polar circle degenerates to the full lon range and still
     // answers exactly (the cos(lat) -> 0 guard)
-    val polar = idx.readGeoRadius("lat", "lon", 89.0, 0.0, 5.0e5)
+    val polar = radius("lat", "lon", 89.0, 0.0, 5.0e5)
     val polarTruth = base.filter(
       PayloadIndex.haversineMeters(col("lat"), col("lon"), 89.0, 0.0) <= 5.0e5)
     assert(polar.count() === polarTruth.count())
     // refused off-index and on invalid centers
-    intercept[IllegalArgumentException](
-      idx.readGeoRadius("lon", "lat", 0.0, 0.0, 1.0))
-    intercept[IllegalArgumentException](
-      idx.readGeoRadius("lat", "lon", 200.0, 0.0, 1.0))
+    intercept[IllegalArgumentException](radius("lon", "lat", 0.0, 0.0, 1.0))
+    intercept[IllegalArgumentException](radius("lat", "lon", 200.0, 0.0, 1.0))
   }
 
   // -------------------------------------------------- lowercase text
@@ -332,7 +342,7 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     assert(idx.lowercase)
     // matchText is case-insensitive regardless of query-term case —
     // the folded postings ARE the case-insensitive index
-    val ci = idx.read(matchText = Map("text" -> Seq("The", "DATA")))
+    val ci = idx.readFilter(PFilter(must = Seq(MatchText("text", Seq("The", "DATA")))))
     val truth = corpus.filter(
       concat(lit(" "), lower(col("text")), lit(" ")).contains(" the ") &&
         concat(lit(" "), lower(col("text")), lit(" ")).contains(" data "))
@@ -350,17 +360,19 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     assert(pre.count() === subTruth.count())
     assert(pre.exceptAll(subTruth).isEmpty && subTruth.exceptAll(pre).isEmpty)
     // phrase matching folds: adjacency + order, any case
-    val ph = idx.readMatchPhrase("text", "ThE dAtA")
+    val ph = idx.readFilter(PFilter(must = Seq(MatchPhrase("text", "ThE dAtA"))))
     val phTruth = corpus.filter(
       concat(lit(" "), lower(col("text")), lit(" ")).contains(" the data "))
     assert(ph.count() === 3L && ph.count() === phTruth.count())
     // the option survives a fresh load
     val re = PayloadIndex.load(spark, root)
     assert(re.lowercase && !re.positional)
-    assert(re.read(matchText = Map("text" -> Seq("warehouse"))).count() === 1L)
+    assert(re.readFilter(PFilter(must = Seq(MatchText("text", Seq("warehouse")))))
+      .count() === 1L)
     // inserts fold their postings like the build did
     val idx2 = idx.insert(txt(Seq((7L, "More DATA Arrives"))))
-    assert(idx2.read(matchText = Map("text" -> Seq("data", "ARRIVES"))).count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(MatchText("text", Seq("data", "ARRIVES")))))
+      .count() === 1L)
   }
 
   // ------------------------------------------------- positional text
@@ -375,7 +387,9 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       keyword = Seq.empty, integer = Seq.empty,
       text = Seq("text"), idCol = "id", positionalText = true)
     assert(idx.positional)
-    val ph = idx.readMatchPhrase("text", "the data")
+    def phrase(ix: PayloadIndex, p: String) =
+      ix.readFilter(PFilter(must = Seq(MatchPhrase("text", p))))
+    val ph = phrase(idx, "the data")
     val truth = corpus.filter(
       concat(lit(" "), col("text"), lit(" ")).contains(" the data "))
     // rows 1 and 4 only: row 2 is non-adjacent, row 3 reversed, row 5
@@ -391,7 +405,7 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     // metric nodes are the executed ones).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val qe = idx.readMatchPhrase("text", "the data").queryExecution
+      val qe = phrase(idx, "the data").queryExecution
       val n = qe.executedPlan.executeCollect().length
       val gateRows = qe.executedPlan.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -406,7 +420,7 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     // under the wider schema
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val postingsScan =
-      try idx.readMatchPhrase("text", "the data")
+      try phrase(idx, "the data")
         .queryExecution.executedPlan.collect {
           case s: org.apache.spark.sql.execution.FileSourceScanExec
             if s.output.exists(_.name == "pos") => s
@@ -419,64 +433,25 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     assert(postingsScan.head.output.map(_.name).toSet ===
       Set("token", "__pid", "pos"))
     // order still matters
-    assert(idx.readMatchPhrase("text", "data the").count() ===
+    assert(phrase(idx, "data the").count() ===
       corpus.filter(concat(lit(" "), col("text"), lit(" "))
         .contains(" data the ")).count())
     // a phrase with a REPEATED token demands every offset at one start
-    assert(idx.readMatchPhrase("text", "the data the").count() === 1L)
-    assert(idx.readMatchPhrase("text", "data data").count() === 0L)
+    assert(phrase(idx, "the data the").count() === 1L)
+    assert(phrase(idx, "data data").count() === 0L)
     // single-word phrases degrade to whole-word match
-    assert(idx.readMatchPhrase("text", "data").count() ===
+    assert(phrase(idx, "data").count() ===
       corpus.filter(concat(lit(" "), col("text"), lit(" "))
         .contains(" data ")).count())
     // inserts carry positions; a fresh load keeps the flag
     val idx2 = idx.insert(txt(Seq((7L, "fresh the data row"))))
-    assert(idx2.readMatchPhrase("text", "the data").count() === 3L)
+    assert(phrase(idx2, "the data").count() === 3L)
     assert(PayloadIndex.load(spark, root).positional)
-    assert(PayloadIndex.load(spark, root).readMatchPhrase("text", "the data")
-      .count() === 3L)
+    assert(phrase(PayloadIndex.load(spark, root), "the data").count() === 3L)
     // matchText (bag-of-words) still serves off the positional layout
     // (rows 1-5 — the double-spaced row holds both words — plus row 7)
-    assert(idx2.read(matchText = Map("text" -> Seq("the", "data"))).count() === 6L)
-  }
-
-  test("token-prefix reads push StringStartsWith to the sorted postings and answer exactly") {
-    val root = tmp()
-    val corpus = txt(Seq(
-      (1L, "batch processing wins"), (2L, "the batcher runs"),
-      (3L, "dispatch is not a prefix match"), (4L, "BATCH but wrong case"),
-      (5L, "nothing here")))
-    val idx = PayloadIndex.create(spark, corpus, root,
-      keyword = Seq.empty, integer = Seq.empty, text = Seq("text"), idCol = "id")
-    // exact on the case-sensitive index: rows 1-2 (word STARTS with
-    // "batch"); row 3 contains it mid-token, row 4 wrong case
-    val got = idx.readWithTokenPrefix("text", "batch")
-    val truth = corpus.filter(
-      concat(lit(" "), col("text")).contains(" batch"))
-    assert(got.count() === 2L && got.count() === truth.count())
-    assert(got.exceptAll(truth).isEmpty && truth.exceptAll(got).isEmpty)
-    // the prefix probe pushes to the postings scan as StringStartsWith —
-    // the token-sorted layout's row-group stats prune where a %substr%
-    // containment probe cannot
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val scan =
-      try idx.readWithTokenPrefix("text", "batch")
-        .queryExecution.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.output.exists(_.name == "token") => s
-        }
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(scan.nonEmpty)
-    assert(scan.head.metadata.getOrElse("PushedFilters", "")
-      .contains("StringStartsWith(token,batch)"),
-      s"got: ${scan.head.metadata.getOrElse("PushedFilters", "")}")
-    // on a LOWERCASED index the prefix folds: row 4 joins the matches
-    val ciRoot = tmp()
-    val ci = PayloadIndex.create(spark, corpus, ciRoot,
-      keyword = Seq.empty, integer = Seq.empty, text = Seq("text"),
-      idCol = "id", lowercaseText = true)
-    assert(ci.readWithTokenPrefix("text", "BATCH").count() === 3L)
-    intercept[IllegalArgumentException](idx.readWithTokenPrefix("text", "a b"))
+    assert(idx2.readFilter(PFilter(must = Seq(MatchText("text", Seq("the", "data")))))
+      .count() === 6L)
   }
 
   test("lowercase and positional compose on one index") {
@@ -488,14 +463,15 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       keyword = Seq.empty, integer = Seq.empty,
       text = Seq("text"), idCol = "id",
       lowercaseText = true, positionalText = true)
-    val ph = idx.readMatchPhrase("text", "the DATA")
+    val ph = idx.readFilter(PFilter(must = Seq(MatchPhrase("text", "the DATA"))))
     val truth = corpus.filter(
       concat(lit(" "), lower(col("text")), lit(" ")).contains(" the data "))
     assert(ph.count() === 2L && ph.count() === truth.count())
     assert(ph.exceptAll(truth).isEmpty && truth.exceptAll(ph).isEmpty)
     val re = PayloadIndex.load(spark, root)
     assert(re.lowercase && re.positional)
-    assert(re.readMatchPhrase("text", "THE data").count() === 2L)
+    assert(re.readFilter(PFilter(must = Seq(MatchPhrase("text", "THE data"))))
+      .count() === 2L)
   }
 
   test("the advisor emits float/datetime/integer verdicts from schema types") {
@@ -576,8 +552,9 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     // reads resolve the surviving live manifest: the fully-widened one
     val re = PayloadIndex.load(spark, root)
     assert(re.zones("score").sortBy(_._1).last._3 === BigDecimal(105.0))
-    assert(re.read(rangeFloat = Map("score" -> (100.0, 200.0))).count() === 5L)
-    assert(re.read().count() === 37L)
+    assert(re.readFilter(PFilter(must = Seq(RangeFloat("score", 100.0, 200.0))))
+      .count() === 5L)
+    assert(re.readFilter().count() === 37L)
   }
 
   test("every field kind composes on ONE index through create, ingest and load") {
@@ -601,13 +578,13 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       lowercaseText = true, positionalText = true)
     // one read composing EVERY axis at once — each predicate prunes its
     // own way, the result equals the scan-filter conjunction
-    def composed(ix: PayloadIndex) = ix.read(
-      eq = Map("tag" -> Seq("t0")),
-      range = Map("uid" -> (0L, 3L)),
-      rangeFloat = Map("score" -> (1.0, 20.0)),
-      rangeTime = Map("ts" -> (("2024-04-02 00:00:00", "2024-04-27 23:59:59"))),
-      geoBox = Map(("lat" -> "lon") -> ((-60.0, 60.0, -120.0, 120.0))),
-      matchText = Map("text" -> Seq("ALPHA", "beta")))
+    def composed(ix: PayloadIndex) = ix.readFilter(PFilter(must = Seq(
+      MatchAny("tag", Seq("t0")),
+      RangeInt("uid", 0L, 3L),
+      RangeFloat("score", 1.0, 20.0),
+      RangeTime("ts", "2024-04-02 00:00:00", "2024-04-27 23:59:59"),
+      GeoBox("lat", "lon", -60.0, 60.0, -120.0, 120.0),
+      MatchText("text", Seq("ALPHA", "beta")))))
     def truth(df: org.apache.spark.sql.DataFrame) = df.filter(
       col("tag") === "t0" && col("uid").between(0L, 3L) &&
         col("score").between(1.0, 20.0) &&
@@ -627,13 +604,14 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     val b2 = mk(Seq((101L, "t0", 99L, 999.5, "2024-09-01 00:00:00",
       "alpha beta straggler", 20.0, 20.0)))
     val idx3 = idx2.insertCommitted(b2, 5L)
-    assert(idx3.insertCommitted(b2, 5L).read().count() === 50L, "replay must skip")
+    assert(idx3.insertCommitted(b2, 5L).readFilter().count() === 50L, "replay must skip")
     // the committed batch widened zones: only the widened manifests can
     // route these reads
-    assert(idx3.read(range = Map("uid" -> (90L, 100L))).count() === 1L)
-    assert(idx3.read(rangeFloat = Map("score" -> (900.0, 1000.0))).count() === 1L)
-    assert(idx3.read(rangeTime =
-      Map("ts" -> (("2024-08-01 00:00:00", "2024-10-01 00:00:00")))).count() === 1L)
+    assert(idx3.readFilter(PFilter(must = Seq(RangeInt("uid", 90L, 100L)))).count() === 1L)
+    assert(idx3.readFilter(PFilter(must = Seq(RangeFloat("score", 900.0, 1000.0))))
+      .count() === 1L)
+    assert(idx3.readFilter(PFilter(must = Seq(
+      RangeTime("ts", "2024-08-01 00:00:00", "2024-10-01 00:00:00")))).count() === 1L)
     // a fresh load serves the composed read with both ingested rows
     val all = mk(Seq.empty).unionByName(base).unionByName(b1).unionByName(b2)
     val reloaded = PayloadIndex.load(spark, root)
@@ -642,7 +620,8 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     assert(got3.count() === truth(all).count())
     assert(got3.exceptAll(truth(all)).isEmpty && truth(all).exceptAll(got3).isEmpty)
     // phrase route still positional+folded over the grown layout
-    assert(reloaded.readMatchPhrase("text", "ALPHA beta").count() ===
+    assert(reloaded.readFilter(PFilter(must = Seq(MatchPhrase("text", "ALPHA beta"))))
+      .count() ===
       all.filter(concat(lit(" "), lower(col("text")), lit(" "))
         .contains(" alpha beta ")).count())
   }
@@ -662,13 +641,14 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
       geo = Seq(("lat", "lon")), geoGrid = 4, nZones = 4)
     val batch = g(Seq((41L, 77.5, 10.0, 10.0)))
     val idx2 = PayloadIndex.load(spark, root).insertCommitted(batch, 1L)
-    assert(idx2.read().count() === 41L)
-    assert(idx2.insertCommitted(batch, 1L).read().count() === 41L, "replay must skip")
+    assert(idx2.readFilter().count() === 41L)
+    assert(idx2.insertCommitted(batch, 1L).readFilter().count() === 41L, "replay must skip")
     assert(idx2.zones("score").sortBy(_._1).last._3 === BigDecimal(77.5))
-    assert(idx2.read(rangeFloat = Map("score" -> (70.0, 80.0))).count() === 1L)
+    assert(idx2.readFilter(PFilter(must = Seq(RangeFloat("score", 70.0, 80.0))))
+      .count() === 1L)
     val boxTruth = base.filter(col("lat").between(5.0, 15.0) &&
       col("lon").between(5.0, 15.0)).count()
-    assert(idx2.read(geoBox = Map(("lat" -> "lon") -> ((5.0, 15.0, 5.0, 15.0))))
+    assert(idx2.readFilter(PFilter(must = Seq(GeoBox("lat", "lon", 5.0, 15.0, 5.0, 15.0))))
       .count() === boxTruth + 1)
   }
 
@@ -690,7 +670,6 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     val idx = PayloadIndex.create(spark, base, root,
       keyword = Seq.empty, integer = Seq("v"), bool = Seq("flag"), nZones = 3)
     assert(idx.fields.contains("flag" -> "bool"))
-    import graft.api.Filters._
     // pruning: the match reads ONLY flag=true directories
     val viaIdx = idx.readFilter(PFilter(must = Seq(MatchValue("flag", "true"))))
     val files = viaIdx.queryExecution.executedPlan.collect {
@@ -715,8 +694,9 @@ class PayloadIndexKindsSpec extends SparkSpecBase {
     assert(composed.count() === base.filter(
       coalesce(col("flag") === false, lit(false)) &&
         col("v").between(2, 6)).count())
-    // the eq read surface accepts the bool axis too
-    assert(idx.read(eq = Map("flag" -> Seq("true"))).count() === truth.count())
+    // an any-of match prunes the bool axis too
+    assert(idx.readFilter(PFilter(must = Seq(MatchAny("flag", Seq("true")))))
+      .count() === truth.count())
     // insert keeps the axis; a fresh load is self-describing
     val idx2 = idx.insert(g(Seq((61L, true, 3L), (62L, null, 4L))))
     assert(idx2.readFilter(PFilter(must = Seq(MatchValue("flag", "true"))))

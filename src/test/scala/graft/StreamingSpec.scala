@@ -771,6 +771,7 @@ class StreamingSpec extends SparkSpecBase {
   test("payloadMaintainStream appends batches exactly-once with zone widening") {
     implicit val sqlCtx = spark.sqlContext
     import graft.api.PayloadIndex
+    import graft.api.Filters._
     import org.apache.spark.sql.types.StructType
     import scala.jdk.CollectionConverters._
     val base = java.nio.file.Files.createTempDirectory("pistream").toString
@@ -793,12 +794,12 @@ class StreamingSpec extends SparkSpecBase {
       input.addData((500L, "b", "epsilon"))
       q.processAllAvailable()
       val idx = PayloadIndex.load(spark, root)
-      assert(idx.read().count() === 4L)
-      assert(idx.read(matchText = Map("text" -> Seq("beta"))).count() === 3L)
-      assert(idx.read(matchText = Map("text" -> Seq("epsilon"))).count() === 1L)
-      assert(idx.read(range = Map("uid" -> (400L, 600L))).count() === 1L)
-      assert(idx.read(eq = Map("tag" -> Seq("a")),
-        matchText = Map("text" -> Seq("delta"))).count() === 1L)
+      assert(idx.readFilter().count() === 4L)
+      assert(idx.readFilter(PFilter(must = Seq(MatchText("text", Seq("beta"))))).count() === 3L)
+      assert(idx.readFilter(PFilter(must = Seq(MatchText("text", Seq("epsilon"))))).count() === 1L)
+      assert(idx.readFilter(PFilter(must = Seq(RangeInt("uid", 400L, 600L)))).count() === 1L)
+      assert(idx.readFilter(PFilter(must = Seq(
+        MatchAny("tag", Seq("a")), MatchText("text", Seq("delta"))))).count() === 1L)
       // both batches left commit markers (the replay-skip certificate)
       val markers = new java.io.File(s"$root/batches").listFiles()
         .map(_.getName).filterNot(_.startsWith(".")).sorted // drop CRC sidecars
