@@ -56,6 +56,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => JaccardSorted(args(0), args(1))))
     // whole-operator plan: TopKPerKey (partial-heap → exchange → final-heap)
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.plans.TopKPerKeyStrategy)
+    // whole-operator plan: RankedTopK (partition top-k → one ranked merge)
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.plans.RankedTopKStrategy)
     // TABLE function: the WHOLE query inventory from SQL —
     //   SELECT * FROM graft_query('q1_pricing_summary', '/data/sf')
     // resolves to the named operator's logical plan over that dataset

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Vectors._
+import graft.plans.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -190,20 +191,18 @@ object VectorStore {
   /** The shared rank tail of the text-match searches: cosine against
     * point 0's vector (read from `pts`, the caller's points frame, so a
     * scan route lists and reads the tables once) over the matching
-    * slice, point 0 itself excluded, rounded to 4 places, k-row
-    * TakeOrdered, ranked.
+    * slice, point 0 itself excluded, rounded to 4 places, ranked top k
+    * in one [[graft.plans.TopK.ranked]] operator.
     */
   private def rankByPoint0(pts: DataFrame, cands: DataFrame, k: Int): DataFrame = {
     val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    cands.filter(col("id") =!= 0)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    TopK.ranked(cands.filter(col("id") =!= 0).join(broadcast(q))
+      .select(col("id"), round(cosineSim(col("vector"), col("qvec")), 4).as("score")),
+      rankOrder, 0, k)
   }
+
+  /** Score descending, id ascending: the served rank order. */
+  private def rankOrder: Seq[Column] = Seq(col("score").desc, col("id").asc)
 
   /** Batched tenant-scoped search (the Spark-native strength vs the
     * reference's per-request loop): every point with id < 20 queries its
@@ -1488,22 +1487,18 @@ object VectorStore {
     filterRank(s, d, payloadIndex(s, d).readFilter(pf), k)
 
   /** The shared rank tail of the filter-algebra searches: cosine
-    * against point 1's vector over the filtered slice, k-row
-    * TakeOrdered — the corpus never shuffles.
+    * against point 1's vector over the filtered slice, ranked top k in
+    * one [[graft.plans.TopK.ranked]] operator — the corpus never
+    * shuffles.
     */
   private def filterRank(s: SparkSession, d: String, cands: DataFrame,
                          k: Int): DataFrame = {
     val q = Tables.points(s, d).filter(col("id") === 1)
       .select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    cands.filter(col("id") =!= 1)
-      .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("vector"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("user_id"), col("site"),
-        col("lang"), col("score"))
-      .orderBy("rank")
+    TopK.ranked(cands.filter(col("id") =!= 1).join(broadcast(q))
+      .select(col("id"), col("user_id"), col("site"), col("lang"),
+        round(cosineSim(col("vector"), col("qvec")), 4).as("score")),
+      rankOrder, 0, k)
   }
 
   /** Qdrant `MatchAny` on a text field (VERDICT r9 #5): at least ONE
@@ -2896,8 +2891,12 @@ object VectorStore {
     * stored id (anchor excluded — Qdrant's id-query convention) or by
     * literal vector, optional named head (`using: title` — the
     * [[namedVectors]] 8-dim prefix column), score_threshold gating on
-    * the SERVED 4dp score, and Qdrant's offset paging (ONE TakeOrdered
-    * of offset+k rows, ranks absolute — the [[searchOffset]] shape).
+    * the SERVED 4dp score, and Qdrant's offset paging (ranks absolute —
+    * the [[searchOffset]] page). The tail is one select of the
+    * candidate columns, then one [[graft.plans.TopK.ranked]] operator:
+    * a collected request runs ONE job of one stage (each task keeps its
+    * partition's best offset+k rows, the driver merges and ranks them),
+    * and its plan holds no Window, Sort or Exchange.
     * With a filter, no offset, and no threshold this is exactly
     * [[searchFilterShould]]'s readFilter + rank tail (parity-spec'd
     * bit-for-bit), which is what makes the wire oracle row
@@ -2924,26 +2923,20 @@ object VectorStore {
       else df
     val base = withHead(pf.map(p => payloadIndex(s, d).readFilter(p))
       .getOrElse(Tables.points(s, d)))
-    val scored = query match {
+    val (scored, qvec) = query match {
       case Left(qid) =>
         val q = withHead(Tables.points(s, d).filter(col("id") === qid))
           .select(col(scoreOn).as("qvec"))
-        base.filter(col("id") =!= qid).join(broadcast(q))
+        (base.filter(col("id") =!= qid).join(broadcast(q)), col("qvec"))
       case Right(v) =>
         if (scoreOn == "title_vec") require(v.length == headDims,
           s"a 'title' head query vector must have $headDims dims (got ${v.length})")
-        base.withColumn("qvec", array(v.map(lit): _*))
+        (base, array(v.map(lit): _*))
     }
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    val gated = scored
-      .withColumn("score", round(cosineSim(col(scoreOn), col("qvec")), 4))
-    threshold.fold(gated)(t => gated.filter(col("score") >= t))
-      .orderBy(col("score").desc, col("id").asc).limit(offset + k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") > offset)
-      .select(col("rank"), col("id"), col("user_id"), col("site"),
-        col("lang"), col("score"))
-      .orderBy("rank")
+    val cands = scored.select(col("id"), col("user_id"), col("site"), col("lang"),
+      round(cosineSim(col(scoreOn), qvec), 4).as("score"))
+    TopK.ranked(threshold.fold(cands)(t => cands.filter(col("score") >= t)),
+      rankOrder, offset, k)
   }
 
   /** Compile a parsed formula expression to ONE Column over the scored

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.graft.plans.TopKPerKeyBuilder
+import org.apache.spark.sql.graft.plans.{RankedTopKBuilder, TopKPerKeyBuilder}
 
 /** Whole-operator custom plan: top-k rows per key WITHOUT a window sort.
   *
@@ -20,4 +20,20 @@ import org.apache.spark.sql.graft.plans.TopKPerKeyBuilder
 object TopK {
   def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame =
     TopKPerKeyBuilder.topKPerKey(df, keys, order, k)
+
+  /** Rows `offset+1 … offset+k` of `df` under `order`, led by their
+    * absolute 1-based `rank` (LONG): the whole `orderBy.limit` →
+    * `row_number` → `rank > offset` → `orderBy("rank")` tail as one
+    * operator (org.apache.spark.sql.graft.plans.RankedTopKExec). It
+    * adds no Window, Sort or Exchange to the plan, and under a collect
+    * no stage: each task keeps its partition's best offset+k rows and
+    * the driver ranks them. The result is one partition in rank order.
+    *
+    * {{{
+    *   TopK.ranked(scored.select(col("id"), col("score")),
+    *     Seq(col("score").desc, col("id").asc), offset = 0, k = 10)
+    * }}}
+    */
+  def ranked(df: DataFrame, order: Seq[Column], offset: Int, k: Int): DataFrame =
+    RankedTopKBuilder.rankedTopK(df, order, offset, k)
 }

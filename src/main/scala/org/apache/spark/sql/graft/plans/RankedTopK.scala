@@ -1,0 +1,142 @@
+package org.apache.spark.sql.graft.plans
+
+// Hosted inside the org.apache.spark.sql package tree, like TopKPerKey:
+// Dataset.ofRows, RDD.mapPartitionsInternal and the bounded-selection
+// helper are private to Spark's packages.
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.execution.{ShuffledRowRDD, SparkPlan, UnaryExecNode, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.util.collection.{Utils => CollectionUtils}
+
+/** Logical: rows `offset+1 … offset+k` of `child` under `order`, each
+  * led by its absolute 1-based `rank` (output: `rank +: child.output`).
+  *
+  * The DataFrame formulation — `orderBy.limit(offset+k)`, then
+  * `row_number()` over `partitionBy(lit(0))`, a `rank > offset` filter
+  * and `orderBy("rank")` — plans a TakeOrderedAndProject that merges
+  * through its own single-partition shuffle, then a Window with its
+  * Sort, then a final Sort: two stages and a shuffle to rank at most
+  * offset+k rows. This node keeps a bounded top-(offset+k) per input
+  * partition and ranks the survivors in one merge (REPOSE's
+  * partition-local top-k), so the ranked tail is one operator.
+  */
+case class RankedTopK(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribute,
+                      child: LogicalPlan) extends UnaryNode {
+  require(offset >= 0 && k >= 0, s"offset and k must be non-negative, got $offset, $k")
+  override def output: Seq[Attribute] = rank +: child.output
+  override def producedAttributes: AttributeSet = AttributeSet(rank)
+  override def maxRows: Option[Long] = Some(k.toLong)
+  override protected def withNewChildInternal(newChild: LogicalPlan): RankedTopK =
+    copy(child = newChild)
+}
+
+/** Physical [[RankedTopK]], with the `projectList` of an absorbed
+  * `Project` above it applied to each ranked row.
+  *
+  * `executeCollect` runs one job of one stage: each task keeps its
+  * partition's best offset+k rows, and the driver merges and ranks
+  * them. `execute` (any consumer other than a collect) merges through
+  * an internal single-partition shuffle, as TakeOrderedAndProjectExec
+  * does, so the plan carries no Exchange node either way. The output
+  * is one partition, ordered by `rank`.
+  */
+case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribute,
+                          projectList: Seq[NamedExpression], child: SparkPlan)
+    extends UnaryExecNode {
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def outputOrdering: Seq[SortOrder] =
+    if (output.exists(_.semanticEquals(rank))) SortOrder(rank, Ascending) :: Nil else Nil
+
+  private lazy val writeMetrics =
+    SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sparkContext)
+  private lazy val readMetrics =
+    SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sparkContext)
+  override lazy val metrics: Map[String, SQLMetric] = readMetrics ++ writeMetrics
+
+  /** Each partition's best offset+k rows, copied (the scan reuses its row). */
+  private def partitionTopK(ord: Ordering[InternalRow]): RDD[InternalRow] = {
+    val n = offset + k
+    child.execute().mapPartitionsInternal(it =>
+      CollectionUtils.takeOrdered(it.map(_.copy()), n)(ord))
+  }
+
+  /** The best offset+k of the merged candidates, offset prefix dropped,
+    * each row projected with its absolute rank. Rows reuse one buffer.
+    */
+  private def ranked(ord: Ordering[InternalRow]): Iterator[InternalRow] => Iterator[InternalRow] = {
+    val (from, n, exprs, input) = (offset, offset + k, projectList, rank +: child.output)
+    rows => {
+      val proj = UnsafeProjection.create(exprs, input)
+      val rankRow = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      CollectionUtils.takeOrdered(rows, n)(ord).zipWithIndex.drop(from).map { case (r, i) =>
+        rankRow.setLong(0, i + 1L)
+        proj(joined(rankRow, r))
+      }
+    }
+  }
+
+  override def executeCollect(): Array[InternalRow] = {
+    val ord = new LazilyGeneratedOrdering(order, child.output)
+    ranked(ord)(partitionTopK(ord).collect().iterator).map(_.copy()).toArray
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val ord = new LazilyGeneratedOrdering(order, child.output)
+    val merged = new ShuffledRowRDD(
+      ShuffleExchangeExec.prepareShuffleDependency(partitionTopK(ord), child.output,
+        SinglePartition, new UnsafeRowSerializer(child.output.size), writeMetrics),
+      readMetrics)
+    val rankRows = ranked(ord)
+    merged.mapPartitionsInternal(it => rankRows(it.map(_.copy())))
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): RankedTopKExec =
+    copy(child = newChild)
+}
+
+/** Plans [[RankedTopK]] as one [[RankedTopKExec]], folding a `Project`
+  * directly above it into the exec.
+  */
+object RankedTopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Project(projectList, t: RankedTopK) =>
+      RankedTopKExec(t.order, t.offset, t.k, t.rank, projectList, planLater(t.child)) :: Nil
+    case t: RankedTopK =>
+      RankedTopKExec(t.order, t.offset, t.k, t.rank, t.output, planLater(t.child)) :: Nil
+    case _ => Nil
+  }
+}
+
+/** Builder bridge: resolves the sort columns through a throwaway
+  * `sortWithinPartitions` (the [[TopKPerKeyBuilder]] idiom) and wraps
+  * the analyzed child in a [[RankedTopK]].
+  */
+object RankedTopKBuilder {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+
+  def rankedTopK(df: DataFrame, orderCols: Seq[Column], offset: Int, k: Int): DataFrame = {
+    val spark = df.sparkSession.asInstanceOf[ClassicSession]
+    // sessions built without the GraftExtensions config plan it too
+    // (idempotent)
+    if (!spark.experimental.extraStrategies.contains(RankedTopKStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ RankedTopKStrategy
+    df.sortWithinPartitions(orderCols: _*).queryExecution.analyzed match {
+      case Sort(order, false, child, _) =>
+        val rank = AttributeReference("rank", LongType, nullable = false)()
+        Dataset.ofRows(spark, RankedTopK(order, offset, k, rank, child))
+      case other => throw new IllegalArgumentException(s"unexpected sort plan: $other")
+    }
+  }
+}

@@ -466,7 +466,7 @@ class PlanInvariantsSpec extends SparkSpecBase {
 
   test("match-text search keeps the word predicate map-side and never sort-merges") {
     val p = plan("vs_search_match_text")
-    assert(p.contains("TakeOrderedAndProject"), s"no k-row cut:\n$p")
+    assert(p.contains("RankedTopK"), s"no k-row cut:\n$p")
     assert(!p.contains("SortMergeJoin"), s"match-text degraded to SMJ:\n$p")
   }
 
@@ -545,7 +545,9 @@ class PlanInvariantsSpec extends SparkSpecBase {
   test("wire batch unions per-request plans, each arm keeping its own TakeOrdered cut") {
     val p = plan("vs_points_query_batch")
     assert(p.contains("Union"), s"batch lost the plan union:\n$p")
-    assert("TakeOrderedAndProject".r.findAllIn(p).size >= 2,
+    // formatted-plan operator headers: a TakeOrdered or a RankedTopK cut
+    // (the wire nearest arms) per arm
+    assert("""\(\d+\) (TakeOrderedAndProject|RankedTopK)""".r.findAllIn(p).size >= 2,
       s"an arm lost its own top-k cut:\n$p")
     assert(!p.contains("SortMergeJoin"), s"an arm degraded to SMJ:\n$p")
   }
@@ -555,5 +557,60 @@ class PlanInvariantsSpec extends SparkSpecBase {
     assert(!p.contains("SortMergeJoin"),
       s"a vector patch degraded to a shuffled join:\n$p")
     assert(nShuffles(p) <= 1, s"the op fold grew data shuffles:\n$p")
+  }
+
+  test("a tenant /points/query request ranks in one operator: one job of one stage, no Window/Sort/Exchange") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    // the tenant's zone spans several files, so the scan runs several
+    // tasks and only a shuffle could merge them in a second stage
+    val tenant = 3L
+    val q = Tables.points(spark, sf).filter(col("id") === 1).select("vector").head().getSeq[Double](0)
+    val json = s"""{"query": {"nearest": [${q.mkString(", ")}]}, "filter": {"must":
+      |[{"key": "user_id", "match": {"value": $tenant}}]}, "limit": 10}""".stripMargin
+    graft.operators.VectorStore.pointsQuery(spark, sf, json).collect() // fill the payload index
+    val df = graft.operators.VectorStore.pointsQuery(spark, sf, json)
+    val group = "ranked-topk-gate"
+    val (jobs, stages) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      private def in(p: java.util.Properties, g: String) =
+        p != null && p.getProperty("spark.jobGroup.id") == g
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (in(e.properties, group)) jobs.incrementAndGet()
+        if (in(e.properties, group + "-fence")) fenced.countDown()
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (in(e.properties, group)) stages.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val got = try {
+      sc.setJobGroup(group, "one tenant request")
+      val rows = df.collect()
+      // a job started after the collect: once the listener sees it,
+      // it has seen every event the collect posted
+      sc.setJobGroup(group + "-fence", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener fence timed out")
+      rows
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(got.length == 10, got.toSeq)
+    val executed = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val offending = helper.collect(executed) {
+      case p @ (_: WindowExec | _: SortExec | _: Exchange) => p.nodeName
+    }
+    assert(offending.isEmpty, s"the request plan holds $offending:\n$executed")
+    assert(!executed.isInstanceOf[AdaptiveSparkPlanExec], s"an exchange-free plan is AQE-wrapped:\n$executed")
+    val files = helper.collect(executed) { case f: FileSourceScanExec => f.metrics("numFiles").value }.sum
+    assert(files >= 2, s"the tenant zone read $files file(s); the gate needs several:\n$executed")
+    assert(jobs.get == 1 && stages.get == 1,
+      s"one collect ran ${jobs.get} job(s) and ${stages.get} stage(s):\n$executed")
   }
 }
