@@ -124,12 +124,10 @@ object CollectionConfig {
       s"unknown $ctx keys $extra — served: size/distance (hnsw_config/" +
         "quantization_config/on_disk are index-build concerns: " +
         "AnnIndex/GraphIndex and the quantization tiers)")
-    val sz = n.get("size")
-    require(sz != null && sz.isIntegralNumber,
-      s"$ctx size must be an integer: $n")
+    val sz = QueryRequest.intAtLeast(n.get("size"), 1, s"$ctx size")
     val dist = n.get("distance")
     require(dist != null && dist.isTextual, s"$ctx distance must be a string: $n")
-    VectorParams(sz.asInt(), dist.asText())
+    VectorParams(sz, dist.asText())
   }
 
   /** Parse a `create_collection` request body. */
@@ -166,11 +164,8 @@ object CollectionConfig {
       case other => fail(
         s"init_from must be a collection name or {collection: …}: $other")
     }
-    val shards = Option(root.get("shard_number")).map { s =>
-      require(s.isIntegralNumber && s.asLong() >= 1,
-        s"shard_number must be a positive integer: $s")
-      s.asInt()
-    }
+    val shards = Option(root.get("shard_number"))
+      .map(QueryRequest.intAtLeast(_, 1, "shard_number"))
     Config(vectors, init, shards)
   }
 

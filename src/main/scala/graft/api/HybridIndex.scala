@@ -1,9 +1,9 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors._
+import graft.plans.TopK
 
 /** Persistent HYBRID (keyword + vector) index — the switch-over surface
   * for a reference user running BM25+vector hybrid search (the standard
@@ -93,18 +93,17 @@ class HybridIndex private (spark: SparkSession, path: String,
   }
 
   /** Cosine top-k for one query vector — map-side distance against the
-    * persisted vectors, k-row TakeOrdered; the corpus never shuffles.
+    * persisted vectors, ranked in one [[graft.plans.TopK.ranked]]
+    * operator; the corpus never shuffles.
     */
   def vectorSearch(qvec: Seq[Double], k: Int = 10,
-                   allow: Option[DataFrame] = None): DataFrame = {
-    val w = Window.partitionBy(lit(0)).orderBy(col("cosine").desc, col("doc_id"))
-    allow.fold(vectors)(a =>
+                   allow: Option[DataFrame] = None): DataFrame =
+    TopK.ranked(allow.fold(vectors)(a =>
         vectors.join(a.select("doc_id"), Seq("doc_id"), "left_semi"))
       .select(col("doc_id"),
-        round(cosineSim(col("vec"), typedLit(qvec)), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("doc_id")).limit(k)
-      .withColumn("rank_vec", row_number().over(w).cast("long"))
-  }
+        round(cosineSim(col("vec"), typedLit(qvec)), 4).as("cosine")),
+      Seq(col("cosine").desc, col("doc_id")), 0, k)
+      .select(col("doc_id"), col("cosine"), col("rank").as("rank_vec"))
 
   /** Fused HYBRID search: RRF of the keyword and vector rankings (the
     * `vs_hybrid_search` fusion against the persisted index) — each
@@ -113,22 +112,11 @@ class HybridIndex private (spark: SparkSession, path: String,
   def search(terms: Seq[String], qvec: Seq[Double], k: Int = 10,
              depth: Int = 20, rrfK: Int = 60,
              allow: Option[DataFrame] = None): DataFrame = {
-    val wKw = Window.partitionBy(lit(0)).orderBy(col("bm25").desc, col("doc_id"))
-    val kw = keywordSearch(terms, depth, allow = allow)
-      .withColumn("rank_kw", row_number().over(wKw).cast("long"))
-    val vec = vectorSearch(qvec, depth, allow = allow)
-    val wFused = Window.partitionBy(lit(0)).orderBy(col("rrf").desc, col("doc_id"))
-    kw.select(col("doc_id"), col("rank_kw"))
-      .join(vec.select(col("doc_id"), col("rank_vec")), Seq("doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK) + col("rank_kw")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(wFused).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("rank"), col("doc_id"),
-        coalesce(col("rank_kw"), lit(0L)).as("rank_kw"),
-        coalesce(col("rank_vec"), lit(0L)).as("rank_vec"), col("rrf"))
-      .orderBy("rank")
+    val kw = TopK.ranked(keywordSearch(terms, depth, allow = allow),
+        Seq(col("bm25").desc, col("doc_id")), 0, depth)
+      .select(col("doc_id"), col("rank").as("rank_kw"))
+    graft.operators.VectorStore.rrfFused(kw, vectorSearch(qvec, depth, allow = allow),
+      k, rrfK)
   }
 
   /** Compile a Qdrant FILTER OBJECT over a payload relation into the

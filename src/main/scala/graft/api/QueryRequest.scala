@@ -130,6 +130,18 @@ object QueryRequest {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
+  /** Qdrant's page size when a request names no `limit`. */
+  val DefaultLimit: Int = 10
+
+  /** `n` as an Int of at least `min`. Refuses a non-integer and an
+    * integer past Int's range, which Jackson's `asInt` would wrap.
+    */
+  private[api] def intAtLeast(n: JsonNode, min: Int, what: String): Int = {
+    require(n != null && n.isIntegralNumber && n.canConvertToInt && n.asInt() >= min,
+      s"$what must be an integer in [$min, ${Int.MaxValue}] (got $n)")
+    n.asInt()
+  }
+
   private def num(n: JsonNode, what: String): Double = {
     require(n != null && n.isNumber, s"$what must be a JSON number (got $n)")
     n.asDouble()
@@ -291,11 +303,8 @@ object QueryRequest {
             .getOrElse(0.5)
           require(div >= 0.0 && div <= 1.0,
             s"mmr diversity must be in [0, 1] (got $div)")
-          val cand = Option(m.get("candidates_limit")).map { c =>
-            require(c.isIntegralNumber && c.asLong() >= 1,
-              s"mmr candidates_limit must be a positive integer: $c")
-            c.asInt()
-          }.getOrElse(100)
+          val cand = Option(m.get("candidates_limit"))
+            .map(intAtLeast(_, 1, "mmr candidates_limit")).getOrElse(100)
           base match {
             case NearestId(a) => MmrNearest(a, div, cand)
             case _ => fail("mmr diversification is served by stored " +
@@ -382,16 +391,12 @@ object QueryRequest {
     }
     val filter = Option(n.get("filter"))
       .map(f => Filters.fromJson(f.toString))
-    val limit = Option(n.get("limit")).map { l =>
-      require(l.isIntegralNumber && l.asLong() >= 1,
-        s"limit must be a positive integer: $l")
-      l.asInt()
-    }
-    val offset = Option(n.get("offset")).map { o =>
-      require(o.isIntegralNumber && o.asLong() >= 0,
-        s"offset must be a non-negative integer: $o")
-      o.asInt()
-    }.getOrElse(0)
+    val limit = Option(n.get("limit")).map(intAtLeast(_, 1, "limit"))
+    val offset = Option(n.get("offset")).map(intAtLeast(_, 0, "offset")).getOrElse(0)
+    // a ranked page keeps offset + limit rows in an Int
+    require(offset.toLong + limit.getOrElse(DefaultLimit) <= Int.MaxValue,
+      s"offset + limit must not exceed ${Int.MaxValue} (got $offset + " +
+        s"${limit.getOrElse(DefaultLimit)})")
     val thr = Option(n.get("score_threshold")).map(num(_, "score_threshold"))
     val lookupFrom = Option(n.get("lookup_from")).map { l =>
       require(l.isTextual, s"lookup_from must be a collection name: $l")
@@ -449,11 +454,7 @@ object QueryRequest {
     Option(n.get("filter")).map(f => Filters.fromJson(f.toString))
 
   private def posInt(n: JsonNode, name: String, dflt: Int): Int =
-    Option(n.get(name)).map { l =>
-      require(l.isIntegralNumber && l.asLong() >= 1,
-        s"$name must be a positive integer: $l")
-      l.asInt()
-    }.getOrElse(dflt)
+    Option(n.get(name)).map(intAtLeast(_, 1, name)).getOrElse(dflt)
 
   /** A `/points/query/groups` request: the grouped-search wire form
     * (`group_by` payload field, `limit` groups × `group_size` hits,

@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.functions.Vectors._
+import graft.plans.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -86,15 +87,8 @@ class VectorIndex private (val points: DataFrame,
       Some(col("user_id") === userId),
       site.map(col("site") === _),
       lang.map(col("lang") === _)).flatten.reduce(_ && _)
-    val scored = points.filter(filtered)
-      .withColumn("score", metric(lit(qvec.toArray), col("vector")))
-      .orderBy(col("score").asc, col("id").asc)
-      .limit(k) // TakeOrderedAndProject: per-partition top-k, k-row merge
-    // lit partition key = same one-partition run over k rows, no
-    // unpartitioned-window warning
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy(lit(0)).orderBy(col("score").asc, col("id").asc)))
-      .select(col("rank"), col("id"), col("text").as("string"), col("score"))
+    ranked(points.filter(filtered)
+      .withColumn("score", metric(lit(qvec.toArray), col("vector"))), ascending = true, k)
   }
 
   /** [[search]] with the FULL Qdrant filter object — `/points/query`
@@ -107,14 +101,19 @@ class VectorIndex private (val points: DataFrame,
   def searchFilter(qvec: Seq[Double], filter: Filters.PFilter, k: Int,
                    metric: (Column, Column) => Column = l2Distance)
       : DataFrame = {
-    val scored = points.filter(Filters.toFilterColumn(prepared(filter)))
-      .withColumn("score", metric(lit(qvec.toArray), col("vector")))
-      .orderBy(col("score").asc, col("id").asc)
-      .limit(k)
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy(lit(0)).orderBy(col("score").asc, col("id").asc)))
-      .select(col("rank"), col("id"), col("text").as("string"), col("score"))
+    ranked(points.filter(Filters.toFilterColumn(prepared(filter)))
+      .withColumn("score", metric(lit(qvec.toArray), col("vector"))), ascending = true, k)
   }
+
+  /** The top k of `scored` by `score` (then id), served as (rank, id,
+    * string, score) with the INT rank these searches have always
+    * returned.
+    */
+  private def ranked(scored: DataFrame, ascending: Boolean, k: Int): DataFrame =
+    TopK.ranked(scored,
+      Seq(if (ascending) col("score").asc else col("score").desc, col("id").asc), 0, k)
+      .select(col("rank").cast("int").as("rank"), col("id"), col("text").as("string"),
+        col("score"))
 
   /** Validated, schema-rewritten filter tree — the shared front door of
     * every filter-object surface here (ADVICE r10: an unknown field or
@@ -234,7 +233,7 @@ class VectorIndex private (val points: DataFrame,
     * excluding the examples themselves. Example vectors are looked up
     * in the collection by point id, the recommendation direction is
     * computed distributed (posexplode → per-dim aggregate → one-row
-    * broadcast), and the corpus ranks with a k-row TakeOrdered cut —
+    * broadcast), and the corpus ranks with a k-row `TopK.ranked` cut —
     * the corpus never shuffles. Cosine is scale-invariant, so the
     * means are combined in the exact integer-weighted decimal form
     * n_neg·Σpos − n_pos·Σneg (no division; reproducible anywhere).
@@ -256,13 +255,9 @@ class VectorIndex private (val points: DataFrame,
       transform(array_sort(collect_list(struct(col("dim"), col("rv")))),
         x => x.getField("rv")).as("qvec"))
     val base = userId.map(u => points.filter(col("user_id") === u)).getOrElse(points)
-    base.filter(!col("id").isin(exampleIds: _*))
+    ranked(base.filter(!col("id").isin(exampleIds: _*))
       .join(broadcast(qvec))
-      .withColumn("score", cosineSim(col("qvec"), col("vector")))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)))
-      .select(col("rank"), col("id"), col("text").as("string"), col("score"))
+      .withColumn("score", cosineSim(col("qvec"), col("vector"))), ascending = false, k)
   }
 
   /** Discovery search (Qdrant /points/discover): rank by the context
@@ -371,16 +366,11 @@ class VectorIndex private (val points: DataFrame,
       .withColumn("score", l2Distance(lit(qvec.toArray), col("vector")))
       .withColumn("hit_rank", row_number().over(inGroup).cast("long"))
       .filter(col("hit_rank") <= perGroup)
-    // group selection: TakeOrdered cut to nGroups BEFORE ranking — the
-    // per-group best rows are |groups|-many, and a global rank window
-    // would sort them all in one task; the limit keeps per-partition
-    // heaps + an nGroups-row merge, then the rank runs over nGroups rows
-    val top = hits.filter(col("hit_rank") === 1)
-      .select(col(groupField), col("score").as("best_score"))
-      .orderBy(col("best_score").asc, col(groupField).asc).limit(nGroups)
-      .withColumn("group_rank", row_number().over(Window.partitionBy(lit(0))
-        .orderBy(col("best_score").asc, col(groupField).asc)).cast("long"))
-    hits.join(broadcast(top.select(groupField, "group_rank")), groupField)
+    val top = TopK.ranked(hits.filter(col("hit_rank") === 1)
+      .select(col(groupField), col("score").as("best_score")),
+      Seq(col("best_score").asc, col(groupField).asc), 0, nGroups)
+      .select(col(groupField), col("rank").as("group_rank"))
+    hits.join(broadcast(top), groupField)
       .select(col("group_rank"), col(groupField), col("hit_rank"), col("id"),
         col("text").as("string"), col("score"))
       .orderBy("group_rank", "hit_rank")

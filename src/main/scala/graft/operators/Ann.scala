@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Vectors._
+import graft.plans.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -239,12 +240,15 @@ object Ann {
           IntBounds("vec_id", gte = Some(100L))),
         mustNot = Seq(RangeInt("label", 0, 1))),
       k, nprobe = 8)
-    val w = Window.partitionBy(lit(0))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    res.withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("vec_id"), round(col("cosine"), 4).as("cosine"))
-      .orderBy("rank")
+    rankedCosine(res, k)
   }
+
+  /** Rank an ANN search's (vec_id, cosine) rows by cosine, then id, and
+    * serve the cosine rounded to 4 places.
+    */
+  private def rankedCosine(res: DataFrame, k: Int): DataFrame =
+    TopK.ranked(res, Seq(col("cosine").desc, col("vec_id").asc), 0, k)
+      .select(col("rank"), col("vec_id"), round(col("cosine"), 4).as("cosine"))
 
   /** The ADAPTIVE filtered search (VERDICT r11 #1 — Qdrant's
     * selectivity fallback) as an ORACLE-CHECKABLE row: the `rare`
@@ -274,11 +278,7 @@ object Ann {
       "adaptive plan did not widen to the exact scan on the selective tree")
     val res = idx.searchFilterAdaptive(q, f, k, nprobe = 1,
       fullScanThreshold = threshold)
-    val w = Window.partitionBy(lit(0))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    res.withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("vec_id"), round(col("cosine"), 4).as("cosine"))
-      .orderBy("rank")
+    rankedCosine(res, k)
   }
 
   /** The memoized [[graft.api.AnnIndex!.deleteTo]] rotation of the

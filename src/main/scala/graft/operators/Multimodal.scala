@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.TopK
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -553,7 +554,7 @@ object Multimodal {
     * match THIS image"): the query doc's 64-bit fingerprint ranks the
     * whole asset table by hamming distance, k best returned. One map
     * pass over the (doc_id, sig) relation — 8 bytes per asset, the
-    * 64×-smaller-than-payload scan — plus a k-row TakeOrdered; the
+    * 64×-smaller-than-payload scan — plus a k-row `TopK.ranked`; the
     * media bytes never shuffle, never even load past the fingerprint
     * column. At index scale the [[phashDedup]] band buckets serve as
     * the candidate prefilter; the exact-hamming scan here is the
@@ -570,15 +571,10 @@ object Multimodal {
       s"doc $queryDocId has no pHash signature (payload too short for " +
         "the 64-cell grid, or not in the corpus) — pick a signed doc")
     val q = qRow.head.getLong(1)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(0)).orderBy(col("hamming").asc, col("doc_id").asc)
-    sigs.filter(col("doc_id") =!= queryDocId)
+    TopK.ranked(sigs.filter(col("doc_id") =!= queryDocId)
       .select(col("doc_id"),
-        bit_count(col("sig").bitwiseXOR(lit(q))).cast("long").as("hamming"))
-      .orderBy(col("hamming").asc, col("doc_id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("doc_id"), col("hamming"))
-      .orderBy("rank")
+        bit_count(col("sig").bitwiseXOR(lit(q))).cast("long").as("hamming")),
+      Seq(col("hamming").asc, col("doc_id").asc), 0, k)
   }
 
   /** ASSET clusters over the perceptual-hash pair graph — every

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1011,12 +1012,8 @@ object TextAnalysis {
       // toy SF. Materialized-leaf-per-iteration is the scale shape.
         .localCheckpoint()
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(0)).orderBy(col("pr").desc, col("doc_id").asc)
-    pr.orderBy(col("pr").desc, col("doc_id").asc).limit(topN)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    TopK.ranked(pr, Seq(col("pr").desc, col("doc_id").asc), 0, topN)
       .select(col("rank"), col("doc_id"), round(col("pr") * 1e6, 4).as("ppm"))
-      .orderBy("rank")
   }
 
   /** TRAINING-SHARD EXPORT PLAN — the write-side of a 100 TB training
@@ -1053,19 +1050,16 @@ object TextAnalysis {
     * DECIMAL before the Σx/Σy/Σxy/Σx² moments (order-independent,
     * engine-portable — the lm_score discipline); the closed-form
     * slope/intercept then run in deterministic IEEE doubles. Scale:
-    * term frequencies partial-aggregate; the top-N cut is
-    * TakeOrdered; the fit itself sees topN rows.
+    * term frequencies partial-aggregate; the top-N cut and its rank are
+    * one `TopK.ranked`; the fit itself sees topN rows.
     */
   def zipfSlope(s: SparkSession, d: String, topN: Int = 200): DataFrame = {
     val tf = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("tf"))
-      .orderBy(col("tf").desc, col("token")).limit(topN)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(0)).orderBy(col("tf").desc, col("token"))
-    val xy = tf.withColumn("r", row_number().over(w))
+    val xy = TopK.ranked(tf, Seq(col("tf").desc, col("token")), 0, topN)
       .select(
-        round(log(col("r").cast("double")), 6).cast("decimal(12,6)").as("x"),
+        round(log(col("rank").cast("double")), 6).cast("decimal(12,6)").as("x"),
         round(log(col("tf").cast("double")), 6).cast("decimal(12,6)").as("y"))
     xy.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))

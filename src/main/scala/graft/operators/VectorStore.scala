@@ -61,22 +61,14 @@ object VectorStore {
       .filter(col("rank") <= k)
   }
 
-  /** Single-query top-k: distance + `orderBy().limit(k)`, which Spark
-    * plans as TakeOrderedAndProject — each partition keeps its local
-    * top-k and only k rows per partition reach the driver-side merge.
-    * No window, no all-to-one-partition shuffle (a single-query rank
-    * window constant-folds its partition key and collapses to one task).
+  /** Single-query euclidean top-k of `corpus` against the one-row
+    * `qvec` frame, ranked in one [[graft.plans.TopK.ranked]] operator:
+    * each partition keeps its local top-k and only k rows per partition
+    * reach the merge.
     */
-  def singleTopK(corpus: DataFrame, qvec: DataFrame, k: Int): DataFrame = {
-    // lit partition key: same one-partition execution over the k-row
-    // limit output, without WindowExec's unpartitioned-window warning
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").asc, col("id").asc)
-    corpus.join(broadcast(qvec))
-      .withColumn("score", l2Distance(col("qvec"), col("vector")))
-      .orderBy(col("score").asc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long")) // k rows only
-  }
+  private def singleTopK(corpus: DataFrame, qvec: DataFrame, k: Int): DataFrame =
+    TopK.ranked(corpus.join(broadcast(qvec))
+      .withColumn("score", l2Distance(col("qvec"), col("vector"))), nearestOrder, 0, k)
 
   /** search.py:31-49 — euclidean top-5 for one query vector within one
     * tenant's points. Query vector = point 0's vector; tenant = user 7.
@@ -87,28 +79,24 @@ object VectorStore {
     singleTopK(pts.filter(col("user_id") === 7), q, 5)
       .select(col("rank"), col("id"), substring(col("text"), 1, 20).as("string"),
         round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** [[searchTopK]] under the MANHATTAN metric — Qdrant's fourth
     * distance (`Distance.Manhattan`, beside cosine/dot/euclid; the one
     * the engine lacked): Σ|aᵢ−bᵢ| as a native codegen'd expression
     * ([[graft.functions.Vectors.l1Distance]]), same tenant-pruned scan
-    * + k-row TakeOrdered shape. The metric is a seam, not a fork —
+    * + k-row `TopK.ranked` shape. The metric is a seam, not a fork —
     * every search surface takes `metric:` and this row proves the L1
     * kernel against DuckDB's lambda-sum of the same |diff| sequence.
     */
   def searchTopKL1(s: SparkSession, d: String): DataFrame = {
     val pts = Tables.points(s, d)
     val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").asc, col("id").asc)
-    pts.filter(col("user_id") === 7)
+    TopK.ranked(pts.filter(col("user_id") === 7)
       .join(broadcast(q))
-      .withColumn("score", graft.functions.Vectors.l1Distance(col("qvec"), col("vector")))
-      .orderBy(col("score").asc, col("id").asc).limit(5)
-      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("score", graft.functions.Vectors.l1Distance(col("qvec"), col("vector"))),
+      nearestOrder, 0, 5)
       .select(col("rank"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** [[searchTopK]] under the DOT-PRODUCT metric — with
@@ -117,26 +105,23 @@ object VectorStore {
     * Manhattan in r11): inner product as similarity, ranked DESCENDING
     * (Qdrant's dot convention — no normalization, magnitude matters).
     * Same native codegen'd kernel ([[graft.functions.Vectors.dot]]),
-    * same tenant-pruned scan + k-row TakeOrdered.
+    * same tenant-pruned scan + k-row `TopK.ranked`.
     */
   def searchTopKDot(s: SparkSession, d: String): DataFrame = {
     val pts = Tables.points(s, d)
     val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("user_id") === 7)
+    TopK.ranked(pts.filter(col("user_id") === 7)
       .join(broadcast(q))
-      .withColumn("score", graft.functions.Vectors.dot(col("qvec"), col("vector")))
-      .orderBy(col("score").desc, col("id").asc).limit(5)
-      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("score", graft.functions.Vectors.dot(col("qvec"), col("vector"))),
+      rankOrder, 0, 5)
       .select(col("rank"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** Qdrant search `offset` — the page-skip parameter the public
     * /points/search takes beside `limit` (the reference's client
     * exposes it; scroll's keyset cursor is the scale-path sibling):
     * results ranked (offset+1)..(offset+k). Spark shape: ONE
-    * TakeOrdered of offset+k rows (driver-bounded — Qdrant documents
+    * `TopK.ranked` of offset+k rows (driver-bounded — Qdrant documents
     * the same cost growth, which is why deep pagination belongs to
     * scroll), then the offset prefix drops; ranks stay ABSOLUTE (the
     * Qdrant page identity).
@@ -145,15 +130,10 @@ object VectorStore {
                    k: Int = 5): DataFrame = {
     val pts = Tables.points(s, d)
     val q = pts.filter(col("id") === 0).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("user_id") === 7)
+    TopK.ranked(pts.filter(col("user_id") === 7)
       .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("qvec"), col("vector")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(offset + k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") > offset)
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+      .select(col("id"), round(cosineSim(col("qvec"), col("vector")), 4).as("score")),
+      rankOrder, offset, k)
   }
 
   /** app.py:57-75 — search with user_id + site + lang payload filter. */
@@ -163,7 +143,6 @@ object VectorStore {
     singleTopK(pts.filter(col("user_id") === 3 && col("lang").isin("en", "fr")), q, 5)
       .select(col("rank"), col("id"), col("user_id"), col("lang"),
         round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** Qdrant `MatchText` payload condition + vector rank: candidates
@@ -172,7 +151,7 @@ object VectorStore {
     * by cosine. The word predicate evaluates inside the scan stage's
     * codegen filter (a concat-contains is not parquet-pushable, and
     * parquet has no substring statistics to prune with anyway), so the
-    * whole search is one map pass + a k-row TakeOrdered — no shuffle,
+    * whole search is one map pass + a k-row `TopK.ranked` — no shuffle,
     * no index state at test scale. A 100 TB deployment bolts the
     * [[graft.api.HybridIndex]] postings in front as the candidate
     * generator and this operator is the verify step.
@@ -203,6 +182,9 @@ object VectorStore {
 
   /** Score descending, id ascending: the served rank order. */
   private def rankOrder: Seq[Column] = Seq(col("score").desc, col("id").asc)
+
+  /** Distance ascending, id ascending: the rank order of a distance. */
+  private def nearestOrder: Seq[Column] = Seq(col("score").asc, col("id").asc)
 
   /** Batched tenant-scoped search (the Spark-native strength vs the
     * reference's per-request loop): every point with id < 20 queries its
@@ -244,19 +226,20 @@ object VectorStore {
       .withColumn("lat", (col("id") * 7919 % 18000) / lit(100.0) - 90.0)
       .withColumn("lon", (col("id") * 104729 % 36000) / lit(100.0) - 180.0)
     val q = Tables.points(s, d).filter(col("id") === 2).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("cs").desc, col("id").asc)
-    pts
+    geoRank(pts
       .filter(col("lat") >= latMin && col("lat") <= latMax &&
-        col("lon") >= lonMin && col("lon") <= lonMax && col("id") =!= 2)
-      .join(broadcast(q))
-      .withColumn("cs", cosineSim(col("vector"), col("qvec")))
-      .orderBy(col("cs").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+        col("lon") >= lonMin && col("lon") <= lonMax && col("id") =!= 2), q, k)
+  }
+
+  /** The geo searches' rank tail: cosine to the one-row `q` frame over
+    * the in-region points, top k by unrounded cosine, served rounded.
+    */
+  private def geoRank(inRegion: DataFrame, q: DataFrame, k: Int): DataFrame =
+    TopK.ranked(inRegion.join(broadcast(q))
+      .withColumn("cs", cosineSim(col("vector"), col("qvec"))),
+      Seq(col("cs").desc, col("id").asc), 0, k)
       .select(col("rank"), col("id"), col("lat"), col("lon"),
         round(col("cs"), 4).as("score"))
-      .orderBy("rank")
-  }
 
   /** Qdrant-style /recommend: rank the corpus by similarity to the mean
     * of positive example vectors MINUS the mean of negative example
@@ -265,7 +248,7 @@ object VectorStore {
     *
     * The recommendation vector is computed distributed (posexplode →
     * per-dim aggregate → 1-row collect) and broadcast; the corpus scan
-    * then ranks by native codegen'd cosine with a TakeOrdered k-row cut.
+    * then ranks by native codegen'd cosine with a `TopK.ranked` k-row cut.
     * Cross-engine exactness: cosine is scale-invariant, so instead of
     * dividing the two means (decimal division scales differ across
     * engines) we use the integer-weighted difference
@@ -293,13 +276,9 @@ object VectorStore {
     val qvec = recDims.agg(
       transform(array_sort(collect_list(struct(col("dim"), col("rv")))),
         x => x.getField("rv")).as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(!col("id").isin(exampleIds: _*)).join(broadcast(qvec))
-      .withColumn("score", cosineSim(col("qvec"), col("vector")))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    TopK.ranked(pts.filter(!col("id").isin(exampleIds: _*)).join(broadcast(qvec))
+      .withColumn("score", cosineSim(col("qvec"), col("vector"))), rankOrder, 0, k)
       .select(col("rank"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** The deterministic raw example vector of the `vs_recommend_raw`
@@ -355,13 +334,9 @@ object VectorStore {
     val qvec = recDims.agg(
       transform(array_sort(collect_list(struct(col("dim"), col("rv")))),
         x => x.getField("rv")).as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(!inSet(exampleIds)).join(broadcast(qvec))
-      .withColumn("score", cosineSim(col("qvec"), col("vector")))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    TopK.ranked(pts.filter(!inSet(exampleIds)).join(broadcast(qvec))
+      .withColumn("score", cosineSim(col("qvec"), col("vector"))), rankOrder, 0, k)
       .select(col("rank"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** Qdrant recommend with `lookup_from` — example vectors resolved in
@@ -384,7 +359,7 @@ object VectorStore {
     * n_pos·Σneg — no decimal division anywhere. Scale shape: the
     * lookup collection reduces to |labels|·dim rows, the query vector
     * inlines as literals, and the corpus never shuffles — one map pass
-    * + k-row TakeOrdered.
+    * + k-row `TopK.ranked`.
     */
   def recommendLookup(s: SparkSession, d: String, k: Int = 10,
                       posLabels: Seq[Int] = Seq(1, 2),
@@ -418,13 +393,9 @@ object VectorStore {
       negLabels.size * pos - posLabels.size * neg
     }
     val qvecCol = array(qv.map(lit).toIndexedSeq: _*)
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    Tables.points(s, d).withColumn("qvec", qvecCol)
-      .withColumn("score", cosineSim(col("qvec"), col("vector")))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    TopK.ranked(Tables.points(s, d).withColumn("qvec", qvecCol)
+      .withColumn("score", cosineSim(col("qvec"), col("vector"))), rankOrder, 0, k)
       .select(col("rank"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** Qdrant discovery search (/points/discover): rank the collection by
@@ -534,7 +505,7 @@ object VectorStore {
     *
     * Scale: the examples are a bounded client batch — they collect once
     * and inline as literal vectors, so the whole search is one map pass
-    * over the corpus + a k-row TakeOrdered; the corpus never shuffles
+    * over the corpus + a k-row `TopK.ranked`; the corpus never shuffles
     * (the [[discover]] shape). Per-example cosines are 4dp-rounded
     * scalars before max/compare, so the ranking is engine-portable.
     */
@@ -548,8 +519,7 @@ object VectorStore {
     def litVec(id: Long): Column = array(vecs(id).map(lit): _*)
     def bestOf(ids: Seq[Long]): Column =
       greatest(ids.map(i => round(cosineSim(col("vector"), litVec(i)), 4)): _*)
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(!col("id").isin(exIds: _*))
+    val scored = pts.filter(!col("id").isin(exIds: _*))
       .withColumn("bp", bestOf(posIds))
       // no negatives: nothing can out-score a positive — bn sits below
       // any cosine, so score = bp always (the wire route's
@@ -557,10 +527,7 @@ object VectorStore {
       .withColumn("bn", if (negIds.isEmpty) lit(-2.0) else bestOf(negIds))
       .withColumn("score", when(col("bp") > col("bn"), col("bp"))
         .otherwise(-(col("bn") * col("bn"))))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+    TopK.ranked(scored.select(col("id"), col("score")), rankOrder, 0, k)
   }
 
   /** Qdrant NAMED VECTORS: a point carries SEVERAL vectors under
@@ -572,7 +539,7 @@ object VectorStore {
     * heads at 100 TB). Here the "title" head is the MRL-style 8-dim
     * prefix (deterministic, derivable in both engines), and the search
     * runs `using: title` with a tenant filter — one map pass + k-row
-    * TakeOrdered against 8-dim arithmetic instead of full-dim.
+    * `TopK.ranked` against 8-dim arithmetic instead of full-dim.
     */
   def namedVectors(s: SparkSession, d: String, k: Int = 10,
                    headDims: Int = 8): DataFrame = {
@@ -580,14 +547,10 @@ object VectorStore {
       .withColumn("title_vec", slice(col("vector"), 1, headDims))
     val q = pts.filter(col("id") === 0)
       .select(col("title_vec").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("id") =!= 0 && col("user_id") === 7)
+    TopK.ranked(pts.filter(col("id") =!= 0 && col("user_id") === 7)
       .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("title_vec"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("score"))
-      .orderBy("rank")
+      .select(col("id"), round(cosineSim(col("title_vec"), col("qvec")), 4).as("score")),
+      rankOrder, 0, k)
   }
 
   /** Qdrant `update_vectors` served end-to-end (VERDICT r12 #4): patch
@@ -612,15 +575,12 @@ object VectorStore {
     val patched = idx.setVectors(patch).points
     val q = patched.filter(col("id") === 0)
       .select(col("title_vec").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    patched.filter(col("id") =!= 0 && col("user_id") === 7)
+    TopK.ranked(patched.filter(col("id") =!= 0 && col("user_id") === 7)
       .join(broadcast(q))
-      .withColumn("score", round(cosineSim(col("title_vec"), col("qvec")), 4))
-      .orderBy(col("score").desc, col("id").asc).limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("score", round(cosineSim(col("title_vec"), col("qvec")), 4)),
+      rankOrder, 0, k)
       .select(col("rank"), col("id"),
         round(l2Norm(col("vector")), 4).as("vec_norm"), col("score"))
-      .orderBy("rank")
   }
 
   /** Qdrant /points/batch — ONE request carrying an ORDERED list of
@@ -724,12 +684,13 @@ object VectorStore {
   /** Qdrant-style GROUPED search (search_groups API): top-`nGroups`
     * payload groups for one query, each represented by its `perGroup`
     * best hits — "best restaurants by neighborhood" over vectors. Two
-    * stacked window ranks: within-group hit rank (cutting each group to
-    * `perGroup` rows BEFORE anything global), then groups ranked by
-    * their best hit's score. Scale shape: the per-group cut happens in
-    * the same exchange as the distance scan (WindowGroupLimit pushes the
-    * rank filter pre-shuffle), so at most `perGroup`×groups rows survive
-    * to the tiny group-ranking step — the corpus never sorts globally.
+    * stacked ranks: a within-group window hit rank (cutting each group
+    * to `perGroup` rows BEFORE anything global), then the groups ranked
+    * by their best hit's score in one `TopK.ranked`. Scale shape: the
+    * per-group cut happens in the same exchange as the distance scan
+    * (WindowGroupLimit pushes the rank filter pre-shuffle), so at most
+    * `perGroup`×groups rows survive to the tiny group-ranking step — the
+    * corpus never sorts globally.
     */
   def searchGroups(s: SparkSession, d: String, queryId: Long = 0,
                    nGroups: Int = 3, perGroup: Int = 2,
@@ -747,17 +708,12 @@ object VectorStore {
       .withColumn("hit_rank", row_number().over(inGroup).cast("long"))
       .filter(col("hit_rank") <= perGroup)
     // groups ordered by their best (rank-1) hit — rounded scores make
-    // the group ordering engine-portable; ties break on site name.
-    // TakeOrdered cut to nGroups BEFORE the rank: the best-hit relation
-    // is |groups| rows, and a global rank window would sort them all in
-    // one task — the limit keeps per-partition heaps + an nGroups-row
-    // merge, then the rank runs over nGroups rows only
-    val topGroups = hits.filter(col("hit_rank") === 1)
-      .select(col("site"), col("score").as("best_score"))
-      .orderBy(col("best_score").asc, col("site").asc).limit(nGroups)
-      .withColumn("group_rank", row_number().over(Window.partitionBy(lit(0))
-        .orderBy(col("best_score").asc, col("site").asc)).cast("long"))
-    hits.join(broadcast(topGroups.select("site", "group_rank")), "site")
+    // the group ordering engine-portable; ties break on site name
+    val topGroups = TopK.ranked(hits.filter(col("hit_rank") === 1)
+      .select(col("site"), col("score").as("best_score")),
+      Seq(col("best_score").asc, col("site").asc), 0, nGroups)
+      .select(col("site"), col("rank").as("group_rank"))
+    hits.join(broadcast(topGroups), "site")
       .select(col("group_rank"), col("site"), col("hit_rank"), col("id"), col("score"))
       .orderBy("group_rank", "hit_rank")
   }
@@ -1165,7 +1121,6 @@ object VectorStore {
     singleTopK(cands, q, 5)
       .select(col("rank"), col("id"), col("user_id"), col("lang"),
         round(col("score"), 4).as("score"))
-      .orderBy("rank")
   }
 
   /** [[searchMatchText]] routed through the [[graft.api.PayloadIndex]]
@@ -1398,18 +1353,9 @@ object VectorStore {
                        lonMin: Double = -30.0, lonMax: Double = 40.0): DataFrame = {
     import graft.api.Filters._
     val q = Tables.points(s, d).filter(col("id") === 2).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("cs").desc, col("id").asc)
-    geoIndex(s, d).readFilter(PFilter(must = Seq(
+    geoRank(geoIndex(s, d).readFilter(PFilter(must = Seq(
       GeoBox("lat", "lon", latMin, latMax, lonMin, lonMax))))
-      .filter(col("id") =!= 2)
-      .join(broadcast(q))
-      .withColumn("cs", cosineSim(col("vector"), col("qvec")))
-      .orderBy(col("cs").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("lat"), col("lon"),
-        round(col("cs"), 4).as("score"))
-      .orderBy("rank")
+      .filter(col("id") =!= 2), q, k)
   }
 
   /** Qdrant filter algebra, `should` clause (VERDICT r9 #1 — the OR
@@ -1693,17 +1639,8 @@ object VectorStore {
     import graft.api.Filters._
     val q = Tables.points(s, d).filter(col("id") === 2)
       .select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("cs").desc, col("id").asc)
-    geoIndex(s, d).readFilter(PFilter(must = Seq(GeoPolygon("lat", "lon", geoPolygon))))
-      .filter(col("id") =!= 2)
-      .join(broadcast(q))
-      .withColumn("cs", cosineSim(col("vector"), col("qvec")))
-      .orderBy(col("cs").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("lat"), col("lon"),
-        round(col("cs"), 4).as("score"))
-      .orderBy("rank")
+    geoRank(geoIndex(s, d).readFilter(PFilter(must = Seq(GeoPolygon("lat", "lon", geoPolygon))))
+      .filter(col("id") =!= 2), q, k)
   }
 
   /** Qdrant `values_count` condition through the filter algebra
@@ -1912,33 +1849,34 @@ object VectorStore {
     */
   def hybridSearch(s: SparkSession, d: String, k: Int = 10, depth: Int = 20,
                    rrfK: Int = 60): DataFrame = {
-    // all three rank windows run over ≤ depth-row ranker outputs; the
-    // lit partition key keeps the same one-partition execution minus
-    // WindowExec's unpartitioned-window warning
-    val wKw = Window.partitionBy(lit(0)).orderBy(col("bm25").desc, col("doc_id"))
-    val kw = TextAnalysis.bm25Search(s, d, k = depth)
-      .withColumn("rank_kw", row_number().over(wKw).cast("long"))
+    val kw = TopK.ranked(TextAnalysis.bm25Search(s, d, k = depth),
+        Seq(col("bm25").desc, col("doc_id")), 0, depth)
+      .select(col("doc_id"), col("rank").as("rank_kw"))
     val emb = graft.Tables.embeddings(s, d)
       .select(col("vec_id").as("doc_id"), toDouble(col("embedding")).as("vec"))
     val qvec = emb.filter(col("doc_id") === 0).select(col("vec").as("qvec"))
-    val wVec = Window.partitionBy(lit(0)).orderBy(col("cosine").desc, col("doc_id"))
-    val vec = emb.filter(col("doc_id") =!= 0).crossJoin(broadcast(qvec))
-      .select(col("doc_id"), round(cosineSim(col("vec"), col("qvec")), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("doc_id")).limit(depth)
-      .withColumn("rank_vec", row_number().over(wVec).cast("long"))
-    val wFused = Window.partitionBy(lit(0)).orderBy(col("rrf").desc, col("doc_id"))
-    kw.select(col("doc_id"), col("rank_kw"))
-      .join(vec.select(col("doc_id"), col("rank_vec")), Seq("doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK) + col("rank_kw")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(wFused).cast("long"))
-      .filter(col("rank") <= k)
+    val vec = TopK.ranked(emb.filter(col("doc_id") =!= 0).crossJoin(broadcast(qvec))
+        .select(col("doc_id"), round(cosineSim(col("vec"), col("qvec")), 4).as("cosine")),
+        Seq(col("cosine").desc, col("doc_id")), 0, depth)
+      .select(col("doc_id"), col("rank").as("rank_vec"))
+    rrfFused(kw, vec, k, rrfK)
+  }
+
+  /** Reciprocal-rank fusion of two (doc_id, rank_kw) / (doc_id,
+    * rank_vec) ranker lists: each contributes 1/(rrfK + rank), a doc
+    * missing from a list contributes 0 and reports rank 0; the top k
+    * by the 6dp-rounded sum are ranked, ties on doc_id.
+    */
+  private[graft] def rrfFused(kw: DataFrame, vec: DataFrame, k: Int,
+                              rrfK: Int): DataFrame =
+    TopK.ranked(kw.join(vec, Seq("doc_id"), "full_outer")
+        .withColumn("rrf", round(
+          coalesce(lit(1.0) / (lit(rrfK) + col("rank_kw")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(rrfK) + col("rank_vec")), lit(0.0)), 6)),
+        Seq(col("rrf").desc, col("doc_id")), 0, k)
       .select(col("rank"), col("doc_id"),
         coalesce(col("rank_kw"), lit(0L)).as("rank_kw"),
         coalesce(col("rank_vec"), lit(0L)).as("rank_vec"), col("rrf"))
-      .orderBy("rank")
-  }
 
   /** Qdrant Query-API RANDOM SAMPLING (`"sample": "random"`): k points
     * drawn uniformly without a rank criterion — the collection
@@ -1984,28 +1922,23 @@ object VectorStore {
     * decimal literal weights (never /10-style division), and only the
     * final cast emits a double — so the formula is bit-identical on
     * any engine. The boost is a pushed column expression; ranking
-    * stays a k-row TakeOrdered.
+    * stays a k-row `TopK.ranked`.
     */
   def formulaBoost(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val pts = Tables.points(s, d)
     val q = pts.filter(col("id") === 3).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("id") =!= 3)
+    TopK.ranked(pts.filter(col("id") =!= 3)
       .join(broadcast(q))
       .withColumn("cs", round(cosineSim(col("vector"), col("qvec")), 4)
         .cast("decimal(9,4)"))
       .withColumn("boost",
         when(col("lang") === "en", lit(BigDecimal("1.0")).cast("decimal(2,1)"))
           .otherwise(lit(BigDecimal("0.5")).cast("decimal(2,1)")))
-      .withColumn("score",
+      .select(col("id"), col("lang"),
         (col("cs") * lit(BigDecimal("0.7")).cast("decimal(2,1)") +
           col("boost") * lit(BigDecimal("0.3")).cast("decimal(2,1)"))
-          .cast("double"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("lang"), col("score"))
-      .orderBy("rank")
+          .cast("double").as("score")),
+      rankOrder, 0, k)
   }
 
   /** Qdrant FORMULA DECAY BOOSTING (the `lin_decay`/`exp_decay`/
@@ -2019,25 +1952,20 @@ object VectorStore {
     * score oracle-compares without rounding; the exp/gauss kernels
     * share the seam ([[graft.functions.Formulas]]) and are spec'd on
     * their midpoint/shape properties. One map pass + k-row
-    * TakeOrdered; the corpus never shuffles.
+    * `TopK.ranked`; the corpus never shuffles.
     */
   def formulaDecay(s: SparkSession, d: String, k: Int = 10,
                    target: Double = 100.0, scale: Double = 1000.0): DataFrame = {
     val pts = Tables.points(s, d)
     val q = pts.filter(col("id") === 3).select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("id") =!= 3)
+    TopK.ranked(pts.filter(col("id") =!= 3)
       .join(broadcast(q))
       .withColumn("decay",
         graft.functions.Formulas.linDecay(col("seq"), target, scale))
-      .withColumn("score",
-        round(cosineSim(col("vector"), col("qvec")), 4) * lit(0.7) +
-          col("decay") * lit(0.3))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("seq"), col("score"))
-      .orderBy("rank")
+      .select(col("id"), col("seq"),
+        (round(cosineSim(col("vector"), col("qvec")), 4) * lit(0.7) +
+          col("decay") * lit(0.3)).as("score")),
+      rankOrder, 0, k)
   }
 
   /** Qdrant FORMULA `geo_distance` + decay (the canonical formula-query
@@ -2047,7 +1975,7 @@ object VectorStore {
     * trig chain and exp are transcendental, so BOTH components round
     * (cosine 4dp, decay 6dp) into DECIMALS and the affine combination
     * stays exact decimal — the [[formulaBoost]] shape with a derived
-    * distance axis. One map pass + k-row TakeOrdered.
+    * distance axis. One map pass + k-row `TopK.ranked`.
     */
   def formulaGeoDecay(s: SparkSession, d: String, k: Int = 10,
                       lat: Double = 40.0, lon: Double = -100.0,
@@ -2057,8 +1985,7 @@ object VectorStore {
       .withColumn("lon", (col("id") * 104729 % 36000) / lit(100.0) - 180.0)
     val q = Tables.points(s, d).filter(col("id") === 2)
       .select(col("vector").as("qvec"))
-    val w = Window.partitionBy(lit(0)).orderBy(col("score").desc, col("id").asc)
-    pts.filter(col("id") =!= 2)
+    TopK.ranked(pts.filter(col("id") =!= 2)
       .join(broadcast(q))
       .withColumn("dist", graft.functions.Formulas.geoDistance(
         col("lat"), col("lon"), lat, lon))
@@ -2067,15 +1994,11 @@ object VectorStore {
           .cast("decimal(9,6)"))
       .withColumn("cs", round(cosineSim(col("vector"), col("qvec")), 4)
         .cast("decimal(9,4)"))
-      .withColumn("score",
+      .select(col("id"), col("lat"), col("lon"),
         (col("cs") * lit(BigDecimal("0.7")).cast("decimal(2,1)") +
           col("decay") * lit(BigDecimal("0.3")).cast("decimal(2,1)"))
-          .cast("double"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("rank"), col("id"), col("lat"), col("lon"), col("score"))
-      .orderBy("rank")
+          .cast("double").as("score")),
+      rankOrder, 0, k)
   }
 
   /** DISTRIBUTION-BASED SCORE FUSION (Qdrant's `dbsf` fusion mode, the
@@ -2122,15 +2045,12 @@ object VectorStore {
               (lit(6.0) * col("sigma")))
             .otherwise(lit(0.5)).as(out))
     }
-    val wFused = Window.partitionBy(lit(0)).orderBy(col("fused").desc, col("doc_id"))
-    normalized(kw, "nkw")
-      .join(normalized(vec, "nvec"), Seq("doc_id"), "full_outer")
-      .withColumn("fused",
-        coalesce(col("nkw"), lit(0.0)) + coalesce(col("nvec"), lit(0.0)))
-      .withColumn("rank", row_number().over(wFused).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.ranked(normalized(kw, "nkw")
+        .join(normalized(vec, "nvec"), Seq("doc_id"), "full_outer")
+        .withColumn("fused",
+          coalesce(col("nkw"), lit(0.0)) + coalesce(col("nvec"), lit(0.0))),
+        Seq(col("fused").desc, col("doc_id")), 0, k)
       .select(col("rank"), col("doc_id"), round(col("fused"), 4).as("dbsf"))
-      .orderBy("rank")
   }
 
   /** MAXIMAL-MARGINAL-RELEVANCE search (Carbonell & Goldstein, SIGIR
@@ -2706,7 +2626,7 @@ object VectorStore {
   private def dispatchQuery(s: SparkSession, d: String,
                             r: graft.api.QueryRequest.Request): DataFrame = {
     import graft.api.QueryRequest._
-    val k = r.limit.getOrElse(10) // Qdrant's default page
+    val k = r.limit.getOrElse(DefaultLimit)
     // loud envelope validation: a member the target call cannot honor
     // refuses — silently dropping a knob would be a wrong answer
     def served(mode: String,
@@ -2822,16 +2742,10 @@ object VectorStore {
           case other => throw new IllegalArgumentException(
             s"the formula's prefetch stage must be a nearest query (got $other)")
         }
-        val w = Window.partitionBy(lit(0))
-          .orderBy(col("score").desc, col("id").asc)
-        scored
+        TopK.ranked(scored
           .withColumn("cs", round(cosineSim(col("vector"), col("qvec")), 4))
-          .withColumn("score", compileFormula(expr))
-          .orderBy(col("score").desc, col("id").asc)
-          .limit(k)
-          .withColumn("rank", row_number().over(w).cast("long"))
+          .withColumn("score", compileFormula(expr)), rankOrder, 0, k)
           .select(col("rank"), col("id"), col("score"))
-          .orderBy("rank")
       case MmrNearest(anchor, diversity, cand) =>
         served("mmr nearest")
         require(anchor == 0L,

@@ -8,7 +8,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ShuffledRowRDD, SparkPlan, UnaryExecNode, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -31,9 +32,19 @@ import org.apache.spark.util.collection.{Utils => CollectionUtils}
 case class RankedTopK(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribute,
                       child: LogicalPlan) extends UnaryNode {
   require(offset >= 0 && k >= 0, s"offset and k must be non-negative, got $offset, $k")
+  // the exec keeps offset + k rows, counted in an Int
+  require(offset.toLong + k <= Int.MaxValue,
+    s"offset + k must not exceed ${Int.MaxValue}, got $offset + $k")
   override def output: Seq[Attribute] = rank +: child.output
   override def producedAttributes: AttributeSet = AttributeSet(rank)
   override def maxRows: Option[Long] = Some(k.toLong)
+  // at most k rows, estimated as a Limit is: the default estimate is the
+  // child's whole size, and a join above then re-shuffles this one
+  // small partition (spark.sql.maxSinglePartitionBytes)
+  override def stats: Statistics = {
+    val rows = child.stats.rowCount.fold(BigInt(k))(_.min(k))
+    Statistics(EstimationUtils.getOutputSize(output, rows), Some(rows))
+  }
   override protected def withNewChildInternal(newChild: LogicalPlan): RankedTopK =
     copy(child = newChild)
 }
@@ -43,9 +54,10 @@ case class RankedTopK(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribut
   *
   * `executeCollect` runs one job of one stage: each task keeps its
   * partition's best offset+k rows, and the driver merges and ranks
-  * them. `execute` (any consumer other than a collect) merges through
-  * an internal single-partition shuffle, as TakeOrderedAndProjectExec
-  * does, so the plan carries no Exchange node either way. The output
+  * them. `execute` (any consumer other than a collect) merges a
+  * multi-partition input through an internal single-partition shuffle,
+  * as TakeOrderedAndProjectExec does, so the plan carries no Exchange
+  * node either way. The output
   * is one partition, ordered by `rank`.
   */
 case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribute,
@@ -63,10 +75,10 @@ case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attr
   override lazy val metrics: Map[String, SQLMetric] = readMetrics ++ writeMetrics
 
   /** Each partition's best offset+k rows, copied (the scan reuses its row). */
-  private def partitionTopK(ord: Ordering[InternalRow]): RDD[InternalRow] = {
+  private def partitionTopK(rows: RDD[InternalRow],
+                            ord: Ordering[InternalRow]): RDD[InternalRow] = {
     val n = offset + k
-    child.execute().mapPartitionsInternal(it =>
-      CollectionUtils.takeOrdered(it.map(_.copy()), n)(ord))
+    rows.mapPartitionsInternal(it => CollectionUtils.takeOrdered(it.map(_.copy()), n)(ord))
   }
 
   /** The best offset+k of the merged candidates, offset prefix dropped,
@@ -87,13 +99,16 @@ case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attr
 
   override def executeCollect(): Array[InternalRow] = {
     val ord = new LazilyGeneratedOrdering(order, child.output)
-    ranked(ord)(partitionTopK(ord).collect().iterator).map(_.copy()).toArray
+    ranked(ord)(partitionTopK(child.execute(), ord).collect().iterator).map(_.copy()).toArray
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
     val ord = new LazilyGeneratedOrdering(order, child.output)
-    val merged = new ShuffledRowRDD(
-      ShuffleExchangeExec.prepareShuffleDependency(partitionTopK(ord), child.output,
+    val rows = child.execute()
+    // one input partition needs no merge shuffle (as in
+    // TakeOrderedAndProjectExec)
+    val merged = if (rows.getNumPartitions == 1) rows else new ShuffledRowRDD(
+      ShuffleExchangeExec.prepareShuffleDependency(partitionTopK(rows, ord), child.output,
         SinglePartition, new UnsafeRowSerializer(child.output.size), writeMetrics),
       readMetrics)
     val rankRows = ranked(ord)

@@ -44,6 +44,19 @@ class CollectionConfigSpec extends SparkSpecBase {
       """{"vectors": {"size": 0, "distance": "Cosine"}}"""))
     intercept[IllegalArgumentException](CollectionConfig.fromJson(
       """{"vectors": {"size": 4, "distance": "Cosine", "on_disk": true}}"""))
+    // a size or shard_number past Int's range refuses: Jackson's asInt
+    // would wrap 2^32 + 64 and 2^32 + 16 to 64 and 16
+    for (json <- Seq(
+        """{"vectors": {"size": 4294967360, "distance": "Cosine"}}""",
+        """{"vectors": {"title": {"size": 4294967304, "distance": "Dot"}}}""",
+        """{"vectors": {"size": 64, "distance": "Cosine"}, "shard_number": 4294967312}""",
+        """{"vectors": {"size": 2.5, "distance": "Cosine"}}""")) {
+      val e = intercept[IllegalArgumentException](CollectionConfig.fromJson(json))
+      assert(e.getMessage.contains("2147483647"), s"$json: ${e.getMessage}")
+    }
+    assert(CollectionConfig.fromJson(
+      """{"vectors": {"size": 2147483647, "distance": "Cosine"}, "shard_number": 1}""")
+      .vectors("").size === Int.MaxValue)
   }
 
   test("the four metrics rank through VectorIndex.search (Euclid ≡ the default)") {

@@ -13,6 +13,24 @@ class PlanInvariantsSpec extends SparkSpecBase {
     SparkEntry.queries(name)(spark, sf).queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
 
+  // formatted-plan operator headers of a k-row cut: a TakeOrdered or
+  // the RankedTopK rank operator
+  private def kRowCuts(p: String): Int =
+    """\(\d+\) (TakeOrderedAndProject|RankedTopK)""".r.findAllIn(p).size
+
+  // the executed plan's global sorts and windows, by node name: a
+  // ranked k-row final built on TopK.ranked holds neither
+  private def sortsAndWindows(name: String): Seq[String] = {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    new AdaptiveSparkPlanHelper {}.collect(
+        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan) {
+      case p: SortExec if p.global => p.nodeName
+      case p: WindowExec => p.nodeName
+    }
+  }
+
   // Plan-SHAPE regressions: these are the scale properties §5.1 claims.
   // A refactor that silently loses one (filter stops reaching the scan,
   // rank limit moves above the exchange, a dim join degrades to
@@ -102,7 +120,8 @@ class PlanInvariantsSpec extends SparkSpecBase {
 
   test("recommend cuts the corpus with TakeOrdered and prunes example ids at the scan") {
     val p = plan("vs_recommend")
-    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(kRowCuts(p) >= 1, p)
+    assert(sortsAndWindows("vs_recommend").isEmpty, p)
     assert(p.contains("Not(In(doc_id") || p.contains("Not(In(vec_id"),
       s"example-id exclusion not pushed to the scan:\n$p")
   }
@@ -122,6 +141,7 @@ class PlanInvariantsSpec extends SparkSpecBase {
   test("grouped search cuts per-group hits before the group-rank step") {
     val p = plan("vs_search_groups")
     assert(p.contains("WindowGroupLimit"), s"per-group cut not pushed:\n$p")
+    assert(p.contains("RankedTopK"), s"group rank is not a k-row cut:\n$p")
   }
 
   test("q21 collapses both existence probes into one per-order aggregation") {
@@ -400,7 +420,8 @@ class PlanInvariantsSpec extends SparkSpecBase {
   test("geo search broadcasts the query and never sort-merges the corpus") {
     val p = plan("vs_geo_search")
     assert(!p.contains("SortMergeJoin"), s"geo search degraded to SMJ:\n$p")
-    assert(p.contains("TakeOrderedAndProject"), s"geo rank not a k-row cut:\n$p")
+    assert(kRowCuts(p) >= 1, s"geo rank not a k-row cut:\n$p")
+    assert(sortsAndWindows("vs_geo_search").isEmpty, s"geo rank sorts or windows:\n$p")
   }
 
   test("df-cap joins stay UNHINTED (no forced broadcast past the size check)") {
@@ -439,11 +460,14 @@ class PlanInvariantsSpec extends SparkSpecBase {
     // join/aggregates then run over bounded lists only
     assert("TakeOrderedAndProject".r.findAllIn(p).size >= 2,
       s"expected both ranker lists TakeOrdered-cut:\n$p")
+    assert(p.contains("RankedTopK") && sortsAndWindows("vs_dbsf_fusion").isEmpty,
+      s"the fused rank is not one k-row operator:\n$p")
   }
 
   test("zipf fit reduces to a TakeOrdered vocabulary head before the moment aggregate") {
     val p = plan("text_zipf_slope")
-    assert(p.contains("TakeOrderedAndProject"), s"vocabulary head not a k-row cut:\n$p")
+    assert(kRowCuts(p) >= 1, s"vocabulary head not a k-row cut:\n$p")
+    assert(sortsAndWindows("text_zipf_slope").isEmpty, s"vocabulary rank sorts or windows:\n$p")
   }
 
   test("cdc chunking shuffles bounded relations only (doc windows + digest count)") {
@@ -458,8 +482,9 @@ class PlanInvariantsSpec extends SparkSpecBase {
   test("best-score recommend is one map pass + k-row cut (corpus never shuffles)") {
     val p = plan("vs_recommend_best_score")
     // example vectors are inlined literals: no join at all, just the
-    // scored scan feeding a TakeOrdered
-    assert(p.contains("TakeOrderedAndProject"), s"no k-row cut:\n$p")
+    // scored scan feeding a k-row rank
+    assert(kRowCuts(p) >= 1, s"no k-row cut:\n$p")
+    assert(sortsAndWindows("vs_recommend_best_score").isEmpty, s"the rank sorts or windows:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"corpus-side join appeared:\n$p")
   }
@@ -545,9 +570,8 @@ class PlanInvariantsSpec extends SparkSpecBase {
   test("wire batch unions per-request plans, each arm keeping its own TakeOrdered cut") {
     val p = plan("vs_points_query_batch")
     assert(p.contains("Union"), s"batch lost the plan union:\n$p")
-    // formatted-plan operator headers: a TakeOrdered or a RankedTopK cut
-    // (the wire nearest arms) per arm
-    assert("""\(\d+\) (TakeOrderedAndProject|RankedTopK)""".r.findAllIn(p).size >= 2,
+    // a TakeOrdered or a RankedTopK cut (the wire nearest arms) per arm
+    assert(kRowCuts(p) >= 2,
       s"an arm lost its own top-k cut:\n$p")
     assert(!p.contains("SortMergeJoin"), s"an arm degraded to SMJ:\n$p")
   }

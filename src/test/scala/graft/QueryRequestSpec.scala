@@ -266,6 +266,25 @@ class QueryRequestSpec extends SparkSpecBase {
       QueryRequest.fromJson("""{"query": 0, "limit": 0}"""))
     intercept[IllegalArgumentException](
       QueryRequest.fromJson("""{"query": 0, "offset": -1}"""))
+    // integers past Int's range refuse: Jackson's asInt would wrap
+    // 2^32 + 5 to 5 and 2^31 to -2^31
+    def pastInt(json: String, parse: String => Any = QueryRequest.fromJson): Unit = {
+      val e = intercept[IllegalArgumentException](parse(json))
+      assert(e.getMessage.contains("2147483647"), e.getMessage)
+    }
+    pastInt("""{"query": 0, "limit": 4294967301}""")
+    pastInt("""{"query": 0, "offset": 2147483648}""")
+    pastInt("""{"query": {"nearest": 0, "mmr": {"candidates_limit": 4294967396}}}""")
+    pastInt("""{"query": 0, "group_by": "site", "group_size": 4294967298}""",
+      QueryRequest.groupsFromJson)
+    pastInt("""{"limit": 4294967299}""", QueryRequest.matrixFromJson)
+    // each fits an Int, but a ranked page keeps offset + limit rows
+    pastInt("""{"query": 0, "offset": 2147483647, "limit": 1}""")
+    pastInt("""{"query": 0, "offset": 2147483640}""") // + the default limit 10
+    assert(QueryRequest.fromJson("""{"query": 0, "offset": 2147483637}""")
+      .offset === 2147483637)
+    assert(QueryRequest.fromJson("""{"query": 0, "limit": 2147483647}""")
+      .limit === Some(Int.MaxValue))
     intercept[IllegalArgumentException](QueryRequest.fromJson(
       """{"query": 0, "params": {"quantization": {"oversample": 2}}}"""))
     // unserved envelope members refuse at DISPATCH, naming the mode

@@ -82,6 +82,14 @@ class RankedTopKSpec extends SparkSpecBase {
     assert(got.schema("rank").dataType === LongType && !got.schema("rank").nullable)
   }
 
+  test("offset + k past Int's range refuses: the exec keeps offset + k rows in an Int") {
+    val df = relation(10, 3, 7L)
+    val e = intercept[IllegalArgumentException](
+      TopK.ranked(df, orders.head._2, Int.MaxValue, 1))
+    assert(e.getMessage.contains("offset + k"))
+    assert(rows(TopK.ranked(df, orders.head._2, Int.MaxValue - 5, 5)).isEmpty)
+  }
+
   test("empty input ranks no rows, through collect and count") {
     for (aqe <- Seq(true, false); parts <- Seq(1, 3)) withAqe(aqe) {
       val empty = relation(0, parts, 1L)

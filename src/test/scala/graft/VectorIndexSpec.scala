@@ -37,6 +37,23 @@ class VectorIndexSpec extends SparkSpecBase {
     assert(r.map(_.getLong(1)).toSeq === expected)
   }
 
+  test("search, searchFilter and recommend keep their INT rank; the group rank stays LONG") {
+    import graft.api.Filters.{MatchValue, PFilter}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val q = Tables.points(spark, sf).filter(col("id") === 0)
+      .select("vector").head().getSeq[Double](0)
+    for (df <- Seq(index.search(q, userId = 7, k = 5),
+        index.searchFilter(q, PFilter(must = Seq(MatchValue("lang", "en"))), k = 5),
+        index.recommend(Seq(1L, 2L), Seq(6L), k = 5))) {
+      assert(df.columns.toSeq === Seq("rank", "id", "string", "score"))
+      assert(df.schema("rank").dataType === IntegerType && !df.schema("rank").nullable,
+        df.schema)
+      assert(df.collect().map(_.getInt(0)).toSeq === (1 to 5))
+    }
+    val groups = index.searchGroups(q).schema("group_rank")
+    assert(groups.dataType === LongType && !groups.nullable, groups)
+  }
+
   test("discover agrees with the operator ranking and scopes to the tenant") {
     val got = index.discover(targetId = 0, pairs = Seq((1L, 2L), (3L, 4L)))
       .collect()
