@@ -4,6 +4,17 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // ENVIRONMENT STAMP beyond foreign JVMs (VERDICT r5 #3): the JVM
+    // guard can't see non-JVM CPU/IO pressure or cgroup throttling, and
+    // round-over-round totals varied 113→225 s with `contended_jvms: 0`.
+    // Stamp 1-min loadavg at start and the iowait share across the whole
+    // run so the artifact explains its own spread. The load is read
+    // before the Spark session starts, which alone lifts a 4-core box's
+    // 1-minute load by about one.
+    val loadavgStart: Double = try {
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
+    } catch { case _: Throwable => -1.0 }
     val spark = Sessions.local(Sessions.cores(
       math.min(32, Runtime.getRuntime.availableProcessors())))
     // CONTENTION GUARD (VERDICT r4 #5): a concurrent sbt/verify JVM on
@@ -32,15 +43,6 @@ object Bench {
       System.err.println(s"[bench] WARNING: ${contenders.size} other JVM(s) live " +
         s"(pids ${contenders.mkString(",")}) — numbers will be contention-inflated; " +
         "prefer an isolated re-run")
-    // ENVIRONMENT STAMP beyond foreign JVMs (VERDICT r5 #3): the JVM
-    // guard can't see non-JVM CPU/IO pressure or cgroup throttling, and
-    // round-over-round totals varied 113→225 s with `contended_jvms: 0`.
-    // Stamp 1-min loadavg at start and the iowait share across the whole
-    // run so the artifact explains its own spread.
-    val loadavgStart: Double = try {
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
     def cpuTicks(): (Long, Long) = try { // (iowait, total) jiffies
       val f = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/stat"))).linesIterator

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.concurrent.TrieMap
 
 /** Loaders for the driver-generated testdata tables, plus the derived
   * multi-tenant "points" corpus that mirrors the reference's Qdrant
@@ -13,8 +16,45 @@ import org.apache.spark.sql.functions._
   * both engines see the same corpus.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  // per live session: table path → the table's files as (path, length,
+  // mtime), and the schema inferred from them. Weakly keyed, and the
+  // values hold no session, so a dropped session's entries go with it.
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, (Seq[(String, Long, Long)], StructType)]]())
+
+  /** One table of the dataset at `dir`. `spark.read.parquet` runs a
+    * schema-inference job on every call; the schema is inferred once
+    * per session and per file set instead (a table rewritten in place
+    * lists another path, length or mtime and is inferred again), and
+    * each call reads the table with it, under fresh attribute ids.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    filesOf(spark, path) match {
+      case None => spark.read.parquet(path) // missing: Spark's own error
+      case Some(files) =>
+        val known = schemas.computeIfAbsent(spark, _ => TrieMap.empty)
+        val schema = known.get(path).collect { case (`files`, s) => s }.getOrElse {
+          val s = spark.read.parquet(path).schema
+          known.put(path, (files, s))
+          s
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private def filesOf(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")

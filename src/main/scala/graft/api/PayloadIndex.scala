@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RelationBridge
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -154,7 +155,7 @@ final class PayloadIndex private[api] (
   // (committed batch ids, the data relation listed under them)
   @volatile private var listed: (Set[Long], BaseRelation) = _
 
-  /** The data tree as a DataFrame, over ONE file listing per committed
+  /** The data tree's relation, over ONE file listing per committed
     * batch set. Each `spark.read...parquet` builds a new file index
     * that lists every partition directory, and Spark's shared
     * file-status cache gives each index its own namespace, so a per-read
@@ -163,23 +164,21 @@ final class PayloadIndex private[api] (
     * change — [[CommitProtocol.publish]] writes a marker after its last
     * file moved in, so a new committed batch is always seen, and files
     * a replay sweeps belong to a batch whose marker the replay then
-    * writes. Every call returns fresh attribute ids (the
+    * writes. Each read wraps it under fresh attribute ids (the
     * `spark.read` code path minus the listing), so two reads of one
     * handle join like two independent reads.
     */
-  private def dataRelation(): DataFrame = {
+  private def dataRelation(): BaseRelation = {
     val batches = committedBatches()
     val cached = listed
-    val rel =
-      if (cached != null && cached._1 == batches) cached._2
-      else {
-        val r = spark.read.schema(readSchema).parquet(s"$root/data")
-          .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
-          .get
-        listed = (batches, r)
-        r
-      }
-    spark.baseRelationToDataFrame(rel)
+    if (cached != null && cached._1 == batches) cached._2
+    else {
+      val r = spark.read.schema(readSchema).parquet(s"$root/data")
+        .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+        .get
+      listed = (batches, r)
+      r
+    }
   }
 
   /** Read the collection through the FULL Qdrant filter algebra
@@ -232,15 +231,14 @@ final class PayloadIndex private[api] (
     validateCond(f2)
     val live =
       if (hasRangeCond(f2)) PayloadIndex.liveZones(spark, root) else zones
-    var df = dataRelation()
-    pruneOf(f2, live).foreach(p => df = df.filter(p))
     // the FILTER-context compile: pushable comparison leaves stay raw
     // so they translate to parquet source filters (row-group stats
     // prune INSIDE the selected zone directories); identical rows to
-    // the total form — a filter drops NULL like FALSE
-    df = df.filter(Filters.toFilterColumn(f2, foldTerm, foldedCol,
-      prefixTextFields))
-    var out = df.select(original.map(sf => col(sf.name)): _*)
+    // the total form — a filter drops NULL like FALSE, so the pruning
+    // conjuncts and the residual share one Filter
+    val residual = Filters.toFilterColumn(f2, foldTerm, foldedCol, prefixTextFields)
+    var out = RelationBridge.filtered(spark, dataRelation(),
+      pruneOf(f2, live).fold(residual)(_ && residual), original.map(sf => col(sf.name)))
     gatesOf(f2).foreach { g =>
       out = out.join(g, out(idCol) === g("__pid"), "left_semi")
     }
@@ -796,7 +794,7 @@ final class PayloadIndex private[api] (
       .filter { case (_, zmin, zmax) =>
         cursorBd.forall(b => if (descending) zmin <= b else zmax >= b) }
       .sortBy(z => if (descending) -z._3 else z._2)
-    val data = dataRelation()
+    val data = spark.baseRelationToDataFrame(dataRelation())
     val ordered =
       if (descending) Seq(col(field).desc, col(tieBreak).asc)
       else Seq(col(field).asc, col(tieBreak).asc)

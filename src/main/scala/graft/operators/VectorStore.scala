@@ -2806,11 +2806,13 @@ object VectorStore {
     * literal vector, optional named head (`using: title` — the
     * [[namedVectors]] 8-dim prefix column), score_threshold gating on
     * the SERVED 4dp score, and Qdrant's offset paging (ranks absolute —
-    * the [[searchOffset]] page). The tail is one select of the
-    * candidate columns, then one [[graft.plans.TopK.ranked]] operator:
-    * a collected request runs ONE job of one stage (each task keeps its
-    * partition's best offset+k rows, the driver merges and ranks them),
-    * and its plan holds no Window, Sort or Exchange.
+    * the [[searchOffset]] page). The tail is one
+    * [[graft.plans.TopK.ranked]] operator over the candidate columns,
+    * built with them in one analysis; a literal query vector is one
+    * array literal. A collected request runs ONE job of one stage
+    * (each task keeps its partition's best offset+k rows, the driver
+    * merges and ranks them), and its plan holds no Window, Sort or
+    * Exchange.
     * With a filter, no offset, and no threshold this is exactly
     * [[searchFilterShould]]'s readFilter + rank tail (parity-spec'd
     * bit-for-bit), which is what makes the wire oracle row
@@ -2845,12 +2847,11 @@ object VectorStore {
       case Right(v) =>
         if (scoreOn == "title_vec") require(v.length == headDims,
           s"a 'title' head query vector must have $headDims dims (got ${v.length})")
-        (base, array(v.map(lit): _*))
+        (base, typedLit(v.toArray))
     }
-    val cands = scored.select(col("id"), col("user_id"), col("site"), col("lang"),
-      round(cosineSim(col(scoreOn), qvec), 4).as("score"))
-    TopK.ranked(threshold.fold(cands)(t => cands.filter(col("score") >= t)),
-      rankOrder, offset, k)
+    val score = round(cosineSim(col(scoreOn), qvec), 4)
+    TopK.ranked(threshold.fold(scored)(t => scored.filter(score >= t)), rankOrder, offset, k,
+      select = Seq(col("id"), col("user_id"), col("site"), col("lang"), score.as("score")))
   }
 
   /** Compile a parsed formula expression to ONE Column over the scored

@@ -29,11 +29,16 @@ object TopK {
     * no stage: each task keeps its partition's best offset+k rows and
     * the driver ranks them. The result is one partition in rank order.
     *
+    * With `select`, the ranked rows are `df.select(select: _*)`, built
+    * in the same analysis as the rank: a request's candidate columns
+    * and its rank cost one analyzed plan, not two.
+    *
     * {{{
-    *   TopK.ranked(scored.select(col("id"), col("score")),
-    *     Seq(col("score").desc, col("id").asc), offset = 0, k = 10)
+    *   TopK.ranked(scored, Seq(col("score").desc, col("id").asc),
+    *     offset = 0, k = 10, select = Seq(col("id"), col("score")))
     * }}}
     */
-  def ranked(df: DataFrame, order: Seq[Column], offset: Int, k: Int): DataFrame =
-    RankedTopKBuilder.rankedTopK(df, order, offset, k)
+  def ranked(df: DataFrame, order: Seq[Column], offset: Int, k: Int,
+             select: Seq[Column] = Nil): DataFrame =
+    RankedTopKBuilder.rankedTopK(df, order, offset, k, select)
 }

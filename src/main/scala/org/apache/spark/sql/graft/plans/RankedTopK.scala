@@ -4,11 +4,12 @@ package org.apache.spark.sql.graft.plans
 // Dataset.ofRows, RDD.mapPartitionsInternal and the bounded-selection
 // helper are private to Spark's packages.
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ShuffledRowRDD, SparkPlan, UnaryExecNode, UnsafeRowSerializer}
@@ -54,11 +55,13 @@ case class RankedTopK(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribut
   *
   * `executeCollect` runs one job of one stage: each task keeps its
   * partition's best offset+k rows, and the driver merges and ranks
-  * them. `execute` (any consumer other than a collect) merges a
-  * multi-partition input through an internal single-partition shuffle,
-  * as TakeOrderedAndProjectExec does, so the plan carries no Exchange
-  * node either way. The output
-  * is one partition, ordered by `rank`.
+  * them. It submits the job through `SparkContext.runJob` with the
+  * named task function [[RankedTopKExec.PartitionRows]], not through
+  * the RDD's own collect. `execute` (any consumer other than a
+  * collect) merges a multi-partition input through an internal
+  * single-partition shuffle, as TakeOrderedAndProjectExec does, so the
+  * plan carries no Exchange node either way. The output is one
+  * partition, ordered by `rank`.
   */
 case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attribute,
                           projectList: Seq[NamedExpression], child: SparkPlan)
@@ -99,7 +102,8 @@ case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attr
 
   override def executeCollect(): Array[InternalRow] = {
     val ord = new LazilyGeneratedOrdering(order, child.output)
-    ranked(ord)(partitionTopK(child.execute(), ord).collect().iterator).map(_.copy()).toArray
+    val parts = sparkContext.runJob(partitionTopK(child.execute(), ord), RankedTopKExec.PartitionRows)
+    ranked(ord)(parts.iterator.flatMap(_.iterator)).map(_.copy()).toArray
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -119,6 +123,21 @@ case class RankedTopKExec(order: Seq[SortOrder], offset: Int, k: Int, rank: Attr
     copy(child = newChild)
 }
 
+object RankedTopKExec {
+  /** A partition's rows as an array: the collect's task function. An
+    * RDD's own collect hands `runJob` a lambda, and `ClosureCleaner`
+    * reads each lambda's capturing class (`RDD`, then `SparkContext`)
+    * back from its jar and scans every method of it, twice per request.
+    * A named stateless object is no closure, so the cleaner returns at
+    * once; the scheduler still serializes it with the task.
+    */
+  private[plans] object PartitionRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    override def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      rows.toArray
+  }
+}
+
 /** Plans [[RankedTopK]] as one [[RankedTopKExec]], folding a `Project`
   * directly above it into the exec.
   */
@@ -132,26 +151,51 @@ object RankedTopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   }
 }
 
-/** Builder bridge: resolves the sort columns through a throwaway
-  * `sortWithinPartitions` (the [[TopKPerKeyBuilder]] idiom) and wraps
-  * the analyzed child in a [[RankedTopK]].
+/** Builder bridge: wraps `df` (or its `select` columns) in a
+  * [[RankedTopK]] and analyzes the whole in one pass, the order
+  * resolving against the ranked columns. A column pick directly below
+  * the `select` (such as a filtered read's schema-order `select`) is
+  * bound through, so the analyzed plan holds one `Project`.
   */
 object RankedTopKBuilder {
   import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.catalyst.QueryPlanningTracker
+  import org.apache.spark.sql.catalyst.expressions.RowOrdering
+  import org.apache.spark.sql.execution.QueryExecution
   import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+  import org.apache.spark.sql.graft.ColumnBridge
 
-  def rankedTopK(df: DataFrame, orderCols: Seq[Column], offset: Int, k: Int): DataFrame = {
+  def rankedTopK(df: DataFrame, orderCols: Seq[Column], offset: Int, k: Int,
+                 select: Seq[Column]): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[ClassicSession]
     // sessions built without the GraftExtensions config plan it too
     // (idempotent)
     if (!spark.experimental.extraStrategies.contains(RankedTopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ RankedTopKStrategy
-    df.sortWithinPartitions(orderCols: _*).queryExecution.analyzed match {
-      case Sort(order, false, child, _) =>
-        val rank = AttributeReference("rank", LongType, nullable = false)()
-        Dataset.ofRows(spark, RankedTopK(order, offset, k, rank, child))
-      case other => throw new IllegalArgumentException(s"unexpected sort plan: $other")
+    val input = df.queryExecution.analyzed
+    val child = if (select.isEmpty) input else Project(select.map(ColumnBridge.named(spark, _)), input)
+    val order = orderCols.map(c => spark.expression(c) match {
+      case o: SortOrder => o
+      case e => SortOrder(e, Ascending)
+    })
+    val rank = AttributeReference("rank", LongType, nullable = false)()
+    // one tracker: the analysis is recorded on the Dataset's own plan
+    val tracker = new QueryPlanningTracker
+    val analyzed = new QueryExecution(spark, RankedTopK(order, offset, k, rank, child), tracker).analyzed
+    val plan = analyzed match {
+      case t @ RankedTopK(_, _, _, _, Project(cols, Project(pick, in)))
+          if pick.forall(_.isInstanceOf[Attribute]) =>
+        // the picked attributes are `in`'s own: the outer columns read
+        // them there unchanged
+        val bound = t.copy(child = Project(cols, in))
+        bound.setAnalyzed()
+        bound
+      case t: RankedTopK => t
+      case other => throw new IllegalArgumentException(s"unexpected ranked plan: $other")
     }
+    plan.order.foreach(o => require(RowOrdering.isOrderable(o.dataType),
+      s"cannot rank by ${o.child.sql} of type ${o.dataType.catalogString}"))
+    Dataset.ofRows(spark, plan, tracker)
   }
 }

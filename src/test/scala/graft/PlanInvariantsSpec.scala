@@ -637,4 +637,30 @@ class PlanInvariantsSpec extends SparkSpecBase {
     assert(jobs.get == 1 && stages.get == 1,
       s"one collect ran ${jobs.get} job(s) and ${stages.get} stage(s):\n$executed")
   }
+
+  test("a tenant /points/query request is built as one Filter and one Project under its RankedTopK, with one query-vector literal") {
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.plans.RankedTopK
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val q = Tables.points(spark, sf).filter(col("id") === 1).select("vector").head().getSeq[Double](0)
+    val json = s"""{"query": {"nearest": [${q.mkString(", ")}]}, "filter": {"must":
+      |[{"key": "user_id", "match": {"value": 3}}, {"key": "lang", "match": {"value": "en"}}]},
+      |"limit": 10}""".stripMargin
+    val analyzed = graft.operators.VectorStore.pointsQuery(spark, sf, json).queryExecution.analyzed
+    analyzed match {
+      case RankedTopK(_, 0, 10, _, Project(cands, Filter(_, _: LogicalRelation))) =>
+        val vectors = cands.flatMap(_.collect {
+          case l @ Literal(_, ArrayType(DoubleType, _)) => l
+          case a: CreateArray => a
+        })
+        assert(vectors.size == 1 && vectors.head.isInstanceOf[Literal],
+          s"the query vector is $vectors, not one literal:\n$analyzed")
+        assert(vectors.head.asInstanceOf[Literal].value.asInstanceOf[
+          org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray().toSeq == q)
+      case other => fail(s"a tenant request is not RankedTopK / Project / Filter / relation:\n$other")
+    }
+  }
 }

@@ -98,6 +98,33 @@ class RankedTopKSpec extends SparkSpecBase {
     }
   }
 
+  test("a collect runs one job in the caller's job group, also over zero input partitions") {
+    val sc = spark.sparkContext
+    val group = "ranked-topk-collect"
+    // a tenant no zone covers: the index read's prune selects no
+    // directory, so the scan has no partition at all
+    val q = Tables.points(spark, sf).filter(col("id") === 1).select("vector").head().getSeq[Double](0)
+    def request(tenant: Long): DataFrame = graft.operators.VectorStore.pointsQuery(spark, sf,
+      s"""{"query": {"nearest": [${q.mkString(", ")}]}, "filter": {"must":
+        |[{"key": "user_id", "match": {"value": $tenant}}]}, "limit": 5}""".stripMargin)
+    request(3L).collect() // fill the payload index
+    val cases = Seq(
+      "an index read that prunes every directory" -> request(1000000L),
+      "an empty RDD" -> TopK.ranked(spark.createDataFrame(sc.emptyRDD[Row], schema),
+        orders.head._2, 0, 5),
+      "a tenant's index read" -> request(3L))
+    for ((name, df) <- cases) {
+      val input = df.queryExecution.executedPlan.children.head.execute().getNumPartitions
+      assert((input == 0) == (name != "a tenant's index read"), s"$name: $input partitions")
+      val (got, groups) = jobGroupsOf {
+        sc.setJobGroup(group, name)
+        try df.collect() finally sc.clearJobGroup()
+      }
+      assert(got.isEmpty == (input == 0), s"$name: ${got.toSeq}")
+      assert(groups == Seq(group), s"$name: jobs in groups $groups")
+    }
+  }
+
   test("non-collect consumers execute the operator as a child: a join and a coalesced write") {
     val dir = java.nio.file.Files.createTempDirectory("ranked-topk-").toString
     try {
