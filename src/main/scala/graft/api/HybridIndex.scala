@@ -101,7 +101,7 @@ class HybridIndex private (spark: SparkSession, path: String,
     TopK.ranked(allow.fold(vectors)(a =>
         vectors.join(a.select("doc_id"), Seq("doc_id"), "left_semi"))
       .select(col("doc_id"),
-        round(cosineSim(col("vec"), typedLit(qvec)), 4).as("cosine")),
+        round(cosineSim(col("vec"), queryVector(qvec)), 4).as("cosine")),
       Seq(col("cosine").desc, col("doc_id")), 0, k)
       .select(col("doc_id"), col("cosine"), col("rank").as("rank_vec"))
 

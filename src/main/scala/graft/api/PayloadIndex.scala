@@ -2,9 +2,9 @@ package graft.api
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.RelationBridge
+import org.apache.spark.sql.graft.{LeanConfParquetFormat, RelationBridge}
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -166,7 +166,9 @@ final class PayloadIndex private[api] (
     * a replay sweeps belong to a batch whose marker the replay then
     * writes. Each read wraps it under fresh attribute ids (the
     * `spark.read` code path minus the listing), so two reads of one
-    * handle join like two independent reads.
+    * handle join like two independent reads. The relation reads through
+    * [[LeanConfParquetFormat]], so a scan's configuration broadcast
+    * sends no per-key provenance.
     */
   private def dataRelation(): BaseRelation = {
     val batches = committedBatches()
@@ -174,8 +176,10 @@ final class PayloadIndex private[api] (
     if (cached != null && cached._1 == batches) cached._2
     else {
       val r = spark.read.schema(readSchema).parquet(s"$root/data")
-        .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
-        .get
+        .queryExecution.analyzed.collectFirst {
+          case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+            h.copy(fileFormat = new LeanConfParquetFormat)(h.sparkSession)
+        }.get
       listed = (batches, r)
       r
     }

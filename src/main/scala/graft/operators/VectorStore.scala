@@ -2847,7 +2847,7 @@ object VectorStore {
       case Right(v) =>
         if (scoreOn == "title_vec") require(v.length == headDims,
           s"a 'title' head query vector must have $headDims dims (got ${v.length})")
-        (base, typedLit(v.toArray))
+        (base, queryVector(v))
     }
     val score = round(cosineSim(col(scoreOn), qvec), 4)
     TopK.ranked(threshold.fold(scored)(t => scored.filter(score >= t)), rankOrder, offset, k,

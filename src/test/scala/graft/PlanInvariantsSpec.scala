@@ -663,4 +663,23 @@ class PlanInvariantsSpec extends SparkSpecBase {
       case other => fail(s"a tenant request is not RankedTopK / Project / Filter / relation:\n$other")
     }
   }
+
+  test("a tenant /points/query request's scan pushes its user_id match and reads columnar batches through the lean parquet format") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.LeanConfParquetFormat
+    val q = Tables.points(spark, sf).filter(col("id") === 1).select("vector").head().getSeq[Double](0)
+    val json = s"""{"query": {"nearest": [${q.mkString(", ")}]}, "filter": {"must":
+      |[{"key": "user_id", "match": {"value": 3}}, {"key": "lang", "match": {"value": "en"}}]},
+      |"limit": 10}""".stripMargin
+    val executed = graft.operators.VectorStore.pointsQuery(spark, sf, json).queryExecution.executedPlan
+    val scans = executed.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"the request plans ${scans.size} file scans:\n$executed")
+    val scan = scans.head
+    assert(scan.relation.fileFormat.isInstanceOf[LeanConfParquetFormat],
+      s"the scan reads ${scan.relation.fileFormat.getClass.getName}")
+    val pushed = scan.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("EqualTo(user_id,3)"), s"pushed filters are $pushed")
+    assert(scan.supportsColumnar, s"the scan reads rows, not columnar batches:\n$executed")
+  }
 }

@@ -7,7 +7,10 @@ Runs `perfbench/run.py` once per seed in each checkout, alternating
 which side runs first (even pairs parent first, odd pairs change
 first), and prints for every metric the per-pair values, each side's
 median and q1-q3, the change's median relative to the parent's, and
-how many pairs the change won (ties count for neither side). Metric
+how many pairs the change won (ties count for neither side). Beside
+each pooled median it prints each side's median over the pairs where
+that side ran first and over those where it ran second, so a latency
+that depends on run position shows. Metric
 directions come from the parent's BENCHMARK.json; `op_p50_ms` (the
 raw median the run prints beside `op_p50_ref_ms`) is reported too.
 
@@ -61,6 +64,12 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def positional(pairs, side, metric, first):
+    """`side`'s median `metric` over the pairs where it ran first (or second)."""
+    xs = [p[2][side][metric] for p in pairs if (p[1] == side) == first]
+    return f"{statistics.median(xs):.4f} (n={len(xs)})" if xs else "- (n=0)"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -110,6 +119,9 @@ def main():
         rel = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
         print(f"  median parent {pm:.4f} [q1-q3 {pq[0]:.4f}-{pq[1]:.4f}]"
               f"  change {cm:.4f} [q1-q3 {cq[0]:.4f}-{cq[1]:.4f}]  change vs parent {rel}")
+        print("  by position " + "  ".join(
+            f"{side} first {positional(pairs, side, m, True)} second {positional(pairs, side, m, False)}"
+            for side in sides))
         if m in better:
             sign = -1 if better[m] == "lower" else 1
             wins = sum(1 for x, y in zip(par, chg) if sign * (y - x) > 0)
