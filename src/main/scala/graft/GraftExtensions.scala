@@ -146,22 +146,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"graft_query params must be a literal map(...) or 'k=v,…' string, got $other")
         }
         val session = org.apache.spark.sql.SparkSession.active
-        val plan =
-          if (params.isEmpty) {
-            val fn = SparkEntry.queries.getOrElse(name,
-              throw new IllegalArgumentException(s"unknown graft query '$name' — " +
-                s"valid names: ${SparkEntry.queries.keys.toSeq.sorted.take(8).mkString(", ")}…"))
-            fn(session, dir)
-          } else {
-            require(SparkEntry.queries.contains(name),
-              s"unknown graft query '$name'")
-            val fn = SparkEntry.paramQueries.getOrElse(name,
-              throw new IllegalArgumentException(
-                s"graft_query('$name') takes no parameters — parameterized queries: " +
-                  SparkEntry.paramQueries.keys.toSeq.sorted.mkString(", ")))
-            fn(session, dir, params)
-          }
-        plan.queryExecution.logical
+        val queries = SparkEntry.sqlQueries
+        val fn = queries.getOrElse(name,
+          throw new IllegalArgumentException(s"unknown graft query '$name' — " +
+            s"valid names: ${queries.keys.toSeq.sorted.take(8).mkString(", ")}…"))
+        fn(session, dir, params).queryExecution.logical
       }))
   }
 }

@@ -41,12 +41,13 @@ object Sessions {
         java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // bounded post-limit rank windows (k-row finals) are unpartitioned
-    // BY DESIGN and each one logs "No Partition Defined" — hundreds of
-    // lines that bury real executor warnings. The scale gate for
-    // single-partition funnels is PlanAudit's single_partition_exchange
-    // budget (executed-plan count), so the per-execution warning goes
-    // quiet.
+    // the literal-key cumulative-sum windows (running totals over
+    // already-aggregated, bounded relations: token and df histograms,
+    // mixture annealing, decile shares, skew audits) are unpartitioned
+    // BY DESIGN and each one logs "No Partition Defined" — lines that
+    // bury real executor warnings. The scale gate for single-partition
+    // funnels is PlanAudit's single_partition_exchange budget
+    // (executed-plan count), so the per-execution warning goes quiet.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       classOf[org.apache.spark.sql.execution.window.WindowExec].getName,
       org.apache.logging.log4j.Level.ERROR)

@@ -103,14 +103,14 @@ class GraphIndex private (spark: SparkSession, path: String) {
     val emb = vectors.select(col("vec_id"), col("vec"))
     val filtered = filter match {
       case Some(p) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
+        // each query's best k, re-ranked from 1 within the survivors
+        def rerank(scored: DataFrame): DataFrame =
+          graft.plans.TopK.perKey(scored, Seq(col("query_id")),
+              Seq(col("cosine").desc, col("vec_id").asc), k)
+            .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
         def attempt(qs: DataFrame, kk: Int, beamW: Int): DataFrame = {
           val (ranked, _) = Ann.beamSearch(emb, edges, entries, qs, kk, beamW, hops)
-          ranked.join(vectors.drop("vec"), "vec_id").filter(p)
-            .withColumn("rank", row_number().over(w).cast("long"))
-            .filter(col("rank") <= k)
-            .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+          rerank(ranked.drop("rank").join(vectors.drop("vec"), "vec_id").filter(p))
         }
         def satisfied(df: DataFrame): DataFrame = df
           .groupBy("query_id").agg(count(lit(1)).as("n"))
@@ -139,13 +139,10 @@ class GraphIndex private (spark: SparkSession, path: String) {
           // brute-force fallback over the matching slice for the
           // still-short queries (scores mirror the beam path's
           // round-6-then-4 discipline, so merged pages rank coherently)
-          val brute = vectors.filter(p).select(col("vec_id"), col("vec"))
+          val brute = rerank(vectors.filter(p).select(col("vec_id"), col("vec"))
             .crossJoin(broadcast(pending))
             .withColumn("cosine", round(round(
-              graft.functions.Vectors.cosineSim(col("vec"), col("qvec")), 6), 4))
-            .withColumn("rank", row_number().over(w).cast("long"))
-            .filter(col("rank") <= k)
-            .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+              graft.functions.Vectors.cosineSim(col("vec"), col("qvec")), 6), 4)))
           done = done.union(brute)
         }
         done

@@ -339,12 +339,11 @@ class VectorIndex private (val points: DataFrame,
     */
   def searchBatch(queries: DataFrame, k: Int,
                   metric: (Column, Column) => Column = l2Distance): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("score").asc, col("id").asc)
-    points.join(broadcast(queries), col("user_id") === col("quser"))
-      .withColumn("score", metric(col("qvec"), col("vector")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"), col("text").as("string"), col("score"))
+    TopK.perKey(points.join(broadcast(queries), col("user_id") === col("quser"))
+        .withColumn("score", metric(col("qvec"), col("vector"))),
+        Seq(col("query_id")), Seq(col("score").asc, col("id").asc), k)
+      .select(col("query_id"), col("rank").cast("int").as("rank"), col("id"),
+        col("text").as("string"), col("score"))
   }
 
   /** Tenant statistics (collection scroll/count surface). */
@@ -354,18 +353,16 @@ class VectorIndex private (val points: DataFrame,
   /** Grouped search — Qdrant's search_groups API: the top `nGroups`
     * values of `groupField` ranked by their best hit's distance to
     * `qvec`, with each group's `perGroup` best hits. The per-group cut
-    * happens inside the distance scan's exchange (WindowGroupLimit), so
+    * is a `TopK.perKey` heap that runs map-side before its exchange, so
     * only perGroup×groups rows reach the tiny group-ranking step.
     */
   def searchGroups(qvec: Seq[Double], groupField: String = "site",
                    nGroups: Int = 3, perGroup: Int = 2,
                    userId: Option[Long] = None): DataFrame = {
     val base = userId.map(u => points.filter(col("user_id") === u)).getOrElse(points)
-    val inGroup = Window.partitionBy(groupField).orderBy(col("score").asc, col("id").asc)
-    val hits = base
-      .withColumn("score", l2Distance(lit(qvec.toArray), col("vector")))
-      .withColumn("hit_rank", row_number().over(inGroup).cast("long"))
-      .filter(col("hit_rank") <= perGroup)
+    val hits = TopK.perKey(base.withColumn("score", l2Distance(lit(qvec.toArray), col("vector"))),
+        Seq(col(groupField)), Seq(col("score").asc, col("id").asc), perGroup)
+      .withColumnRenamed("rank", "hit_rank")
     val top = TopK.ranked(hits.filter(col("hit_rank") === 1)
       .select(col(groupField), col("score").as("best_score")),
       Seq(col("best_score").asc, col(groupField).asc), 0, nGroups)

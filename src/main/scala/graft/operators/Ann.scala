@@ -3,8 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.Vectors._
 import graft.plans.TopK
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the embedding column — the
@@ -36,17 +35,22 @@ object Ann {
     (corpus, queries)
   }
 
+  /** The cosine order of a query's candidates: cs descending, vec_id. */
+  private val bestCosine: Seq[Column] = Seq(col("cs").desc, col("vec_id").asc)
+
+  /** Each query's best `k` of its scored `(query_id, vec_id, cs)`
+    * candidates, as `(query_id, rank, vec_id, cosine)` in rank order.
+    */
+  private def rankPerQuery(scored: DataFrame, k: Int): DataFrame =
+    TopK.perKey(scored, Seq(col("query_id")), bestCosine, k)
+      .select(col("query_id"), col("rank"), col("vec_id"), round(col("cs"), 4).as("cosine"))
+      .orderBy("query_id", "rank")
+
   /** Exact brute-force cosine top-k for a batch of query vectors. */
   def bruteTopK(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val (corpus, queries) = corpusAndQueries(s, d)
-    val w = Window.partitionBy("query_id").orderBy(col("cs").desc, col("vec_id").asc)
-    corpus.join(broadcast(queries))
-      .withColumn("cs", cosineSim(col("vec"), col("qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("vec_id"),
-        round(col("cs"), 4).as("cosine"))
-      .orderBy("query_id", "rank")
+    rankPerQuery(corpus.join(broadcast(queries))
+      .withColumn("cs", cosineSim(col("vec"), col("qvec"))), k)
   }
 
   /** Ranked (dist, cid) structs vs the centroid set — (dist asc, cid
@@ -176,13 +180,8 @@ object Ann {
     val probes = queries.select(col("query_id"), col("qvec"),
         explode(slice(rankedCentroids(col("qvec"), cents), 1, nprobe)
           .getField("cid")).as("cid"))
-    val wRank = Window.partitionBy("query_id").orderBy(col("cs").desc, col("vec_id").asc)
-    assigned.join(broadcast(probes), "cid")
-      .withColumn("cs", cosineSim(col("vec"), col("qvec")))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), round(col("cs"), 4).as("cosine"))
-      .orderBy("query_id", "rank")
+    rankPerQuery(assigned.join(broadcast(probes), "cid")
+      .withColumn("cs", cosineSim(col("vec"), col("qvec"))), k)
   }
 
   /** Session-scoped memo of the PERSISTED [[graft.api.AnnIndex]] with
@@ -382,8 +381,6 @@ object Ann {
     val truthCaches = scala.collection.mutable.ListBuffer.empty[
       org.apache.spark.sql.DataFrame]
     try {
-      val wRank = Window.partitionBy("query_id")
-        .orderBy(col("cs").desc, col("vec_id").asc)
       // the four filter arms are independent (each owns its truth cache
       // and its five probe cells) — materialize them concurrently
       // (materializeConcurrently), one 5-row checkpoint per arm
@@ -392,8 +389,7 @@ object Ann {
         // brute filtered truth ONCE per filter, shared by all five
         // probe cells (the cells differ only in the candidate cut)
         val slice = scored.filter(pred)
-        val truth = graft.plans.TopK.perKey(slice,
-          Seq(col("query_id")), Seq(col("cs").desc, col("vec_id").asc), k)
+        val truth = TopK.perKey(slice, Seq(col("query_id")), bestCosine, k)
           .select("query_id", "vec_id").cache()
         truthCaches.synchronized { truthCaches += truth }
         val nTrue = truth.groupBy("query_id").agg(count(lit(1)).as("n_true"))
@@ -411,9 +407,8 @@ object Ann {
           val npByQ = qvecs.map { case (qid, qv) => (qid, npOf(qid, qv)) }
           val npCol = npByQ.foldLeft(lit(nlist)) { case (acc, (qid, np)) =>
             when(col("query_id") === qid, np).otherwise(acc) }
-          val res = slice.filter(col("probe_rank") <= npCol)
-            .withColumn("rank", row_number().over(wRank))
-            .filter(col("rank") <= k)
+          val res = TopK.perKey(slice.filter(col("probe_rank") <= npCol),
+              Seq(col("query_id")), bestCosine, k)
             .select("query_id", "vec_id")
           val hits = truth.join(res, Seq("query_id", "vec_id"))
             .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
@@ -537,13 +532,8 @@ object Ann {
       .select(col("query_id"), col("qvec"),
         explode(array(col("bucket0") +:
           (0 until nBits).map(i => col("bucket0").bitwiseXOR(lit(1 << i))): _*)).as("bucket"))
-    val wRank = Window.partitionBy("query_id").orderBy(col("cs").desc, col("vec_id").asc)
-    ctab.join(broadcast(qtab), "bucket")
-      .withColumn("cs", cosineSim(col("vec"), col("qvec")))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), round(col("cs"), 4).as("cosine"))
-      .orderBy("query_id", "rank")
+    rankPerQuery(ctab.join(broadcast(qtab), "bucket")
+      .withColumn("cs", cosineSim(col("vec"), col("qvec"))), k)
   }
 
   /** NN-DESCENT approximate k-NN GRAPH construction (Dong et al. 2011)
@@ -608,17 +598,16 @@ object Ann {
     // training twice for an identical result was ~3 s of the build line)
     val cents = knnQuantizers.getOrElseUpdate(s, d, (lists, iters))(
       kmeansCentroids(emb, lists, iters))
-    val knn = descendEdges(emb, cents, k, rounds, cap)
-    val w = Window.partitionBy("src").orderBy(col("cs").desc, col("dst").asc)
-    knn.withColumn("rk", row_number().over(w).cast("long"))
-      .select(col("src").as("vec_id"), col("rk"), col("dst").as("neighbor_id"),
+    descendEdges(emb, cents, k, rounds, cap)
+      .select(col("src").as("vec_id"), col("rank").as("rk"), col("dst").as("neighbor_id"),
         round(col("cs"), 4).as("cosine"))
       .orderBy("vec_id", "rk")
   }
 
-  /** NN-descent core: scored k-NN edge list (src, dst, cs) over any
-    * (vec_id, vec) relation — shared by [[nnDescentGraph]] (the audit
-    * view) and [[graphTopK]] (the search index build).
+  /** NN-descent core: scored k-NN edge list (rank, src, dst, cs), each
+    * edge ranked within its src, over any (vec_id, vec) relation —
+    * shared by [[nnDescentGraph]] (the audit view) and [[graphTopK]]
+    * (the search index build).
     */
   private[graft] def descendEdges(emb: DataFrame, cents: Seq[(Long, Seq[Double])],
                            k: Int, rounds: Int, cap: Int): DataFrame = {
@@ -628,7 +617,7 @@ object Ann {
     // exact-rescore candidates, keep each node's k best (heap operator:
     // only <= k rows per (node x partition) reach the exchange)
     def topK(cand: DataFrame): DataFrame =
-      graft.plans.TopK.perKey(
+      TopK.perKey(
         cand
           .join(emb.select(col("vec_id").as("src"), col("vec").as("sv")), "src")
           .join(emb.select(col("vec_id").as("dst"), col("vec").as("dv")), "dst")
@@ -839,7 +828,7 @@ object Ann {
       .select(col("vec_id"), col("vec"), nearestCentroidId(col("vec"), cents).as("cid"))
       .select(col("vec_id"), col("cid"),
         l2Distance(col("vec"), element_at(centArr, (col("cid") + 1).cast("int"))).as("d"))
-    val reps = graft.plans.TopK.perKey(assigned,
+    val reps = TopK.perKey(assigned,
         Seq(col("cid")), Seq(col("d").asc, col("vec_id").asc), 1)
     if (n <= sorted.size) reps.filter(col("cid") < n).select("vec_id")
     else {
@@ -872,8 +861,7 @@ object Ann {
       .crossJoin(queries.select(col("query_id")))
       .select(col("query_id"), col("vec_id"))
     var scored = score(entry).localCheckpoint()
-    var frontier = graft.plans.TopK.perKey(scored,
-      Seq(col("query_id")), Seq(col("cs").desc, col("vec_id").asc), beam)
+    var frontier = TopK.perKey(scored, Seq(col("query_id")), bestCosine, beam)
     for (_ <- 1 to hops) {
       // the visited set IS scored's key projection (every scored batch
       // enters exactly once, pre-filtered by this anti-join), and the
@@ -890,15 +878,9 @@ object Ann {
         .join(visited, Seq("query_id", "vec_id"), "left_anti")
       val ns = score(cand).localCheckpoint()
       scored = scored.union(ns)
-      frontier = graft.plans.TopK.perKey(ns,
-        Seq(col("query_id")), Seq(col("cs").desc, col("vec_id").asc), beam)
+      frontier = TopK.perKey(ns, Seq(col("query_id")), bestCosine, beam)
     }
-    val w = Window.partitionBy("query_id").orderBy(col("cs").desc, col("vec_id").asc)
-    val result = scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("cs"), 4).as("cosine"))
-      .orderBy("query_id", "rank")
+    val result = rankPerQuery(scored, k)
     val finalVisited = scored.select("query_id", "vec_id")
     (result, () => finalVisited.count().toDouble / math.max(queries.count(), 1L))
   }
@@ -973,7 +955,7 @@ object Ann {
       val sc = if (l2) l2Distance(col("vec"), col("qvec"))
                else cosineSim(col("vec"), col("qvec"))
       val ord = if (l2) col("sc").asc else col("sc").desc
-      val t = pinned(graft.plans.TopK.perKey(
+      val t = pinned(TopK.perKey(
           emb.join(broadcast(qs), col("vec_id") =!= col("query_id"))
             .select(col("query_id"), col("vec_id"), sc.as("sc")),
           Seq(col("query_id")), Seq(ord, col("vec_id").asc), k)
@@ -1042,14 +1024,12 @@ object Ann {
     val truth = bruteTopK(s, d, k).select("query_id", "vec_id").cache()
     try {
       val nTrue = truth.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-      val wRank = Window.partitionBy("query_id").orderBy(col("cs").desc, col("vec_id").asc)
       // each curve point is an independent filter over the shared
       // scored/truth caches — materialize the five arms concurrently
       // (materializeConcurrently; 1-row checkpoints, values unchanged)
       materializeConcurrently(nprobes.map { np => () =>
-        val res = scored.filter(col("probe_rank") <= np)
-          .withColumn("rank", row_number().over(wRank))
-          .filter(col("rank") <= k)
+        val res = TopK.perKey(scored.filter(col("probe_rank") <= np),
+          Seq(col("query_id")), bestCosine, k)
         val hits = truth.join(res.select("query_id", "vec_id"), Seq("query_id", "vec_id"))
           .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
         nTrue.join(hits, Seq("query_id"), "left")

@@ -835,25 +835,19 @@ object Embeddings {
     * engine-portable.
     */
   def knnSelfEval(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("vec"),
         col("label"))
     val qs = emb.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("qid"), col("vec").as("qvec"),
         col("label").as("true_label"))
-    val wRank = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val neighbors = emb.join(broadcast(qs), col("vec_id") =!= col("qid"))
-      .withColumn("score", round(cosineSim(col("vec"), col("qvec")), 4))
-      .withColumn("rk", row_number().over(wRank))
-      .filter(col("rk") <= k)
+    val neighbors = graft.plans.TopK.perKey(emb.join(broadcast(qs), col("vec_id") =!= col("qid"))
+        .withColumn("score", round(cosineSim(col("vec"), col("qvec")), 4)),
+        Seq(col("qid")), Seq(col("score").desc, col("vec_id").asc), k)
     val votes = neighbors.groupBy("qid", "true_label", "label")
       .agg(count(lit(1)).as("cnt"))
-    val wVote = Window.partitionBy("qid")
-      .orderBy(col("cnt").desc, col("label").asc)
-    val pred = votes.withColumn("vr", row_number().over(wVote))
-      .filter(col("vr") === 1)
+    val pred = graft.plans.TopK.perKey(votes,
+        Seq(col("qid")), Seq(col("cnt").desc, col("label").asc), 1)
       .select(col("qid"), col("true_label"), col("label").as("pred_label"))
     pred.groupBy("true_label")
       .agg(count(lit(1)).as("n_eval"),

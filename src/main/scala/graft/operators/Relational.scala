@@ -866,15 +866,14 @@ object Relational {
     val sketch = ColumnBridge.column(
       FreqSketchAgg(ColumnBridge.expression(col("user_id")), capacity)
         .toAggregateExpression())
-    val w = Window.partitionBy("event_type")
-      .orderBy(col("approx_n").desc, col("user_id"))
-    Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(sketch.as("sketch"), count(lit(1)).as("n_events"))
-      .select(col("event_type"), col("n_events"),
-        explode(col("sketch")).as(Seq("user_id", "approx_n")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    graft.plans.TopK.perKey(Tables.events(s, d)
+        .groupBy("event_type")
+        .agg(sketch.as("sketch"), count(lit(1)).as("n_events"))
+        .select(col("event_type"), col("n_events"),
+          explode(col("sketch")).as(Seq("user_id", "approx_n"))),
+        Seq(col("event_type")), Seq(col("approx_n").desc, col("user_id").asc), k)
+      .select(col("event_type"), col("n_events"), col("user_id"), col("approx_n"),
+        col("rank").as("rk"))
       .orderBy("event_type", "rk")
   }
 

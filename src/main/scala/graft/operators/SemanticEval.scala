@@ -95,17 +95,14 @@ object SemanticEval {
       ("word2vec", "associate", corpusW2v, w2v.embed(associateQ)))
 
     // ---- recall@k / MRR@k per arm ----
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cs").desc, col("doc_id").asc)
     // the four (embedder × transform) arms are independent filters over
     // the memoized corpus embeddings — materialize concurrently
     // (Ann.materializeConcurrently; values unchanged)
     Ann.materializeConcurrently(arms.map { case (emb, tr, corpusEmb, queryEmb) => () =>
-      corpusEmb.join(broadcast(queryEmb
+      graft.plans.TopK.perKey(corpusEmb.join(broadcast(queryEmb
           .select(col("doc_id").as("query_id"), col("embedding").as("qvec"))))
-        .withColumn("cs", cosineSim(col("embedding"), col("qvec")))
-        .withColumn("rank", row_number().over(wRank))
-        .filter(col("rank") <= k)
+          .withColumn("cs", cosineSim(col("embedding"), col("qvec"))),
+          Seq(col("query_id")), Seq(col("cs").desc, col("doc_id").asc), k)
         .groupBy("query_id")
         .agg(max(when(col("doc_id") === col("query_id"), 1.0).otherwise(0.0)).as("hit"),
           coalesce(max(when(col("doc_id") === col("query_id"),

@@ -46,21 +46,6 @@ object VectorStore {
 
   // ---------------------------------------------------------------- search
 
-  /** Distance-ranked top-k of `corpus` for each row of `queries`
-    * (columns: query_id, qvec). Query side broadcast; rank window is
-    * per-query so the shuffle carries only candidate rows.
-    */
-  def topK(queries: DataFrame, corpus: DataFrame, k: Int, metric: (Column, Column) => Column,
-           ascending: Boolean = true): DataFrame = {
-    val dist = metric(col("qvec"), col("vector"))
-    val ord = if (ascending) col("score").asc else col("score").desc
-    val w = Window.partitionBy("query_id").orderBy(ord, col("id").asc)
-    corpus.join(broadcast(queries))
-      .withColumn("score", dist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** Single-query euclidean top-k of `corpus` against the one-row
     * `qvec` frame, ranked in one [[graft.plans.TopK.ranked]] operator:
     * each partition keeps its local top-k and only k rows per partition
@@ -194,14 +179,11 @@ object VectorStore {
     val pts = Tables.points(s, d)
     val qs = pts.filter(col("id") < 20)
       .select(col("id").as("query_id"), col("vector").as("qvec"), col("user_id").as("quser"))
-    val dist = l2Distance(col("qvec"), col("vector"))
-    val w = Window.partitionBy("query_id").orderBy(col("score").asc, col("id").asc)
-    pts.join(broadcast(qs), col("user_id") === col("quser") && col("id") =!= col("query_id"))
-      .withColumn("score", dist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("id"),
-        round(col("score"), 4).as("score"))
+    TopK.perKey(pts
+        .join(broadcast(qs), col("user_id") === col("quser") && col("id") =!= col("query_id"))
+        .withColumn("score", l2Distance(col("qvec"), col("vector"))),
+        Seq(col("query_id")), nearestOrder, 3)
+      .select(col("query_id"), col("rank"), col("id"), round(col("score"), 4).as("score"))
       .orderBy("query_id", "rank")
   }
 
@@ -684,13 +666,13 @@ object VectorStore {
   /** Qdrant-style GROUPED search (search_groups API): top-`nGroups`
     * payload groups for one query, each represented by its `perGroup`
     * best hits — "best restaurants by neighborhood" over vectors. Two
-    * stacked ranks: a within-group window hit rank (cutting each group
-    * to `perGroup` rows BEFORE anything global), then the groups ranked
-    * by their best hit's score in one `TopK.ranked`. Scale shape: the
-    * per-group cut happens in the same exchange as the distance scan
-    * (WindowGroupLimit pushes the rank filter pre-shuffle), so at most
-    * `perGroup`×groups rows survive to the tiny group-ranking step — the
-    * corpus never sorts globally.
+    * stacked ranks: a within-group hit rank (`TopK.perKey`, cutting each
+    * group to `perGroup` rows BEFORE anything global), then the groups
+    * ranked by their best hit's score in one `TopK.ranked`. Scale shape:
+    * the per-group heap runs map-side before the exchange, so at most
+    * `perGroup` rows per (group × partition) cross it and only
+    * `perGroup`×groups rows reach the tiny group-ranking step — the
+    * corpus never sorts.
     */
   def searchGroups(s: SparkSession, d: String, queryId: Long = 0,
                    nGroups: Int = 3, perGroup: Int = 2,
@@ -702,11 +684,10 @@ object VectorStore {
     // resolves the id's vector regardless of the filter
     val corpus = pf.map(p => payloadIndex(s, d).readFilter(p)).getOrElse(pts)
     val q = pts.filter(col("id") === queryId).select(col("vector").as("qvec"))
-    val inGroup = Window.partitionBy("site").orderBy(col("score").asc, col("id").asc)
-    val hits = corpus.filter(col("id") =!= queryId).join(broadcast(q))
-      .withColumn("score", round(l2Distance(col("qvec"), col("vector")), 4))
-      .withColumn("hit_rank", row_number().over(inGroup).cast("long"))
-      .filter(col("hit_rank") <= perGroup)
+    val hits = TopK.perKey(corpus.filter(col("id") =!= queryId).join(broadcast(q))
+        .withColumn("score", round(l2Distance(col("qvec"), col("vector")), 4)),
+        Seq(col("site")), nearestOrder, perGroup)
+      .withColumnRenamed("rank", "hit_rank")
     // groups ordered by their best (rank-1) hit — rounded scores make
     // the group ordering engine-portable; ties break on site name
     val topGroups = TopK.ranked(hits.filter(col("hit_rank") === 1)
@@ -736,11 +717,8 @@ object VectorStore {
     // the corpus (a high-cardinality group field would otherwise shuffle
     // + broadcast a |sites|-sized relation for 3 returned groups)
     val sites = groups.select("site").distinct()
-    val profile = Tables.points(s, d)
-      .join(broadcast(sites), "site")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("site").orderBy(col("id").asc)))
-      .filter(col("rk") === 1)
+    val profile = TopK.perKey(Tables.points(s, d).join(broadcast(sites), "site"),
+        Seq(col("site")), Seq(col("id").asc), 1)
       .select(col("site"), col("id").as("lookup_id"),
         substring(col("text"), 1, 20).as("lookup_head"))
     groups.join(broadcast(profile), "site")
@@ -830,13 +808,12 @@ object VectorStore {
   def distanceMatrix(s: SparkSession, d: String, sampleN: Long = 20, k: Int = 5): DataFrame = {
     val sample = Tables.points(s, d).filter(col("id") < sampleN)
     val other = sample.select(col("id").as("b_id"), col("vector").as("b_vec"))
-    val w = Window.partitionBy("a_id").orderBy(col("cosine").desc, col("b_id"))
-    sample.select(col("id").as("a_id"), col("vector").as("a_vec"))
-      .join(broadcast(other), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(cosineSim(col("a_vec"), col("b_vec")), 4).as("cosine"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    TopK.perKey(sample.select(col("id").as("a_id"), col("vector").as("a_vec"))
+        .join(broadcast(other), col("a_id") =!= col("b_id"))
+        .select(col("a_id"), col("b_id"),
+          round(cosineSim(col("a_vec"), col("b_vec")), 4).as("cosine")),
+        Seq(col("a_id")), Seq(col("cosine").desc, col("b_id").asc), k)
+      .select(col("a_id"), col("b_id"), col("cosine"), col("rank").as("rk"))
       .orderBy("a_id", "rk")
   }
 
@@ -864,11 +841,9 @@ object VectorStore {
     val emb = embedText(s, d).cache() // (doc_id, embedding), unit-normalized
     val queries = emb.filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"), col("embedding").as("qvec"))
-    val w = Window.partitionBy("query_id").orderBy(col("cs").desc, col("doc_id").asc)
-    emb.join(broadcast(queries))
-      .withColumn("cs", dot(col("embedding"), col("qvec"))) // unit vectors: cosine = dot
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perKey(emb.join(broadcast(queries))
+        .withColumn("cs", dot(col("embedding"), col("qvec"))), // unit vectors: cosine = dot
+        Seq(col("query_id")), Seq(col("cs").desc, col("doc_id").asc), k)
       .select(col("query_id"), col("rank"), col("doc_id"), round(col("cs"), 4).as("cosine"))
       .orderBy("query_id", "rank")
   }
@@ -1598,7 +1573,7 @@ object VectorStore {
     * verify sweeps call this repeatedly.
     */
   private val deletedIdxMemo =
-    new SessionMemo[Unit, graft.api.PayloadIndex]("nullable_index_warm", _.reap())
+    new SessionMemo[Unit, graft.api.PayloadIndex]("deleted_index_warm", _.reap())
 
   def deleteByFilterIndexed(s: SparkSession, d: String): DataFrame = {
     import graft.api.Filters._
@@ -1827,11 +1802,9 @@ object VectorStore {
   private def semanticRank(emb: DataFrame, k: Int): DataFrame = {
     val queries = emb.filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"), col("embedding").as("qvec"))
-    val w = Window.partitionBy("query_id").orderBy(col("cs").desc, col("doc_id").asc)
-    emb.join(broadcast(queries))
-      .withColumn("cs", cosineSim(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    TopK.perKey(emb.join(broadcast(queries))
+        .withColumn("cs", cosineSim(col("embedding"), col("qvec"))),
+        Seq(col("query_id")), Seq(col("cs").desc, col("doc_id").asc), k)
       .select(col("query_id"), col("rank"), col("doc_id"), round(col("cs"), 4).as("cosine"))
       .orderBy("query_id", "rank")
   }

@@ -3,21 +3,31 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graft.plans.{RankedTopKBuilder, TopKPerKeyBuilder}
 
-/** Whole-operator custom plan: top-k rows per key WITHOUT a window sort.
-  *
-  * `row_number().over(Window.partitionBy(keys).orderBy(order)) <= k`
-  * fully sorts each key group post-shuffle. This operator plans as
-  * partial-heap → hash exchange → final-heap (see
-  * org.apache.spark.sql.graft.plans.TopKPerKeyExec): O(n log k) work,
-  * and only ≤ k rows per (key × partition) cross the shuffle. Use it
-  * when the rank itself isn't needed — only membership in the top k.
-  *
-  * {{{
-  *   TopK.perKey(lineitems, Seq(col("l_orderkey")),
-  *     Seq(col("l_extendedprice").desc), k = 5)
-  * }}}
+/** Whole-operator custom plans for the two top-k shapes: the best k
+  * rows per key ([[perKey]]) and the best k rows overall ([[ranked]]).
   */
 object TopK {
+  /** The first `k` rows of each `keys` group under `order`, each led by
+    * its 1-based `rank` within the key (LONG, not null; output:
+    * `rank +: df.columns`): `row_number().over(Window.partitionBy(keys)
+    * .orderBy(order))` filtered to `<= k`, without the window's sort.
+    * It plans as partial heap → hash exchange → final heap
+    * (org.apache.spark.sql.graft.plans.TopKPerKeyExec): O(n log k) work,
+    * and at most k rows per (key × partition) cross the shuffle. Ranks
+    * are `row_number`'s only when `order` is total within a key, ending
+    * in a unique column.
+    *
+    * Use it when the number of keys is bounded: a broadcast query set,
+    * a sample, a low-cardinality payload column. The final heap keeps
+    * every key of its partition in memory and cannot spill, so a key
+    * that grows with the corpus (a point, document, cluster or token id,
+    * a text hash) stays on Spark's window, which sorts and spills.
+    *
+    * {{{
+    *   TopK.perKey(scored, Seq(col("query_id")),
+    *     Seq(col("cs").desc, col("vec_id").asc), k = 10)
+    * }}}
+    */
   def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame =
     TopKPerKeyBuilder.topKPerKey(df, keys, order, k)
 

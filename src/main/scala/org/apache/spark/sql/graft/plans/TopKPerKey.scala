@@ -6,26 +6,29 @@ package org.apache.spark.sql.graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
-/** Logical: keep the first `k` rows per key group under `order`.
+/** Logical: keep the first `k` rows per key group under `order`, each
+  * led by its 1-based `rank` within the key (output:
+  * `rank +: child.output`).
   *
   * The window-function formulation (`row_number().over(partitionBy…
-  * orderBy…) <= k`) must fully sort every key group after the shuffle —
-  * O(n log n) per partition in the group size. This operator keeps a
-  * bounded heap per key instead: O(n log k) with k ≪ group size, and its
-  * partial phase runs BEFORE the shuffle, so at most k rows per (key ×
-  * input partition) ever cross the exchange. At 100 TB that is the
-  * difference between shuffling the corpus and shuffling k×keys rows.
+  * orderBy…) <= k`) sorts every partition in full, before the shuffle
+  * (Spark's partial WindowGroupLimit) and again after it — O(n log n)
+  * in the partition size. This operator keeps a bounded heap per key
+  * instead: O(n log k), and its partial phase also runs before the
+  * shuffle, so at most k rows per (key × input partition) cross the
+  * exchange. Every key's heap lives in memory at once and cannot spill.
   */
-case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
+case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int, rank: Attribute,
                       child: LogicalPlan) extends UnaryNode {
   require(k > 0, s"k must be positive, got $k")
-  override def output: Seq[Attribute] = child.output
+  override def output: Seq[Attribute] = rank +: child.output
+  override def producedAttributes: AttributeSet = AttributeSet(rank)
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKey =
     copy(child = newChild)
 }
@@ -34,11 +37,12 @@ case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
   * `partial = true` runs map-side (no required distribution) and emits
   * ≤ k rows per key per partition; the final instance requires
   * clustering on `keys` (EnsureRequirements inserts the hash exchange)
-  * and reduces the survivors to exactly the global per-key top k.
+  * and reduces the survivors to exactly the global per-key top k, each
+  * row led by its `rank` (output: `rank +: child.output`).
   */
-case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
+case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int, rank: Attribute,
                           partial: Boolean, child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
+  override def output: Seq[Attribute] = if (partial) child.output else rank +: child.output
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) UnspecifiedDistribution :: Nil else ClusteredDistribution(keys) :: Nil
   override def outputPartitioning = child.outputPartitioning
@@ -48,6 +52,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     val orderExprs = order
     val limit = k
     val childOutput = child.output
+    val rankedOutput = if (partial) None else Some(output)
     child.execute().mapPartitions({ it =>
       val keyProj = UnsafeProjection.create(keyExprs, childOutput)
       val ord = GenerateOrdering.generate(orderExprs, childOutput)
@@ -72,7 +77,17 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
         }
       }
       // emit best-first within each key (dequeueAll is worst-first)
-      heaps.valuesIterator.flatMap(_.dequeueAll.reverseIterator)
+      val best = heaps.valuesIterator.map(_.dequeueAll.reverseIterator)
+      rankedOutput.fold(best.flatten) { attrs =>
+        // the final instance leads each row with its 1-based place in its key
+        val proj = UnsafeProjection.create(attrs, attrs)
+        val rankRow = new GenericInternalRow(1)
+        val joined = new JoinedRow
+        best.flatMap(_.zipWithIndex.map { case (r, i) =>
+          rankRow.setLong(0, i + 1L)
+          proj(joined(rankRow, r))
+        })
+      }
     }, preservesPartitioning = true)
   }
 
@@ -85,9 +100,9 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
   */
 object TopKPerKeyStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKey(keys, order, k, child) =>
-      val partial = TopKPerKeyExec(keys, order, k, partial = true, planLater(child))
-      TopKPerKeyExec(keys, order, k, partial = false, partial) :: Nil
+    case TopKPerKey(keys, order, k, rank, child) =>
+      val partial = TopKPerKeyExec(keys, order, k, rank, partial = true, planLater(child))
+      TopKPerKeyExec(keys, order, k, rank, partial = false, partial) :: Nil
     case _ => Nil
   }
 }
@@ -106,6 +121,7 @@ object TopKPerKeyBuilder {
   import org.apache.spark.sql.catalyst.expressions.Alias
   import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
   import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+  import org.apache.spark.sql.types.LongType
 
   def topKPerKey(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column],
                  k: Int): DataFrame = {
@@ -124,6 +140,7 @@ object TopKPerKeyBuilder {
       case Sort(sortOrder, _, _, _) => sortOrder
       case other => throw new IllegalArgumentException(s"unexpected sort plan: $other")
     }
-    Dataset.ofRows(spark, TopKPerKey(keys, order, k, df.queryExecution.analyzed))
+    val rank = AttributeReference("rank", LongType, nullable = false)()
+    Dataset.ofRows(spark, TopKPerKey(keys, order, k, rank, df.queryExecution.analyzed))
   }
 }

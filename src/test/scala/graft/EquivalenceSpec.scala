@@ -122,19 +122,37 @@ class EquivalenceSpec extends SparkSpecBase {
   }
 
   test("TopKPerKey custom operator matches the window formulation on random data") {
+    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(99)
-    val rows = Seq.fill(500)((s"g${rnd.nextInt(7)}", rnd.nextInt(1000).toLong, rnd.nextLong()))
-    val df = rows.toDF("key", "value", "payload").localCheckpoint(true)
-    val fast = graft.plans.TopK.perKey(df, Seq(col("key")),
-        Seq(col("value").desc, col("payload")), k = 5)
-      .select("key", "value", "payload")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(col("value").desc, col("payload"))
-    val windowed = df.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("key", "value", "payload")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(fast === windowed)
+    // values from a small set (ties, broken by the unique payload), with
+    // NaN and null mixed in; one key holds only three rows
+    val rows = Seq.fill(500) {
+      val value: java.lang.Double = rnd.nextInt(12) match {
+        case 0 => null
+        case 1 => Double.NaN
+        case v => (v % 5).toDouble
+      }
+      (s"g${rnd.nextInt(7)}", value, rnd.nextLong())
+    } ++ Seq.fill(3)(("tiny", java.lang.Double.valueOf(1.0), rnd.nextLong()))
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    try for (aqe <- Seq(true, false); parts <- Seq(1, 3, 7); k <- Seq(1, 5, 600)) {
+      spark.conf.set(key, aqe.toString)
+      val clue = s"aqe=$aqe parts=$parts k=$k"
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts))
+        .toDF("key", "value", "payload")
+      val order = Seq(col("value").desc, col("payload"))
+      val fast = graft.plans.TopK.perKey(df, Seq(col("key")), order, k)
+        .select("rank", "key", "value", "payload").collect().toSeq
+      val windowed = df.withColumn("rank",
+          row_number().over(Window.partitionBy("key").orderBy(order: _*)).cast("long"))
+        .filter(col("rank") <= k)
+        .select("rank", "key", "value", "payload").collect().toSeq
+      def sorted(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.toSeq.mkString("|")).sorted
+      assert(sorted(fast) === sorted(windowed), clue)
+      // k past a key's size keeps the whole key
+      assert(fast.count(_.getString(1) == "tiny") === math.min(k, 3), clue)
+    } finally spark.conf.set(key, prev)
   }
 
   test("native jaccardSorted equals Scala set arithmetic on random arrays") {

@@ -31,6 +31,22 @@ class PlanInvariantsSpec extends SparkSpecBase {
     }
   }
 
+  // whether a per-key top-k cuts its rows before the shuffle: a final
+  // TopKPerKeyExec over a hash exchange on its keys, fed by the partial
+  // TopKPerKeyExec with the same keys
+  private def perKeyCutBelowExchange(name: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graft.plans.TopKPerKeyExec
+    new AdaptiveSparkPlanHelper {}.collect(
+        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan) {
+      case TopKPerKeyExec(keys, _, _, _, false,
+          ShuffleExchangeExec(h: HashPartitioning, p: TopKPerKeyExec, _, _)) =>
+        p.partial && p.keys == keys && h.expressions == keys
+    }.contains(true)
+  }
+
   // Plan-SHAPE regressions: these are the scale properties §5.1 claims.
   // A refactor that silently loses one (filter stops reaching the scan,
   // rank limit moves above the exchange, a dim join degrades to
@@ -55,8 +71,8 @@ class PlanInvariantsSpec extends SparkSpecBase {
   }
 
   test("batched vector search limits per-query candidates before the exchange") {
-    val p = plan("vs_search_batch")
-    assert(p.contains("WindowGroupLimit"), s"rank limit not pushed below shuffle:\n$p")
+    assert(perKeyCutBelowExchange("vs_search_batch"),
+      s"rank limit not pushed below shuffle:\n${plan("vs_search_batch")}")
   }
 
   /** Shuffle-exchange count in a FORMATTED plan: count the `(n) Exchange`
@@ -140,8 +156,24 @@ class PlanInvariantsSpec extends SparkSpecBase {
 
   test("grouped search cuts per-group hits before the group-rank step") {
     val p = plan("vs_search_groups")
-    assert(p.contains("WindowGroupLimit"), s"per-group cut not pushed:\n$p")
+    assert(perKeyCutBelowExchange("vs_search_groups"), s"per-group cut not pushed:\n$p")
     assert(p.contains("RankedTopK"), s"group rank is not a k-row cut:\n$p")
+  }
+
+  test("per-query top-k finals rank in the heap operator: no Window or WindowGroupLimit") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    import org.apache.spark.sql.graft.plans.TopKPerKeyExec
+    for (name <- Seq("ann_brute_topk", "text_doc_sim_topk")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect() // finalize the adaptive plan
+      val executed = df.queryExecution.executedPlan
+      val nodes = new AdaptiveSparkPlanHelper {}.collect(executed) {
+        case p @ (_: WindowExec | _: WindowGroupLimitExec) => p.nodeName
+        case p: TopKPerKeyExec if !p.partial => "final TopKPerKey"
+      }
+      assert(nodes == Seq("final TopKPerKey"), s"$name plans $nodes:\n$executed")
+    }
   }
 
   test("q21 collapses both existence probes into one per-order aggregation") {
