@@ -11,10 +11,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Registry layout: one directory per alias under the registry root,
   * each holding numbered `gen-N` target files maintained with the SAME
-  * committed-generation rotation [[VectorIndex]] snapshots use (the
-  * live pointer is the newest generation with a `_SUCCESS` marker —
-  * the parquet job's own single-file commit, atomic on HDFS and object
-  * stores alike). A crash mid-re-point leaves an ignored uncommitted
+  * committed-generation rotation [[VectorIndex]] snapshots use
+  * ([[Generations]]: the live pointer is the newest committed
+  * generation). A crash mid-re-point leaves an ignored uncommitted
   * generation; `resolve` never returns a torn value. The pointer is a
   * one-row parquet — bytes are irrelevant, the commit protocol is the
   * point.
@@ -31,25 +30,15 @@ object Aliases {
   def set(spark: SparkSession, registry: String, alias: String,
           target: String): Unit = {
     import spark.implicits._
-    val root = aliasRoot(registry, alias)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = if (!fs.exists(new org.apache.hadoop.fs.Path(root))) 0L
-    else fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("gen-"))
-      .map(_.stripPrefix("gen-").toLong).sorted.lastOption.map(_ + 1).getOrElse(0L)
-    Seq(target).toDF("target")
-      .coalesce(1).write.mode("errorifexists")
-      .parquet(s"$root/${VectorIndex.generationDir(next)}")
+    Generations.commitNext(spark, aliasRoot(registry, alias))(
+      Seq(target).toDF("target").coalesce(1).write.mode("errorifexists").parquet(_))
   }
 
   /** The alias' current target, or None if it was never set. */
   def resolve(spark: SparkSession, registry: String,
               alias: String): Option[String] = {
-    val root = aliasRoot(registry, alias)
-    val live = VectorIndex.resolveSnapshot(spark, root)
-    if (live == root) None
-    else Some(spark.read.parquet(live).head().getString(0))
+    Generations.live(spark, aliasRoot(registry, alias))
+      .map(g => spark.read.parquet(g.path).head().getString(0))
   }
 
   /** The alias' full RE-POINT HISTORY, oldest first — every committed

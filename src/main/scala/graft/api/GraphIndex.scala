@@ -307,52 +307,13 @@ object GraphIndex {
   def load(spark: SparkSession, path: String): GraphIndex =
     new GraphIndex(spark, path)
 
-  private val relations = Seq("edges", "entries", "vectors")
-
-  /** The newest FULLY-COMMITTED generation under a maintenance root
-    * (streaming rotation — [[graft.streaming.EventStreams
-    * .graphMaintainStream]] writes `gen-N` snapshot dirs): committed =
-    * every relation's parquet job left its `_SUCCESS`. A crash
-    * mid-maintenance leaves a partial generation that is never served
-    * and is overwritten by the replayed batch — the HybridIndex
-    * rotation discipline on the graph artifact.
+  /** The relations a streamed `gen-N` commits ([[Generations]]):
+    * [[graft.streaming.EventStreams.graphMaintainStream]] writes each
+    * generation's three relations under its directory.
     */
-  def resolveLive(spark: SparkSession, root: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-      .map(_.getPath).sortBy(_.getName)
-      .filter(g => relations.forall(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(g, s"$r/_SUCCESS"))))
-      .lastOption.map(_.toString)
-  }
+  val relations: Seq[String] = Seq("edges", "entries", "vectors")
 
   /** Open the live generation of a streaming-maintained root. */
   def openLive(spark: SparkSession, root: String): GraphIndex =
-    load(spark, resolveLive(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed graph-index generation under $root")))
-
-  /** True iff `gen-<batchId>` under `root` is FULLY committed (every
-    * relation's parquet `_SUCCESS` present). This — not a compare
-    * against the LIVE generation's name — is the streaming replay-skip
-    * test (ADVICE r12): a fresh checkpoint restarts batchIds at 0
-    * while live may be gen-1, and a live-name compare would take the
-    * process path and mode-overwrite committed gen-0 with a merge that
-    * duplicates the batch's ids; worse, the NEXT batch (batchId == the
-    * live gen) would skip and silently drop its data. Keying the skip
-    * on this generation's own commit keeps the documented contract — a
-    * replay either re-lands gen-N identically or is skipped — in both
-    * replay shapes.
-    */
-  def isGenerationCommitted(spark: SparkSession, root: String,
-                            batchId: Long): Boolean = {
-    val g = new org.apache.hadoop.fs.Path(root,
-      VectorIndex.generationDir(batchId))
-    val fs = g.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    relations.forall(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(g, s"$r/_SUCCESS")))
-  }
+    load(spark, Generations.requireLive(spark, root, relations, "graph-index"))
 }

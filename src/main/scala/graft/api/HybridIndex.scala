@@ -416,45 +416,13 @@ object HybridIndex {
            cache: Boolean = true): HybridIndex =
     new HybridIndex(spark, path, cache)
 
-  private val relations = Seq("postings", "doclens", "stats", "vectors")
-
-  /** The newest FULLY-COMMITTED generation under a maintenance root
-    * (streaming rotation — [[graft.streaming.EventStreams
-    * .hybridMaintainStream]] writes `gen-N` snapshot dirs): committed =
-    * every relation's parquet job left its `_SUCCESS`. A crash
-    * mid-maintenance leaves a partial generation that is never served
-    * and is overwritten by the replayed batch — the VectorIndex
-    * rotation discipline on the hybrid artifact.
+  /** The relations a streamed `gen-N` commits ([[Generations]]):
+    * [[graft.streaming.EventStreams.hybridMaintainStream]] writes each
+    * generation's four relations under its directory.
     */
-  def resolveLive(spark: SparkSession, root: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-      .map(_.getPath).sortBy(_.getName)
-      .filter(g => relations.forall(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(g, s"$r/_SUCCESS"))))
-      .lastOption.map(_.toString)
-  }
+  val relations: Seq[String] = Seq("postings", "doclens", "stats", "vectors")
 
   /** Open the live generation of a streaming-maintained root. */
   def openLive(spark: SparkSession, root: String): HybridIndex =
-    open(spark, resolveLive(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed hybrid-index generation under $root")))
-
-  /** True iff `gen-<batchId>` under `root` is FULLY committed — the
-    * streaming replay-skip test ([[GraphIndex.isGenerationCommitted]]'s
-    * rationale, ADVICE r12: the skip must key on THIS generation's own
-    * commit, not on whether it is still the live/newest one).
-    */
-  def isGenerationCommitted(spark: SparkSession, root: String,
-                            batchId: Long): Boolean = {
-    val g = new org.apache.hadoop.fs.Path(root,
-      VectorIndex.generationDir(batchId))
-    val fs = g.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    relations.forall(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(g, s"$r/_SUCCESS")))
-  }
+    open(spark, Generations.requireLive(spark, root, relations, "hybrid-index"))
 }

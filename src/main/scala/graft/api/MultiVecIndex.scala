@@ -177,45 +177,15 @@ object MultiVecIndex {
   def load(spark: SparkSession, path: String): MultiVecIndex =
     new MultiVecIndex(spark, AnnIndex.load(spark, path))
 
-  // a committed generation = the data tree and both sidecars all left
-  // their parquet _SUCCESS (the sidecars live INSIDE the generation
-  // dir — `gen-N/ivf`, `gen-N/ivf_centroids`, `gen-N/ivf_fields` — so
-  // generation GC is one directory delete)
-  private val relations = Seq("ivf", "ivf_centroids", "ivf_fields")
-
-  /** The newest FULLY-COMMITTED generation's INDEX PATH under a
-    * maintenance root ([[graft.streaming.EventStreams
-    * .multivecMaintainStream]] writes `gen-N/ivf` layouts) — the
-    * GraphIndex rotation discipline on the token artifact.
+  /** The relations a streamed `gen-N` commits ([[Generations]]): the
+    * token layout and both quantizer sidecars all live INSIDE the
+    * generation directory (`gen-N/ivf`, `gen-N/ivf_centroids`,
+    * `gen-N/ivf_fields`), so reclaiming a generation is one directory
+    * delete.
     */
-  def resolveLive(spark: SparkSession, root: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-      .map(_.getPath).sortBy(_.getName)
-      .filter(g => relations.forall(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(g, s"$r/_SUCCESS"))))
-      .lastOption.map(g => s"$g/ivf")
-  }
+  val relations: Seq[String] = Seq("ivf", "ivf_centroids", "ivf_fields")
 
   /** Open the live generation of a streaming-maintained root. */
   def openLive(spark: SparkSession, root: String): MultiVecIndex =
-    load(spark, resolveLive(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed multivector generation under $root")))
-
-  /** True iff `gen-<batchId>` is FULLY committed — the replay-skip
-    * test, keyed on THIS generation's own commit, never the live name
-    * (the ADVICE r12 rationale on [[GraphIndex.isGenerationCommitted]]).
-    */
-  def isGenerationCommitted(spark: SparkSession, root: String,
-                            batchId: Long): Boolean = {
-    val g = new org.apache.hadoop.fs.Path(root,
-      VectorIndex.generationDir(batchId))
-    val fs = g.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    relations.forall(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(g, s"$r/_SUCCESS")))
-  }
+    load(spark, Generations.requireLive(spark, root, relations, "multivector") + "/ivf")
 }

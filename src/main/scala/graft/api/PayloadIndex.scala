@@ -1021,11 +1021,10 @@ final class PayloadIndex private[api] (
     if (zonedFields.nonEmpty) {
       val spark0 = spark
       import spark0.implicits._
-      val next = VectorIndex.nextGeneration(spark, s"$root/zones")
-      widened.toSeq.flatMap { case (f, zs) =>
+      val rows = widened.toSeq.flatMap { case (f, zs) =>
         zs.map(z => (f, z._1, z._2.toString, z._3.toString)) }
         .toDF("field", "zone", "zmin", "zmax").coalesce(1)
-        .write.parquet(s"$root/zones/${VectorIndex.generationDir(next)}")
+      Generations.commitNext(spark, s"$root/zones")(rows.write.parquet(_))
     }
 
   /** EXACTLY-ONCE ingest step — the foreachBatch body of
@@ -1755,13 +1754,13 @@ object PayloadIndex {
     // commits widened manifests as later generations; load resolves the
     // newest committed one)
     zoneRows.toDF("field", "zone", "zmin", "zmax").coalesce(1)
-      .write.parquet(s"$root/zones/${VectorIndex.generationDir(0L)}")
+      .write.parquet(s"$root/zones/${Generations.dir(0L)}")
     withZones.unpersist()
     val ddl = points.schema.toDDL
     CommitProtocol.writeSmallFile(fs, new Path(root, "schema.ddl"), ddl)
     val manifest: Manifest = zoneRows.groupBy(_._1).view.mapValues(_.map(t =>
       (t._2, BigDecimal(t._3), BigDecimal(t._4)))).toMap
-    manifests.put(root, (s"$root/zones/${VectorIndex.generationDir(0L)}", manifest))
+    manifests.put(root, (0L, manifest))
     new PayloadIndex(spark, root, fieldRows, manifest,
       ddl, if (text.nonEmpty) idCol else "",
       lowercaseText, positionalText, geoGrid,
@@ -1770,14 +1769,14 @@ object PayloadIndex {
 
   private type Manifest = Map[String, Seq[(Int, BigDecimal, BigDecimal)]]
 
-  // root -> (its newest committed zones generation, that generation's
-  // parsed manifest): one entry per root, replaced when a newer
+  // root -> (its newest committed zones generation's id, that
+  // generation's parsed manifest): one entry per root, replaced when a newer
   // generation commits. Generation names are never reused under a
   // live root; `create` and `deleteTo`, which start a root's
   // generations afresh, overwrite or drop its entry, and `reap` drops
   // it with the root.
   private val manifests =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Manifest)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Manifest)]()
 
   /** The newest COMMITTED zones manifest under `root` — the read-side
     * freshness hook (see [[PayloadIndex!.read]]): one directory
@@ -1785,14 +1784,15 @@ object PayloadIndex {
     * job) runs only when that generation is not the cached one.
     */
   private[graft] def liveZones(spark: SparkSession, root: String): Manifest = {
-    val gen = VectorIndex.resolveSnapshot(spark, s"$root/zones")
-    Option(manifests.get(root)).collect { case (g, m) if g == gen => m }
+    val gen = Generations.live(spark, s"$root/zones").getOrElse(
+      throw new IllegalArgumentException(s"no committed zones manifest under $root"))
+    Option(manifests.get(root)).collect { case (g, m) if g == gen.id => m }
       .getOrElse {
-        val m = spark.read.parquet(gen)
+        val m = spark.read.parquet(gen.path)
           .collect().map(r => (r.getString(0), r.getInt(1),
             BigDecimal(r.getString(2)), BigDecimal(r.getString(3))))
           .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
-        manifests.put(root, (gen, m))
+        manifests.put(root, (gen.id, m))
         m
       }
   }

@@ -145,16 +145,10 @@ object ShardTransfer {
     * bucketed exactly as [[VectorIndex.save]] lays data out.
     */
   private[api] def commitGeneration(spark: SparkSession, path: String,
-                               points: DataFrame): Unit = {
-    // allocate over ALL gen-N names (torn ones included) so a transfer
-    // never lands on a directory another writer may still be filling —
-    // and with the slot guaranteed fresh, the default errorifexists
-    // mode turns any remaining race into a loud failure instead of a
-    // silent clobber of an in-flight generation
-    val nextGen = VectorIndex.nextGeneration(spark, path)
-    points
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket")
-      .parquet(s"$path/${VectorIndex.generationDir(nextGen)}")
-  }
+                               points: DataFrame): Unit =
+    // the slot is fresh (allocated over every gen-N name), so the
+    // default errorifexists mode turns any remaining race into a loud
+    // failure instead of a silent clobber of an in-flight generation
+    Generations.commitNext(spark, path)(
+      points.repartition(col("bucket")).write.partitionBy("bucket").parquet(_))
 }

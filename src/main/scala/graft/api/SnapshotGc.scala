@@ -4,15 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
 
 /** SNAPSHOT GARBAGE COLLECTION for the committed-generation rotation
-  * every mutable artifact here uses ([[VectorIndex]] streaming
-  * rotation, [[GraphIndex]]/[[HybridIndex]] insert/delete snapshots,
-  * [[Aliases]] pointers): each write lands a new immutable `gen-N`
-  * directory, so storage grows per mutation until something reclaims
-  * it — this is that something, with the retention rules a lakehouse
-  * actually needs:
+  * every mutable artifact here publishes through ([[Generations]]:
+  * [[VectorIndex]] rotation and shard transfers, [[Aliases]] pointers,
+  * [[PayloadIndex]] zone manifests, and the streamed [[GraphIndex]],
+  * [[HybridIndex]] and [[MultiVecIndex]] roots): each write lands a
+  * new immutable `gen-N` directory, so storage grows per mutation
+  * until something reclaims it — this is that something, with the
+  * retention rules a lakehouse actually needs:
   *
-  *  - the LIVE generation (newest committed — what `resolveSnapshot`
-  *    serves) is never touched;
+  *  - the LIVE generation (newest committed — what readers resolve)
+  *    is never touched;
   *  - the `keepHistory` committed generations before it are kept as
   *    rollback targets;
   *  - older committed generations are deleted;
@@ -25,6 +26,11 @@ import org.apache.hadoop.fs.Path
   *    "in-flight but racing" (Delta VACUUM's retention rule);
   *    an uncommitted generation newer than the live one may be an
   *    in-flight write and is kept regardless of age.
+  *
+  * "Committed" is the kind's own rule: pass its `relations` (every one
+  * must have left its `_SUCCESS`; `Nil` = the generation directory
+  * itself), so a graph, hybrid or multivector root reclaims like any
+  * other.
   *
   * `plan` is pure metadata (one directory listing — no data read);
   * `run` executes exactly the plan it returns. Deleting a committed
@@ -48,34 +54,29 @@ object SnapshotGc {
   val DefaultTornRetentionMs: Long = 24L * 3600 * 1000
 
   def plan(spark: SparkSession, path: String, keepHistory: Int = 2,
-           tornRetentionMs: Long = DefaultTornRetentionMs): Seq[GcEntry] = {
+           tornRetentionMs: Long = DefaultTornRetentionMs,
+           relations: Seq[String] = Nil): Seq[GcEntry] = {
     require(keepHistory >= 0, s"keepHistory must be >= 0, got $keepHistory")
     require(tornRetentionMs >= 0,
       s"tornRetentionMs must be >= 0, got $tornRetentionMs")
-    val gens = VectorIndex.listGenerationDirs(spark, path)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val gens = Generations.list(spark, path, relations)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val now = System.currentTimeMillis()
-    def oldEnough(g: String): Boolean =
-      try now - fs.getFileStatus(new Path(root, g)).getModificationTime >=
+    def oldEnough(g: Generations.Generation): Boolean =
+      try now - fs.getFileStatus(new Path(g.path)).getModificationTime >=
         tornRetentionMs
       catch { case _: java.io.FileNotFoundException => false } // racing delete
-    val liveGen = gens.filter(_._2).lastOption.map(_._1)
-    val keepSet = liveGen match {
-      case None => Set.empty[String]
-      case Some(lg) =>
-        val history = gens.filter(_._2).map(_._1).filter(_ < lg)
-          .takeRight(keepHistory)
-        (history :+ lg).toSet
-    }
-    gens.map { case (g, committed) =>
+    val committed = gens.filter(_.committed).map(_.id)
+    val liveId = committed.lastOption
+    val history = committed.dropRight(1).takeRight(keepHistory).toSet
+    gens.map { g =>
       val action =
-        if (committed && liveGen.contains(g)) "keep-live"
-        else if (committed && keepSet(g)) "keep-history"
-        else if (committed) "delete"
-        else if (liveGen.exists(g < _) && oldEnough(g)) "delete-torn"
+        if (g.committed && liveId.contains(g.id)) "keep-live"
+        else if (g.committed && history(g.id)) "keep-history"
+        else if (g.committed) "delete"
+        else if (liveId.exists(g.id < _) && oldEnough(g)) "delete-torn"
         else "keep-inflight"
-      GcEntry(g, committed, action)
+      GcEntry(g.name, g.committed, action)
     }
   }
 
@@ -83,8 +84,9 @@ object SnapshotGc {
     * Returns the plan that was executed.
     */
   def run(spark: SparkSession, path: String, keepHistory: Int = 2,
-          tornRetentionMs: Long = DefaultTornRetentionMs): Seq[GcEntry] = {
-    val entries = plan(spark, path, keepHistory, tornRetentionMs)
+          tornRetentionMs: Long = DefaultTornRetentionMs,
+          relations: Seq[String] = Nil): Seq[GcEntry] = {
+    val entries = plan(spark, path, keepHistory, tornRetentionMs, relations)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     entries.filter(e => e.action == "delete" || e.action == "delete-torn")

@@ -119,42 +119,35 @@ object Snapshots {
       throw new IllegalStateException(
         s"restored data at $tmp does not match the snapshot manifest")
     }
-    // slot allocation covers torn/uncommitted gen dirs too (a committed-
-    // only max would collide with a torn gen-N that torn-retention keeps,
-    // and HDFS rename-onto-existing-dir "succeeds" by nesting tmp inside
-    // it — the verified restore would vanish into an unserved dir)
-    val nextGen = VectorIndex.nextGeneration(spark, indexPath)
-    val dest = new Path(root, VectorIndex.generationDir(nextGen))
-    require(!fs.exists(dest),
-      s"generation slot $dest appeared during restore — racing writer; re-run")
-    require(fs.rename(tmp, dest), s"commit rename $tmp -> $dest failed")
-    nextGen
+    // an HDFS rename onto an existing dir "succeeds" by nesting tmp
+    // inside it — the verified restore would vanish into an unserved dir
+    Generations.commitNext(spark, indexPath) { slot =>
+      val dest = new Path(slot)
+      require(!fs.exists(dest),
+        s"generation slot $dest appeared during restore — racing writer; re-run")
+      require(fs.rename(tmp, dest), s"commit rename $tmp -> $dest failed")
+    }
   }
 
   private def writeManifest(spark: SparkSession, dir: Path, m: Manifest): Unit = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(dir, "manifest.json"), false)
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    out.write(
-      s"""{"name":${q(m.name)},"source_path":${q(m.sourcePath)},"n_rows":${m.nRows},"xor_hash":${m.xorHash},"sum_hash":"${m.sumHash}","schema_ddl":${q(m.schemaDdl)}}"""
-        .getBytes("UTF-8"))
-    out.close()
+    CommitProtocol.writeSmallFile(dir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(dir, "manifest.json"),
+      s"""{"name":${q(m.name)},"source_path":${q(m.sourcePath)},"n_rows":${m.nRows},"xor_hash":${m.xorHash},"sum_hash":"${m.sumHash}","schema_ddl":${q(m.schemaDdl)}}""")
   }
 
   private def readManifest(spark: SparkSession, dir: Path): Manifest = {
     import spark.implicits._
+    val text = CommitProtocol.readSmallFile(
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        new Path(dir, "manifest.json"))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no snapshot manifest in $dir"))
     val row = spark.read
       .schema("name STRING, source_path STRING, n_rows LONG, xor_hash LONG, " +
         "sum_hash STRING, schema_ddl STRING")
-      .json(Seq(readText(spark, new Path(dir, "manifest.json"))).toDS())
+      .json(Seq(text).toDS())
       .head()
     Manifest(row.getString(0), row.getString(1), row.getLong(2), row.getLong(3),
       new java.math.BigDecimal(row.getString(4)), row.getString(5))
-  }
-
-  private def readText(spark: SparkSession, p: Path): String = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 }

@@ -494,65 +494,20 @@ object VectorIndex {
     // that worked pre-save must keep working after reload
     VectorIndex(spark.read.parquet(resolveSnapshot(spark, path)), embedder)
 
-  private val GenPrefix = "gen-"
-
-  /** Generation directory name for a rotation id — zero-padded so
-    * lexicographic order ≡ numeric order.
+  /** Resolve a snapshot root to its live data directory: the
+    * [[Generations.live]] generation of a rotated root, or the root
+    * itself when it holds none (a root written by plain
+    * [[VectorIndex.save]] IS the data).
     */
-  def generationDir(id: Long): String = f"$GenPrefix$id%012d"
-
-  /** Resolve a snapshot root to its live data directory. A root written
-    * by plain [[VectorIndex.save]] IS the data. A root maintained by
-    * streaming rotation holds numbered `gen-N` subdirectories; the live
-    * one is the newest with a `_SUCCESS` marker — the parquet job's own
-    * single-file commit, atomic on HDFS and object stores alike. A crash
-    * mid-write leaves an uncommitted (ignored) generation; readers never
-    * observe a missing or half-rotated snapshot, unlike delete-then-
-    * rename rotation.
-    */
-  /** One directory listing of a snapshot root: every `gen-N` name with
-    * its committed flag, name-ascending (zero-padded ≡ numeric). The
-    * single source for [[resolveSnapshot]], [[generations]], and
-    * [[SnapshotGc]]'s plan.
-    */
-  private[api] def listGenerationDirs(spark: SparkSession,
-                                      path: String): Seq[(String, Boolean)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(GenPrefix))
-      .map(st => st.getPath.getName ->
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .sortBy(_._1)
-  }
-
   def resolveSnapshot(spark: SparkSession, path: String): String =
-    listGenerationDirs(spark, path).filter(_._2).lastOption
-      .map { case (g, _) => s"$path/$g" }.getOrElse(path)
+    Generations.live(spark, path).fold(path)(_.path)
 
   /** Every COMMITTED generation id under a snapshot root, ascending —
     * the time-travel axis ([[resolveSnapshotAt]] reads one of these;
     * what [[SnapshotGc]] has reclaimed no longer appears).
     */
   def generations(spark: SparkSession, path: String): Seq[Long] =
-    listGenerationDirs(spark, path).collect {
-      case (g, true) => g.stripPrefix(GenPrefix).toLong
-    }
-
-  /** The next free generation slot — allocated over ALL `gen-N` names,
-    * committed OR not. Allocating over committed names only would hand
-    * out a slot already occupied by a torn/in-flight generation (exactly
-    * what [[SnapshotGc]]'s torn-retention window deliberately keeps
-    * around): on HDFS `rename(tmp, dest)` with an existing dest moves
-    * tmp INSIDE dest and reports success, silently burying the data in
-    * an uncommitted dir, and an overwrite-mode write would clobber a
-    * racing writer's in-flight generation.
-    */
-  private[api] def nextGeneration(spark: SparkSession, path: String): Long =
-    listGenerationDirs(spark, path)
-      .map(_._1.stripPrefix(GenPrefix).toLong)
-      .maxOption.map(_ + 1).getOrElse(0L)
+    Generations.list(spark, path).filter(_.committed).map(_.id)
 
   /** TIME TRAVEL: the data directory of one SPECIFIC committed
     * generation — "query yesterday's index" for a rollback check or an
@@ -561,11 +516,9 @@ object VectorIndex {
     * generations rather than serving torn data.
     */
   def resolveSnapshotAt(spark: SparkSession, path: String, generation: Long): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/${generationDir(generation)}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p) && fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")),
+    require(Generations.isCommitted(spark, path, generation),
       s"generation $generation at $path is missing or uncommitted")
-    p.toString
+    new org.apache.hadoop.fs.Path(path, Generations.dir(generation)).toString
   }
 
   /** Load the index as of a specific committed generation. */
@@ -600,10 +553,11 @@ object VectorIndex {
                             generations: Seq[Long], liveGeneration: Option[Long])
 
   def info(spark: SparkSession, path: String): CollectionInfo = {
-    val live = resolveSnapshot(spark, path)
+    val committed = Generations.list(spark, path).filter(_.committed)
+    val live = committed.lastOption.fold(path)(_.path)
+    val gens = committed.map(_.id)
     val p = new org.apache.hadoop.fs.Path(live)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = generations(spark, path)
     val bytes =
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     // a collection drained to zero rows (bare _SUCCESS generation — the

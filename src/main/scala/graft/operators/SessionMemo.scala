@@ -131,12 +131,15 @@ private[graft] object SessionMemo {
 
   /** Drop every memo entry derived from data under `dir` — call after
     * rewriting a dataset snapshot in place. Wired into every publish
-    * site that lands bytes under an existing root
-    * ([[graft.api.CommitProtocol.publish]], [[graft.api.VectorIndex!.save]],
-    * the index `insertTo`/`deleteTo` rotations), so memo coherence is
-    * enforced at the write choke points instead of resting on the
-    * "nobody rewrites a snapshot dir in-session" convention (VERDICT
-    * r13 #5).
+    * site that lands bytes under an existing root:
+    * [[graft.api.CommitProtocol.publish]] (payload and ANN batch
+    * appends), [[graft.api.Generations.commitNext]] (shard transfers,
+    * alias re-points, snapshot restores, zone-manifest widenings),
+    * [[graft.api.VectorIndex!.save]] (the upsert stream's generations)
+    * and the index `insertTo`/`deleteTo`/`upsertTo` rotations (the
+    * other streams' generations). Memo coherence is thus enforced at
+    * the write choke points instead of resting on the "nobody rewrites
+    * a snapshot dir in-session" convention (VERDICT r13 #5).
     */
   def invalidatePath(dir: String): Unit = all.forEach(_.invalidatePath(dir))
 

@@ -187,9 +187,11 @@ object EventStreams {
     * comes from the sink checkpoint + idempotent (seq-ordered) merge.
     * At scale the save keeps the tenant-hash bucket layout, so the merge
     * shuffles once on id and every read stays partition-pruned.
+    * [[graft.api.SnapshotGc]] reclaims old generations after each
+    * batch, keeping the live one and the one before it.
     */
   def upsertStream(points: DataFrame, snapshotPath: String, checkpoint: String) = {
-    import graft.api.VectorIndex
+    import graft.api.{Generations, SnapshotGc, VectorIndex}
     points.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
@@ -204,17 +206,12 @@ object EventStreams {
         // overwrites the same (uncommitted or duplicate) generation —
         // idempotent, exactly-once visible state.
         val merged = VectorIndex.load(s, snapshotPath).upsert(batch)
-        val gen = new org.apache.hadoop.fs.Path(
-          snapshotPath, VectorIndex.generationDir(batchId))
-        merged.save(gen.toString)
-        // best-effort GC: drop generations older than the previous one
-        // (kept so in-flight readers of the prior snapshot never lose
-        // their files mid-scan)
-        val fs = gen.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val gens = fs.listStatus(new org.apache.hadoop.fs.Path(snapshotPath)).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-          .map(_.getPath).sortBy(_.getName)
-        gens.dropRight(2).foreach(p => fs.delete(p, true))
+        merged.save(s"$snapshotPath/${Generations.dir(batchId)}")
+        // drop generations older than the previous one (kept so
+        // in-flight readers of the prior snapshot never lose their
+        // files mid-scan); this stream is the root's only writer, so
+        // no torn generation below the live one is still in flight
+        SnapshotGc.run(s, snapshotPath, keepHistory = 1, tornRetentionMs = 0)
         ()
       }
   }
@@ -231,44 +228,34 @@ object EventStreams {
     * per checkpoint, every relation writes mode-overwrite into the
     * batch's own generation dir, and a replay of batch N either
     * re-lands gen-N identically or — when gen-N had fully committed
-    * before the crash — is skipped outright (the live-generation check
-    * below). Old generations are reclaimed like the VectorIndex
-    * rotation (keep the previous one for in-flight readers).
+    * before the crash — is skipped outright (the generation's own
+    * commit check below). [[graft.api.SnapshotGc]] reclaims old
+    * generations like the VectorIndex rotation (keep the previous one
+    * for in-flight readers).
     */
   def hybridMaintainStream(docs: DataFrame, root: String, checkpoint: String) = {
-    import graft.api.{HybridIndex, VectorIndex}
+    import graft.api.{Generations, HybridIndex, SnapshotGc}
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val out = s"$root/${VectorIndex.generationDir(batchId)}"
-        // replay skip keys on THIS generation's own commit (every
-        // relation's _SUCCESS), NOT on the live generation's name
-        // (ADVICE r12): a fresh checkpoint restarts batchIds at 0 while
-        // live is gen-1 — a live-name compare would take the process
-        // path and mode-overwrite committed gen-0 with a duplicating
-        // merge, then SKIP the next batch (batchId == live gen) and
-        // silently drop its data. A torn gen-N (some _SUCCESS missing)
-        // correctly falls through and is overwritten by the replay.
-        if (!HybridIndex.isGenerationCommitted(s, root, batchId)) {
-          val live = HybridIndex.resolveLive(s, root)
+        val out = s"$root/${Generations.dir(batchId)}"
+        // replay skip keys on THIS generation's own commit, never the
+        // live name (Generations.isCommitted); a torn gen-N falls
+        // through and is overwritten by the replay
+        if (!Generations.isCommitted(s, root, batchId, HybridIndex.relations)) {
           val newDocs = batch.select("doc_id", "text")
           val newVecs = batch.select("doc_id", "vec")
-          live match {
-            case Some(liveDir) =>
-              val opened = HybridIndex.open(s, liveDir)
+          Generations.live(s, root, HybridIndex.relations) match {
+            case Some(live) =>
+              val opened = HybridIndex.open(s, live.path)
               try opened.insertTo(newDocs, newVecs, out).close()
               finally opened.close() // per-batch caches must not outlive the batch
             case None => HybridIndex.build(s, newDocs, newVecs, out).close()
           }
-          // best-effort GC: keep the new + previous generation only
-          val rootP = new org.apache.hadoop.fs.Path(root)
-          val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.listStatus(rootP).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-            .map(_.getPath).sortBy(_.getName)
-            .dropRight(2).foreach(p => fs.delete(p, true))
+          SnapshotGc.run(s, root, keepHistory = 1, tornRetentionMs = 0,
+            relations = HybridIndex.relations)
         }
         ()
       }
@@ -288,35 +275,29 @@ object EventStreams {
     * either re-lands gen-N identically (same deterministic merge over
     * the same gen-(N−1)) or — when gen-N had fully committed before
     * the crash — is skipped outright. The first batch BUILDS the
-    * graph from scratch (gen-<first batchId>); old generations are
-    * reclaimed keeping the previous one for in-flight readers.
+    * graph from scratch (gen-<first batchId>); [[graft.api.SnapshotGc]]
+    * reclaims old generations, keeping the previous one for in-flight
+    * readers.
     */
   def graphMaintainStream(vecs: DataFrame, root: String, checkpoint: String,
                           graphK: Int = 10) = {
-    import graft.api.{GraphIndex, VectorIndex}
+    import graft.api.{Generations, GraphIndex, SnapshotGc}
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val out = s"$root/${VectorIndex.generationDir(batchId)}"
-        // replay skip keys on gen-<batchId>'s OWN commit, not the live
-        // name (ADVICE r12 — the hybrid stream's rationale above)
-        if (!GraphIndex.isGenerationCommitted(s, root, batchId)) {
-          val live = GraphIndex.resolveLive(s, root)
-          live match {
-            case Some(liveDir) =>
-              GraphIndex.load(s, liveDir).insertTo(batch, out, graphK)
+        val out = s"$root/${Generations.dir(batchId)}"
+        // replay skip keys on gen-<batchId>'s OWN commit, not the live name
+        if (!Generations.isCommitted(s, root, batchId, GraphIndex.relations)) {
+          Generations.live(s, root, GraphIndex.relations) match {
+            case Some(live) =>
+              GraphIndex.load(s, live.path).insertTo(batch, out, graphK)
             case None =>
               GraphIndex.build(batch, out, graphK)
           }
-          // best-effort GC: keep the new + previous generation only
-          val rootP = new org.apache.hadoop.fs.Path(root)
-          val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.listStatus(rootP).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-            .map(_.getPath).sortBy(_.getName)
-            .dropRight(2).foreach(p => fs.delete(p, true))
+          SnapshotGc.run(s, root, keepHistory = 1, tornRetentionMs = 0,
+            relations = GraphIndex.relations)
         }
         ()
       }
@@ -335,31 +316,27 @@ object EventStreams {
     * monotonic per checkpoint, every relation mode-overwrites into the
     * batch's own generation dir, and the replay skip keys on
     * gen-<batchId>'s OWN commit (the ADVICE r12 discipline — never the
-    * live name). The first batch BUILDS the quantizer; old generations
-    * reclaim keeping the previous one for in-flight readers.
+    * live name). The first batch BUILDS the quantizer;
+    * [[graft.api.SnapshotGc]] reclaims old generations, keeping the
+    * previous one for in-flight readers.
     */
   def multivecMaintainStream(tokens: DataFrame, root: String,
                              checkpoint: String, nlist: Int = 8) = {
-    import graft.api.{MultiVecIndex, VectorIndex}
+    import graft.api.{Generations, MultiVecIndex, SnapshotGc}
     tokens.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        if (!MultiVecIndex.isGenerationCommitted(s, root, batchId)) {
-          val out = s"$root/${VectorIndex.generationDir(batchId)}/ivf"
-          MultiVecIndex.resolveLive(s, root) match {
-            case Some(liveDir) =>
-              MultiVecIndex.load(s, liveDir).upsertTo(batch, out)
+        if (!Generations.isCommitted(s, root, batchId, MultiVecIndex.relations)) {
+          val out = s"$root/${Generations.dir(batchId)}/ivf"
+          Generations.live(s, root, MultiVecIndex.relations) match {
+            case Some(live) =>
+              MultiVecIndex.load(s, s"${live.path}/ivf").upsertTo(batch, out)
             case None => MultiVecIndex.build(batch, out, nlist)
           }
-          // best-effort GC: keep the new + previous generation only
-          val rootP = new org.apache.hadoop.fs.Path(root)
-          val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.listStatus(rootP).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-            .map(_.getPath).sortBy(_.getName)
-            .dropRight(2).foreach(p => fs.delete(p, true))
+          SnapshotGc.run(s, root, keepHistory = 1, tornRetentionMs = 0,
+            relations = MultiVecIndex.relations)
         }
         ()
       }
@@ -470,6 +447,7 @@ object EventStreams {
           if (!fs.exists(root)) Nil
           else fs.listStatus(root).toSeq
             .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch-") &&
+              st.getPath.getName != f"batch-$batchId%012d" && // replay: never dedup against itself
               fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "state/_SUCCESS")) &&
               fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "buckets/_SUCCESS")))
             .map(_.getPath.toString).sorted

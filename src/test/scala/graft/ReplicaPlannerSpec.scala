@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.{ReplicaPlanner, ShardTransfer, VectorIndex}
+import graft.api.{Generations, ReplicaPlanner, ShardTransfer, VectorIndex}
 
 /** Replication atop the sharded deployment: placement invariants,
   * fingerprint-audited sync, divergence detection on a corrupted
@@ -21,7 +21,7 @@ class ReplicaPlannerSpec extends SparkSpecBase {
   /** Three nodes holding one sharded collection (disjoint buckets). */
   private def mkCluster(n: Int = 300): Seq[String] = {
     val all = tmp("graft-rp-all-") + "/all"
-    mkIndex(0 until n).save(s"$all/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until n).save(s"$all/${Generations.dir(0)}")
     val buckets = ShardTransfer.plan(spark, all).collect().map(_.getInt(0)).toSeq
     val roots = Seq(tmp("graft-rp-0-") + "/n0", tmp("graft-rp-1-") + "/n1",
       tmp("graft-rp-2-") + "/n2")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.{Aliases, CuratePipeline, SnapshotGc, VectorIndex}
+import graft.api.{Aliases, CuratePipeline, Generations, SnapshotGc, VectorIndex}
 import org.apache.spark.sql.functions._
 
 /** END-TO-END SERVING-ARTIFACT FLOW (VERDICT r5 #8): the blue/green
@@ -28,7 +28,7 @@ class ServingFlowSpec extends SparkSpecBase {
 
     // ---- BLUE: curate the corpus into a served index generation ----
     val blue = CuratePipeline.curateToIndex(spark, sf, tmp("graft-flow-cb-") + "/cur")
-    blue.save(s"$blueRoot/${VectorIndex.generationDir(0)}")
+    blue.save(s"$blueRoot/${Generations.dir(0)}")
     Aliases.set(spark, reg, "prod", blueRoot)
 
     // the serving client: resolves the alias, searches — knows nothing
@@ -43,7 +43,7 @@ class ServingFlowSpec extends SparkSpecBase {
     // ---- GREEN: re-curate with new chunking, build beside blue ----
     val green = CuratePipeline.curateToIndex(spark, sf,
       tmp("graft-flow-cg-") + "/cur", chunkWords = 30, stride = 25)
-    green.save(s"$greenRoot/${VectorIndex.generationDir(0)}")
+    green.save(s"$greenRoot/${Generations.dir(0)}")
     val greenCount = VectorIndex.load(spark, greenRoot).points.count()
     assert(greenCount !== blueCount,
       "re-chunked green build should differ from blue (else the swap test is vacuous)")
@@ -60,32 +60,32 @@ class ServingFlowSpec extends SparkSpecBase {
     // ---- ROTATION under the green root: a maintenance rebuild lands
     // gen-1; the alias (and client) never move ----
     green.upsert(green.points.limit(0)) // no-op batch, same contents
-      .save(s"$greenRoot/${VectorIndex.generationDir(1)}")
+      .save(s"$greenRoot/${Generations.dir(1)}")
     assert(VectorIndex.generations(spark, greenRoot) === Seq(0L, 1L))
     assert(serve().nonEmpty) // now served from gen-1, same alias
 
     // a torn writer dies mid-rotation: gen-2 exists, uncommitted —
     // resolution still serves the newest COMMITTED generation
-    green.save(s"$greenRoot/${VectorIndex.generationDir(2)}")
-    new java.io.File(s"$greenRoot/${VectorIndex.generationDir(2)}/_SUCCESS").delete()
+    green.save(s"$greenRoot/${Generations.dir(2)}")
+    new java.io.File(s"$greenRoot/${Generations.dir(2)}/_SUCCESS").delete()
     assert(VectorIndex.resolveSnapshot(spark, greenRoot)
-      .endsWith(VectorIndex.generationDir(1)))
+      .endsWith(Generations.dir(1)))
     assert(serve().nonEmpty)
     // the next maintenance rotation succeeds past the wreck (gen-3) —
     // now the torn write is superseded AND will age out
-    green.save(s"$greenRoot/${VectorIndex.generationDir(3)}")
+    green.save(s"$greenRoot/${Generations.dir(3)}")
     assert(serve().nonEmpty)
 
     // ---- GC: reclaim rotation history + the torn write (superseded +
     // aged out), and the alias registry's own re-point history ----
-    new java.io.File(s"$greenRoot/${VectorIndex.generationDir(2)}")
+    new java.io.File(s"$greenRoot/${Generations.dir(2)}")
       .setLastModified(System.currentTimeMillis() - 120000)
     val actions = SnapshotGc.run(spark, greenRoot, keepHistory = 0,
       tornRetentionMs = 1000L).map(e => e.generation -> e.action).toMap
-    assert(actions(VectorIndex.generationDir(0)) === "delete")
-    assert(actions(VectorIndex.generationDir(1)) === "delete")
-    assert(actions(VectorIndex.generationDir(2)) === "delete-torn")
-    assert(actions(VectorIndex.generationDir(3)) === "keep-live")
+    assert(actions(Generations.dir(0)) === "delete")
+    assert(actions(Generations.dir(1)) === "delete")
+    assert(actions(Generations.dir(2)) === "delete-torn")
+    assert(actions(Generations.dir(3)) === "keep-live")
     SnapshotGc.run(spark, s"$reg/prod", keepHistory = 0)
     // after ALL reclamation the client still serves, blue history gone
     assert(serve().nonEmpty)

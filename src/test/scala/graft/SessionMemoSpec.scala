@@ -195,6 +195,46 @@ class SessionMemoSpec extends SparkSpecBase {
     assert(rebuilt && v === "fresh")
   }
 
+  test("every generation commit and batch publish invalidates the memos keyed on its root") {
+    import graft.api.{Aliases, CommitProtocol, PayloadIndex, ShardTransfer, Snapshots, VectorIndex}
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("memo-commit").toString
+    val memo = new SessionMemo[Int, String]("spec_memo")
+    // fill a memo on `root`, run one publish path, expect the entry gone
+    def invalidates(path: String, root: String)(commit: => Unit): Unit = {
+      memo.getOrElseUpdate(spark, root, 1)("pre-commit")
+      commit
+      assert(memo.getIfPresent(spark, root, 1).isEmpty,
+        s"$path must drop the memos keyed on $root")
+    }
+    val pts = (0L until 40L).map(i => (i, Seq(0.1 * i, 1.0), s"t$i", i % 8, "s", "en", i))
+      .toDF("id", "vector", "text", "user_id", "site", "lang", "seq")
+    val (src, dst) = (s"$base/src", s"$base/dst")
+    VectorIndex(pts).save(s"$src/${graft.api.Generations.dir(0)}")
+    val bucket = ShardTransfer.plan(spark, src).collect().head.getInt(0)
+    invalidates("ShardTransfer.copyToTarget", dst)(
+      ShardTransfer.copyToTarget(spark, src, dst, Seq(bucket)))
+    invalidates("ShardTransfer.pruneSource", src)(
+      ShardTransfer.pruneSource(spark, src, Seq(bucket)))
+    val reg = s"$base/aliases"
+    Aliases.set(spark, reg, "prod", "/data/v1")
+    invalidates("Aliases.set", s"$reg/prod")(Aliases.set(spark, reg, "prod", "/data/v2"))
+    Snapshots.create(spark, dst, s"$base/snaps", "s1")
+    invalidates("Snapshots.restore", dst)(Snapshots.restore(spark, s"$base/snaps/s1", dst))
+    val payload = s"$base/payload"
+    val idx = PayloadIndex.create(spark, pts.select("id", "user_id", "site"), payload,
+      keyword = Seq("site"), integer = Seq("user_id"), nZones = 2)
+    invalidates("PayloadIndex.insert (zones generation + batch publish)", s"$payload/zones")(
+      idx.insert(Seq((100L, 99L, "s")).toDF("id", "user_id", "site")))
+    val flat = s"$base/flat"
+    Seq(1L).toDF("v").write.parquet(s"$base/staged")
+    val fs = new org.apache.hadoop.fs.Path(flat)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    invalidates("CommitProtocol.publish", flat)(
+      CommitProtocol.publish(fs, flat, flat, 0L,
+        Seq(new org.apache.hadoop.fs.Path(s"$base/staged") -> "")))
+  }
+
   test("onEvict failures don't abort invalidation") {
     val memo = new SessionMemo[Int, String]("spec_memo",
       _ => sys.error("unpersist on a stopped session"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.{Aliases, SnapshotGc, VectorIndex}
+import graft.api.{Aliases, Generations, SnapshotGc, VectorIndex}
 
 class SnapshotGcSpec extends SparkSpecBase {
 
@@ -11,7 +11,7 @@ class SnapshotGcSpec extends SparkSpecBase {
 
   private def writeGen(root: String, id: Long, committed: Boolean): Unit = {
     import spark.implicits._
-    val p = s"$root/${VectorIndex.generationDir(id)}"
+    val p = s"$root/${Generations.dir(id)}"
     Seq(id).toDF("v").coalesce(1).write.parquet(p)
     if (!committed)
       new java.io.File(s"$p/_SUCCESS").delete()
@@ -28,12 +28,12 @@ class SnapshotGcSpec extends SparkSpecBase {
     // tornRetentionMs = 0: every superseded torn write is already "old"
     val byGen = SnapshotGc.plan(spark, root, keepHistory = 2, tornRetentionMs = 0L)
       .map(e => e.generation -> e.action).toMap
-    assert(byGen(VectorIndex.generationDir(4)) === "keep-live")
-    assert(byGen(VectorIndex.generationDir(3)) === "keep-history")
-    assert(byGen(VectorIndex.generationDir(2)) === "keep-history")
-    assert(byGen(VectorIndex.generationDir(0)) === "delete")
-    assert(byGen(VectorIndex.generationDir(1)) === "delete-torn")
-    assert(byGen(VectorIndex.generationDir(5)) === "keep-inflight")
+    assert(byGen(Generations.dir(4)) === "keep-live")
+    assert(byGen(Generations.dir(3)) === "keep-history")
+    assert(byGen(Generations.dir(2)) === "keep-history")
+    assert(byGen(Generations.dir(0)) === "delete")
+    assert(byGen(Generations.dir(1)) === "delete-torn")
+    assert(byGen(Generations.dir(5)) === "keep-inflight")
   }
 
   test("torn retention: a young superseded torn write is spared until it ages out") {
@@ -44,15 +44,15 @@ class SnapshotGcSpec extends SparkSpecBase {
     // flight — supersession alone must NOT classify it delete-torn
     val young = SnapshotGc.plan(spark, root)
       .map(e => e.generation -> e.action).toMap
-    assert(young(VectorIndex.generationDir(0)) === "keep-inflight")
+    assert(young(Generations.dir(0)) === "keep-inflight")
     // age the directory past a short retention → now it's a crashed
     // write and run() reaps it
-    new java.io.File(s"$root/${VectorIndex.generationDir(0)}")
+    new java.io.File(s"$root/${Generations.dir(0)}")
       .setLastModified(System.currentTimeMillis() - 60000)
     val aged = SnapshotGc.run(spark, root, tornRetentionMs = 1000L)
       .map(e => e.generation -> e.action).toMap
-    assert(aged(VectorIndex.generationDir(0)) === "delete-torn")
-    assert(!new java.io.File(s"$root/${VectorIndex.generationDir(0)}").exists())
+    assert(aged(Generations.dir(0)) === "delete-torn")
+    assert(!new java.io.File(s"$root/${Generations.dir(0)}").exists())
   }
 
   test("run deletes exactly the planned generations and the live pointer survives") {
@@ -62,7 +62,7 @@ class SnapshotGcSpec extends SparkSpecBase {
     SnapshotGc.run(spark, root, keepHistory = 1)
     assert(VectorIndex.resolveSnapshot(spark, root) === liveBefore)
     val left = new java.io.File(root).listFiles().map(_.getName).filter(_.startsWith("gen-")).sorted
-    assert(left.toSeq === Seq(VectorIndex.generationDir(3), VectorIndex.generationDir(4)))
+    assert(left.toSeq === Seq(Generations.dir(3), Generations.dir(4)))
     // idempotent: a second run deletes nothing further
     val second = SnapshotGc.run(spark, root, keepHistory = 1)
     assert(second.forall(e => e.action.startsWith("keep")))
@@ -90,7 +90,7 @@ class SnapshotGcSpec extends SparkSpecBase {
       (0 until n).map(i => (i.toLong, Seq.fill(4)(0.1 * i), s"doc $i", i.toLong % 3,
           "s", "en", gen))
         .toDF("id", "vector", "text", "user_id", "site", "lang", "seq")
-        .write.parquet(s"$root/${VectorIndex.generationDir(gen)}")
+        .write.parquet(s"$root/${Generations.dir(gen)}")
     writePoints(0, 3)
     writePoints(1, 5)
     assert(VectorIndex.generations(spark, root) === Seq(0L, 1L))
@@ -105,6 +105,25 @@ class SnapshotGcSpec extends SparkSpecBase {
     // gc'd history disappears from the axis, live resolution intact
     SnapshotGc.run(spark, s"$reg/prod", keepHistory = 0)
     assert(Aliases.history(spark, reg, "prod").map(_._2) === Seq("/data/v2"))
+  }
+
+  test("multi-relation roots: a generation commits when every relation of its kind has") {
+    import graft.api.{GraphIndex, HybridIndex, MultiVecIndex}
+    for ((kind, relations) <- Seq("graph" -> GraphIndex.relations,
+        "hybrid" -> HybridIndex.relations, "multivector" -> MultiVecIndex.relations)) {
+      val root = mkRoot()
+      // four committed generations, each relation its own parquet job
+      (0L to 3L).foreach(id => relations.foreach { r =>
+        val marker = new java.io.File(s"$root/${Generations.dir(id)}/$r/_SUCCESS")
+        marker.getParentFile.mkdirs()
+        marker.createNewFile()
+      })
+      val byGen = SnapshotGc.plan(spark, root, keepHistory = 1, tornRetentionMs = 0L,
+        relations = relations).map(e => e.generation -> e.action).toMap
+      assert(byGen === Map(Generations.dir(3) -> "keep-live",
+        Generations.dir(2) -> "keep-history", Generations.dir(1) -> "delete",
+        Generations.dir(0) -> "delete"), kind)
+    }
   }
 
   test("empty and never-committed roots plan safely") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.api.{ShardTransfer, Snapshots, VectorIndex}
+import graft.api.{Generations, ShardTransfer, Snapshots, VectorIndex}
 import org.apache.spark.sql.functions._
 
 /** Snapshot export/recover + shard transfer — the Qdrant
@@ -21,7 +21,7 @@ class SnapshotTransferSpec extends SparkSpecBase {
   test("snapshot: create -> list -> verify -> restore lands a verified committed generation") {
     val idxRoot = tmp("graft-snap-idx-") + "/col"
     val snapRoot = tmp("graft-snap-root-")
-    mkIndex(0 until 200).save(s"$idxRoot/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 200).save(s"$idxRoot/${Generations.dir(0)}")
 
     val m = Snapshots.create(spark, idxRoot, snapRoot, "pre-migration")
     assert(m.nRows === 200L)
@@ -42,7 +42,7 @@ class SnapshotTransferSpec extends SparkSpecBase {
     // the bucketed PARTITION layout survives the round trip (tenant
     // pruning would silently die on a column-only restore)
     val restoredGen = new java.io.File(
-      s"$restoredRoot/${VectorIndex.generationDir(0)}")
+      s"$restoredRoot/${Generations.dir(0)}")
     assert(restoredGen.listFiles().exists(_.getName.startsWith("bucket=")),
       "restored generation lost the bucket partition layout")
     assert(ShardTransfer.plan(spark, restoredRoot).collect()
@@ -57,7 +57,7 @@ class SnapshotTransferSpec extends SparkSpecBase {
   test("snapshot: a corrupted snapshot is refused before any generation commits") {
     val idxRoot = tmp("graft-snapc-idx-") + "/col"
     val snapRoot = tmp("graft-snapc-root-")
-    mkIndex(0 until 50).save(s"$idxRoot/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 50).save(s"$idxRoot/${Generations.dir(0)}")
     Snapshots.create(spark, idxRoot, snapRoot, "s1")
     // corrupt: drop one data file from the shipped snapshot
     val dataDir = new java.io.File(s"$snapRoot/s1/data")
@@ -73,7 +73,7 @@ class SnapshotTransferSpec extends SparkSpecBase {
   test("shard transfer: buckets move wholesale, both sides stay served, totals conserved") {
     val a = tmp("graft-st-a-") + "/colA"
     val b = tmp("graft-st-b-") + "/colB"
-    mkIndex(0 until 300).save(s"$a/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 300).save(s"$a/${Generations.dir(0)}")
 
     val planned = ShardTransfer.plan(spark, a).collect()
     assert(planned.map(_.getLong(1)).sum === 300L)
@@ -100,7 +100,7 @@ class SnapshotTransferSpec extends SparkSpecBase {
   test("shard transfer: crash between copy and prune leaves data available, re-run converges") {
     val a = tmp("graft-st2-a-") + "/colA"
     val b = tmp("graft-st2-b-") + "/colB"
-    mkIndex(0 until 200).save(s"$a/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 200).save(s"$a/${Generations.dir(0)}")
     val moveBuckets = ShardTransfer.plan(spark, a).collect()
       .take(2).map(_.getInt(0)).toSeq
 
@@ -128,7 +128,7 @@ class SnapshotTransferSpec extends SparkSpecBase {
     // sliver, node 2 empty — the post-node-add rebalance scenario.
     // Disjoint ownership by construction: split one saved collection.
     val all = tmp("graft-sb-all-") + "/all"
-    mkIndex(0 until 400).save(s"$all/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 400).save(s"$all/${Generations.dir(0)}")
     val buckets = ShardTransfer.plan(spark, all).collect().map(_.getInt(0)).toSeq
     val (slice1, rest) = (buckets.take(1), buckets.drop(1))
     // materialize the split via transfers out of the staging root
@@ -159,13 +159,13 @@ class SnapshotTransferSpec extends SparkSpecBase {
   }
 
   test("shard balancer: chained moves execute in plan order, not path order") {
-    import graft.api.{ShardBalancer, VectorIndex => VI}
+    import graft.api.ShardBalancer
     // path names chosen so PAIR-SORTED execution would run the second
     // leg first (b.. < m.. < z..) — the regression the plan-order fix pins
     val a = tmp("graft-sbo-z-") + "/za"
     val b = tmp("graft-sbo-a-") + "/ab"
     val c = tmp("graft-sbo-m-") + "/mc"
-    mkIndex(0 until 60).save(s"$a/${VI.generationDir(0)}")
+    mkIndex(0 until 60).save(s"$a/${Generations.dir(0)}")
     val bucket = ShardTransfer.plan(spark, a).collect().head.getInt(0)
     val n = ShardTransfer.plan(spark, a).collect().head.getLong(1)
     val plan = ShardBalancer.Plan(
@@ -187,15 +187,15 @@ class SnapshotTransferSpec extends SparkSpecBase {
     val b = tmp("graft-sbc-b-") + "/b"
     // two independent collections (NOT a sharded one): same buckets,
     // different points — balancing across them would corrupt both
-    mkIndex(0 until 100).save(s"$a/${VectorIndex.generationDir(0)}")
-    mkIndex(200 until 400).save(s"$b/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 100).save(s"$a/${Generations.dir(0)}")
+    mkIndex(200 until 400).save(s"$b/${Generations.dir(0)}")
     intercept[IllegalArgumentException](ShardBalancer.plan(spark, Seq(a, b)))
   }
 
   test("collection info reports live-generation counts, layout, and the generation axis") {
     val root = tmp("graft-info-") + "/col"
-    mkIndex(0 until 120).save(s"$root/${VectorIndex.generationDir(0)}")
-    mkIndex(0 until 80).save(s"$root/${VectorIndex.generationDir(1)}")
+    mkIndex(0 until 120).save(s"$root/${Generations.dir(0)}")
+    mkIndex(0 until 80).save(s"$root/${Generations.dir(1)}")
     val info = VectorIndex.info(spark, root)
     assert(info.points === 80L, "info must describe the LIVE generation only")
     assert(info.tenants === 5L && info.dim === 4)
@@ -212,10 +212,10 @@ class SnapshotTransferSpec extends SparkSpecBase {
     // ALL gen names.
     val idxRoot = tmp("graft-torn-idx-") + "/col"
     val snapRoot = tmp("graft-torn-snap-")
-    mkIndex(0 until 60).save(s"$idxRoot/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 60).save(s"$idxRoot/${Generations.dir(0)}")
     Snapshots.create(spark, idxRoot, snapRoot, "s1")
     // a torn in-flight generation above live: dir exists, no _SUCCESS
-    val torn = new java.io.File(s"$idxRoot/${VectorIndex.generationDir(1)}")
+    val torn = new java.io.File(s"$idxRoot/${Generations.dir(1)}")
     assert(torn.mkdirs())
     java.nio.file.Files.writeString(
       torn.toPath.resolve("part-inflight.parquet"), "racing writer")
@@ -232,9 +232,9 @@ class SnapshotTransferSpec extends SparkSpecBase {
   test("shard transfer: commit skips a torn generation instead of clobbering it") {
     val a = tmp("graft-tornst-a-") + "/colA"
     val b = tmp("graft-tornst-b-") + "/colB"
-    mkIndex(0 until 80).save(s"$a/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 80).save(s"$a/${Generations.dir(0)}")
     // the target has a torn in-flight gen-3 (e.g. a racing writer)
-    val torn = new java.io.File(s"$b/${VectorIndex.generationDir(3)}")
+    val torn = new java.io.File(s"$b/${Generations.dir(3)}")
     assert(torn.mkdirs())
     java.nio.file.Files.writeString(
       torn.toPath.resolve("part-inflight.parquet"), "racing writer")
@@ -250,9 +250,9 @@ class SnapshotTransferSpec extends SparkSpecBase {
   test("shard transfer: a conflicting target bucket is refused, not merged") {
     val a = tmp("graft-st3-a-") + "/colA"
     val b = tmp("graft-st3-b-") + "/colB"
-    mkIndex(0 until 100).save(s"$a/${VectorIndex.generationDir(0)}")
+    mkIndex(0 until 100).save(s"$a/${Generations.dir(0)}")
     // the target independently owns points landing in the same buckets
-    mkIndex(500 until 600).save(s"$b/${VectorIndex.generationDir(0)}")
+    mkIndex(500 until 600).save(s"$b/${Generations.dir(0)}")
     val moveBuckets = ShardTransfer.plan(spark, a).collect()
       .take(1).map(_.getInt(0)).toSeq
     intercept[IllegalArgumentException](

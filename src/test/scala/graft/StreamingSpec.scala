@@ -267,7 +267,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("hybridMaintainStream rotates generations with from-scratch-rebuild parity") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.api.HybridIndex
+    import graft.api.{Generations, HybridIndex}
     val base = java.nio.file.Files.createTempDirectory("hybstream").toString
     val root = base + "/hybrid"
     val input = MemoryStream[(Long, String, Seq[Double])]
@@ -305,17 +305,17 @@ class StreamingSpec extends SparkSpecBase {
       // rotation: at most the live + previous generation remain on disk
       val gens = new java.io.File(root).listFiles()
         .filter(_.getName.startsWith("gen-")).map(_.getName).sorted
-      assert(gens.length <= 2 && gens.last === graft.api.VectorIndex.generationDir(1L))
-      // the replay-skip invariant: resolveLive hands back a
+      assert(gens.length <= 2 && gens.last === graft.api.Generations.dir(1L))
+      // the replay-skip invariant: Generations.live hands back a
       // FILESYSTEM-QUALIFIED path (a raw-string compare against the
       // caller's spelling of root/gen-N would never match — the skip
       // must compare generation NAMES), and its name is the live gen
-      val livePath = HybridIndex.resolveLive(spark, root).get
-      assert(livePath != s"$root/${graft.api.VectorIndex.generationDir(1L)}",
+      val livePath = Generations.live(spark, root, HybridIndex.relations).map(_.path).get
+      assert(livePath != s"$root/${graft.api.Generations.dir(1L)}",
         "qualified vs raw spelling — if these ever compare equal, the " +
           "name-based skip can revert to path equality")
       assert(new org.apache.hadoop.fs.Path(livePath).getName ===
-        graft.api.VectorIndex.generationDir(1L))
+        graft.api.Generations.dir(1L))
     } finally q.stop()
   }
 
@@ -352,6 +352,27 @@ class StreamingSpec extends SparkSpecBase {
         === Set(1L, 2L, 4L))
       assert(bks.groupBy("doc_id").count().collect().forall(_.getLong(1) === 32L))
     } finally q.stop()
+  }
+
+  test("nearDupGateStream replay of a committed batch keeps its survivors") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("ndreplay").toString
+    val store = base + "/store"
+    val t1 = "a b c d e f g h i j k l"
+    val batch0 = Seq(1L -> t1, 2L -> "z y x w v u t s r q p o", 5L -> (t1 + " m"))
+    def batch0State(): Set[Long] =
+      spark.read.parquet(store + "/batch-000000000000/state").select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+    for (ckpt <- Seq("/ckpt", "/ckpt-fresh")) {
+      // the second pass replays batch 0 through a fresh checkpoint: the
+      // batch must not dedup against its own committed directory
+      val input = MemoryStream[(Long, String)]
+      val q = EventStreams.nearDupGateStream(
+        input.toDF().toDF("doc_id", "text"), store, base + ckpt).start()
+      try { input.addData(batch0: _*); q.processAllAvailable() }
+      finally q.stop()
+      assert(batch0State() === Set(1L, 2L), s"after the run under $ckpt")
+    }
   }
 
   test("bloomGateStream rejects history dups across batches with constant store probes") {
@@ -544,7 +565,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("graphMaintainStream rotates generations: batch-API parity, replay no-op, torn convergence") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.api.{GraphIndex, VectorIndex}
+    import graft.api.{Generations, GraphIndex}
     val base = java.nio.file.Files.createTempDirectory("graphstream").toString
     val root = base + "/graph"
     val batch1 = (0L until 24L).map(i =>
@@ -560,13 +581,13 @@ class StreamingSpec extends SparkSpecBase {
       input.addData(batch1: _*)
       q.processAllAvailable()
       assert(new org.apache.hadoop.fs.Path(
-        GraphIndex.resolveLive(spark, root).get).getName ===
-        VectorIndex.generationDir(0L))
+        Generations.live(spark, root, GraphIndex.relations).map(_.path).get).getName ===
+        Generations.dir(0L))
       input.addData(batch2: _*)
       q.processAllAvailable()
-      val liveDir = GraphIndex.resolveLive(spark, root).get
+      val liveDir = Generations.live(spark, root, GraphIndex.relations).map(_.path).get
       assert(new org.apache.hadoop.fs.Path(liveDir).getName ===
-        VectorIndex.generationDir(1L))
+        Generations.dir(1L))
       // PARITY: the streamed generation is the batch API's own merge on
       // the same inputs — identical edge SET (build + insertTo are
       // deterministic), so every batch-route guarantee carries over
@@ -590,8 +611,8 @@ class StreamingSpec extends SparkSpecBase {
       // mode-overwrite committed gen-0 with a merge that DUPLICATES
       // batch1's vec_ids — so capture gen-0's vectors relation and
       // assert it is bit-identical after the replay, not just that
-      // resolveLive still says gen-1 (which would pass vacuously).
-      val gen0Vectors = s"$root/${VectorIndex.generationDir(0L)}/vectors"
+      // Generations.live still says gen-1 (which would pass vacuously).
+      val gen0Vectors = s"$root/${Generations.dir(0L)}/vectors"
       val gen0Before = spark.read.parquet(gen0Vectors).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
       val input2 = MemoryStream[(Long, Seq[Double])]
@@ -602,8 +623,8 @@ class StreamingSpec extends SparkSpecBase {
         q2.processAllAvailable()
       } finally q2.stop()
       assert(new org.apache.hadoop.fs.Path(
-        GraphIndex.resolveLive(spark, root).get).getName ===
-        VectorIndex.generationDir(1L), "replayed committed batch must skip")
+        Generations.live(spark, root, GraphIndex.relations).map(_.path).get).getName ===
+        Generations.dir(1L), "replayed committed batch must skip")
       val gen0After = spark.read.parquet(gen0Vectors).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
       assert(gen0After === gen0Before,
@@ -612,20 +633,20 @@ class StreamingSpec extends SparkSpecBase {
         "replay must never duplicate vec_ids into a committed generation")
       // TORN-ATTEMPT CONVERGENCE: a crashed batch-2 attempt left a
       // partial gen-2 (edges dir, no _SUCCESS anywhere) — never served
-      val torn = new java.io.File(s"$root/${VectorIndex.generationDir(2L)}/edges")
+      val torn = new java.io.File(s"$root/${Generations.dir(2L)}/edges")
       torn.mkdirs()
       java.nio.file.Files.write(
         java.nio.file.Paths.get(torn.getPath, "part-garbage"),
         "torn".getBytes)
       assert(new org.apache.hadoop.fs.Path(
-        GraphIndex.resolveLive(spark, root).get).getName ===
-        VectorIndex.generationDir(1L), "a torn generation must never serve")
+        Generations.live(spark, root, GraphIndex.relations).map(_.path).get).getName ===
+        Generations.dir(1L), "a torn generation must never serve")
       // the replayed batch overwrites the torn attempt and commits
       input.addData((200L, Seq(0.9, 0.9)), (201L, Seq(-0.9, 0.4)))
       q.processAllAvailable()
       assert(new org.apache.hadoop.fs.Path(
-        GraphIndex.resolveLive(spark, root).get).getName ===
-        VectorIndex.generationDir(2L))
+        Generations.live(spark, root, GraphIndex.relations).map(_.path).get).getName ===
+        Generations.dir(2L))
       val live2 = GraphIndex.openLive(spark, root)
       assert(live2.search(Seq(0.9, 0.9), k = 1).head().getLong(1) === 200L)
       // rotation GC: at most live + previous generation remain
@@ -637,7 +658,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("multivecMaintainStream rotates generations: batch parity, doc replace, replay no-op, torn convergence") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.api.{MultiVecIndex, VectorIndex}
+    import graft.api.{Generations, MultiVecIndex}
     val base = java.nio.file.Files.createTempDirectory("mvstream").toString
     val root = base + "/mv"
     def tok(doc: Long, t: Long, shift: Double = 0.0) = {
@@ -658,13 +679,13 @@ class StreamingSpec extends SparkSpecBase {
     try {
       input.addData(batch1: _*)
       q.processAllAvailable()
-      assert(MultiVecIndex.resolveLive(spark, root).get
-        .contains(VectorIndex.generationDir(0L)))
+      assert(Generations.live(spark, root, MultiVecIndex.relations).map(_.path).get
+        .contains(Generations.dir(0L)))
       input.addData(batch2: _*)
       q.processAllAvailable()
       val live = MultiVecIndex.openLive(spark, root)
-      assert(MultiVecIndex.resolveLive(spark, root).get
-        .contains(VectorIndex.generationDir(1L)))
+      assert(Generations.live(spark, root, MultiVecIndex.relations).map(_.path).get
+        .contains(Generations.dir(1L)))
       // PARITY: the streamed generation is the batch API's own merge on
       // the same inputs — identical token ROWS, identical cluster
       // MEMBERSHIP. (List ids/centroid ulps compare label-invariantly:
@@ -688,7 +709,7 @@ class StreamingSpec extends SparkSpecBase {
       // the quantizer carried over from gen-0 EXACTLY (ids included —
       // rotation never refits or relabels)
       val gen0Cents = graft.api.AnnIndex.load(spark,
-        s"$root/${VectorIndex.generationDir(0L)}/ivf")
+        s"$root/${Generations.dir(0L)}/ivf")
         .centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
       assert(live.ann.centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
         === gen0Cents)
@@ -701,7 +722,7 @@ class StreamingSpec extends SparkSpecBase {
       // REPLAY NO-OP: fresh checkpoint restarts at batch 0 — gen-0 is
       // committed, so it skips AND its token relation stays
       // bit-identical (the skip keys on gen-0's own commit)
-      val gen0 = s"$root/${VectorIndex.generationDir(0L)}/ivf"
+      val gen0 = s"$root/${Generations.dir(0L)}/ivf"
       val before = spark.read.parquet(gen0).collect()
         .map(r => r.toSeq).sortBy(_.toString).toSeq
       val input2 = MemoryStream[(Long, Long, Seq[Double])]
@@ -710,23 +731,23 @@ class StreamingSpec extends SparkSpecBase {
         nlist = 4).start()
       try { input2.addData(batch1: _*); q2.processAllAvailable() }
       finally q2.stop()
-      assert(MultiVecIndex.resolveLive(spark, root).get
-        .contains(VectorIndex.generationDir(1L)))
+      assert(Generations.live(spark, root, MultiVecIndex.relations).map(_.path).get
+        .contains(Generations.dir(1L)))
       assert(spark.read.parquet(gen0).collect()
         .map(r => r.toSeq).sortBy(_.toString).toSeq === before)
       // TORN ATTEMPT: a crashed gen-2 (garbage, no _SUCCESS) never
       // serves; the replayed batch overwrites it and commits
       val torn = new java.io.File(
-        s"$root/${VectorIndex.generationDir(2L)}/ivf")
+        s"$root/${Generations.dir(2L)}/ivf")
       torn.mkdirs()
       java.nio.file.Files.write(
         java.nio.file.Paths.get(torn.getPath, "part-garbage"), "torn".getBytes)
-      assert(MultiVecIndex.resolveLive(spark, root).get
-        .contains(VectorIndex.generationDir(1L)))
+      assert(Generations.live(spark, root, MultiVecIndex.relations).map(_.path).get
+        .contains(Generations.dir(1L)))
       input.addData((200L, 800L, Seq(-7.0, -7.0)))
       q.processAllAvailable()
-      assert(MultiVecIndex.resolveLive(spark, root).get
-        .contains(VectorIndex.generationDir(2L)))
+      assert(Generations.live(spark, root, MultiVecIndex.relations).map(_.path).get
+        .contains(Generations.dir(2L)))
       assert(MultiVecIndex.openLive(spark, root)
         .search(Seq(Seq(-7.0, -7.0)), k = 1, nprobe = 4, tokenK = 64)
         .head().getLong(0) === 200L)
